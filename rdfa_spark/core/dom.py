@@ -25,6 +25,8 @@ import re
 import xml.parsers.expat
 from html.parser import HTMLParser
 
+from .soup_lexer import feed_events
+
 XML_NS = "http://www.w3.org/XML/1998/namespace"
 XMLNS_NS = "http://www.w3.org/2000/xmlns/"
 XHTML_NS = "http://www.w3.org/1999/xhtml"
@@ -348,7 +350,10 @@ def _attr_dict(attrs) -> dict:
     tree-construction rule (a real HTML5 parser ignores repeats), so
     tag-soup pages hash to the same triples the reference's
     HTML::HTML5::Parser would produce."""
-    out: dict = {}
+    out: dict = dict(attrs)
+    if len(out) == len(attrs):
+        return out                      # no repeats: order and values kept
+    out = {}
     for k, v in attrs:
         if k not in out:
             out[k] = v
@@ -414,13 +419,17 @@ tbody td tfoot th thead tr body""".split())
 
 _MARKER = object()      # the AFE marker sentinel
 
-# Tags taking ANY special branch in handle_starttag (implied ends,
-# table machinery, formatting/AFE, markers, voids, html itself) —
-# everything else takes the plain insert fast path.
-_NONPLAIN_START = (frozenset({"html", "table", "a", "nobr"})
-                   | _CLOSE_P | frozenset(_IMPLIED_END)
-                   | _TABLE_STRUCTURE | _FORMATTING
-                   | _AFE_MARKER_TAGS | _VOID)
+# Start tags with an implied-end, table, <a>/<nobr> or html step in
+# handle_starttag: outside table context every other tag takes the
+# common-case path, these only when _start_is_simple holds.
+_START_FULL = frozenset({"html", "table", "nobr"}) | _TABLE_STRUCTURE
+_START_CHECKED = (_START_FULL | _CLOSE_P | frozenset(_IMPLIED_END)
+                  | frozenset({"a"}))
+# Inline elements a _CLOSE_P start tag looks through for an open <p>.
+_P_INLINE = frozenset("a span b i em strong small u s".split())
+# End tags needing more than a pop when they close the current node:
+# adoption agency, AFE marker clearing, voids (never pushed).
+_END_FULL = _FORMATTING | _AFE_MARKER_TAGS | _VOID
 
 # Bound on active-formatting entries per marker segment: the spec's
 # Noah's-Ark clause only dedups IDENTICAL (tag, attrs) entries, so
@@ -580,27 +589,50 @@ class _SoupBuilder(HTMLParser):
             self._stack_ids.add(id(el))
         return el
 
+    def _start_is_simple(self, tag, ctag) -> bool:
+        """True when every implied-end, table and <a> step of the full
+        start-tag path is a no-op for `tag` under current node `ctag`
+        (outside table context): a block start with no <p> to close
+        through inline ancestors, a list item / option / dd / dt
+        directly in its scope element, an <a> with no open <a> in the
+        AFE segment."""
+        if tag in _START_FULL:
+            return False
+        if tag in _CLOSE_P:
+            return ctag != "p" and ctag not in _P_INLINE
+        implied = _IMPLIED_END.get(tag)
+        if implied is not None:
+            return ctag in implied[1]
+        return tag != "a" or not self.afe or self.afe[-1] is _MARKER
+
     def handle_starttag(self, tag, attrs):
-        # fast path: ordinary phrasing/unknown tags (span, custom
-        # elements, RDFa-bearing wrappers) outside table context hit
-        # none of the implied-end / table / formatting machinery —
-        # reconstruct-if-needed, insert, push.  _PLAIN_START is the
-        # complement of every tag any branch below special-cases.
+        # common-case path: outside table context, ordinary phrasing
+        # and unknown tags (span, custom elements, RDFa wrappers) hit
+        # none of the implied-end / table / formatting machinery, and
+        # nor do block, list and <a> starts in well-nested markup
+        # (_start_is_simple) — reconstruct-if-needed, insert, push.
         if "base" in tag and (tag == "base"
                               or tag.endswith(":base")):
             self.saw_base = True
         stack = self.stack
-        if (tag not in _NONPLAIN_START and stack
-                and stack[-1].tag not in _TABLE_CTX):
-            if self.afe and tag not in _NO_RECONSTRUCT:
-                self._reconstruct_afe()
-                stack = self.stack
-            parent = stack[-1]
-            el = Element(tag, _attr_dict(attrs), parent)
-            parent.children.append(el)
-            stack.append(el)
-            self._stack_ids.add(id(el))
-            return
+        if stack:
+            ctag = stack[-1].tag
+            if ctag not in _TABLE_CTX and (
+                    tag not in _START_CHECKED
+                    or self._start_is_simple(tag, ctag)):
+                if self.afe and tag not in _NO_RECONSTRUCT:
+                    self._reconstruct_afe()
+                parent = stack[-1]
+                el = Element(tag, _attr_dict(attrs), parent)
+                parent.children.append(el)
+                if tag not in _VOID:
+                    stack.append(el)
+                    self._stack_ids.add(id(el))
+                if tag in _FORMATTING:
+                    self._afe_push(el)
+                elif tag in _AFE_MARKER_TAGS:
+                    self.afe.append(_MARKER)
+                return
         if tag == "html":
             if self.root is None:
                 self.root = Element("html", _attr_dict(attrs))
@@ -624,8 +656,7 @@ class _SoupBuilder(HTMLParser):
                 if self.stack[i].tag == "p":
                     self._pop_stack(i)
                     break
-                if self.stack[i].tag not in ("a", "span", "b", "i", "em",
-                                             "strong", "small", "u", "s"):
+                if self.stack[i].tag not in _P_INLINE:
                     break
         implied = _IMPLIED_END.get(tag)
         if implied:
@@ -877,6 +908,21 @@ class _SoupBuilder(HTMLParser):
             self._stack_ids.add(id(fclone))
 
     def handle_endtag(self, tag):
+        stack = self.stack
+        if len(stack) > 1 and stack[-1].tag == tag:
+            # well-nested close of the current node: a plain pop, or
+            # the trivial adoption case (the formatting element is
+            # also the last AFE entry: no furthest block, 13.2.6.4.7)
+            cur = stack[-1]
+            if tag not in _END_FULL:
+                stack.pop()
+                self._stack_ids.discard(id(cur))
+                return
+            if self.afe and self.afe[-1] is cur:
+                stack.pop()
+                self._stack_ids.discard(id(cur))
+                self.afe.pop()
+                return
         if tag in _VOID:
             return
         if tag in _FORMATTING:
@@ -973,23 +1019,18 @@ def parse_html(markup: bytes | str) -> Document:
     """Tag-soup parse; always succeeds (HTML5-parser analogue,
     reference: Parser.pm:103-107).  Tokenized by the fast regex
     lexer (soup_lexer.py) — DOM-equal to the stdlib html.parser
-    tokenizer, pinned by tests/test_soup_lexer_ab.py; set
-    RDFA_SPARK_STDLIB_SOUP=1 to force the stdlib path."""
-    import os
-
-    if os.environ.get("RDFA_SPARK_STDLIB_SOUP"):
-        return parse_html_stdlib(markup)
+    tokenizer of parse_html_stdlib, pinned by
+    tests/test_soup_lexer_ab.py."""
     if isinstance(markup, bytes):
         markup = markup.decode("utf-8", "replace")
-    from .soup_lexer import feed_events
-
     b = _SoupBuilder()
     feed_events(b, markup)
     return _finish_soup(b)
 
 
 def parse_html_stdlib(markup: bytes | str) -> Document:
-    """The html.parser-tokenized path (A/B oracle for the lexer)."""
+    """The html.parser-tokenized path: the tests' A/B reference for
+    the lexer, not used by extraction."""
     if isinstance(markup, bytes):
         markup = markup.decode("utf-8", "replace")
     b = _SoupBuilder()

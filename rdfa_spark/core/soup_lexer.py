@@ -1,17 +1,37 @@
 """Fast tag-soup lexer: a single-pass scanner that feeds the same
-``_SoupBuilder`` event surface as ``html.parser.HTMLParser``, using
-html.parser's OWN module-level tolerant regexes and its exact
-decision order — minus the costs irrelevant to one-shot parsing
-(per-chunk buffering, line/column accounting, method dispatch
-through ``goahead``'s generic state machine).
+``_SoupBuilder`` event surface as ``html.parser.HTMLParser`` — minus
+the costs irrelevant to one-shot parsing (per-chunk buffering,
+line/column accounting, method dispatch through ``goahead``'s generic
+state machine).
+
+Dispatch order, per position:
+
+1. rawtext (inside ``<script>``/``<style>``): only the matching close
+   tag ends it;
+2. a text run: one ``str.find`` to the next ``<`` (as html.parser
+   does; a regex scan is slower on long runs);
+3. at a ``<``, one ``_TOKEN`` match for the two common tags — a
+   complete start tag whose attributes are all plainly quoted or
+   bare (names and values free of ``<``, ``>``, ``&``; separated by
+   ASCII whitespace), and a plain ``</name>``.  A matched tag's
+   attributes come from one ``_ATTR.findall`` over the matched span.
+   Every span ``_TOKEN`` accepts is one that html.parser's tolerant
+   regexes split into the same name, attributes and ``>``/``/>``
+   ending;
+4. everything ``_TOKEN`` rejects — incomplete or junk tags, values
+   with entities or markup characters, comments, ``<!``/``<?``
+   constructs, stray ``<`` — takes the transliterated branches, which
+   use html.parser's OWN module-level tolerant regexes and its exact
+   decision order.
 
 Fidelity contract: DOM equality with the stdlib tokenizer is pinned
 by ``tests/test_soup_lexer_ab.py`` — every soup conformance fixture,
-a tag-soup fuzz corpus, and the synthesized crawl pages run through
-BOTH tokenizers and must build identical trees.  Anywhere this file
-says "mirrors", the behavior is transliterated from CPython's
-html/parser.py (parse_starttag / check_for_whole_start_tag /
-parse_endtag / parse_bogus_comment / goahead leftover handling).
+a tag-soup fuzz corpus, cases on both sides of the ``_TOKEN``
+boundary and a 1 MB chrome page run through BOTH tokenizers and must
+build identical trees.  Anywhere this file says "mirrors", the
+behavior is transliterated from CPython's html/parser.py
+(parse_starttag / check_for_whole_start_tag / parse_endtag /
+parse_bogus_comment / goahead leftover handling).
 """
 
 from __future__ import annotations
@@ -24,7 +44,25 @@ from html.parser import (attrfind_tolerant, endtagfind,
 _CDATA_ELEMS = ("script", "style")
 _RAW_CLOSE = {el: re.compile(rf"</\s*{el}", re.I)
               for el in _CDATA_ELEMS}
-_STARTTAG_OPEN = re.compile(r"<[a-zA-Z]")
+# The common-tag regex (dispatch step 3).  Separators are the ASCII
+# whitespace that also ends html.parser's tag name; names and values
+# exclude all of \s, so a tag holding any other whitespace falls to
+# the tolerant branches.  A bare value may end in '/': html.parser
+# keeps it in the value, so '<a href=x/>' is a start tag, not '/>'.
+_WS = r"[ \t\n\r\f]"
+_NAME = r"[^\s\"'/=<>]+"
+_TOKEN = re.compile(
+    rf"<([a-zA-Z][-.:\w]*)"                             # 1 tag name
+    rf"((?:{_WS}+{_NAME}(?:{_WS}*={_WS}*"               # 2 attributes
+    r"(?:\"[^\"&<>]*\"|'[^'&<>]*'|[^\s\"'=<>&]+))?)*)"
+    rf"{_WS}*(/?)>"                                     # 3 self-closing
+    r"|</([a-zA-Z][-.a-zA-Z0-9:_]*)>")                  # 4 end tag
+# one attribute of a span _TOKEN accepted: name, '=' (absent for a
+# bare name, so a="" and a stay apart), then one of the three values
+_ATTR = re.compile(
+    rf"({_NAME})(?:{_WS}*(=){_WS}*"
+    r"(?:\"([^\"]*)\"|'([^']*)'|([^\s\"'=<>]+)))?")
+_SEEN_ATTRS_MAX = 4096
 # marked sections mirror _markupbase.parse_marked_section/_scan_name:
 # a declname, then keyword-dependent close —  ']]>' (ws-tolerant) for
 # the SGML keywords, ']>' for MS-Office conditional if/else/endif
@@ -54,7 +92,17 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
     n = len(markup)
     i = 0
     find = markup.find
+    token = _TOKEN.match
+    attrs_in = _ATTR.findall
+    # parsed attribute lists by source span: page chrome repeats a few
+    # spans (class="...") thousands of times; builders copy the list
+    # into each element's dict and never mutate it.  Emptied when
+    # full, so pages of all-distinct spans keep it bounded.
+    seen_attrs: dict[str, list] = {}
     handle_data = builder.handle_data
+    handle_starttag = builder.handle_starttag
+    handle_startendtag = builder.handle_startendtag
+    handle_endtag = builder.handle_endtag
     cdata_elem: str | None = None
     work = 0
     work_budget = 65536 + 8 * n
@@ -112,17 +160,40 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
                 handle_data(markup[i:gtpos])    # raw data
                 i = gtpos
                 continue
-            builder.handle_endtag(cdata_elem)
+            handle_endtag(cdata_elem)
             cdata_elem = None
             i = gtpos
             continue
 
-        lt = find("<", i)
-        if lt < 0:
-            emit_text(i, n)
-            break
-        emit_text(i, lt)
-        i = lt
+        if markup[i] != "<":
+            k = find("<", i)
+            if k < 0:
+                k = n
+            emit_text(i, k)
+            i = k
+            continue
+        m = token(markup, i)
+        if m is not None:
+            if m.lastindex == 3:
+                name, src, slash = m.group(1, 2, 3)
+                tag = name.lower()
+                attrs = seen_attrs.get(src)
+                if attrs is None:
+                    if len(seen_attrs) >= _SEEN_ATTRS_MAX:
+                        seen_attrs.clear()
+                    attrs = seen_attrs[src] = [
+                        (a.lower(), (dq or sq or bare) if eq else None)
+                        for a, eq, dq, sq, bare in attrs_in(src)]
+                if slash:
+                    handle_startendtag(tag, attrs)
+                else:
+                    handle_starttag(tag, attrs)
+                    if tag in _CDATA_ELEMS:
+                        cdata_elem = tag
+            else:
+                handle_endtag(m.group(4).lower())
+            i = m.end()
+            continue
 
         if work > work_budget:
             # linear-tail degrade (see docstring): pathological input
@@ -131,8 +202,18 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
             break
 
         nxt_ch = markup[i + 1:i + 2]
-        if "a" <= nxt_ch <= "z" or "A" <= nxt_ch <= "Z":
-            # == _STARTTAG_OPEN.match (r'<[a-zA-Z]'), sans regex cost
+        letter = "a" <= nxt_ch <= "z" or "A" <= nxt_ch <= "Z"
+        if not letter and nxt_ch not in ("/", "!", "?"):
+            # lone '<' (or '<' + junk): literal text, advance one char
+            handle_data("<")
+            i += 1
+            continue
+        if letter:
+            # charge the failed _TOKEN scan: it never reads past the
+            # next '<'.  (On '</' it stops by the first '>', which the
+            # end-tag branch below always consumes.)
+            k = find("<", i + 1)
+            work += (n if k < 0 else k) - i
             # --- parse_starttag + check_for_whole_start_tag -------
             m = locatestarttagend_tolerant.match(markup, i)
             j = m.end()
@@ -183,9 +264,9 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
                 i = endpos
                 continue
             if end.endswith("/>"):
-                builder.handle_startendtag(tag, attrs)
+                handle_startendtag(tag, attrs)
             else:
-                builder.handle_starttag(tag, attrs)
+                handle_starttag(tag, attrs)
                 if tag in _CDATA_ELEMS:
                     cdata_elem = tag
             i = endpos
@@ -220,10 +301,10 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
                     i = pos + 1
                     continue
                 gtpos = find(">", nm.end())
-                builder.handle_endtag(nm.group(1).lower())
+                handle_endtag(nm.group(1).lower())
                 i = gtpos + 1            # find() can't fail: gt above
                 continue
-            builder.handle_endtag(full.group(1).lower())
+            handle_endtag(full.group(1).lower())
             i = gtpos
             continue
 
@@ -312,7 +393,3 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
             builder.handle_comment(markup[i + 2:pos])
             i = pos + 1
             continue
-
-        # lone '<' (or '<' + junk): literal text, advance one char
-        handle_data("<")
-        i += 1

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -154,6 +155,18 @@ def _scored_pairs_schema(items, queries, id_col, query_id_col):
     ])
 
 
+def _pairs_batch(arrow_schema, qid, neighbor_id, score):
+    """One (query, neighbor, score) batch typed by the kernel's
+    declared output schema — numpy alone would type an empty query-id
+    array (an empty query set) as float64."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(a, type=f.type)
+         for a, f in zip((qid, neighbor_id, score), arrow_schema)],
+        schema=arrow_schema)
+
+
 def _topk_rank(scored, query_id_col, k):
     w = (Window.partitionBy(query_id_col)
          .orderBy(F.col("score").desc(), F.col("neighbor_id").asc()))
@@ -184,13 +197,13 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         if dim is None:
             raise ValueError("impl='kernel' requires dim")
         import numpy as np
-        import pyarrow as pa
 
         qids, Q, qn = _collect_queries(queries, query_id_col,
                                        vec_col, dim)
         qid_arr = np.array(qids)
         out_schema = _scored_pairs_schema(items, queries, id_col,
                                           query_id_col)
+        arrow_schema = to_arrow_schema(out_schema)
         it = items.select(F.col(id_col).alias("neighbor_id"),
                           _as_double(vec_col).alias("_ivec"))
 
@@ -204,11 +217,10 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                     _seq_norm_np(V), qn)
                 keep = ids[:, None] != qid_arr[None, :]
                 nb, nq = scores.shape
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.tile(qid_arr, nb)[keep.ravel()]),
-                     pa.array(np.repeat(ids, nq)[keep.ravel()]),
-                     pa.array(scores.ravel()[keep.ravel()])],
-                    names=[query_id_col, "neighbor_id", "score"])
+                yield _pairs_batch(arrow_schema,
+                                   np.tile(qid_arr, nb)[keep.ravel()],
+                                   np.repeat(ids, nq)[keep.ravel()],
+                                   scores.ravel()[keep.ravel()])
 
         scored = it.mapInArrow(score_batches, out_schema)
         return _topk_rank(scored, query_id_col, k)
@@ -358,7 +370,6 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         if dim is None:
             raise ValueError("impl='kernel' requires dim")
         import numpy as np
-        import pyarrow as pa
 
         S = np.array([_plane_signs_py(p, dim)
                       for p in range(n_planes)])
@@ -377,6 +388,7 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                 probe_map.setdefault(key, []).append(j)
         out_schema = _scored_pairs_schema(items, queries, id_col,
                                           query_id_col)
+        arrow_schema = to_arrow_schema(out_schema)
         it = items.select(F.col(id_col).alias("neighbor_id"),
                           _as_double(vec_col).alias("_ivec"))
 
@@ -407,11 +419,10 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                         scores.ravel()[keep]))
                 if not outs:
                     continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate([o[0] for o in outs])),
-                     pa.array(np.concatenate([o[1] for o in outs])),
-                     pa.array(np.concatenate([o[2] for o in outs]))],
-                    names=[query_id_col, "neighbor_id", "score"])
+                yield _pairs_batch(
+                    arrow_schema,
+                    *(np.concatenate([o[c] for o in outs])
+                      for c in range(3)))
 
         scored = it.mapInArrow(score_batches, out_schema)
         return _topk_rank(scored, query_id_col, k)
@@ -548,7 +559,6 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         if dim is None:
             raise ValueError("impl='kernel' requires dim")
         import numpy as np
-        import pyarrow as pa
 
         C = np.array([vec for _, vec in seeds])      # cell-asc order
         cn = _seq_norm_np(C)
@@ -564,6 +574,7 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                 cell_map.setdefault(c, []).append(j)
         out_schema = _scored_pairs_schema(items, queries, id_col,
                                           query_id_col)
+        arrow_schema = to_arrow_schema(out_schema)
         it2 = items.select(F.col(id_col).alias("neighbor_id"),
                            _as_double(vec_col).alias("_ivec"))
 
@@ -594,11 +605,10 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                         scores.ravel()[keep]))
                 if not outs:
                     continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate([o[0] for o in outs])),
-                     pa.array(np.concatenate([o[1] for o in outs])),
-                     pa.array(np.concatenate([o[2] for o in outs]))],
-                    names=[query_id_col, "neighbor_id", "score"])
+                yield _pairs_batch(
+                    arrow_schema,
+                    *(np.concatenate([o[c] for o in outs])
+                      for c in range(3)))
 
         scored = it2.mapInArrow(score_batches, out_schema)
         return _topk_rank(scored, query_id_col, k)

@@ -169,7 +169,10 @@ def pages_from_documents(documents: DataFrame,
 
 def _parquet_num_rows(path: str) -> int | None:
     """Exact row count from local parquet footer metadata (file or
-    directory of part files); None when the path isn't local."""
+    flat directory of part files); None when the path isn't local, or
+    is a directory holding a subdirectory (a partitioned or nested
+    store, which the top-level listing would undercount) or no
+    top-level ``.parquet`` file."""
     import os
 
     import pyarrow.parquet as pq
@@ -178,9 +181,12 @@ def _parquet_num_rows(path: str) -> int | None:
         if os.path.isfile(path):
             return pq.ParquetFile(path).metadata.num_rows
         if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path) if f.endswith(".parquet"))
+            entries = [os.path.join(path, f) for f in os.listdir(path)]
+            parts = [f for f in entries if f.endswith(".parquet")]
+            if not parts or any(os.path.isdir(f) for f in entries):
+                return None
+            return sum(pq.ParquetFile(f).metadata.num_rows
+                       for f in parts)
     except Exception:
         return None
     return None

@@ -3,8 +3,8 @@
 markup shapes — pathological '<' densities, unterminated constructs,
 bogus-comment storms — timed through the fast lexer AND the stdlib
 html.parser tokenizer.  The fast path must never be meaningfully
-slower than the stdlib fallback on adversarial input (it can fall
-back via RDFA_SPARK_STDLIB_SOUP=1 but should not need to).
+slower than the stdlib tokenizer (``parse_html_stdlib``, the tests'
+reference) on adversarial input: extraction has no way to switch to it.
 
 Prints one JSON line: per-case KB/s for both tokenizers + ratio.
 """

@@ -74,6 +74,40 @@ def test_ann_kernel_bit_identical_to_expr(spark, emb, sf_dir):
     assert g == h and g
 
 
+@pytest.mark.parametrize("op", ["cosine_topk", "lsh_cosine_topk",
+                                "ivf_cosine_topk"])
+def test_ann_kernel_empty_query_set(spark, emb, sf_dir, op):
+    """An empty query set gives every scoring kernel an empty result
+    of the declared schema (its numpy query-id array is float64)."""
+    from rdfa_spark.functions import similarity
+    dim = similarity.embedding_dim(f"{sf_dir}/embeddings.parquet")
+    q = emb.filter(F.lit(False)) \
+           .select(F.col("vec_id").alias("query_id"), "embedding")
+    kw = dict(n_centroids=8, nprobe=4) if op == "ivf_cosine_topk" \
+        else {}
+    out = getattr(similarity, op)(emb, q, k=5, dim=dim, impl="kernel",
+                                  **kw)
+    assert out.collect() == []
+    assert out.schema["query_id"].dataType == \
+        emb.schema["vec_id"].dataType
+
+
+def test_pairs_batch_keeps_declared_types():
+    """The kernels' output batch takes its column types from the
+    declared schema, also when numpy inferred float64 for an empty
+    query-id array."""
+    import numpy as np
+    import pyarrow as pa
+
+    from rdfa_spark.functions.similarity import _pairs_batch
+    schema = pa.schema([("query_id", pa.int64()),
+                        ("neighbor_id", pa.int64()),
+                        ("score", pa.float64())])
+    b = _pairs_batch(schema, np.array([]), np.array([], dtype=np.int64),
+                     np.array([]))
+    assert b.num_rows == 0 and b.schema == schema
+
+
 def test_lsh_ann_recall_vs_exact(spark, emb):
     """LSH candidates within the query's bucket must agree with
     exact search wherever they overlap; recall@1 reported sane."""

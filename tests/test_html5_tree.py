@@ -98,6 +98,20 @@ TREE_CASES = [
     # stray end tags with no match are ignored
     ("</b>x", "'x'"),
     ("</span>x", "'x'"),
+    # -- well-nested markup (the builder's common-case paths) -------
+    ("<ul><li>a</li><li>b</li></ul>", "<ul>[<li>['a'],<li>['b']]"),
+    ("<ul><li>a<li>b</ul>", "<ul>[<li>['a'],<li>['b']]"),
+    ("<ul><li><span>a<li>b</span></ul>",
+     "<ul>[<li>[<span>['a']],<li>['b']]"),
+    ("<dl><dt>a<dd>b</dl>", "<dl>[<dt>['a'],<dd>['b']]"),
+    ("<div><p>x<div>y</div></div>", "<div>[<p>['x'],<div>['y']]"),
+    ("<p><a href=1>x<div>y",
+     "<p>[<a href=1>['x']],<div>[<a href=1>['y']]"),
+    ("<b>x</b>y", "<b>['x'],'y'"),
+    ("<a href=1>x</a><a href=2>y</a>",
+     "<a href=1>['x'],<a href=2>['y']"),
+    ("<p>x<img src=i>y</p>", "<p>['x',<img src=i>[],'y']"),
+    ("<i a=1 a=2 A=3>x</i>", "<i a=1>['x']"),   # first attr wins
 ]
 
 

@@ -65,7 +65,57 @@ EDGE_CASES = [
     '<![temp[q]]>r', '<![unknown[z]]>w', '<![3x]>t', '<![[x]]>t',
     '<![>t', '<![', '<![cdata', '<![cdata ', '<![if', '<![if x',
     '<![CDATA[unterminated', '<![endif]no-gt', '<![ CDATA[x]]>t',
+    # both sides of the lexer's one-regex token boundary: values with
+    # '&', '<', '>', '/', '=' or newlines
+    '<a title="x&amp;y" href=/p?a=1&amp;b=2>t</a>', "<a b='&lt;'>t",
+    '<a title="a<b">t</a>', "<a title='a>b'>t</a>", '<a b=x<y>t',
+    '<a href=x/y>t</a>', '<a href="/x/">t</a>', '<a href=/x/ >t',
+    '<a b=c/ d>t', '<a b="c=d" e=\'f=g\'>t', '<a b=c=d>t',
+    '<a title="l1\nl2">t</a>', "<a title='l1\r\nl2'\n>t",
+    # a="" against a bare a
+    '<p a="" b>t</p>', "<p a='' b=''>t", '<p a b c=d>t', '<p a= >t',
+    # duplicate attributes: the first one wins
+    '<p a=1 a=2>t', '<p class="x" CLASS="y" class=z>t',
+    '<a href=1 href="2" HREF=\'3\'>t</a>',
+    # upper-case tag and attribute names
+    '<DIV CLASS="X" Id=Y>t</DIV>', '<Li ClAsS=a>t</lI>', '<BR/>t',
+    # whitespace around '=' (ASCII, vertical tab, no-break space)
+    '<p a = "x" b= y c =z>t', '<p a\n=\n"x">t', "<p a\t=\t'x'>t",
+    '<p a\x0b=x>t', '<p a=\xa0x>t', '<p\xa0a=x>t', '<p\x0ba=x>t',
+    '<p a="x"b=y>t', '<p a="x"/b=y>t', '<p  a=x  />t', '<p/a=x>t',
+    # <script>/<style> start tags with attributes stay rawtext
+    '<script type="text/javascript" src=x.js>var a = "<b>";</script>t',
+    '<style media=screen>p > a { c: &x }</style>t',
+    '<SCRIPT TYPE=x>y</script>t', '<script async/>t</script>u',
+    # </li> and </a> closing the current node, and mis-nested forms
+    '<ul><li>a</li><li>b</li></ul>', '<ul><li><a href=x>a</a></li></ul>',
+    '<ul><li><a href=x>a</li></a></ul>', '<ul><li>a<li>b</ul>',
+    '<ul><li><span>a<li>b</span></ul>', '<a href=1>x<a href=2>y</a></a>',
+    '<p><a>x</p>y</a>', '<b><a>x</b></a>', '<div><li>x</li></div>',
+    '<a><b>x</a>y</b>', '<ol><li><p>x<li>y</ol>', '<dl><dt>a<dd>b</dl>',
+    '<p><div>x</div>', '<span><p>x</span>y', '<a><a>x</a>',
 ]
+
+
+def _chrome_page(size=1 << 20):
+    """A well-formed HTML5 page carrying ~``size`` bytes of nav/grid/
+    footer chrome: the shape of a large crawled page, where nearly
+    every token is a short start or end tag with a class attribute."""
+    nav = ('<div class="nav"><ul class="menu">'
+           + '<li class="mi"><a class="lnk"><span class="ic"></span>'
+             '</a></li>' * 8
+           + '</ul></div><div class="hero"><img class="b"/>'
+             '<div class="grid">'
+           + '<div class="cell"><span class="badge"></span></div>' * 6
+           + '</div></div>')
+    item = '<li class="col"><span class="s"></span></li>'
+    return ('<!DOCTYPE html><html lang="en"><head>'
+            '<title property="dc:title">T</title>'
+            '<meta property="og:type" content="website"></head><body>'
+            + nav + '<div about="#main"><p property="dc:description">'
+            'text &amp; <more></p></div><div class="footer">'
+            '<ul class="cols">' + item * (size // len(item))
+            + '</ul></div></body></html>')
 
 FUZZ_FRAGS = [
     "<div>", "</div>", "<p about='#a'", ">", "<span property=",
@@ -86,6 +136,10 @@ FUZZ_FRAGS = [
 def test_edge_cases():
     for c in EDGE_CASES:
         _ab(c)
+
+
+def test_large_chrome_page():
+    _ab(_chrome_page())
 
 
 def test_conformance_soup_markups():
@@ -127,13 +181,14 @@ def test_degenerate_input_degrades_linearly():
 
     from rdfa_spark.core.dom import parse_html
 
-    adversarial = "<a " * 68000        # ~200KB
-    t0 = time.time()
-    doc = parse_html(adversarial)
-    assert time.time() - t0 < 10       # quadratic would be minutes
-    assert _degraded(adversarial)
-    # the degraded tail is still text content under the root
-    assert doc.root is not None
+    for adversarial in ("<a " * 68000,      # ~200KB each
+                        "<a b=c " * 30000):  # attrs, never a '>'
+        t0 = time.time()
+        doc = parse_html(adversarial)
+        assert time.time() - t0 < 10       # quadratic would be minutes
+        assert _degraded(adversarial)
+        # the degraded tail is still text content under the root
+        assert doc.root is not None
 
     assert not _degraded("<p>hello</p>" * 5000)
     # small instances of the same shape stay under the 64KB WORK

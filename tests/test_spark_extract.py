@@ -125,6 +125,26 @@ def test_extraction_plan_no_shuffle(spark, sf_dir):
     assert "Exchange" not in plan
 
 
+def test_load_pages_partitioned_store(spark, sf_dir, tmp_path):
+    """A partitionBy documents store loads the same pages as a flat
+    one: its footer count is unknown (no top-level part file), so
+    load_pages counts with Spark instead of taking a partial sum."""
+    from rdfa_spark.pages import _parquet_num_rows
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    flat, part = tmp_path / "flat", tmp_path / "part"
+    docs.write.parquet(str(flat / "documents.parquet"))
+    docs.write.partitionBy("lang").parquet(
+        str(part / "documents.parquet"))
+    assert _parquet_num_rows(str(flat / "documents.parquet")) == \
+        docs.count()
+    assert _parquet_num_rows(str(part / "documents.parquet")) is None
+    cols = ["url", "html", "text", "lang"]
+    want = load_pages(spark, str(flat), partitions=0).select(cols)
+    got = load_pages(spark, str(part), partitions=0).select(cols)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
 def test_extract_all_single_pass_parity(spark, pages):
     """extract_all (one parse) splits into exactly the three dedicated
     extractors' outputs, and its plan has no shuffle."""
