@@ -231,8 +231,42 @@ def _substitute_entities(markup: bytes) -> bytes:
     return b"".join(out)
 
 
-class _XmlBuilder:
+class _TextRuns:
+    """Text-node merging for the tree builders.  A text event next to
+    a text node merges into it; the merged pieces are collected and
+    joined once, in _flush_text — concatenating per event copies the
+    whole run every time, quadratic in events per text node.  Until
+    the flush, the node holds the run's first piece; each builder
+    flushes before anything could shift or read it, and at the end of
+    the parse."""
+
     def __init__(self):
+        self._run_kids: list | None = None   # children list of the run
+        self._run_at = 0                     # index of its text node
+        self._run: list[str] = []
+
+    def _merge_text(self, kids: list, i: int, data: str) -> None:
+        """Merge text ``data`` into the text node at ``kids[i - 1]``."""
+        if kids is self._run_kids and i - 1 == self._run_at:
+            self._run.append(data)
+        else:
+            self._flush_text()
+            self._run_kids, self._run_at = kids, i - 1
+            self._run = [kids[i - 1], data]
+
+    def _flush_text(self) -> None:
+        if self._run_kids is not None:
+            self._run_kids[self._run_at] = "".join(self._run)
+            self._run_kids = None
+
+
+class _XmlBuilder(_TextRuns):
+    # expat events only append to the tree, so a run's index stays
+    # valid until the parse ends: flushed only when the next run
+    # starts, and after the parse
+
+    def __init__(self):
+        super().__init__()
         self.root: Element | None = None
         self.stack: list[Element] = []
         self.saw_base = False
@@ -257,7 +291,7 @@ class _XmlBuilder:
         if self.stack:
             kids = self.stack[-1].children
             if kids and isinstance(kids[-1], str):
-                kids[-1] += data
+                self._merge_text(kids, len(kids), data)
             else:
                 kids.append(data)
 
@@ -306,6 +340,7 @@ def parse_xml(markup: bytes | str) -> Document:
 
     p.SkippedEntityHandler = skipped
     p.Parse(markup, True)
+    b._flush_text()
     if b.root is None:
         raise xml.parsers.expat.ExpatError("no root element")
     return Document(b.root, warnings, saw_base=b.saw_base)
@@ -441,9 +476,10 @@ _END_FULL = _FORMATTING | _AFE_MARKER_TAGS | _VOID
 _AFE_SEGMENT_CAP = 32
 
 
-class _SoupBuilder(HTMLParser):
+class _SoupBuilder(_TextRuns, HTMLParser):
     def __init__(self):
-        super().__init__(convert_charrefs=True)
+        _TextRuns.__init__(self)
+        HTMLParser.__init__(self, convert_charrefs=True)
         self.root: Element | None = None
         self.stack: list[Element] = []
         # list of active formatting elements (WHATWG 13.2.4.3):
@@ -611,6 +647,8 @@ class _SoupBuilder(HTMLParser):
         # none of the implied-end / table / formatting machinery, and
         # nor do block, list and <a> starts in well-nested markup
         # (_start_is_simple) — reconstruct-if-needed, insert, push.
+        if self._run_kids is not None:
+            self._flush_text()
         if "base" in tag and (tag == "base"
                               or tag.endswith(":base")):
             self.saw_base = True
@@ -732,6 +770,8 @@ class _SoupBuilder(HTMLParser):
             self.afe.append(_MARKER)
 
     def handle_startendtag(self, tag, attrs):
+        if self._run_kids is not None:
+            self._flush_text()
         if "base" in tag and (tag == "base"
                               or tag.endswith(":base")):
             self.saw_base = True
@@ -908,6 +948,8 @@ class _SoupBuilder(HTMLParser):
             self._stack_ids.add(id(fclone))
 
     def handle_endtag(self, tag):
+        if self._run_kids is not None:
+            self._flush_text()
         stack = self.stack
         if len(stack) > 1 and stack[-1].tag == tag:
             # well-nested close of the current node: a plain pop, or
@@ -978,7 +1020,7 @@ class _SoupBuilder(HTMLParser):
                     return
                 prev = par.children[idx - 1] if idx > 0 else None
                 if isinstance(prev, str):
-                    par.children[idx - 1] = prev + data
+                    self._merge_text(par.children, idx, data)
                 else:
                     par.children.insert(idx, data)
                 return
@@ -989,23 +1031,26 @@ class _SoupBuilder(HTMLParser):
             # table-structure re-entry splits the table in two
             kids = self.stack[-1].children
             if kids and isinstance(kids[-1], str):
-                kids[-1] += data
+                self._merge_text(kids, len(kids), data)
             else:
                 kids.append(data)
             return
         self._reconstruct_afe()
         kids = self.stack[-1].children
         if kids and isinstance(kids[-1], str):
-            kids[-1] += data
+            self._merge_text(kids, len(kids), data)
         else:
             kids.append(data)
 
     def handle_comment(self, data):
+        if self._run_kids is not None:
+            self._flush_text()
         if self.stack:
             self.stack[-1].children.append(Comment(data))
 
 
 def _finish_soup(b: _SoupBuilder) -> Document:
+    b._flush_text()
     if b.root is None:
         b.root = Element("html", {})
     # HTML5 parsers place elements in the XHTML namespace; mirror that

@@ -6,8 +6,8 @@ state machine).
 
 Dispatch order, per position:
 
-1. rawtext (inside ``<script>``/``<style>``): only the matching close
-   tag ends it;
+1. rawtext (inside ``<script>``/``<style>``): only a complete
+   matching close tag ends it;
 2. a text run: one ``str.find`` to the next ``<`` (as html.parser
    does; a regex scan is slower on long runs);
 3. at a ``<``, one ``_TOKEN`` match for the two common tags — a
@@ -38,11 +38,13 @@ from __future__ import annotations
 
 import re
 from html import unescape
-from html.parser import (attrfind_tolerant, endtagfind,
+from html.parser import (attrfind_tolerant, commentclose, endtagfind,
                          locatestarttagend_tolerant, tagfind_tolerant)
 
 _CDATA_ELEMS = ("script", "style")
-_RAW_CLOSE = {el: re.compile(rf"</\s*{el}", re.I)
+# html.parser's set_cdata_mode pattern: rawtext ends only at a
+# COMPLETE close tag; with none left, the rest of the page is dropped
+_RAW_CLOSE = {el: re.compile(rf"</\s*{el}\s*>", re.I)
               for el in _CDATA_ELEMS}
 # The common-tag regex (dispatch step 3).  Separators are the ASCII
 # whitespace that also ends html.parser's tag name; names and values
@@ -133,8 +135,8 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
 
     while i < n:
         if cdata_elem is not None:
-            # rawtext: only the matching close tag ends it; a
-            # near-miss end tag (</scriptx>) stays data, raw
+            # rawtext: only a complete matching close tag ends it; a
+            # near-miss end tag (</scriptx>, </style x>) stays data, raw
             m = _RAW_CLOSE[cdata_elem].search(markup, i)
             if m is None:
                 # mirrors goahead leftover-in-cdata: dropped
@@ -143,18 +145,9 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
             if m.start() > i:
                 handle_data(markup[i:m.start()])
             i = m.start()
-            # parse_endtag in cdata mode
-            gt = find(">", i + 1)
-            if gt < 0:
-                # recovery in cdata emits the raw chunk up to the
-                # next '<' (or one char), then the tail is dropped
-                k = find("<", i + 1)
-                if k < 0:
-                    k = i + 1
-                handle_data(markup[i:k])
-                i = n
-                break
-            gtpos = gt + 1
+            # parse_endtag in cdata mode; its '>' search stops at the
+            # match's own '>'
+            gtpos = m.end()
             full = endtagfind.match(markup, i)
             if full is None or full.group(1).lower() != cdata_elem:
                 handle_data(markup[i:gtpos])    # raw data
@@ -309,15 +302,16 @@ def feed_events(builder, markup: str) -> None:  # noqa: C901
             continue
 
         if markup.startswith("<!--", i):
-            close = find("-->", i + 4)
-            if close < 0:
+            # _markupbase.parse_comment: '--', optional whitespace, '>'
+            close = commentclose.search(markup, i + 4)
+            if close is None:
                 work += n - i        # failed close-scan covered tail
                 k = recover(i)
                 emit_text(i, k)
                 i = k
                 continue
-            builder.handle_comment(markup[i + 4:close])
-            i = close + 3
+            builder.handle_comment(markup[i + 4:close.start()])
+            i = close.end()
             continue
 
         if markup.startswith("<?", i):

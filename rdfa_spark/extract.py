@@ -1,17 +1,18 @@
 """Spark extraction stage: pages -> triples / errors DataFrames.
 
 The reference's per-document recursive parse
-(lib/RDF/RDFa/Parser.pm:489-544) becomes one Arrow-batched
-``mapInPandas`` over the pages table: JVM->Python crossings happen
-once per batch, and the whole relational surface around the UDF
-(column pruning, filters, dedup, writes) stays in Catalyst.
+(lib/RDF/RDFa/Parser.pm:489-544) becomes one chunked ``mapInArrow``
+kernel over the pages table (``_walk_pages``): JVM->Python crossings
+happen once per Arrow batch, every extractor is that kernel with a
+different set of row kinds, and the whole relational surface around
+it (column pruning, filters, dedup, writes) stays in Catalyst.
 
 Scale notes (100 TB design):
 * extraction is embarrassingly parallel per url — no shuffle at all
   in this stage; parallelism == input splits
   (`spark.sql.files.maxPartitionBytes` governs task count);
-* the UDF reads only (url, html, lang): column pruning reaches the
-  parquet scan because mapInPandas consumes an explicit 3-column
+* the kernel reads only (url, html): column pruning reaches the
+  parquet scan because mapInArrow consumes an explicit 2-column
   projection;
 * bnode labels are deterministic per url, so re-running a failed
   partition yields identical output — required for resumable,
@@ -20,10 +21,8 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
+import functools
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, IntegerType, LongType,
@@ -84,6 +83,9 @@ EXTRACT_ALL_SCHEMA = StructType([
 ])
 
 
+_host_config = functools.cache(make_config)
+
+
 def detect_config(html: bytes) -> Config:
     """Host-language dispatch for pre-crawled pages.
 
@@ -92,51 +94,23 @@ def detect_config(html: bytes) -> Config:
     XML declaration or an XHTML namespace on the root -> xhtml host,
     anything else -> html5 tag-soup.  Root @version still upgrades/
     downgrades the RDFa version (guess mode, Config.pm:342-367).
+    Configs are frozen, so one per host is built and shared.
     """
     if html[:4] == b"PK\x03\x04":      # ZIP magic -> ODF package
-        return make_config("opendocument-zip", "1.1")
+        return _host_config("opendocument-zip", "1.1")
     head = html[:2048].lstrip()
     is_xhtml = (head.startswith(b"<?xml")
                 or b'xmlns="http://www.w3.org/1999/xhtml"' in head)
-    host = "xhtml" if is_xhtml else "html5"
-    return make_config(host, "guess")
+    return _host_config("xhtml" if is_xhtml else "html5", "guess")
 
-
-_CFG_CACHE: dict[tuple, Config] = {}
-
-
-def _config_for(html: bytes, config: Config | None) -> Config:
-    if config is not None:
-        return config
-    if html[:4] == b"PK\x03\x04":      # ZIP magic: ODF package (S3)
-        key = ("opendocument-zip",)
-        cfg = _CFG_CACHE.get(key)
-        if cfg is None:
-            cfg = make_config(key[0], "1.1")
-            _CFG_CACHE[key] = cfg
-        return cfg
-    head = html[:2048].lstrip()
-    is_xhtml = (head.startswith(b"<?xml")
-                or b'xmlns="http://www.w3.org/1999/xhtml"' in head)
-    key = ("xhtml" if is_xhtml else "html5",)
-    cfg = _CFG_CACHE.get(key)
-    if cfg is None:
-        cfg = make_config(key[0], "guess")
-        _CFG_CACHE[key] = cfg
-    return cfg
-
-
-_TRIPLE_ARROW_NAMES = ["url", "subj", "pred", "obj", "obj_is_literal",
-                       "obj_datatype", "obj_lang", "graph", "emit_seq"]
 
 # Per-chunk cap on html bytes materialized as Python objects: an
 # incoming Arrow batch of max-size pages would otherwise be held
 # TWICE (Arrow buffer + to_pylist copies) alongside the full batch's
-# accumulated output lists.  Chunking bounds the Python-side peak to
+# accumulated output rows.  Chunking bounds the Python-side peak to
 # ~cap regardless of page sizes; the Arrow buffer itself is sliced
 # zero-copy.
-_ARROW_CHUNK_BYTES = int(os.environ.get(
-    "RDFA_SPARK_ARROW_CHUNK_BYTES", str(32 << 20)))
+_ARROW_CHUNK_BYTES = 32 << 20
 _ARROW_CHUNK_ROWS = 2048
 
 
@@ -158,202 +132,93 @@ def _chunk_bounds(lengths, max_bytes: int, max_rows: int):
     return bounds
 
 
-def _walk_arrow_batches(batches, config: Config | None, fail_acc=None):
-    """Arrow-native extraction: iterate RecordBatches, emit
-    RecordBatches — no pandas materialization on either side of the
-    JVM<->Python channel (mapInArrow).
+# Every row kind is built in EXTRACT_ALL_SCHEMA's column layout; each
+# extractor's schema is a projection of it.
+_ALL_NAMES = EXTRACT_ALL_SCHEMA.fieldNames()
+_ARROW_TYPES = {"string": "string", "boolean": "bool", "bigint": "int64",
+                "int": "int32"}
+_NO_TRIPLE, _NO_ERROR, _NO_TEXT = (None,) * 8, (None,) * 4, (None,) * 2
+
+
+def _page_rows(url: str, html: bytes, config: Config | None,
+               kinds: str, rows: list) -> bool:
+    """Parse one page and append its rows of the wanted kinds
+    (triples 't', processor-graph errors 'e', text/lineage 'x') to
+    ``rows``.  A page whose parse raises yields one parse-failed
+    error row when errors are wanted; returns False for it."""
+    try:
+        w = parse_rdfa(html, url,
+                       config if config is not None
+                       else detect_config(html))
+    except Exception as exc:   # never fail the job on one page
+        if "e" in kinds:
+            rows.append((url, "e") + _NO_TRIPLE
+                        + ("error", "parse-failed", str(exc)[:500], None)
+                        + _NO_TEXT)
+        return False
+    if "t" in kinds:
+        rows.extend((url, "t", t.subj, t.pred, t.obj, t.is_literal,
+                     t.datatype, t.lang, t.graph, seq)
+                    + _NO_ERROR + _NO_TEXT
+                    for seq, t in enumerate(w.triples))
+    if "e" in kinds:
+        rows.extend((url, "e") + _NO_TRIPLE
+                    + (e.level, e.code, e.message, e.node_path)
+                    + _NO_TEXT
+                    for e in w.errors)
+    if "x" in kinds:
+        root = w.doc.root
+        rows.append((url, "x") + _NO_TRIPLE + _NO_ERROR
+                    + (root.text_content() if root is not None else "",
+                       len(w.triples)))
+    return True
+
+
+def _walk_pages(batches, config: Config | None, kinds: str,
+                schema: StructType, fail_acc=None):
+    """The extraction kernel behind every extractor: (url, html)
+    RecordBatches in, ``schema``-shaped RecordBatches out, one parse
+    per page (mapInArrow — no pandas on either side of the
+    JVM<->Python channel).
 
     Each incoming batch is processed in zero-copy row slices capped
     at _ARROW_CHUNK_BYTES of html, so Python-object copies of the
-    pages and the in-flight output lists are bounded by the cap, not
-    by the batch size.
-
-    Parse failures emit no triple rows but are counted in
-    ``fail_acc`` (a Spark accumulator) — the no-silent-drops rule
-    holds on the fast path too.  Callers that need the failing urls
-    (not just a count) use ``extract_all`` + ``split_extracts``."""
+    pages and the in-flight output rows are bounded by the cap, not
+    by the batch size; one output batch per slice.  Null-html rows
+    emit nothing.  Parse failures are counted in ``fail_acc`` (a
+    Spark accumulator) when given."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    names = schema.fieldNames()
+    picks = [_ALL_NAMES.index(name) for name in names]
+    types = [_ARROW_TYPES[f.dataType.simpleString()] for f in schema]
     for rb in batches:
-        url_idx = rb.schema.get_field_index("url")
-        html_idx = rb.schema.get_field_index("html")
-        if rb.num_rows == 0:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([], pa.string())] * 4
-                + [pa.array([], pa.bool_())]
-                + [pa.array([], pa.string())] * 3
-                + [pa.array([], pa.int64())],
-                names=_TRIPLE_ARROW_NAMES)
-            continue
+        urls = rb.column("url")
+        htmls = rb.column("html")
         # per-row byte lengths straight from the Arrow offsets (no
         # data copy) drive the chunking
-        lens = pc.binary_length(rb.column(html_idx)).to_pylist()
+        lens = pc.binary_length(htmls).to_pylist()
         for lo, hi in _chunk_bounds(lens, _ARROW_CHUNK_BYTES,
                                     _ARROW_CHUNK_ROWS):
-            sub = rb.slice(lo, hi - lo)          # zero-copy
-            # bulk-convert the slice once (C loop) instead of
-            # per-row scalar .as_py() calls
-            urls = sub.column(url_idx).to_pylist()
-            htmls = sub.column(html_idx).to_pylist()
-            c_url, c_subj, c_pred, c_obj = [], [], [], []
-            c_lit, c_dt, c_lang, c_graph, c_seq = [], [], [], [], []
-            for i in range(sub.num_rows):
-                html = htmls[i]
-                if html is None:
-                    continue
-                url = urls[i]
-                try:
-                    w = parse_rdfa(html, url,
-                                   _config_for(html, config))
-                except Exception:
-                    if fail_acc is not None:
-                        fail_acc.add(1)
-                    continue
-                for seq, t in enumerate(w.triples):
-                    c_url.append(url)
-                    c_subj.append(t.subj)
-                    c_pred.append(t.pred)
-                    c_obj.append(t.obj)
-                    c_lit.append(t.is_literal)
-                    c_dt.append(t.datatype)
-                    c_lang.append(t.lang)
-                    c_graph.append(t.graph)
-                    c_seq.append(seq)
+            rows: list[tuple] = []
+            for url, html in zip(urls.slice(lo, hi - lo).to_pylist(),
+                                 htmls.slice(lo, hi - lo).to_pylist()):
+                if (html is not None
+                        and not _page_rows(url, html, config, kinds, rows)
+                        and fail_acc is not None):
+                    fail_acc.add(1)
+            by_col = list(zip(*rows)) or [()] * len(_ALL_NAMES)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(c_url, pa.string()),
-                 pa.array(c_subj, pa.string()),
-                 pa.array(c_pred, pa.string()),
-                 pa.array(c_obj, pa.string()),
-                 pa.array(c_lit, pa.bool_()),
-                 pa.array(c_dt, pa.string()),
-                 pa.array(c_lang, pa.string()),
-                 pa.array(c_graph, pa.string()),
-                 pa.array(c_seq, pa.int64())],
-                names=_TRIPLE_ARROW_NAMES)
+                [pa.array(by_col[i], type=t) for i, t in zip(picks, types)],
+                names=names)
 
 
-def _walk_batches(batches: Iterator[pd.DataFrame], config: Config | None,
-                  want: str):
-    for pdf in batches:
-        urls, rows = pdf["url"].values, []
-        htmls = pdf["html"].values
-        for i in range(len(pdf)):
-            url = urls[i]
-            html = htmls[i]
-            if html is None:
-                continue
-            html = bytes(html)
-            try:
-                w = parse_rdfa(html, url, _config_for(html, config))
-            except Exception as exc:   # never fail the job on one page
-                if want == "errors":
-                    rows.append((url, "error", "parse-failed",
-                                 str(exc)[:500], None))
-                continue
-            if want == "triples":
-                for seq, t in enumerate(w.triples):
-                    rows.append((url, t.subj, t.pred, t.obj,
-                                 t.is_literal, t.datatype, t.lang,
-                                 t.graph, seq))
-            elif want == "errors":
-                for e in w.errors:
-                    rows.append((url, e.level, e.code, e.message,
-                                 e.node_path))
-            else:  # text
-                rows.append((url, w.doc.root.text_content()
-                             if w.doc.root is not None else "",
-                             len(w.triples)))
-        if want == "triples":
-            cols = [f.name for f in TRIPLE_SCHEMA.fields]
-        elif want == "errors":
-            cols = [f.name for f in ERROR_SCHEMA.fields]
-        else:
-            cols = [f.name for f in TEXT_SCHEMA.fields]
-        yield pd.DataFrame(rows, columns=cols)
-
-
-_ALL_ARROW_NAMES = [f.name for f in EXTRACT_ALL_SCHEMA.fields]
-
-
-def _walk_arrow_all(batches, config: Config | None):
-    """One parse per page, three row kinds out (triples 't', errors
-    'e', text/lineage 'x').  Parse failures always land as an error
-    row — pages can never vanish without a trace."""
-    import pyarrow as pa
-
-    for rb in batches:
-        urls = rb.column(rb.schema.get_field_index("url")).to_pylist()
-        htmls = rb.column(rb.schema.get_field_index("html")).to_pylist()
-        cols: list[list] = [[] for _ in _ALL_ARROW_NAMES]
-        (c_url, c_kind, c_subj, c_pred, c_obj, c_lit, c_dt, c_lang,
-         c_graph, c_seq, c_level, c_code, c_msg, c_path, c_text,
-         c_ntrip) = cols
-
-        def pad(n):
-            # fill every non-appended column with nulls to length n
-            for c in cols:
-                c.extend([None] * (n - len(c)))
-
-        for i in range(rb.num_rows):
-            html = htmls[i]
-            if html is None:
-                continue
-            url = urls[i]
-            try:
-                w = parse_rdfa(html, url, _config_for(html, config))
-            except Exception as exc:
-                c_url.append(url)
-                c_kind.append("e")
-                c_level.append("error")
-                c_code.append("parse-failed")
-                c_msg.append(str(exc)[:500])
-                pad(len(c_url))
-                continue
-            for seq, t in enumerate(w.triples):
-                c_url.append(url)
-                c_kind.append("t")
-                c_subj.append(t.subj)
-                c_pred.append(t.pred)
-                c_obj.append(t.obj)
-                c_lit.append(t.is_literal)
-                c_dt.append(t.datatype)
-                c_lang.append(t.lang)
-                c_graph.append(t.graph)
-                c_seq.append(seq)
-                pad(len(c_url))
-            for e in w.errors:
-                c_url.append(url)
-                c_kind.append("e")
-                c_level.append(e.level)
-                c_code.append(e.code)
-                c_msg.append(e.message)
-                c_path.append(e.node_path)
-                pad(len(c_url))
-            c_url.append(url)
-            c_kind.append("x")
-            c_text.append(w.doc.root.text_content()
-                          if w.doc.root is not None else "")
-            c_ntrip.append(len(w.triples))
-            pad(len(c_url))
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(c_url, pa.string()),
-             pa.array(c_kind, pa.string()),
-             pa.array(c_subj, pa.string()),
-             pa.array(c_pred, pa.string()),
-             pa.array(c_obj, pa.string()),
-             pa.array(c_lit, pa.bool_()),
-             pa.array(c_dt, pa.string()),
-             pa.array(c_lang, pa.string()),
-             pa.array(c_graph, pa.string()),
-             pa.array(c_seq, pa.int64()),
-             pa.array(c_level, pa.string()),
-             pa.array(c_code, pa.string()),
-             pa.array(c_msg, pa.string()),
-             pa.array(c_path, pa.string()),
-             pa.array(c_text, pa.string()),
-             pa.array(c_ntrip, pa.int32())],
-            names=_ALL_ARROW_NAMES)
+def _extract(pages: DataFrame, config: Config | None, kinds: str,
+             schema: StructType, fail_acc=None) -> DataFrame:
+    return pages.select("url", "html").mapInArrow(
+        lambda it: _walk_pages(it, config, kinds, schema, fail_acc),
+        schema)
 
 
 def extract_all(pages: DataFrame,
@@ -366,9 +231,7 @@ def extract_all(pages: DataFrame,
     ``split_extracts``.  Parse failures appear as
     (kind='e', code='parse-failed') rows — never silently dropped.
     """
-    proj = pages.select("url", "html")
-    return proj.mapInArrow(
-        lambda it: _walk_arrow_all(it, config), EXTRACT_ALL_SCHEMA)
+    return _extract(pages, config, "tex", EXTRACT_ALL_SCHEMA)
 
 
 def split_extracts(all_df: DataFrame) -> tuple[DataFrame, DataFrame,
@@ -386,13 +249,10 @@ def split_extracts(all_df: DataFrame) -> tuple[DataFrame, DataFrame,
     return triples, errors, texts
 
 
-def extract_triples(pages: DataFrame, config: Config | None = None,
-                    dedup: bool = False) -> DataFrame:
-    """pages(url, html, ...) -> triples DataFrame.
-
-    ``dedup=True`` additionally enforces cross-document set semantics
-    (the walker already dedups within a document, mirroring the
-    reference's set-store A4) — a shuffle, so off by default.
+def extract_triples(pages: DataFrame,
+                    config: Config | None = None) -> DataFrame:
+    """pages(url, html, ...) -> triples DataFrame.  The walker dedups
+    within a document, mirroring the reference's set-store (A4).
 
     Pages that fail to parse emit no triples but are never silently
     lost: a Spark accumulator counts them, exposed as
@@ -409,34 +269,25 @@ def extract_triples(pages: DataFrame, config: Config | None = None,
     DataFrame without it — capture the handle before transforming, or
     use ``extract_all`` for in-band accounting.
     """
-    proj = pages.select("url", "html")
     fail_acc = pages.sparkSession.sparkContext.accumulator(0)
-    out = proj.mapInArrow(
-        lambda it: _walk_arrow_batches(it, config, fail_acc),
-        TRIPLE_SCHEMA)
-    if dedup:
-        out = out.dropDuplicates(
-            ["url", "subj", "pred", "obj", "obj_is_literal",
-             "obj_datatype", "obj_lang", "graph"])
+    out = _extract(pages, config, "t", TRIPLE_SCHEMA, fail_acc)
     out.parse_failures = fail_acc
     return out
 
 
 def extract_errors(pages: DataFrame,
                    config: Config | None = None) -> DataFrame:
-    """Processor-graph analogue (Parser.pm:469-487) as a DataFrame."""
-    proj = pages.select("url", "html")
-    return proj.mapInPandas(
-        lambda it: _walk_batches(it, config, "errors"), ERROR_SCHEMA)
+    """Processor-graph analogue (Parser.pm:469-487) as a DataFrame; a
+    page whose parse raises yields one (level='error',
+    code='parse-failed') row."""
+    return _extract(pages, config, "e", ERROR_SCHEMA)
 
 
 def extract_text_df(pages: DataFrame,
                     config: Config | None = None) -> DataFrame:
     """F1 text-concatenation rule per url (byte-identical invariant,
     Parser.pm:2541-2559), plus triple counts for metrics."""
-    proj = pages.select("url", "html")
-    return proj.mapInPandas(
-        lambda it: _walk_batches(it, config, "text"), TEXT_SCHEMA)
+    return _extract(pages, config, "x", TEXT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..extract import TRIPLE_SCHEMA, _walk_arrow_batches
+from ..extract import TRIPLE_SCHEMA, _extract
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, "
              "text string, lang string")
@@ -32,10 +32,9 @@ def read_page_stream(spark: SparkSession, src_dir: str,
 
 
 def extract_triples_stream(pages_stream: DataFrame) -> DataFrame:
-    """Streaming pages -> triples; same UDF as batch."""
-    return (pages_stream.select("url", "html")
-            .mapInArrow(lambda it: _walk_arrow_batches(it, None),
-                        TRIPLE_SCHEMA))
+    """Streaming pages -> triples; the batch extraction kernel, with
+    no parse-failure accumulator."""
+    return _extract(pages_stream, None, "t", TRIPLE_SCHEMA)
 
 
 def crawl_rate_metrics(pages_stream: DataFrame,

@@ -94,6 +94,14 @@ EDGE_CASES = [
     '<p><a>x</p>y</a>', '<b><a>x</b></a>', '<div><li>x</li></div>',
     '<a><b>x</a>y</b>', '<ol><li><p>x<li>y</ol>', '<dl><dt>a<dd>b</dl>',
     '<p><div>x</div>', '<span><p>x</span>y', '<a><a>x</a>',
+    # rawtext close tags carrying junk or never completing: only a
+    # complete close ends rawtext, else the rest is dropped
+    '<style>a</style x>b', '<style>x</style\u2028tail', '<style>x</style',
+    '<style>a</style x>b</style>c', '<script>a</script</script>t',
+    '<script>x</script\t\n>t', '<style>a</\u017ftyle>b</style>c',
+    # comment closes with whitespace before the '>'
+    '<p>a<!-- c --\t>b', '<!--a--\n>t', '<!--a-- >t<!--b-->u',
+    '<!--x--!>y-->z', '<!--a- ->b-->c',
 ]
 
 
@@ -189,6 +197,14 @@ def test_degenerate_input_degrades_linearly():
         assert _degraded(adversarial)
         # the degraded tail is still text content under the root
         assert doc.root is not None
+
+    # one text node from ~1M data events ('<' and ' ' alternate, 1 MB):
+    # merging the pieces must stay linear in the events
+    lt_space = "< " * 524288
+    t0 = time.time()
+    doc = parse_html(lt_space)
+    assert time.time() - t0 < 10
+    assert doc.root.children == [lt_space]
 
     assert not _degraded("<p>hello</p>" * 5000)
     # small instances of the same shape stay under the 64KB WORK

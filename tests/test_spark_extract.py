@@ -172,6 +172,19 @@ def test_extract_all_plan_no_shuffle(spark, sf_dir):
     assert "Exchange" not in plan
 
 
+@pytest.mark.parametrize("extractor", ["extract_errors",
+                                       "extract_text_df"])
+def test_errors_text_plan_arrow_no_shuffle(spark, sf_dir, extractor):
+    """extract_errors and extract_text_df run the same shuffle-free
+    mapInArrow kernel as the other extractors: no pandas crossing."""
+    import rdfa_spark.extract as ex
+    flat_pages = load_pages(spark, sf_dir, partitions=0)
+    plan = getattr(ex, extractor)(flat_pages)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "MapInArrow" in plan
+    assert "MapInPandas" not in plan and "Exchange" not in plan
+
+
 def test_extract_all_parse_failure_lands_in_errors(spark):
     """A page whose parse raises must surface as a parse-failed error
     row, never vanish (VERDICT r1 'what's wrong' #4)."""
@@ -207,18 +220,71 @@ def test_extract_triples_parse_failure_counted(spark):
     assert out.parse_failures.value == 2  # ...and nothing silent
 
 
-def test_arrow_batches_chunked_by_bytes(monkeypatch):
+def test_failure_and_null_rows_per_extractor(spark):
+    """One batch holding a page whose parse raises, a null-html row
+    and a good page, through all four extractors: the failing page
+    leaves exactly its failure trace (a count, one parse-failed error
+    row, no text row) and the null row leaves nothing.  The failing
+    page is a corrupt ODF package: the ZIP magic selects the
+    opendocument-zip host and the unzip raises."""
+    from rdfa_spark.extract import extract_all
+
+    bad, null, good = ("http://ex.com/bad", "http://ex.com/null",
+                       "http://ex.com/good")
+    rows = [(bad, b"PK\x03\x04" + b"not a zip " * 100),
+            (null, None),
+            (good, b'<html><body><p property="dc:title">t</p>'
+                   b'</body></html>')]
+    df = spark.createDataFrame(rows, "url string, html binary") \
+        .coalesce(1)
+
+    def by_url(out):
+        got = {}
+        for r in out.collect():
+            got.setdefault(r.url, []).append(r)
+        return got
+
+    trip = extract_triples(df)
+    t = by_url(trip)
+    assert set(t) == {good}
+    assert trip.parse_failures.value == 1
+
+    e = by_url(extract_errors(df))
+    assert null not in e
+    assert [(r.level, r.code) for r in e[bad]] == [("error",
+                                                    "parse-failed")]
+    assert 0 < len(e[bad][0].message) <= 500
+
+    x = by_url(extract_text_df(df))
+    assert set(x) == {good} and len(x[good]) == 1
+
+    a = by_url(extract_all(df))
+    assert null not in a
+    assert [(r.kind, r.code) for r in a[bad]] == [("e", "parse-failed")]
+    assert {r.kind for r in a[good]} == {"t", "x"}
+
+
+@pytest.mark.parametrize("kinds,schema_name,n_rows", [
+    ("t", "TRIPLE_SCHEMA", 6), ("e", "ERROR_SCHEMA", 6),
+    ("x", "TEXT_SCHEMA", 6), ("tex", "EXTRACT_ALL_SCHEMA", 18)],
+    ids=["t", "e", "x", "tex"])
+def test_arrow_batches_chunked_by_bytes(monkeypatch, kinds, schema_name,
+                                        n_rows):
     """A batch of max-size pages must not be materialized (or its
-    output accumulated) all at once: _walk_arrow_batches slices the
-    incoming RecordBatch by a byte cap, yielding one output batch
-    per slice, with triples identical to the unchunked run."""
+    output accumulated) all at once, whatever the extractor:
+    _walk_pages slices the incoming RecordBatch by a byte cap,
+    yielding one output batch per slice, with rows identical to the
+    unchunked run."""
     import pyarrow as pa
 
     import rdfa_spark.extract as ex
 
+    schema = getattr(ex, schema_name)
+    # one triple and one curie-fellthrough warning per page
     page = ('<html xmlns="http://www.w3.org/1999/xhtml"><head>'
             '<title>t</title></head><body>'
             '<p about="#s" property="dc:title">Doc %d</p>'
+            '<p property="bogus"></p>'
             + "<!-- " + "x" * (5 << 20) + " -->"    # ~5MB page
             + "</body></html>")
     rows = [(f"http://x.com/{i}", (page % i).encode())
@@ -229,30 +295,27 @@ def test_arrow_batches_chunked_by_bytes(monkeypatch):
         names=["url", "html"])
 
     def run():
-        outs = list(ex._walk_arrow_batches(iter([rb]), None))
-        trips = sorted(
-            (u, s, p, o)
-            for b in outs
-            for u, s, p, o in zip(b.column(0).to_pylist(),
-                                  b.column(1).to_pylist(),
-                                  b.column(2).to_pylist(),
-                                  b.column(3).to_pylist()))
-        return outs, trips
+        outs = list(ex._walk_pages(iter([rb]), None, kinds, schema))
+        assert all(b.schema.names == schema.fieldNames() for b in outs)
+        got = sorted(tuple(map(str, r))
+                     for b in outs
+                     for r in zip(*(c.to_pylist() for c in b.columns)))
+        return outs, got
 
     # cap at ~8MB: 6x5MB pages -> ceil-ish chunks of 1-2 pages each
     monkeypatch.setattr(ex, "_ARROW_CHUNK_BYTES", 8 << 20)
-    outs_c, trips_c = run()
+    outs_c, rows_c = run()
     assert len(outs_c) >= 3, len(outs_c)
 
     monkeypatch.setattr(ex, "_ARROW_CHUNK_BYTES", 1 << 30)
-    outs_u, trips_u = run()
+    outs_u, rows_u = run()
     assert len(outs_u) == 1
-    assert trips_c == trips_u and len(trips_c) == 6
+    assert rows_c == rows_u and len(rows_c) == n_rows
 
     # a single page larger than the cap still processes (1-row chunk)
     monkeypatch.setattr(ex, "_ARROW_CHUNK_BYTES", 1024)
-    outs_t, trips_t = run()
-    assert trips_t == trips_u
+    outs_t, rows_t = run()
+    assert rows_t == rows_u
     # one chunk per oversize page + one for the trailing null row
     assert len(outs_t) == 7
 
