@@ -536,15 +536,10 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from rdfa_spark.functions.similarity import embedding_dim
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0) \
                  .select(F.col("vec_id").alias("query_id"), "embedding")
-    # r7: numpy sequential-fold scoring kernel — bit-identical scores
-    # (same left-to-right fold), ~2x wall vs the interpreted
-    # crossJoin fold at sf0.1
-    dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
-    top = cosine_topk(emb, queries, k=10, dim=dim, impl="kernel")
+    top = cosine_topk(emb, queries, k=10)
     return top.select("query_id",
                       F.col("rank").cast("bigint").alias("rank"),
                       "neighbor_id",
@@ -565,11 +560,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-band self-join stays near-linear; identical vectors collide
     # in every band regardless of plane count (oracle unchanged)
     dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
-    # r7: impl='kernel' computes band signatures and within-bucket
-    # pair scores in numpy sequential-fold kernels (bit-identical)
     pairs = embedding_near_dup_pairs(both, threshold=0.999,
                                      bands=2, planes_per_band=10,
-                                     dim=dim, impl="kernel")
+                                     dim=dim)
     return pairs.select("id_a", "id_b",
                         F.round("score", 4).alias("score"))
 
@@ -594,9 +587,9 @@ def q_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH ANN — bucket equi-join on deterministic
-    md5-derived plane signs (precomputed literal arrays, dim=64),
-    multi-probe (signature + 1-bit flips) so every query can reach
+    """Hyperplane-LSH ANN — items scored only against the queries
+    probing their bucket (deterministic md5-derived plane signs),
+    multi-probe (signature + 1..3-bit flips) so every query can reach
     k candidates; mirrored exactly by oracle._lsh_topk_sql."""
     from rdfa_spark.functions.similarity import lsh_cosine_topk
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -609,10 +602,8 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # buckets here; on clustered real embeddings the same
     # construction is sublinear (probe count stays fixed while
     # cluster mass concentrates).
-    # r7: impl='kernel' scores candidates in a numpy sequential-fold
-    # mapInArrow kernel (bit-identical; ~4x wall at sf0.1)
-    top = lsh_cosine_topk(emb, queries, k=10, n_planes=6, dim=64,
-                          multiprobe=3, impl="kernel")
+    top = lsh_cosine_topk(emb, queries, k=10, n_planes=6,
+                          multiprobe=3)
     return top.select("query_id",
                       F.col("rank").cast("bigint").alias("rank"),
                       "neighbor_id",
@@ -620,10 +611,10 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN — the scale path (broadcast centroid assignment +
-    nprobe rerank); deterministic by construction (farthest-first
-    seeding over an md5-ordered sample, no RNG), so fully
-    SQL-mirrorable (oracle._ivf_topk_sql unrolls the traversal)."""
+    """IVF ANN — the scale path (argmax cell assignment + nprobe
+    rerank in one scoring kernel); deterministic by construction
+    (farthest-first seeding over an md5-ordered sample, no RNG), so
+    fully SQL-mirrorable (oracle._ivf_topk_sql unrolls the traversal)."""
     from rdfa_spark.functions.similarity import ivf_cosine_topk
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0) \
@@ -631,12 +622,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nprobe=10/16 cells -> recall 0.89 vs exact on the isotropic
     # test corpus (see q_ann_lsh_topk note on why 0.8 recall costs a
     # ~2/3 scan on structureless data)
-    # r7: impl='kernel' fuses cell assignment + candidate scoring
-    # into one numpy sequential-fold mapInArrow pass (bit-identical)
-    from rdfa_spark.functions.similarity import embedding_dim
-    dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
     top = ivf_cosine_topk(emb, queries, k=10, n_centroids=16,
-                          nprobe=10, dim=dim, impl="kernel")
+                          nprobe=10)
     return top.select("query_id",
                       F.col("rank").cast("bigint").alias("rank"),
                       "neighbor_id",

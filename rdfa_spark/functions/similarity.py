@@ -1,13 +1,25 @@
 """Embedding similarity search over array<float> columns.
 
-* brute-force cosine top-k — the exact baseline (broadcast the query
-  set, JVM-side zip_with/aggregate arithmetic, window top-k);
-* LSH-bucketed approximate variant — the scale path: deterministic
-  random-hyperplane signatures (signs derived from md5, no data
-  dependence), candidates only within matching buckets.
+Each operator has one implementation, a numpy ``mapInArrow`` kernel:
 
-Dot products fold left-to-right in both Spark and DuckDB, so scores
-are bit-identical across engines (oracle-checkable).
+* ``cosine_topk`` — exact top-k, the baseline;
+* ``lsh_cosine_topk`` — hyperplane-LSH approximate top-k:
+  deterministic random-hyperplane signs (derived from md5, no data
+  dependence), multi-probe, candidates only within a query's probe
+  buckets;
+* ``ivf_cosine_topk`` — IVF approximate top-k over deterministic
+  farthest-first centroids;
+* ``embedding_near_dup_pairs`` — multi-band LSH near-duplicate pairs.
+
+The top-k operators collect the (small) query set on the driver and
+stream the items through one scoring kernel (``_probed_topk``); only
+narrow (query, neighbor, score) rows cross back to the JVM.
+
+Dot products and norms fold left to right (``_seq_dot_np``,
+``_seq_norm_np``), in the order of DuckDB's ``list_reduce`` and of
+``_fold_cosine``, so scores are bit-identical across engines
+(oracle-checkable).  Vectors must be non-null and of one fixed
+dimension; anything else raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -15,33 +27,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0),
-                       lambda acc, v: acc + v)
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0),
-                              lambda acc, v: acc + v * v))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def cosine_prenorm(a: Column, b: Column, na: Column,
-                   nb: Column) -> Column:
-    """``cosine`` with the norms precomputed per ROW instead of per
-    candidate PAIR: identical expression tree (dot / (na * nb), same
-    left-to-right folds), so scores are bit-identical — but a
-    candidate generated K times pays one interpreted dot fold, not
-    three (guide §4: hoist loop-invariant work out of the per-pair
-    path).  The norm columns must be built with ``_norm`` on the
-    same vector."""
-    return _dot(a, b) / (na * nb)
 
 
 def _as_double(col: str) -> Column:
@@ -80,12 +65,11 @@ def embedding_dim(path: str, vec_col: str = "embedding") -> int:
 
 def _seq_dot_np(V, Q):
     """(nb, d) · (nq, d)ᵀ -> (nb, nq) dot products with the EXACT
-    left-to-right accumulation order of Spark's
-    ``aggregate(zip_with(...))`` fold (and DuckDB's list_reduce):
-    acc = acc + v_i * q_i for i = 0..d-1 — one correctly-rounded
-    IEEE-754 multiply and one add per step, so every score is
-    bit-identical to the expression path.  numpy vectorizes across
-    PAIRS only, never across the fold."""
+    left-to-right accumulation order of DuckDB's list_reduce and
+    ``_fold_cosine``: acc = acc + v_i * q_i for i = 0..d-1 — one
+    correctly-rounded IEEE-754 multiply and one add per step, so
+    every score is bit-identical across engines.  numpy vectorizes
+    across PAIRS only, never across the fold."""
     import numpy as np
 
     acc = np.zeros((V.shape[0], Q.shape[0]))
@@ -95,8 +79,8 @@ def _seq_dot_np(V, Q):
 
 
 def _seq_norm_np(V):
-    """sqrt of the sequential sum of squares — same fold as
-    ``_norm`` (acc = acc + v*v, then one sqrt)."""
+    """sqrt of the sequential sum of squares — the norm fold of
+    ``_fold_cosine`` (acc = acc + v*v, then one sqrt)."""
     import numpy as np
 
     acc = np.zeros(V.shape[0])
@@ -109,8 +93,7 @@ def _arrow_list_matrix(arr, dim):
     """pyarrow list<double> column -> (n, dim) float64 matrix,
     zero-copy off the values buffer.  The kernel contract mirrors
     ``embedding_dim``: fixed-dimension, non-null vectors (raise
-    otherwise rather than silently diverging from the expression
-    path's null semantics)."""
+    otherwise)."""
     import numpy as np
 
     if arr.null_count:
@@ -124,23 +107,27 @@ def _arrow_list_matrix(arr, dim):
     return values[start:start + len(arr) * dim].reshape(-1, dim)
 
 
-def _collect_queries(queries, query_id_col, vec_col, dim):
-    """Driver-side (bounded — the query set is the broadcast side by
-    design) -> (qids list, Q (nq, dim) float64, qnorms (nq,))."""
+def _check_vectors(vecs, dim):
+    """The ``_arrow_list_matrix`` contract for driver-side vectors."""
+    if any(v is None or len(v) != dim for v in vecs):
+        raise ValueError(
+            f"similarity kernel requires fixed dim={dim} non-null "
+            f"vectors")
+
+
+def _collect_queries(queries, query_id_col, vec_col):
+    """Driver-side (bounded — the query set is small by design) ->
+    (qids list, Q (nq, dim) float64, qnorms (nq,)); ``dim`` is the
+    width of the first query vector."""
     import numpy as np
 
     rows = queries.select(F.col(query_id_col),
-                          _as_double(vec_col).alias("_v")).collect()
-    qids = [r[0] for r in rows]
-    Q = np.zeros((len(rows), dim))
-    for j, r in enumerate(rows):
-        v = r._v
-        if v is None or len(v) != dim:
-            raise ValueError(
-                f"similarity kernel requires fixed dim={dim} "
-                f"non-null query vectors")
-        Q[j] = v
-    return qids, Q, _seq_norm_np(Q)
+                          _as_double(vec_col)).collect()
+    vecs = [r[1] for r in rows]
+    dim = len(vecs[0]) if vecs and vecs[0] is not None else 0
+    _check_vectors(vecs, dim)
+    Q = np.array(vecs, dtype=float).reshape(len(vecs), dim)
+    return [r[0] for r in rows], Q, _seq_norm_np(Q)
 
 
 def _scored_pairs_schema(items, queries, id_col, query_id_col):
@@ -155,15 +142,14 @@ def _scored_pairs_schema(items, queries, id_col, query_id_col):
     ])
 
 
-def _pairs_batch(arrow_schema, qid, neighbor_id, score):
-    """One (query, neighbor, score) batch typed by the kernel's
-    declared output schema — numpy alone would type an empty query-id
-    array (an empty query set) as float64."""
+def _typed_batch(arrow_schema, *columns):
+    """One kernel output batch typed by the kernel's declared output
+    schema — numpy alone would type an empty query-id array (an empty
+    query set) as float64, and int64 ids where the schema says int."""
     import pyarrow as pa
 
     return pa.RecordBatch.from_arrays(
-        [pa.array(a, type=f.type)
-         for a, f in zip((qid, neighbor_id, score), arrow_schema)],
+        [pa.array(a, type=f.type) for a, f in zip(columns, arrow_schema)],
         schema=arrow_schema)
 
 
@@ -175,88 +161,93 @@ def _topk_rank(scored, query_id_col, k):
             .select(query_id_col, "rank", "neighbor_id", "score"))
 
 
+def _probed_topk(items, queries, k, id_col, vec_col, query_id_col,
+                 index):
+    """Top-k neighbours per query, scored in one ``mapInArrow`` numpy
+    kernel: the body of all three top-k operators.
+
+    The query set is collected on the driver, and ``index(Q, qn)``
+    returns ``(row_keys, probes)``.  ``row_keys(V, ni)`` gives each
+    item row of a batch an integer key (its LSH bucket, its IVF cell,
+    or 0 for exact search); ``probes`` maps a key to the indices of
+    the queries that probe it.  Each batch is grouped by key, and
+    each group is scored against only its probing queries as one
+    sequential-fold matrix step.  A query never pairs with its own
+    id.  The rank order is (score desc, id asc), so the result is
+    fully deterministic.  An empty query set gives the typed empty
+    result without reading the items."""
+    import numpy as np
+
+    out_schema = _scored_pairs_schema(items, queries, id_col,
+                                      query_id_col)
+    qids, Q, qn = _collect_queries(queries, query_id_col, vec_col)
+    if not qids:
+        empty = items.sparkSession.createDataFrame([], out_schema)
+        return _topk_rank(empty, query_id_col, k)
+    dim = Q.shape[1]
+    qid_arr = np.array(qids)
+    row_keys, probes = index(Q, qn)
+    probe_idx = {key: np.array(qidx) for key, qidx in probes.items()}
+    arrow_schema = to_arrow_schema(out_schema)
+    it = items.select(F.col(id_col).alias("neighbor_id"),
+                      _as_double(vec_col).alias("_ivec"))
+
+    def score_batches(batches):
+        for rb in batches:
+            ids = rb.column(0).to_numpy(zero_copy_only=False)
+            if not len(ids):
+                continue
+            V = _arrow_list_matrix(rb.column(1), dim)
+            ni = _seq_norm_np(V)
+            keys = row_keys(V, ni)
+            outs = []
+            for key in np.unique(keys):
+                qsel = probe_idx.get(int(key))
+                if qsel is None:
+                    continue
+                rows = np.flatnonzero(keys == key)
+                scores = (_seq_dot_np(V[rows], Q[qsel])
+                          / np.outer(ni[rows], qn[qsel]))
+                rqid = qid_arr[qsel]
+                rids = ids[rows]
+                keep = (rids[:, None] != rqid[None, :]).ravel()
+                outs.append((np.tile(rqid, len(rows))[keep],
+                             np.repeat(rids, len(qsel))[keep],
+                             scores.ravel()[keep]))
+            if outs:
+                yield _typed_batch(arrow_schema,
+                                   *(np.concatenate(c)
+                                     for c in zip(*outs)))
+
+    scored = it.mapInArrow(score_batches, out_schema)
+    return _topk_rank(scored, query_id_col, k)
+
+
 def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding",
-                query_id_col: str = "query_id",
-                dim: int | None = None,
-                impl: str = "expr") -> DataFrame:
-    """Exact top-k neighbours per query: broadcast the (small) query
-    set against the item table; rank by (score desc, id asc) for a
-    fully deterministic result.
+                query_id_col: str = "query_id") -> DataFrame:
+    """Exact top-k neighbours per query: every item is scored against
+    every query (one key that all queries probe), one
+    (nb × dim)·(dim × nq) sequential-fold product per item batch;
+    rank by (score desc, id asc) for a fully deterministic result."""
+    import numpy as np
 
-    ``impl='kernel'`` (requires ``dim``) scores inside one
-    ``mapInArrow`` numpy kernel instead of the crossJoin +
-    interpreted per-pair fold: the query set is collected driver-side
-    (it is the broadcast side by definition), each item batch is one
-    (nb × dim)·(dim × nq) sequential-fold product (guide §4.2), and
-    only the narrow (query, neighbor, score) rows cross back.  Scores
-    are bit-identical (``_seq_dot_np``); the final window rank is
-    unchanged.  The kernel requires fixed-dim non-null vectors (the
-    ``embedding_dim`` contract)."""
-    if impl == "kernel":
-        if dim is None:
-            raise ValueError("impl='kernel' requires dim")
-        import numpy as np
+    def index(Q, qn):
+        return (lambda V, ni: np.zeros(len(V), dtype=np.int64),
+                {0: list(range(len(Q)))})
 
-        qids, Q, qn = _collect_queries(queries, query_id_col,
-                                       vec_col, dim)
-        qid_arr = np.array(qids)
-        out_schema = _scored_pairs_schema(items, queries, id_col,
-                                          query_id_col)
-        arrow_schema = to_arrow_schema(out_schema)
-        it = items.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(vec_col).alias("_ivec"))
-
-        def score_batches(batches):
-            for rb in batches:
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                V = _arrow_list_matrix(rb.column(1), dim)
-                if not len(ids):
-                    continue
-                scores = _seq_dot_np(V, Q) / np.outer(
-                    _seq_norm_np(V), qn)
-                keep = ids[:, None] != qid_arr[None, :]
-                nb, nq = scores.shape
-                yield _pairs_batch(arrow_schema,
-                                   np.tile(qid_arr, nb)[keep.ravel()],
-                                   np.repeat(ids, nq)[keep.ravel()],
-                                   scores.ravel()[keep.ravel()])
-
-        scored = it.mapInArrow(score_batches, out_schema)
-        return _topk_rank(scored, query_id_col, k)
-
-    q = F.broadcast(
-        queries.select(F.col(query_id_col),
-                       _as_double(vec_col).alias("_qvec"))
-        .withColumn("_qn", _norm(F.col("_qvec"))))
-    it = (items.select(F.col(id_col).alias("neighbor_id"),
-                       _as_double(vec_col).alias("_ivec"))
-          .withColumn("_in", _norm(F.col("_ivec"))))
-    scored = (it.crossJoin(q)
-              .filter(F.col("neighbor_id") != F.col(query_id_col))
-              .select(query_id_col, "neighbor_id",
-                      cosine_prenorm(F.col("_ivec"), F.col("_qvec"),
-                                     F.col("_in"), F.col("_qn"))
-                      .alias("score")))
-    return _topk_rank(scored, query_id_col, k)
+    return _probed_topk(items, queries, k, id_col, vec_col,
+                        query_id_col, index)
 
 
 # ---------------------------------------------------------------------------
 # LSH (random hyperplanes) — deterministic, data-independent planes
 # ---------------------------------------------------------------------------
 
-def _plane_sign(plane: int, dim: Column) -> Column:
-    """±1 from md5(plane, dim): deterministic pseudo-random
-    hyperplane components, identical on every executor and engine."""
-    h = F.md5(F.concat(F.lit(f"{plane}:"), dim.cast("string")))
-    bit = F.conv(F.substring(h, 1, 1), 16, 10).cast("int") % 2
-    return F.when(bit == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
 def _plane_signs_py(plane: int, dim: int) -> list[float]:
-    """Driver-side mirror of ``_plane_sign`` — same md5 formula, so
-    the literal-array fast path below is bit-identical to the
-    expression path."""
+    """±1 per component from md5(plane, dim): deterministic
+    pseudo-random hyperplane components, identical on every executor
+    and in the DuckDB oracle (which embeds them as literal arrays)."""
     import hashlib
 
     out = []
@@ -264,42 +255,6 @@ def _plane_signs_py(plane: int, dim: int) -> list[float]:
         h = hashlib.md5(f"{plane}:{i}".encode()).hexdigest()
         out.append(1.0 if int(h[0], 16) % 2 == 0 else -1.0)
     return out
-
-
-def lsh_signature(vec: Column, n_planes: int = 12,
-                  plane_offset: int = 0,
-                  dim: int | None = None) -> Column:
-    """n-bit bucket signature: sign of <v, r_p> per plane, as a bit
-    string.  ``plane_offset`` selects an independent plane family so
-    multi-band constructions can derive per-band signatures.
-
-    When ``dim`` is known, the (data-independent) plane signs are
-    precomputed driver-side and embedded as literal arrays — the
-    per-row work drops from n_planes·dim md5 calls to a zip_with
-    product fold, with bit-identical output (the signs come from the
-    same md5 formula)."""
-    if dim is not None:
-        bits = []
-        for p in range(n_planes):
-            signs = _plane_signs_py(plane_offset + p, dim)
-            sign_arr = F.array(*[F.lit(s) for s in signs])
-            dot = F.aggregate(
-                F.zip_with(vec, sign_arr, lambda v, s: v * s),
-                F.lit(0.0), lambda acc, x: acc + x)
-            bits.append(F.when(dot >= 0, F.lit("1"))
-                        .otherwise(F.lit("0")))
-        return F.concat(*bits)
-    dims = F.transform(vec, lambda v, i: F.struct(
-        v.alias("v"), i.alias("i")))
-    bits = [
-        F.when(
-            F.aggregate(dims, F.lit(0.0),
-                        lambda acc, s: acc + s["v"]
-                        * _plane_sign(plane_offset + p, s["i"])) >= 0,
-            F.lit("1")).otherwise(F.lit("0"))
-        for p in range(n_planes)
-    ]
-    return F.concat(*bits)
 
 
 def multiprobe_flips(n_planes: int, multiprobe: int) -> list[tuple]:
@@ -314,151 +269,55 @@ def multiprobe_flips(n_planes: int, multiprobe: int) -> list[tuple]:
     return flips
 
 
-def _probe_exprs(sig_col: Column, n_planes: int,
-                 multiprobe: int) -> list[Column]:
-    """One expression per probe signature: the original plus each
-    bit-flip combination (all positions are literals, so these fold
-    into plain substring/concat Catalyst expressions)."""
-    probes = []
-    for combo in multiprobe_flips(n_planes, multiprobe):
-        if not combo:
-            probes.append(sig_col)
-            continue
-        chars = []
-        for i in range(n_planes):
-            c = F.substring(sig_col, i + 1, 1)
-            if i in combo:
-                c = F.when(c == "1", F.lit("0")).otherwise(F.lit("1"))
-            chars.append(c)
-        probes.append(F.concat(*chars))
-    return probes
-
-
 def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     query_id_col: str = "query_id",
                     n_planes: int = 12,
-                    dim: int | None = None,
-                    multiprobe: int = 1,
-                    impl: str = "expr") -> DataFrame:
+                    multiprobe: int = 1) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
-    bucket(s).  At scale the bucket join replaces the O(N·Q)
-    crossJoin with an equi-join on the signature.
+    bucket(s), so at scale each query scores a fraction of the items
+    instead of all of them.
 
-    ``multiprobe`` probes the query's signature plus every bit-flip
-    combination up to that Hamming distance (1 + Σ C(n_planes, d)
-    buckets per query; default 1 → n_planes+1 probes), so queries in
-    sparse buckets can still reach k candidates instead of silently
-    returning fewer — the standard multi-probe LSH recall fix, and
-    deterministic (fixed probe order), so the DuckDB oracle mirrors
-    it bit-for-bit.  ``multiprobe=0`` restores single-bucket probing.
-    Probe signatures are all distinct, so no candidate dedup is
-    needed (an item lives in exactly one bucket).
+    A bucket is the n_planes-bit signature of sign(<v, r_p>) over the
+    md5-derived planes (bit p is plane p), computed per item batch as
+    one sequential-fold step.  ``multiprobe`` probes the query's
+    signature plus every bit-flip combination up to that Hamming
+    distance (1 + Σ C(n_planes, d) buckets per query; default 1 →
+    n_planes+1 probes), so queries in sparse buckets can still reach
+    k candidates instead of silently returning fewer — the standard
+    multi-probe LSH recall fix, and deterministic (fixed probe order),
+    so the DuckDB oracle mirrors it bit-for-bit.  ``multiprobe=0``
+    restores single-bucket probing.  Probe signatures are all
+    distinct, so no candidate dedup is needed (an item lives in
+    exactly one bucket)."""
+    import numpy as np
 
-    ``impl='kernel'`` (requires ``dim``) runs signature computation,
-    probe lookup and candidate scoring inside one ``mapInArrow``
-    numpy kernel: the query set is collected driver-side (it is the
-    broadcast side by definition), its probe signatures become an
-    int-keyed dict, and each item batch computes its plane signs and
-    candidate dots as sequential-fold matrix steps (guide §4.2) —
-    bit-identical to the expression path (``_seq_dot_np``), with only
-    narrow (query, neighbor, score) rows crossing back; the
-    interpreted per-candidate fold (~50 us/pair) disappears.  Kernel
-    requires fixed-dim non-null vectors; the expression path remains
-    the general default."""
-    if impl == "kernel":
-        if dim is None:
-            raise ValueError("impl='kernel' requires dim")
-        import numpy as np
-
-        S = np.array([_plane_signs_py(p, dim)
+    def index(Q, qn):
+        S = np.array([_plane_signs_py(p, Q.shape[1])
                       for p in range(n_planes)])
-        qids, Q, qn = _collect_queries(queries, query_id_col,
-                                       vec_col, dim)
-        qid_arr = np.array(qids)
         powers = (1 << np.arange(n_planes)).astype(np.int64)
-        qkeys = ((_seq_dot_np(Q, S) >= 0).astype(np.int64)
-                 @ powers)
-        probe_map: dict[int, list[int]] = {}
-        for j, base in enumerate(qkeys):
+
+        def row_keys(V, ni):
+            return (_seq_dot_np(V, S) >= 0).astype(np.int64) @ powers
+
+        probes: dict[int, list[int]] = {}
+        for j, base in enumerate(row_keys(Q, qn)):
             for combo in multiprobe_flips(n_planes, multiprobe):
                 key = int(base)
                 for i in combo:
                     key ^= 1 << i
-                probe_map.setdefault(key, []).append(j)
-        out_schema = _scored_pairs_schema(items, queries, id_col,
-                                          query_id_col)
-        arrow_schema = to_arrow_schema(out_schema)
-        it = items.select(F.col(id_col).alias("neighbor_id"),
-                          _as_double(vec_col).alias("_ivec"))
+                probes.setdefault(key, []).append(j)
+        return row_keys, probes
 
-        def score_batches(batches):
-            for rb in batches:
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                if not len(ids):
-                    continue
-                V = _arrow_list_matrix(rb.column(1), dim)
-                ikeys = ((_seq_dot_np(V, S) >= 0).astype(np.int64)
-                         @ powers)
-                ni = _seq_norm_np(V)
-                outs = []
-                for key in np.unique(ikeys):
-                    qidx = probe_map.get(int(key))
-                    if not qidx:
-                        continue
-                    rows = np.flatnonzero(ikeys == key)
-                    qsel = np.array(qidx)
-                    scores = (_seq_dot_np(V[rows], Q[qsel])
-                              / np.outer(ni[rows], qn[qsel]))
-                    rqid = qid_arr[qsel]
-                    rids = ids[rows]
-                    keep = (rids[:, None] != rqid[None, :]).ravel()
-                    outs.append((
-                        np.tile(rqid, len(rows))[keep],
-                        np.repeat(rids, len(qsel))[keep],
-                        scores.ravel()[keep]))
-                if not outs:
-                    continue
-                yield _pairs_batch(
-                    arrow_schema,
-                    *(np.concatenate([o[c] for o in outs])
-                      for c in range(3)))
-
-        scored = it.mapInArrow(score_batches, out_schema)
-        return _topk_rank(scored, query_id_col, k)
-
-    it = items.select(F.col(id_col).alias("neighbor_id"),
-                      _as_double(vec_col).alias("_ivec")) \
-              .withColumn("_in", _norm(F.col("_ivec"))) \
-              .withColumn("sig", lsh_signature(F.col("_ivec"), n_planes,
-                                               dim=dim))
-    q = queries.select(F.col(query_id_col),
-                       _as_double(vec_col).alias("_qvec")) \
-               .withColumn("_qn", _norm(F.col("_qvec"))) \
-               .withColumn("sig", lsh_signature(F.col("_qvec"), n_planes,
-                                                dim=dim))
-    if multiprobe > 0:
-        probe_arr = F.array(*_probe_exprs(F.col("sig"), n_planes,
-                                          multiprobe))
-        q = q.select(query_id_col, "_qvec", "_qn",
-                     F.explode(probe_arr).alias("sig"))
-    scored = (it.join(F.broadcast(q), "sig")
-              .filter(F.col("neighbor_id") != F.col(query_id_col))
-              .select(query_id_col, "neighbor_id",
-                      cosine_prenorm(F.col("_ivec"), F.col("_qvec"),
-                                     F.col("_in"), F.col("_qn"))
-                      .alias("score")))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("score").desc(), F.col("neighbor_id").asc()))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id_col, "rank", "neighbor_id", "score"))
+    return _probed_topk(items, queries, k, id_col, vec_col,
+                        query_id_col, index)
 
 
 def _fold_cosine(a: list[float], b: list[float]) -> float:
     """Driver-side cosine with the exact left-to-right float fold
-    Spark's aggregate() and DuckDB's list_reduce use — bit-identical
-    across all three, so centroid selection ties break identically."""
+    DuckDB's list_reduce and the kernels (``_seq_dot_np``) use —
+    bit-identical across all three, so centroid selection ties break
+    identically."""
     import math
 
     dot = 0.0
@@ -510,168 +369,56 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     query_id_col: str = "query_id",
                     n_centroids: int = 16, nprobe: int = 4,
-                    sample_size: int = 256,
-                    dim: int | None = None,
-                    impl: str = "expr") -> DataFrame:
+                    sample_size: int = 256) -> DataFrame:
     """IVF-style approximate top-k: deterministic farthest-first
     centroids over an md5-ordered sample (spread across the space —
-    no RNG, no Lloyd float nondeterminism), inverted cells via
-    broadcast argmax assignment, queries probe their nprobe nearest
-    cells, exact cosine rerank on the candidates.
+    no RNG, no Lloyd float nondeterminism), each item in the cell of
+    its most similar centroid, queries probe their nprobe most
+    similar cells, exact cosine rerank on the candidates.
 
     Seeding: take the ``sample_size`` items with smallest
     md5(id) — a deterministic uniform sample, a top-K not a global
     sort — collect that tiny set to the driver and run
     farthest-first there (O(sample·n_centroids) float ops).  The
-    selected centroids are broadcast back as literals; at 100 TB the
-    corpus is touched once for the top-K sample and once for
-    assignment.
+    corpus is touched once for the top-K sample and once for the
+    scoring pass.
 
-    At scale the items×centroids assignment is a broadcast
-    nested-loop over a tiny centroid table, the cell table is
-    materialized once, and each query touches ~nprobe/n_centroids of
-    the corpus instead of all of it.
-    """
-    it = items.select(F.col(id_col).alias("neighbor_id"),
-                      _as_double(vec_col).alias("_ivec"))
-    sample_rows = (it
-                   .orderBy(F.md5(F.col("neighbor_id").cast("string"))
-                            .asc(),
-                            F.col("neighbor_id").asc())
-                   .limit(sample_size)
-                   .collect())
-    seeds = farthest_first_centroids(
-        [(r.neighbor_id, list(r._ivec)) for r in sample_rows],
-        n_centroids)
+    Centroids and queries are both driver-known, so each query's
+    probe cells are picked on the driver by (score desc, cell asc);
+    the kernel assigns each item row its cell by argmax (first max ==
+    smallest cell, the same tie-break) and scores it against exactly
+    the queries probing that cell."""
+    import numpy as np
 
-    if impl == "kernel":
-        # Same shape as the lsh_cosine_topk kernel, with IVF cells in
-        # place of signature buckets: centroids AND the query set are
-        # driver-known, so the per-query probe cells are computed
-        # here (identical sequential folds -> identical floats ->
-        # identical (score desc, cell asc) selection), and one
-        # mapInArrow pass over the items assigns each row's cell via
-        # argmax (first-max == smallest cell, the window tie-break)
-        # and scores it against exactly the queries probing that
-        # cell.  Guide §4.2 / §2.4: the interpreted 16-way
-        # higher-order-function assignment and the candidate join
-        # both disappear.
-        if dim is None:
-            raise ValueError("impl='kernel' requires dim")
-        import numpy as np
-
-        C = np.array([vec for _, vec in seeds])      # cell-asc order
+    def index(Q, qn):
+        dim = Q.shape[1]
+        rows = (items.select(F.col(id_col), _as_double(vec_col))
+                .orderBy(F.md5(F.col(id_col).cast("string")).asc(),
+                         F.col(id_col).asc())
+                .limit(sample_size)
+                .collect())
+        _check_vectors([r[1] for r in rows], dim)
+        seeds = farthest_first_centroids(
+            [(r[0], list(r[1])) for r in rows], n_centroids)
+        C = np.array([vec for _, vec in seeds],   # cell-asc order
+                     dtype=float).reshape(len(seeds), dim)
         cn = _seq_norm_np(C)
-        qids, Q, qn = _collect_queries(queries, query_id_col,
-                                       vec_col, dim)
-        qid_arr = np.array(qids)
         qscores = _seq_dot_np(Q, C) / np.outer(qn, cn)
-        cell_map: dict[int, list[int]] = {}
-        for j in range(len(qids)):
+        probes: dict[int, list[int]] = {}
+        for j in range(len(Q)):
             order = sorted(range(len(seeds)),
                            key=lambda c: (-qscores[j, c], c))
             for c in order[:nprobe]:
-                cell_map.setdefault(c, []).append(j)
-        out_schema = _scored_pairs_schema(items, queries, id_col,
-                                          query_id_col)
-        arrow_schema = to_arrow_schema(out_schema)
-        it2 = items.select(F.col(id_col).alias("neighbor_id"),
-                           _as_double(vec_col).alias("_ivec"))
+                probes.setdefault(c, []).append(j)
 
-        def score_batches(batches):
-            for rb in batches:
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                if not len(ids):
-                    continue
-                V = _arrow_list_matrix(rb.column(1), dim)
-                ni = _seq_norm_np(V)
-                cells = np.argmax(
-                    _seq_dot_np(V, C) / np.outer(ni, cn), axis=1)
-                outs = []
-                for c in np.unique(cells):
-                    qidx = cell_map.get(int(c))
-                    if not qidx:
-                        continue
-                    rows = np.flatnonzero(cells == c)
-                    qsel = np.array(qidx)
-                    scores = (_seq_dot_np(V[rows], Q[qsel])
-                              / np.outer(ni[rows], qn[qsel]))
-                    rqid = qid_arr[qsel]
-                    rids = ids[rows]
-                    keep = (rids[:, None] != rqid[None, :]).ravel()
-                    outs.append((
-                        np.tile(rqid, len(rows))[keep],
-                        np.repeat(rids, len(qsel))[keep],
-                        scores.ravel()[keep]))
-                if not outs:
-                    continue
-                yield _pairs_batch(
-                    arrow_schema,
-                    *(np.concatenate([o[c] for o in outs])
-                      for c in range(3)))
+        def row_keys(V, ni):
+            return np.argmax(_seq_dot_np(V, C) / np.outer(ni, cn),
+                             axis=1)
 
-        scored = it2.mapInArrow(score_batches, out_schema)
-        return _topk_rank(scored, query_id_col, k)
+        return row_keys, probes
 
-    # The centroid set is driver-known (it was just computed here),
-    # so cell assignment needs NO crossJoin + window: per row, score
-    # all centroids inside one literal-array expression and pick the
-    # top n_best by the same (_cs desc, cell asc) order the window
-    # used — identical floats, identical tie-break, but a pure
-    # projection instead of a 16x row explosion, a hash shuffle and
-    # a per-group sort on each side (guide §2.4: remove shuffles
-    # outright).
-    carr = F.array(*[
-        F.struct(F.lit(cell).cast("int").alias("cell"),
-                 F.array(*[F.lit(x) for x in vec]).alias("cvec"))
-        for cell, vec in seeds])
-
-    def assign(df, vec, norm_col, n_best):
-        scored = F.transform(
-            carr,
-            lambda c: F.struct(
-                cosine_prenorm(F.col(vec), c["cvec"],
-                               F.col(norm_col), _norm(c["cvec"]))
-                .alias("cs"),
-                c["cell"].alias("cell")))
-        ranked = F.array_sort(
-            scored,
-            lambda l, r: F.when(l["cs"] > r["cs"], F.lit(-1))
-                          .when(l["cs"] < r["cs"], F.lit(1))
-                          .when(l["cell"] < r["cell"], F.lit(-1))
-                          .when(l["cell"] > r["cell"], F.lit(1))
-                          .otherwise(F.lit(0)))
-        if n_best == 1:
-            return df.withColumn("cell", ranked[0]["cell"])
-        return (df.withColumn(
-                    "cell",
-                    F.explode(F.transform(
-                        F.slice(ranked, 1, n_best),
-                        lambda s: s["cell"]))))
-
-    it = it.withColumn("_in", _norm(F.col("_ivec")))
-    cells = assign(it, "_ivec", "_in", 1)
-    q = queries.select(F.col(query_id_col),
-                       _as_double(vec_col).alias("_qvec")) \
-               .withColumn("_qn", _norm(F.col("_qvec")))
-    probes = assign(q, "_qvec", "_qn", nprobe)
-
-    # each item belongs to exactly ONE cell, and a query's probe
-    # cells are distinct, so (query, neighbor) pairs are unique by
-    # construction — no dedup shuffle needed; the probe side is tiny
-    # (queries x nprobe), so broadcast it and the item table is never
-    # shuffled before the rerank
-    cand = (cells.join(F.broadcast(probes), "cell")
-            .filter(F.col("neighbor_id") != F.col(query_id_col))
-            .select(query_id_col, "neighbor_id",
-                    cosine_prenorm(F.col("_ivec"), F.col("_qvec"),
-                                   F.col("_in"), F.col("_qn"))
-                    .alias("score")))
-    w = (Window.partitionBy(query_id_col)
-         .orderBy(F.col("score").desc(), F.col("neighbor_id").asc()))
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id_col, "rank", "neighbor_id", "score"))
+    return _probed_topk(items, queries, k, id_col, vec_col,
+                        query_id_col, index)
 
 
 def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
@@ -680,10 +427,11 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
                              bands: int = 4,
                              planes_per_band: int = 8,
                              max_bucket: int | None = 10_000,
-                             dim: int | None = None,
-                             impl: str = "expr") -> DataFrame:
+                             *, dim: int) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-band
-    hyperplane-LSH (never all-pairs at scale).
+    hyperplane-LSH (never all-pairs at scale).  ``dim`` is the fixed
+    vector width (``embedding_dim`` reads it from parquet); the items
+    are never collected, so it cannot be inferred here.
 
     OR-construction over ``bands`` independent plane families, AND
     within a band (all ``planes_per_band`` signs must match): a pair
@@ -693,6 +441,16 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
     (each +1 halves bucket size at a small recall cost that the extra
     bands win back), instead of the single fixed-signature variant
     whose buckets grow linearly with N.
+
+    Two numpy kernels: the first computes each row's band signatures
+    (one sequential-fold (nb × dim)·(dim × planes) step per band);
+    after a hash repartition by (band_id, sig), so that every bucket
+    lies whole in one partition, the second scores each bucket's
+    i<j pairs in chunked sequential-fold matrix steps.  The second
+    kernel buffers its whole partition before bucketing (a bucket may
+    span record batches), so its memory is bounded by the partition
+    size.  A pair colliding in several bands carries the same score
+    in each, so the final pair dedup keeps identical values.
 
     ``max_bucket`` (ON by default) drops buckets with more members
     than the cap (mass-duplicated boilerplate clusters; exact dedup
@@ -705,87 +463,14 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
     is exact only while every bucket is at or under ``max_bucket``
     (assert ``dropped_buckets`` empty to prove it for a new corpus).
     The attribute lives on THIS DataFrame object only; further
-    transformations return a new DataFrame without it.  Default
-    changed None -> 10_000 in round 3.
-    """
-    if impl == "kernel":
-        return _embedding_near_dup_kernel(
-            items, threshold, id_col, vec_col, bands,
-            planes_per_band, max_bucket, dim)
-    it = (items.select(F.col(id_col), _as_double(vec_col).alias("_v"))
-          .withColumn("_n", _norm(F.col("_v"))))
-    band_arr = F.array(*[
-        F.struct(F.lit(bnd).alias("band_id"),
-                 lsh_signature(F.col("_v"), planes_per_band,
-                               plane_offset=bnd * planes_per_band,
-                               dim=dim)
-                 .alias("sig"))
-        for bnd in range(bands)])
-    banded = (it.select(id_col, "_v", "_n",
-                        F.explode(band_arr).alias("b"))
-              .select(id_col, "_v", "_n", "b.band_id", "b.sig"))
-    dropped = None
-    if max_bucket is not None:
-        # window count on the join key (single shuffle, reusable by
-        # the self-join's exchange) instead of groupBy+semi-join
-        w = Window.partitionBy("band_id", "sig")
-        banded = banded.withColumn("_bn", F.count("*").over(w))
-        dropped = (banded.filter(F.col("_bn") > max_bucket)
-                   .select("band_id", "sig",
-                           F.col("_bn").alias("n_members"))
-                   .distinct())
-        banded = banded.filter(F.col("_bn") <= max_bucket) \
-                       .drop("_bn")
-    # materialize signatures once; the self-join would recompute the
-    # plane arithmetic on both sides otherwise
-    banded = banded.localCheckpoint(eager=False)
-    a, b = banded.alias("a"), banded.alias("b")
-    # score inside the bucket join and threshold BEFORE the pair
-    # dedup: the dedup shuffle then carries only surviving near-dup
-    # pairs (3 narrow columns), not every candidate with two vectors
-    cand = (a.join(b, ["band_id", "sig"])
-            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"),
-                    cosine_prenorm(F.col("a._v"), F.col("b._v"),
-                                   F.col("a._n"), F.col("b._n"))
-                    .alias("score"))
-            .filter(F.col("score") >= threshold))
-    out = cand.dropDuplicates(["id_a", "id_b"])
-    out.dropped_buckets = dropped
-    return out
-
-
-def _embedding_near_dup_kernel(items, threshold, id_col, vec_col,
-                               bands, planes_per_band, max_bucket,
-                               dim):
-    """``embedding_near_dup_pairs`` with the two interpreted
-    hot spots moved into numpy mapInArrow kernels (guide §4.2),
-    bit-identical by the ``_seq_dot_np`` fold argument:
-
-    * band signatures: one sequential-fold (nb × dim)·(dim × planes)
-      step per band instead of per-row higher-order folds;
-    * within-bucket pair scoring: the bucket-cap window has already
-      hash-partitioned rows by (band_id, sig) — a guarantee window
-      semantics depend on — so a per-partition kernel sees complete
-      buckets and scores each bucket's i<j pairs as chunked
-      sequential-fold matrix steps, replacing the self-join's
-      per-candidate fold.  Chunking bounds kernel memory at
-      ~chunk × bucket doubles even at the 10k bucket cap.
-
-    The bucket-cap / dropped_buckets semantics and the final pair
-    dedup are unchanged (a pair colliding in several bands carries
-    the same score in each, so the dedup keeps identical values).
+    transformations return a new DataFrame without it.
     """
     import numpy as np
-    import pyarrow as pa
 
-    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+    from pyspark.sql.types import (DoubleType, IntegerType,
                                    StringType, StructField,
                                    StructType)
 
-    if dim is None:
-        raise ValueError("impl='kernel' requires dim")
     S = [np.array([_plane_signs_py(bnd * planes_per_band + p, dim)
                    for p in range(planes_per_band)])
          for bnd in range(bands)]
@@ -797,6 +482,7 @@ def _embedding_near_dup_kernel(items, threshold, id_col, vec_col,
         StructField("band_id", IntegerType(), False),
         StructField("sig", StringType(), False),
     ])
+    banded_arrow = to_arrow_schema(banded_schema)
 
     def sig_batches(batches):
         for rb in batches:
@@ -805,16 +491,16 @@ def _embedding_near_dup_kernel(items, threshold, id_col, vec_col,
                 continue
             V = _arrow_list_matrix(rb.column(1), dim)
             for bnd in range(bands):
-                bits = _seq_dot_np(V, S[bnd]) >= 0
-                chars = np.where(bits, "1", "0")
-                sigs = ["".join(row) for row in chars]
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(0), rb.column(1),
-                     pa.array(np.full(n, bnd, dtype=np.int32)),
-                     pa.array(sigs, pa.string())],
-                    names=[id_col, "_v", "band_id", "sig"])
+                chars = np.where(_seq_dot_np(V, S[bnd]) >= 0, "1", "0")
+                yield _typed_batch(
+                    banded_arrow, rb.column(0), rb.column(1),
+                    np.full(n, bnd, dtype=np.int32),
+                    ["".join(row) for row in chars])
 
-    banded = it.mapInArrow(sig_batches, banded_schema)
+    # pair_batches needs whole buckets; the cap window below clusters
+    # on the same keys, so it reuses this exchange and adds none
+    banded = it.mapInArrow(sig_batches, banded_schema) \
+        .repartition("band_id", "sig")
     dropped = None
     if max_bucket is not None:
         w = Window.partitionBy("band_id", "sig")
@@ -825,19 +511,16 @@ def _embedding_near_dup_kernel(items, threshold, id_col, vec_col,
                    .distinct())
         banded = banded.filter(F.col("_bn") <= max_bucket) \
                        .drop("_bn")
-    else:
-        banded = banded.repartition("band_id", "sig")
 
     pair_schema = StructType([
         StructField("id_a", id_type, True),
         StructField("id_b", id_type, True),
         StructField("score", DoubleType(), True),
     ])
+    pair_arrow = to_arrow_schema(pair_schema)
     chunk = 256
 
     def pair_batches(batches):
-        # buffer the partition (bounded by the post-shuffle partition
-        # size) — buckets may span record-batch boundaries
         ids_all, keys, vecs = [], [], []
         for rb in batches:
             ids_all.append(rb.column(0).to_numpy(
@@ -849,7 +532,7 @@ def _embedding_near_dup_kernel(items, threshold, id_col, vec_col,
         if not ids_all:
             return
         ids = np.concatenate(ids_all)
-        V = np.concatenate(vecs) if vecs else np.zeros((0, dim))
+        V = np.concatenate(vecs)
         buckets: dict[tuple, list[int]] = {}
         for i, key in enumerate(keys):
             buckets.setdefault(key, []).append(i)
@@ -873,19 +556,16 @@ def _embedding_near_dup_kernel(items, threshold, id_col, vec_col,
                 keep = (jdx > idx) & (scores >= threshold)
                 ii, jj = np.nonzero(keep)
                 if len(ii):
-                    # mirror the join's STRICT a.id < b.id (duplicate
-                    # input ids would pair under j>i but not under <)
+                    # pairs need a STRICT a.id < b.id (duplicate input
+                    # ids would pair under j>i but not under <)
                     neq = bids[ii + lo] != bids[jj]
                     ii, jj = ii[neq], jj[neq]
                     oa.append(bids[ii + lo])
                     ob.append(bids[jj])
                     osc.append(scores[ii, jj])
         if oa:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(oa)),
-                 pa.array(np.concatenate(ob)),
-                 pa.array(np.concatenate(osc))],
-                names=["id_a", "id_b", "score"])
+            yield _typed_batch(pair_arrow, np.concatenate(oa),
+                               np.concatenate(ob), np.concatenate(osc))
 
     cand = banded.mapInArrow(pair_batches, pair_schema)
     out = cand.dropDuplicates(["id_a", "id_b"])

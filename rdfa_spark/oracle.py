@@ -575,7 +575,7 @@ FROM votes GROUP BY doc_id
 
 def _cos(a: str, b: str) -> str:
     """DuckDB cosine between two DOUBLE[] columns with the same
-    left-to-right fold Spark's aggregate() uses (bit-identical)."""
+    left-to-right fold the similarity kernels use (bit-identical)."""
     def _sum(expr: str) -> str:
         return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
                 f"{expr}), (x, y) -> x + y)")
@@ -589,7 +589,8 @@ def _cos(a: str, b: str) -> str:
 # as similarity._plane_signs_py, embedded as literal arrays; bucket =
 # concat of sign bits; candidates restricted to the query's probe
 # buckets (signature + its 1..multiprobe-bit flips, fixed order);
-# mirror of lsh_cosine_topk(n_planes=6, dim=64, k=10, multiprobe=1).
+# mirror of lsh_cosine_topk(n_planes=6, k=10, multiprobe=1) over
+# 64-dim vectors (the SQL embeds the planes, so it takes dim).
 def _lsh_topk_sql(n_planes: int = 6, dim: int = 64,
                   k: int = 10, multiprobe: int = 1) -> str:
     from .functions.similarity import _plane_signs_py, multiprobe_flips

@@ -35,61 +35,168 @@ def test_cosine_topk_deterministic(spark, emb):
         assert scores == sorted(scores, reverse=True)
 
 
-def test_ann_kernel_bit_identical_to_expr(spark, emb, sf_dir):
-    """r7: the numpy sequential-fold scoring kernel must produce
-    BIT-IDENTICAL rows (ids, ranks and full-precision double scores)
-    to the Catalyst expression path for both the exact and the
-    multi-probe LSH top-k — same left-to-right fold, so not just
-    approximately equal."""
-    from rdfa_spark.functions.similarity import embedding_dim
-    dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
+def _fold_dot(a, b):
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _ref_topk(cands, k):
+    """{qid: [(neighbor, score)]} -> sorted (qid, rank, neighbor,
+    score) rows, ranked by (score desc, neighbor asc)."""
+    rows = []
+    for qid, lst in cands.items():
+        lst.sort(key=lambda t: (-t[1], t[0]))
+        rows += [(qid, r + 1, nid, sc)
+                 for r, (nid, sc) in enumerate(lst[:k])]
+    return sorted(rows)
+
+
+def test_ann_kernels_match_fold_reference(spark, emb):
+    """All four similarity kernels must give exactly the rows (ids,
+    ranks and full-precision double scores) of a plain-Python
+    reference built on the left-to-right ``_fold_cosine`` fold: exact
+    top-k, LSH buckets from ``_plane_signs_py`` + ``multiprobe_flips``,
+    IVF cells from ``farthest_first_centroids``, and multi-band
+    near-dup pairs.  Bit-identical, not approximately equal."""
+    import hashlib
+
+    from rdfa_spark.functions.similarity import (_fold_cosine,
+                                                 _plane_signs_py,
+                                                 farthest_first_centroids,
+                                                 ivf_cosine_topk,
+                                                 multiprobe_flips)
+    items = sorted((r.vec_id, [float(x) for x in r.embedding])
+                   for r in emb.select("vec_id", "embedding").collect())
+    dim = len(items[0][1])
+    qs = [(i, v) for i, v in items if i % 100 == 0]
     q = emb.filter(F.col("vec_id") % 100 == 0) \
            .select(F.col("vec_id").alias("query_id"), "embedding")
-    a = sorted(map(tuple, cosine_topk(emb, q, k=7).collect()))
-    b = sorted(map(tuple, cosine_topk(emb, q, k=7, dim=dim,
-                                      impl="kernel").collect()))
-    assert a == b
-    c = sorted(map(tuple, lsh_cosine_topk(
-        emb, q, k=7, n_planes=6, dim=dim, multiprobe=2).collect()))
-    d = sorted(map(tuple, lsh_cosine_topk(
-        emb, q, k=7, n_planes=6, dim=dim, multiprobe=2,
-        impl="kernel").collect()))
-    assert c == d
-    from rdfa_spark.functions.similarity import ivf_cosine_topk
-    e = sorted(map(tuple, ivf_cosine_topk(
-        emb, q, k=7, n_centroids=8, nprobe=4).collect()))
-    f = sorted(map(tuple, ivf_cosine_topk(
-        emb, q, k=7, n_centroids=8, nprobe=4, dim=dim,
-        impl="kernel").collect()))
-    assert e == f
+    k = 7
+
+    def ref(candidates_of):
+        return _ref_topk({qid: [(nid, _fold_cosine(v, qv))
+                                for nid, v in candidates_of(qid, qv)
+                                if nid != qid]
+                          for qid, qv in qs}, k)
+
+    def got(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert got(cosine_topk(emb, q, k=k)) == ref(lambda qid, qv: items)
+
+    n_planes, multiprobe = 6, 2
+    planes = [_plane_signs_py(p, dim) for p in range(n_planes)]
+
+    def key(v):
+        return sum((_fold_dot(v, s) >= 0) << p
+                   for p, s in enumerate(planes))
+
+    def lsh_cands(qid, qv):
+        probes = {key(qv) ^ sum(1 << i for i in combo)
+                  for combo in multiprobe_flips(n_planes, multiprobe)}
+        return [(i, v) for i, v in items if key(v) in probes]
+
+    assert got(lsh_cosine_topk(emb, q, k=k, n_planes=n_planes,
+                               multiprobe=multiprobe)) == ref(lsh_cands)
+
+    n_centroids, nprobe = 8, 4
+    sample = sorted(items, key=lambda t: (
+        hashlib.md5(str(t[0]).encode()).hexdigest(), t[0]))[:256]
+    cents = [c for _, c in farthest_first_centroids(sample, n_centroids)]
+
+    def ranked_cells(v):
+        return sorted(range(len(cents)),
+                      key=lambda c: (-_fold_cosine(v, cents[c]), c))
+
+    def ivf_cands(qid, qv):
+        probes = set(ranked_cells(qv)[:nprobe])
+        return [(i, v) for i, v in items if ranked_cells(v)[0] in probes]
+
+    assert got(ivf_cosine_topk(emb, q, k=k, n_centroids=n_centroids,
+                               nprobe=nprobe)) == ref(ivf_cands)
+
     both = emb.select("vec_id", "embedding").unionByName(
         emb.select((F.col("vec_id") + 10000).alias("vec_id"),
                    "embedding"))
-    g = sorted(map(tuple, embedding_near_dup_pairs(
-        both, threshold=0.999, bands=2, planes_per_band=6,
-        dim=dim).collect()))
-    h = sorted(map(tuple, embedding_near_dup_pairs(
-        both, threshold=0.999, bands=2, planes_per_band=6,
-        dim=dim, impl="kernel").collect()))
-    assert g == h and g
+    both_items = items + [(i + 10000, v) for i, v in items]
+    bands, ppb, threshold = 2, 6, 0.3
+    want = set()
+    for bnd in range(bands):
+        bplanes = [_plane_signs_py(bnd * ppb + p, dim)
+                   for p in range(ppb)]
+        buckets = {}
+        for i, v in both_items:
+            sig = "".join("1" if _fold_dot(v, s) >= 0 else "0"
+                          for s in bplanes)
+            buckets.setdefault(sig, []).append((i, v))
+        for members in buckets.values():
+            for a, (ia, va) in enumerate(members):
+                for ib, vb in members[a + 1:]:
+                    score = _fold_cosine(va, vb)
+                    if score >= threshold:
+                        want.add((ia, ib, score))
+    pairs = got(embedding_near_dup_pairs(
+        both, threshold=threshold, bands=bands, planes_per_band=ppb,
+        dim=dim))
+    assert any(s < 0.999 for *_, s in pairs)     # not only the copies
+    assert pairs == sorted(want)
 
 
 @pytest.mark.parametrize("op", ["cosine_topk", "lsh_cosine_topk",
                                 "ivf_cosine_topk"])
-def test_ann_kernel_empty_query_set(spark, emb, sf_dir, op):
-    """An empty query set gives every scoring kernel an empty result
-    of the declared schema (its numpy query-id array is float64)."""
+def test_ann_kernel_empty_query_set(spark, emb, op):
+    """An empty query set gives every top-k operator an empty result
+    of the declared schema."""
     from rdfa_spark.functions import similarity
-    dim = similarity.embedding_dim(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.lit(False)) \
            .select(F.col("vec_id").alias("query_id"), "embedding")
     kw = dict(n_centroids=8, nprobe=4) if op == "ivf_cosine_topk" \
         else {}
-    out = getattr(similarity, op)(emb, q, k=5, dim=dim, impl="kernel",
-                                  **kw)
+    out = getattr(similarity, op)(emb, q, k=5, **kw)
     assert out.collect() == []
     assert out.schema["query_id"].dataType == \
         emb.schema["vec_id"].dataType
+
+
+@pytest.mark.parametrize("op,side", [
+    ("cosine_topk", "items"), ("cosine_topk", "queries"),
+    ("lsh_cosine_topk", "items"), ("lsh_cosine_topk", "queries"),
+    ("ivf_cosine_topk", "items"), ("ivf_cosine_topk", "queries"),
+    ("embedding_near_dup_pairs", "items")])
+@pytest.mark.parametrize("bad", [None, [1.0, 2.0, 3.0]],
+                         ids=["null", "wrong_length"])
+def test_similarity_rejects_null_or_ragged_vectors(spark, op, side, bad):
+    """Vectors must be non-null and of one fixed dimension.  A bad
+    query vector raises ValueError on the driver; a bad item vector
+    raises it in the kernel (or, for IVF, in the driver-side centroid
+    sample), where it reaches the driver as a PythonException that
+    names it."""
+    import numpy as np
+
+    from rdfa_spark.functions import similarity
+    rng = np.random.default_rng(3)
+    good = [(i, [float(x) for x in rng.normal(size=4)])
+            for i in range(12)]
+    schema = "vec_id long, embedding array<float>"
+    rows = good + [(99, bad)] if side == "items" else good
+    items = spark.createDataFrame(rows, schema)
+    qrows = good[:2] + [(99, bad)] if side == "queries" else good[:2]
+    queries = spark.createDataFrame(qrows, schema) \
+        .withColumnRenamed("vec_id", "query_id")
+
+    def run():
+        if op == "embedding_near_dup_pairs":
+            return similarity.embedding_near_dup_pairs(
+                items, bands=2, planes_per_band=2, dim=4).collect()
+        return getattr(similarity, op)(items, queries, k=3).collect()
+
+    with pytest.raises(Exception) as err:
+        run()
+    assert isinstance(err.value, ValueError) or \
+        "ValueError: similarity kernel requires" in str(err.value), \
+        err.value
 
 
 def test_pairs_batch_keeps_declared_types():
@@ -99,11 +206,11 @@ def test_pairs_batch_keeps_declared_types():
     import numpy as np
     import pyarrow as pa
 
-    from rdfa_spark.functions.similarity import _pairs_batch
+    from rdfa_spark.functions.similarity import _typed_batch
     schema = pa.schema([("query_id", pa.int64()),
                         ("neighbor_id", pa.int64()),
                         ("score", pa.float64())])
-    b = _pairs_batch(schema, np.array([]), np.array([], dtype=np.int64),
+    b = _typed_batch(schema, np.array([]), np.array([], dtype=np.int64),
                      np.array([]))
     assert b.num_rows == 0 and b.schema == schema
 
@@ -123,14 +230,16 @@ def test_lsh_ann_recall_vs_exact(spark, emb):
         assert r.score <= 1.0001
 
 
-def test_embedding_near_dup_pairs_self_consistency(spark, emb):
+def test_embedding_near_dup_pairs_self_consistency(spark, emb, sf_dir):
+    from rdfa_spark.functions.similarity import embedding_dim
     # duplicate the table with shifted ids -> guaranteed near-dups
     a = emb.select(F.col("vec_id"), "embedding")
     b = emb.select((F.col("vec_id") + 10000).alias("vec_id"),
                    "embedding")
     both = a.unionByName(b)
-    pairs = embedding_near_dup_pairs(both, threshold=0.999,
-                                     bands=2, planes_per_band=4)
+    pairs = embedding_near_dup_pairs(
+        both, threshold=0.999, bands=2, planes_per_band=4,
+        dim=embedding_dim(f"{sf_dir}/embeddings.parquet"))
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     # every vector matches its exact copy (cosine == 1, same bucket
     # in every band); multi-band join must not duplicate pairs
@@ -150,12 +259,32 @@ def test_embedding_near_dup_bucket_cap(spark):
                for i in range(20)])
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     capped = embedding_near_dup_pairs(df, threshold=0.999, bands=2,
-                                      planes_per_band=4, max_bucket=50)
+                                      planes_per_band=4, max_bucket=50,
+                                      dim=8)
     # the 100-member hot bucket exceeds the cap in every band -> gone
     assert capped.filter(F.col("id_a") < 1000).count() == 0
     uncapped = embedding_near_dup_pairs(df, threshold=0.999, bands=2,
-                                        planes_per_band=4)
+                                        planes_per_band=4, dim=8)
     assert uncapped.filter(F.col("id_a") < 1000).count() == 100 * 99 // 2
+
+
+@pytest.mark.parametrize("max_bucket", [10_000, None],
+                         ids=["capped", "uncapped"])
+def test_embedding_near_dup_one_bucket_exchange(spark, emb, max_bucket):
+    """The pair kernel scores whole buckets, so exactly one
+    hash-partitioning by (band_id, sig) sits between the signature
+    kernel and the pair kernel, on the capped path (whose cap window
+    reuses it) as on the uncapped one."""
+    import re
+    plan = embedding_near_dup_pairs(
+        emb, bands=2, planes_per_band=4, max_bucket=max_bucket,
+        dim=64)._jdf.queryExecution().executedPlan().toString()
+    ex = [m.start() for m in re.finditer(
+        r"Exchange hashpartitioning\(band_id#\d+, sig#\d+,", plan)]
+    kernels = [m.start() for m in re.finditer("MapInArrow", plan)]
+    assert len(ex) == 1 and len(kernels) == 2, plan
+    # plan text lists the consumer above its input
+    assert kernels[0] < ex[0] < kernels[1], plan
 
 
 def test_text_functions(spark):
@@ -589,8 +718,9 @@ def test_language_id_kernel_matches_relational(spark):
 
 def test_round3_operator_plans(spark):
     """Plan shape of the round-3 operators: the language-ID kernel is
-    scan -> mapInPandas with no Exchange; multi-probe LSH ANN joins
-    items to a BROADCAST query side (never shuffles the item table)."""
+    scan -> mapInPandas with no Exchange; multi-probe LSH ANN scores
+    the items in one kernel against the driver-collected queries
+    (never shuffles the item table by bucket)."""
     from rdfa_spark.functions.similarity import lsh_cosine_topk
     from rdfa_spark.functions.text import language_id_kernel
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -601,10 +731,9 @@ def test_round3_operator_plans(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.limit(5).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    plan2 = lsh_cosine_topk(emb, q, k=3, n_planes=6, dim=64,
-                            multiprobe=1) \
+    plan2 = lsh_cosine_topk(emb, q, k=3, n_planes=6, multiprobe=1) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in plan2
+    assert "MapInArrow" in plan2
     # the only shuffle is the final per-query window rank, never a
     # repartition of the item table by join key
     assert "Exchange hashpartitioning(sig" not in plan2
