@@ -256,12 +256,11 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram language-ID (Cavnar-Trenkle profiles; handles
-    zh/ja/ko) via the Arrow kernel — bit-identical to the relational
-    explode+broadcast-join path (`with_language_id`, pytest-pinned)
-    and to the profile table in oracle.langid_sql()."""
-    from rdfa_spark.functions.text import language_id_kernel
-    return language_id_kernel(_documents(spark, sf_dir), "doc_id",
-                              "text").select("doc_id", "lang_pred")
+    zh/ja/ko): the numpy kernel of `with_language_id` over
+    mapInArrow, mirrored by the profile table in
+    oracle.langid_sql()."""
+    docs = _documents(spark, sf_dir).select("doc_id", "text")
+    return with_language_id(docs).select("doc_id", "lang_pred")
 
 
 def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,6 +7,9 @@ repeatable single-query timing).
     python bench_extra.py time  [--repeats N] [--noop] [q ...]
     python bench_extra.py plan  [--tag before] [q ...]
 
+`plan` writes plans/r07/<q>_<tag>.txt and exits with status 1,
+before starting Spark, if any of those files already exists.
+
 Timing methodology mirrors bench.py's query phase exactly (same
 session confs, same worker warmup, same `.count()` action) so numbers
 are comparable with BENCH_r*.json; `--noop` switches the action to
@@ -83,10 +86,21 @@ def cmd_time(names: list[str], repeats: int, noop: bool) -> None:
                       "queries": out}))
 
 
-def cmd_plan(names: list[str], tag: str) -> None:
-    spark, queries = _session()
-    dest = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "plans", "r07")
+
+
+def cmd_plan(names: list[str], tag: str, dest: str = PLAN_DIR) -> None:
+    """Write each query's formatted plan to ``<dest>/<q>_<tag>.txt``.
+    Refuses (exit status 1, before Spark starts) if any of those files
+    exists, so committed plan records are never overwritten."""
+    taken = [p for p in (os.path.join(dest, f"{name}_{tag}.txt")
+                         for name in names) if os.path.exists(p)]
+    if taken:
+        for path in taken:
+            print(f"# exists, not overwriting: {path}", file=sys.stderr)
+        raise SystemExit(1)
+    spark, queries = _session()
     os.makedirs(dest, exist_ok=True)
     try:
         for name in names:

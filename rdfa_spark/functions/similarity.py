@@ -229,7 +229,13 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
     """Exact top-k neighbours per query: every item is scored against
     every query (one key that all queries probe), one
     (nb × dim)·(dim × nq) sequential-fold product per item batch;
-    rank by (score desc, id asc) for a fully deterministic result."""
+    rank by (score desc, id asc) for a fully deterministic result.
+
+    A null or wrong-length query vector raises ``ValueError`` on the
+    driver at the call.  A bad item vector raises ``ValueError`` in
+    the Python worker at the action; the caller gets it as
+    ``pyspark.errors.PythonException`` (not a ``ValueError``), whose
+    text names it."""
     import numpy as np
 
     def index(Q, qn):
@@ -289,7 +295,13 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
     so the DuckDB oracle mirrors it bit-for-bit.  ``multiprobe=0``
     restores single-bucket probing.  Probe signatures are all
     distinct, so no candidate dedup is needed (an item lives in
-    exactly one bucket)."""
+    exactly one bucket).
+
+    A null or wrong-length query vector raises ``ValueError`` on the
+    driver at the call.  A bad item vector raises ``ValueError`` in
+    the Python worker at the action; the caller gets it as
+    ``pyspark.errors.PythonException`` (not a ``ValueError``), whose
+    text names it."""
     import numpy as np
 
     def index(Q, qn):
@@ -387,7 +399,14 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
     probe cells are picked on the driver by (score desc, cell asc);
     the kernel assigns each item row its cell by argmax (first max ==
     smallest cell, the same tie-break) and scores it against exactly
-    the queries probing that cell."""
+    the queries probing that cell.
+
+    A null or wrong-length query vector, or a bad item vector inside
+    the seeding sample, raises ``ValueError`` on the driver at the
+    call.  Any other bad item vector raises ``ValueError`` in the
+    Python worker at the action; the caller gets it as
+    ``pyspark.errors.PythonException`` (not a ``ValueError``), whose
+    text names it."""
     import numpy as np
 
     def index(Q, qn):
@@ -464,6 +483,11 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
     (assert ``dropped_buckets`` empty to prove it for a new corpus).
     The attribute lives on THIS DataFrame object only; further
     transformations return a new DataFrame without it.
+
+    A null or wrong-length vector raises ``ValueError`` in the Python
+    worker at the action; the caller gets it as
+    ``pyspark.errors.PythonException`` (not a ``ValueError``), whose
+    text names it.
     """
     import numpy as np
 

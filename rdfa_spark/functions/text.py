@@ -1,7 +1,7 @@
 """Text-analysis operators for training-data pipelines.
 
-Language-ID (char-trigram Cavnar-Trenkle model, numpy-vectorized
-kernel over mapInPandas), quality scoring, token counting, document
+Language-ID (char-trigram Cavnar-Trenkle model, one numpy kernel
+over mapInArrow), quality scoring, token counting, document
 fingerprinting — the relational operators are pure Spark built-ins
 (JVM-side, whole-stage codegen) with integer-scaled arithmetic so
 the DuckDB oracle reproduces results exactly.
@@ -122,8 +122,8 @@ def trigram_profiles(k: int = PROFILE_SIZE) -> dict[str,
     """Per-language {trigram: integer weight}: the top-k trigrams of
     the padded, whitespace-collapsed, lowercased seed, weighted
     k-rank (rank by count desc, trigram asc — fully deterministic).
-    Identical tables are embedded in the Spark profile DataFrame and
-    the DuckDB oracle VALUES list."""
+    Identical tables back the kernel's lookup tables and the DuckDB
+    oracle VALUES list."""
     import re
 
     out = {}
@@ -136,46 +136,6 @@ def trigram_profiles(k: int = PROFILE_SIZE) -> dict[str,
         top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
         out[lang] = {t: k - i for i, (t, _) in enumerate(top)}
     return out
-
-
-def _padded_col(text_col: str) -> Column:
-    norm = F.regexp_replace(F.lower(F.coalesce(F.col(text_col),
-                                               F.lit(""))),
-                            r"\s+", " ")
-    return F.concat(F.lit(" "), norm, F.lit(" "))
-
-
-def language_id_kernel(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       out: str = "lang_pred") -> DataFrame:
-    """Arrow-batched language-ID kernel: the same trigram profiles,
-    integer scores, and (score desc, lang order) tie-break as the
-    relational path — bit-identical predictions — but zero shuffle
-    and no 100x trigram-row explode: one combined {trigram: weight
-    vector} dict per worker, one pass over each document's chars.
-    Returns (id_col, out); use ``with_language_id`` when the
-    prediction must be appended to an existing row set.
-
-    Whitespace collapse uses the ASCII class [ \\t\\n\\x0b\\f\\r]
-    — exactly Java regex / RE2 ``\\s`` — so the three engines
-    (kernel, Spark SQL, DuckDB) normalize identically."""
-    import pandas as _pd
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    out_schema = StructType([
-        StructField(id_col, df.schema[id_col].dataType, True),
-        StructField(out, StringType(), True),
-    ])
-
-    def batches(it):
-        for pdf in it:
-            yield _pd.DataFrame({
-                id_col: pdf[id_col].values,
-                out: _langid_numpy(list(pdf[text_col].values)),
-            })
-
-    return df.select(id_col, text_col).mapInPandas(batches,
-                                                   out_schema)
 
 
 _LANGID_TABLES = None
@@ -419,50 +379,38 @@ def _langid_scalar(texts: list) -> list[str]:
 
 
 def with_language_id(df: DataFrame, text_col: str = "text",
-                     out: str = "lang_pred",
-                     id_col: str = "doc_id") -> DataFrame:
+                     out: str = "lang_pred") -> DataFrame:
     """Character-trigram language-ID (Cavnar-Trenkle out-of-place
     profiles, integer-scaled): every doc trigram occurrence scores
     its language-profile weight; argmax wins, tie-broken by
-    TRIGRAM_LANGS order; all-zero scores -> 'unknown'.
+    TRIGRAM_LANGS order; all-zero scores -> 'unknown'.  Handles
+    zh/ja/ko (no whitespace tokens) because trigrams are
+    character-level.
 
-    Relational scale path: explode trigrams -> broadcast equi-join
-    against the ~2k-row profile table -> map-side partial sum per
-    (doc, lang) -> window argmax -> join back on ``id_col``.  No
-    Python in the hot path and no giant literal expressions; the
-    profile join broadcasts a few KB.  Handles zh/ja/ko (no
-    whitespace tokens) because trigrams are character-level."""
-    from pyspark.sql import Window
+    One ``mapInArrow`` pass runs ``_langid_numpy`` over each batch:
+    no shuffle and no per-trigram rows.  Every column of ``df``
+    passes through unchanged and ``out`` is appended (replacing a
+    column of that name).  Whitespace collapse uses the ASCII class
+    [ \\t\\n\\x0b\\f\\r] — exactly Java regex / RE2 ``\\s`` — so
+    the kernel and the DuckDB oracle normalize identically."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StringType, StructField, StructType
 
-    spark = df.sparkSession
-    profs = trigram_profiles()
-    prof_rows = [(lang, rank, tri, w)
-                 for rank, lang in enumerate(TRIGRAM_LANGS)
-                 for tri, w in profs[lang].items()]
-    prof = F.broadcast(spark.createDataFrame(
-        prof_rows, "lang string, lang_rank int, tri string, w int"))
+    from .similarity import _typed_batch
 
-    padded = df.select(F.col(id_col), _padded_col(text_col)
-                       .alias("_pad"))
-    tri_arr = F.expr(
-        "CASE WHEN length(_pad) >= 3 THEN "
-        "transform(sequence(1, length(_pad) - 2), "
-        "i -> substring(_pad, i, 3)) "
-        "ELSE CAST(array() AS array<string>) END")
-    tris = padded.select(id_col, F.explode(tri_arr).alias("tri"))
-    scores = (tris.join(prof, "tri")
-              .groupBy(id_col, "lang", "lang_rank")
-              .agg(F.sum("w").alias("score")))
-    w_best = (Window.partitionBy(id_col)
-              .orderBy(F.col("score").desc(), F.col("lang_rank").asc()))
-    best = (scores.filter(F.col("score") > 0)
-            .withColumn("_rn", F.row_number().over(w_best))
-            .filter(F.col("_rn") == 1)
-            .select(F.col(id_col).alias("_lid"),
-                    F.col("lang").alias("_lang")))
-    return (df.join(best, df[id_col] == best["_lid"], "left")
-            .withColumn(out, F.coalesce("_lang", F.lit("unknown")))
-            .drop("_lid", "_lang"))
+    df = df.drop(out)
+    out_schema = StructType(df.schema.fields
+                            + [StructField(out, StringType(), True)])
+    arrow_schema = to_arrow_schema(out_schema)
+    ti = df.columns.index(text_col)
+
+    def batches(it):
+        for rb in it:
+            yield _typed_batch(
+                arrow_schema, *rb.columns,
+                _langid_numpy(rb.column(ti).to_pylist()))
+
+    return df.mapInArrow(batches, out_schema)
 
 
 # BPE-ish pre-tokenization pattern (GPT-2 style, lookahead-free so

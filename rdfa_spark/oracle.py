@@ -281,10 +281,10 @@ FROM documents
 
 
 def _langid_cases() -> str:
-    """Char-trigram language-ID — exact mirror of
+    """Char-trigram language-ID — exact mirror of the numpy kernel of
     rdfa_spark.functions.text.with_language_id: the same profile
     table (generated from the same seeds) as a VALUES list, the same
-    padded trigram extraction, integer sums, and the same
+    padded trigram windows, integer sums, and the same
     (score DESC, lang_rank ASC) argmax with 'unknown' fallback."""
     from .functions.text import TRIGRAM_LANGS, trigram_profiles
 
@@ -476,8 +476,8 @@ FROM cand WHERE {ham} <= {max_hamming}
 
 
 # MinHash signatures: 3-word shingles, universal-hash minima over one
-# md5 per shingle — byte-identical mirror of
-# rdfa_spark.pipeline.linking.with_minhash.
+# md5 per shingle — byte-identical mirror of the Arrow kernel of
+# rdfa_spark.pipeline.linking.minhash_signatures.
 def _minhash_cte() -> str:
     from .pipeline.linking import MINHASH_PRIME, minhash_params
     params = minhash_params(32)

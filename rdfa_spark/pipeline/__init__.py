@@ -1,10 +1,9 @@
 from .cc import (connected_components,  # noqa: F401
-                 connected_components_salted,
-                 label_propagation_components, salt_hot_nodes,
+                 connected_components_salted, salt_hot_nodes,
                  strip_salt)
 from .dedup import (dedup_exact, exact_duplicate_groups,  # noqa: F401
-                    minhash_dedup_pairs, ngram_jaccard_pairs,
-                    simhash64, simhash_near_dup_pairs)
+                    minhash_dedup_pairs, simhash64,
+                    simhash_near_dup_pairs)
 from .linking import (canonicalize, entity_mentions,  # noqa: F401
                       exact_candidate_pairs, lsh_candidate_pairs,
                       minhash_signatures)

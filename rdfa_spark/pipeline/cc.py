@@ -4,8 +4,8 @@ north_rule stage: canonicalization of linked entities.  Implements
 the alternating large-star / small-star algorithm (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14 — public
 literature), which converges in O(log n) rounds and bounds the
-per-round shuffle, plus a simpler min-label propagation for
-small-diameter graphs.
+per-round shuffle, with a bounded driver-side union-find finish once
+the contracted edge set is small (the two-phase design, ibid. §6).
 
 Scale notes:
 * node ids are strings (urls / mention IRIs) — no lossy 64-bit
@@ -138,7 +138,6 @@ def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst",
                          max_iter: int = 30,
                          reliable: bool = False,
-                         star_steps_per_round: int = 1,
                          local_finish_edges: int = 100_000
                          ) -> DataFrame:
     """-> (node, component) where component = min node id (string
@@ -146,19 +145,6 @@ def connected_components(edges: DataFrame, src: str = "src",
 
     Isolated nodes (no edges) are not returned; union them in from
     the node table with component = node if needed.
-
-    ``star_steps_per_round`` large/small-star alternations run
-    between consecutive checkpoint + convergence probes.  Measured
-    (sf0.1 chain graph): 1 -> 10.4 s, 2 -> 10.6 s, 3 -> 65 s — each
-    star consumes its input TWICE (the union of both edge
-    directions), so an un-checkpointed alternation roughly
-    quadruples the logical plan and Catalyst/AQE planning time
-    explodes; the per-round checkpoint is what keeps every round's
-    plan constant-size.  Default stays 1; the knob exists because on
-    a real cluster with expensive reliable checkpoints the tradeoff
-    can differ (2 halves the checkpoint I/O for ~the same wall).
-    A converged edge set is a fixpoint of the alternation, so extra
-    steps past convergence can never change the result.
 
     ``local_finish_edges`` enables the two-phase design: whenever the
     current (canonicalized, deduped) edge count is at or under the
@@ -176,9 +162,9 @@ def connected_components(edges: DataFrame, src: str = "src",
         return edges.sparkSession.createDataFrame(
             [], "node string, component string")
     for _ in range(max_iter):
-        for _s in range(max(star_steps_per_round, 1)):
-            e = _small_star(_large_star(e))
-        e = _checkpoint(e, reliable)
+        # the per-round checkpoint keeps every round's plan
+        # constant-size (each star reads its input twice)
+        e = _checkpoint(_small_star(_large_star(e)), reliable)
         cur = _fingerprint(e)
         if cur == prev:
             break
@@ -282,36 +268,3 @@ def connected_components_salted(edges: DataFrame, src: str = "src",
     salted = _salt_canonical(e, max_degree, n_salts)
     return strip_salt(
         connected_components(salted, "a", "b", max_iter, reliable))
-
-
-def label_propagation_components(edges: DataFrame, src: str = "src",
-                                 dst: str = "dst",
-                                 max_iter: int = 30,
-                                 reliable: bool = False) -> DataFrame:
-    """Min-label propagation — O(diameter) rounds; simpler per-round
-    plan, used as cross-check and for known small-diameter graphs."""
-    e = _canon_edges(edges, src, dst)
-    nbrs = (e.union(e.select(F.col("b").alias("a"),
-                             F.col("a").alias("b")))
-            )
-    nbrs = _checkpoint(nbrs, reliable)
-    labels = (nbrs.select(F.col("a").alias("node"))
-              .distinct()
-              .select("node", F.col("node").alias("component")))
-    for _ in range(max_iter):
-        cand = (nbrs.join(labels,
-                          nbrs["b"] == labels["node"])
-                .select(nbrs["a"].alias("node"),
-                        F.col("component")))
-        new_labels = (labels.union(cand)
-                      .groupBy("node")
-                      .agg(F.min("component").alias("component")))
-        new_labels = _checkpoint(new_labels, reliable)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.component") != F.col("o.component"))
-                   .count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels

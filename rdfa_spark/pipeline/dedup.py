@@ -1,9 +1,9 @@
 """Deduplication operators for training-data pipelines.
 
-Exact (hash groupBy), MinHash-LSH near-dup, n-gram Jaccard
-verification, SimHash — all built-ins (md5/portable hashing, no
-Python in the hot path).  The LSH path reuses
-rdfa_spark.pipeline.linking.
+Exact (hash groupBy), MinHash-LSH near-dup with n-gram Jaccard
+verification, SimHash — md5/portable hashing throughout.  Exact dedup
+and SimHash are Spark built-ins; the MinHash path reuses the Arrow
+signature kernel and LSH join of rdfa_spark.pipeline.linking.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .linking import lsh_candidate_pairs, with_shingles
+from .linking import lsh_candidate_pairs, minhash_signatures
 
 
 def exact_duplicate_groups(df: DataFrame, id_col: str,
@@ -33,86 +33,34 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
-                        n: int = 3, threshold: float = 0.5,
-                        candidates: DataFrame | None = None,
-                        shingles: DataFrame | None = None
-                        ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs (verification step
-    after LSH blocking; all-pairs only if candidates is None and the
-    input is small).
-
-    ``shingles`` optionally supplies a precomputed (id, shingles)
-    table — e.g. the shared kernel output of ``minhash_dedup_pairs``
-    — skipping the interpreted higher-order-function re-tokenization
-    here entirely.  Jaccard is a pure SET computation
-    (array_intersect / array_union sizes), so any table with the same
-    distinct-shingle sets yields identical scores regardless of
-    element order."""
-    if shingles is not None:
-        sh = shingles.select(F.col(id_col), F.col("shingles"))
-    else:
-        sh = with_shingles(df, text_col, n).select(
-            F.col(id_col), F.col("shingles"))
-        if candidates is not None:
-            # the shingle table feeds BOTH sides of the verification
-            # join; materialize it once instead of re-tokenizing the
-            # corpus per side (at cluster scale this is the persisted
-            # shingle/signature table the LSH stage already built)
-            sh = sh.localCheckpoint(eager=False)
-    if candidates is None:
-        a = sh.alias("a")
-        b = sh.alias("b")
-        pairs = (a.crossJoin(b)
-                 .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-    else:
-        pairs = (candidates
-                 .join(sh.withColumnRenamed(id_col, "id_a")
-                         .withColumnRenamed("shingles", "sh_a"), "id_a")
-                 .join(sh.withColumnRenamed(id_col, "id_b")
-                         .withColumnRenamed("shingles", "sh_b"), "id_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
-        return (pairs.select(
-                    "id_a", "id_b",
-                    (inter / union).alias("jaccard"))
-                .filter(F.col("jaccard") >= threshold))
-    inter = F.size(F.array_intersect(F.col("a.shingles"),
-                                     F.col("b.shingles")))
-    union = F.size(F.array_union(F.col("a.shingles"),
-                                 F.col("b.shingles")))
-    return (pairs.select(F.col(f"a.{id_col}").alias("id_a"),
-                         F.col(f"b.{id_col}").alias("id_b"),
-                         (inter / union).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
-
-
 def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
                         n: int = 3, num_hashes: int = 32,
                         bands: int = 8,
                         jaccard_threshold: float = 0.5) -> DataFrame:
-    """Scale path: LSH blocking then exact-Jaccard verification on the
-    candidates only (never all-pairs).
+    """Scale path: LSH blocking, then exact n-gram Jaccard verification
+    on the candidate pairs only (never all-pairs).  Returns
+    (id_a, id_b, jaccard) with jaccard >= ``jaccard_threshold``.
 
-    One Arrow kernel pass produces BOTH the minhash signatures (for
+    One Arrow kernel pass produces both the minhash signatures (for
     the banded LSH join) and the distinct shingle sets (for the
-    Jaccard verification); the combined table is materialized once
+    verification); the combined table is materialized once
     (localCheckpoint — at cluster scale, the persisted signature
-    table).  Previously the corpus was tokenized twice more through
-    interpreted Catalyst higher-order functions for the verify join.
+    table).  Jaccard is a set computation (array_intersect /
+    array_union sizes), so the kernel's shingle order does not matter.
     """
-    from .linking import minhash_signatures
-
     sig_sh = minhash_signatures(df, id_col, text_col, n, num_hashes,
                                 with_shingle_col=True) \
         .localCheckpoint(eager=False)
     cands = lsh_candidate_pairs(df, id_col, text_col, n,
                                 num_hashes, bands,
                                 sig=sig_sh.select(id_col, "minhash"))
-    return ngram_jaccard_pairs(df, id_col, text_col, n,
-                               jaccard_threshold, candidates=cands,
-                               shingles=sig_sh.select(id_col,
-                                                      "shingles"))
+    sh = sig_sh.select(id_col, "shingles")
+    pairs = (cands.join(sh.toDF("id_a", "sh_a"), "id_a")
+             .join(sh.toDF("id_b", "sh_b"), "id_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    return (pairs.select("id_a", "id_b", (inter / union).alias("jaccard"))
+            .filter(F.col("jaccard") >= jaccard_threshold))
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str,
@@ -169,8 +117,7 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     exact only while every block is at or under ``max_block`` (assert
     ``dropped_blocks`` empty to prove it for a new corpus).  The
     attribute lives on THIS DataFrame object only; transformations
-    return a new DataFrame without it.  Default changed None ->
-    10_000 in round 3."""
+    return a new DataFrame without it."""
     sh = simhash64(df, id_col, text_col).select(id_col, "simhash")
     n_words = 64 // block_bits
     words = F.expr(
@@ -220,20 +167,19 @@ def filter_corpus(df: DataFrame, id_col: str = "doc_id",
     The three stages compose into a single plan: the quality columns
     are pure projections (whole-stage codegen), the language filter
     runs the Arrow lang-ID kernel only on quality survivors (filter
-    pushdown ahead of the expensive stage), and exact dedup is the
-    one shuffle, keyed on the md5 fingerprint of the survivors only.
+    pushdown ahead of the expensive stage) and appends ``lang_pred``
+    to them in the same pass (one scan of ``df``, no join back), and
+    exact dedup is the one shuffle, keyed on the md5 fingerprint of
+    the survivors only.
     Returns the surviving rows of ``df`` with the quality and
     ``lang_pred`` columns attached.
     """
-    from ..functions.text import (language_id_kernel,
-                                  with_quality_score)
+    from ..functions.text import with_language_id, with_quality_score
 
     scored = with_quality_score(df, text_col)
     kept = scored.filter(F.col("q_score_pm") >= min_score_pm)
     if languages is not None:
-        langs = language_id_kernel(kept.select(id_col, text_col),
-                                   id_col, text_col)
-        kept = (kept.join(langs, id_col)
+        kept = (with_language_id(kept, text_col)
                 .filter(F.col("lang_pred").isin(*languages)))
     if dedup:
         kept = dedup_exact(kept, id_col, text_col)

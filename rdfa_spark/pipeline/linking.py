@@ -5,8 +5,9 @@ blocking over mention labels, then connected components over the
 candidate-pair graph for canonicalization.
 
 All hashing is md5-based (portable: identical in Spark and the DuckDB
-oracle) and every stage is pure DataFrame ops — the LSH band join is
-an equi-join on (band_id, band_hash), which Catalyst executes as a
+oracle).  The MinHash signatures come from one ``mapInArrow`` kernel;
+every other stage is DataFrame ops — the LSH band join is an
+equi-join on (band_id, band_hash), which Catalyst executes as a
 shuffled hash join with AQE skew splitting on hot bands.
 """
 
@@ -85,17 +86,6 @@ def oversized_blocks(mentions: DataFrame,
 # MinHash LSH over character/word shingles (portable md5 hashing)
 # ---------------------------------------------------------------------------
 
-def with_shingles(df: DataFrame, text_col: str, n: int = 3,
-                  out: str = "shingles") -> DataFrame:
-    """Word n-gram shingles as an array column (built-ins only)."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    idx = F.sequence(F.lit(0), F.greatest(
-        F.size(toks) - n, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.concat_ws(
-        " ", F.slice(toks, i + 1, n)))
-    return df.withColumn(out, F.array_distinct(sh))
-
-
 MINHASH_PRIME = 1_000_000_007
 
 
@@ -108,128 +98,77 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
             for i in range(num_hashes)]
 
 
-def with_minhash(df: DataFrame, shingle_col: str = "shingles",
-                 num_hashes: int = 32,
-                 out: str = "minhash") -> DataFrame:
-    """num_hashes minima over the shingle set via a universal hash
-    family over a single md5 per shingle:
-
-        v(s)   = int(md5(s)[:15 hex]) mod p        (one md5 per shingle)
-        h_i(s) = (a_i · v(s) + b_i) mod p          (cheap arithmetic)
-
-    One md5 per shingle instead of num_hashes keeps the JVM-side cost
-    linear in |shingles|; a_i·v < p² ≈ 1e18 stays inside BIGINT (ANSI
-    mode safe).  Identical math in the DuckDB oracle
-    (rdfa_spark/oracle.py MINHASH_CTE).
-    """
-    p = F.lit(MINHASH_PRIME).cast("long")
-    vals = F.transform(
-        F.col(shingle_col),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
-                   .cast("long") % p)
-    params = F.array(*[
-        F.struct(F.lit(a).cast("long").alias("a"),
-                 F.lit(b).cast("long").alias("b"))
-        for a, b in minhash_params(num_hashes)])
-    # materialize the per-shingle hashes in their own projection so
-    # the md5 work is done once, not once per hash function
-    staged = df.withColumn("_mh_vals", vals)
-    mh = F.transform(
-        params,
-        lambda prm: F.array_min(F.transform(
-            F.col("_mh_vals"), lambda v: (prm["a"] * v + prm["b"]) % p)))
-    return staged.withColumn(out, mh).drop("_mh_vals")
-
-
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        n: int = 3, num_hashes: int = 32,
-                       impl: str = "arrow",
                        with_shingle_col: bool = False) -> DataFrame:
-    """(id, minhash array<long>) signatures.
+    """(id, minhash array<long>) signatures from one ``mapInArrow``
+    numpy kernel: the distinct word n-gram shingles of each document,
+    then num_hashes minima of a universal hash family over a single
+    md5 per shingle:
 
-    Two implementations with bit-identical output:
-    * ``expr``  — pure Catalyst expressions (with_shingles +
-      with_minhash); Spark's higher-order functions run interpreted,
-      so this is the slow path;
-    * ``arrow`` — Arrow-batched numpy kernel (default): one md5 per
-      shingle, the 32-function universal-hash minima as one
-      (num_hashes × n_shingles) int64 matrix op per doc.
+        v(s)   = int(md5(s)[:15 hex]) mod p        (one md5 per shingle)
+        h_i(s) = (a_i · v(s) + b_i) mod p          (one int64 matrix op)
+
+    a_i·v < p² ≈ 1e18 stays inside int64.  Identical math in the
+    DuckDB oracle (rdfa_spark/oracle.py ``_minhash_cte``).
 
     ``with_shingle_col=True`` additionally emits the distinct shingle
-    SET as a ``shingles`` array column — the kernel builds it anyway,
-    so a downstream Jaccard verification gets its shingle table from
-    THIS one pass instead of re-tokenizing the corpus through
-    interpreted Catalyst higher-order functions (set semantics equal
-    ``with_shingles``+``array_distinct``; element order differs, which
-    no set operation downstream observes).
+    set as a ``shingles`` array column (element order unspecified), so
+    a downstream Jaccard verification reuses this pass instead of
+    re-tokenizing the corpus.
     """
-    if impl == "expr":
-        sig = with_minhash(with_shingles(df, text_col, n),
-                           "shingles", num_hashes)
-        if with_shingle_col:
-            return sig.select(id_col, "minhash", "shingles")
-        return sig.select(id_col, "minhash")
-
     import hashlib
     import re
 
     import numpy as np
-    import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import (ArrayType, LongType, StringType,
                                    StructField, StructType)
 
-    ws = re.compile(r"\s+")
+    from ..functions.similarity import _typed_batch
 
+    ws = re.compile(r"\s+")
+    md5 = hashlib.md5
     params = minhash_params(num_hashes)
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)
-    b_vec = np.array([b for _, b in params], dtype=np.int64)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
     p = MINHASH_PRIME
-    id_field = df.schema[id_col]
     fields = [
-        StructField(id_col, id_field.dataType, True),
+        StructField(id_col, df.schema[id_col].dataType, True),
         StructField("minhash", ArrayType(LongType()), True),
     ]
     if with_shingle_col:
         fields.append(StructField("shingles",
                                   ArrayType(StringType()), True))
     out_schema = StructType(fields)
+    arrow_schema = to_arrow_schema(out_schema)
 
     def batches(it):
-        for pdf in it:
-            ids, sigs, shs = [], [], []
-            for rid, text in zip(pdf[id_col].values,
-                                 pdf[text_col].values):
+        for rb in it:
+            sigs, shs = [], []
+            for text in rb.column(1).to_pylist():
                 # regex split with kept empty edge tokens — exact
-                # mirror of Spark split()/DuckDB string_split_regex
+                # mirror of Spark split()/DuckDB string_split_regex;
+                # so every text, even "", has at least one shingle
                 toks = ws.split((text or "").lower())
-                hi = max(len(toks) - n, 0)
                 shingles = {" ".join(toks[j:j + n])
-                            for j in range(hi + 1)}
+                            for j in range(max(len(toks) - n, 0) + 1)}
                 # int.from_bytes(digest[:8]) >> 4 == the first 15 hex
-                # digits of the md5 — same value as the SQL mirror's
-                # substring(md5, 1, 15) without formatting the hex
-                # string per shingle
-                md5 = hashlib.md5
+                # digits of the md5, without formatting the hex string
                 vals = np.fromiter(
                     ((int.from_bytes(md5(s.encode()).digest()[:8],
-                                     "big") >> 4)
-                     % p for s in shingles),
+                                     "big") >> 4) % p
+                     for s in shingles),
                     dtype=np.int64, count=len(shingles))
-                if len(vals) == 0:
-                    sigs.append([])
-                else:
-                    mh = ((a_vec[:, None] * vals[None, :]
-                           + b_vec[:, None]) % p).min(axis=1)
-                    sigs.append(mh.tolist())
-                ids.append(rid)
+                sigs.append(((a_vec * vals + b_vec) % p)
+                            .min(axis=1).tolist())
                 if with_shingle_col:
                     shs.append(list(shingles))
-            out = {id_col: ids, "minhash": sigs}
-            if with_shingle_col:
-                out["shingles"] = shs
-            yield pd.DataFrame(out)
+            cols = [rb.column(0), sigs] + ([shs] if with_shingle_col
+                                           else [])
+            yield _typed_batch(arrow_schema, *cols)
 
-    return df.select(id_col, text_col).mapInPandas(batches, out_schema)
+    return df.select(id_col, text_col).mapInArrow(batches, out_schema)
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str,
@@ -259,9 +198,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
     under ``max_bucket`` (always true for the graded corpus — assert
     ``dropped_buckets`` is empty to prove it for yours).  The
     attribute lives on THIS DataFrame object; transformations return
-    a new DataFrame without it.  Default changed None -> 10_000 in
-    round 3 — callers wanting the old emit-everything behavior must
-    pass ``max_bucket=None`` explicitly.
+    a new DataFrame without it.
 
     ``sig`` optionally supplies a precomputed (id, minhash) signature
     frame (e.g. the shared signature+shingle table of

@@ -169,11 +169,13 @@ def test_ann_kernel_empty_query_set(spark, emb, op):
                          ids=["null", "wrong_length"])
 def test_similarity_rejects_null_or_ragged_vectors(spark, op, side, bad):
     """Vectors must be non-null and of one fixed dimension.  A bad
-    query vector raises ValueError on the driver; a bad item vector
-    raises it in the kernel (or, for IVF, in the driver-side centroid
-    sample), where it reaches the driver as a PythonException that
-    names it."""
+    query vector raises ValueError on the driver, and so does a bad
+    item vector in IVF's driver-side seeding sample (13 items, all
+    sampled); any other bad item vector raises in the kernel and
+    reaches the caller as a PythonException (not a ValueError) that
+    names the ValueError."""
     import numpy as np
+    from pyspark.errors import PythonException
 
     from rdfa_spark.functions import similarity
     rng = np.random.default_rng(3)
@@ -192,11 +194,14 @@ def test_similarity_rejects_null_or_ragged_vectors(spark, op, side, bad):
                 items, bands=2, planes_per_band=2, dim=4).collect()
         return getattr(similarity, op)(items, queries, k=3).collect()
 
-    with pytest.raises(Exception) as err:
+    if side == "queries" or op == "ivf_cosine_topk":
+        with pytest.raises(ValueError, match="similarity kernel requires"):
+            run()
+        return
+    with pytest.raises(PythonException) as err:
         run()
-    assert isinstance(err.value, ValueError) or \
-        "ValueError: similarity kernel requires" in str(err.value), \
-        err.value
+    assert not isinstance(err.value, ValueError)
+    assert "ValueError: similarity kernel requires" in str(err.value)
 
 
 def test_pairs_batch_keeps_declared_types():
@@ -693,39 +698,61 @@ def test_bpe_token_count(spark):
     assert got[3] == 3          # 'a' '-' 'b'
 
 
-def test_language_id_kernel_matches_relational(spark):
-    """The Arrow kernel and the relational explode+join path must be
-    bit-identical (same profiles, same integer argmax)."""
-    from rdfa_spark.functions.text import language_id_kernel
+def test_language_id_matches_scalar_reference(spark):
+    """The mapInArrow kernel of ``with_language_id`` predicts exactly
+    what the per-char scalar loop ``_langid_scalar`` predicts (same
+    profiles, same integer argmax)."""
+    from rdfa_spark.functions.text import _langid_scalar
     docs = spark.read.parquet(
-        "/root/testdata/sf0.01/documents.parquet").limit(200)
-    rel = {r.doc_id: r.lang_pred for r in
-           with_language_id(docs, "text", id_col="doc_id")
-           .select("doc_id", "lang_pred").collect()}
-    ker = {r.doc_id: r.lang_pred for r in
-           language_id_kernel(docs, "doc_id", "text").collect()}
-    assert rel == ker
+        "/root/testdata/sf0.01/documents.parquet").limit(200) \
+        .select("doc_id", "text").collect()
+    got = {r.doc_id: r.lang_pred for r in
+           with_language_id(spark.createDataFrame(docs)).collect()}
+    want = dict(zip((r.doc_id for r in docs),
+                    _langid_scalar([r.text for r in docs])))
+    assert len(want) == 200 and got == want
     rows = [(1, "die leute aus der stadt haben mehr zeit für alles"),
             (2, "从城里来的人说他们会有更多的时间。"), (3, "")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    rel2 = {r.doc_id: r.lang_pred for r in
-            with_language_id(df, "text").select("doc_id",
-                                                "lang_pred").collect()}
-    ker2 = {r.doc_id: r.lang_pred for r in
-            language_id_kernel(df).collect()}
-    assert rel2 == ker2 == {1: "de", 2: "zh", 3: "unknown"}
+    got2 = {r.doc_id: r.lang_pred
+            for r in with_language_id(df, "text").collect()}
+    want2 = dict(zip((d for d, _ in rows),
+                     _langid_scalar([t for _, t in rows])))
+    assert got2 == want2 == {1: "de", 2: "zh", 3: "unknown"}
+
+
+def test_language_id_passes_columns_through(spark):
+    """Every input column and value comes out unchanged, in order,
+    with ``lang_pred`` appended; a null text is 'unknown'."""
+    import datetime
+
+    schema = ("doc_id long, tags array<string>, score double, "
+              "seen timestamp, text string, meta struct<a:int,b:string>")
+    rows = [(1, ["x", None], 0.5, datetime.datetime(2024, 1, 2, 3, 4),
+             "the house that we have seen", (1, "u")),
+            (2, None, None, None, None, None),
+            (3, [], -1.25, datetime.datetime(1999, 12, 31),
+             "der schnelle braune fuchs", (None, "v"))]
+    df = spark.createDataFrame(rows, schema)
+    out = with_language_id(df, "text")
+    assert out.columns == df.columns + ["lang_pred"]
+    assert out.schema.fields[:-1] == df.schema.fields
+    got = sorted(out.collect())
+    assert [tuple(r)[:-1] for r in got] == sorted(
+        tuple(r) for r in df.collect())
+    assert [r.lang_pred for r in got] == ["en", "unknown", "de"]
 
 
 def test_round3_operator_plans(spark):
     """Plan shape of the round-3 operators: the language-ID kernel is
-    scan -> mapInPandas with no Exchange; multi-probe LSH ANN scores
+    scan -> mapInArrow with no Exchange; multi-probe LSH ANN scores
     the items in one kernel against the driver-collected queries
     (never shuffles the item table by bucket)."""
     from rdfa_spark.functions.similarity import lsh_cosine_topk
-    from rdfa_spark.functions.text import language_id_kernel
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = language_id_kernel(docs, "doc_id", "text") \
+    plan = with_language_id(docs, "text") \
         ._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan
     assert "Exchange" not in plan
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

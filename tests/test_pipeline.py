@@ -11,8 +11,8 @@ from rdfa_spark.pages import load_pages
 from rdfa_spark.pipeline import (
     ResumableExtraction, canonicalize, connected_components,
     dedup_exact, entity_mentions, exact_candidate_pairs,
-    exact_duplicate_groups, label_propagation_components, lineage,
-    minhash_dedup_pairs, simhash64, simhash_near_dup_pairs,
+    exact_duplicate_groups, lineage, minhash_dedup_pairs, simhash64,
+    simhash_near_dup_pairs,
 )
 
 
@@ -41,24 +41,29 @@ def _check_cc(spark, edges, algo):
     assert got == want
 
 
-CC_ALGOS = [connected_components, label_propagation_components]
+# the distributed star loop alone, and the default two-phase path
+# (star rounds until the edge set fits the local finish)
+CC_MODES = {
+    "star": lambda df: connected_components(df, local_finish_edges=0),
+    "two_phase": connected_components,
+}
 
 
-@pytest.mark.parametrize("algo", CC_ALGOS)
-def test_cc_chains(spark, algo):
+@pytest.mark.parametrize("mode", list(CC_MODES))
+def test_cc_chains(spark, mode):
     # chains of length 10 force multi-round convergence
     edges = [(f"n{i:03d}", f"n{i - 1:03d}")
              for i in range(100) if i % 10 != 0]
-    _check_cc(spark, edges, algo)
+    _check_cc(spark, edges, CC_MODES[mode])
 
 
-@pytest.mark.parametrize("algo", CC_ALGOS)
-def test_cc_random_graph(spark, algo):
+@pytest.mark.parametrize("mode", list(CC_MODES))
+def test_cc_random_graph(spark, mode):
     rng = random.Random(42)
     nodes = [f"v{i:04d}" for i in range(300)]
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(250)]
     edges = [(a, b) for a, b in edges if a != b]
-    _check_cc(spark, edges, algo)
+    _check_cc(spark, edges, CC_MODES[mode])
 
 
 def test_cc_cycle_and_star(spark):
@@ -315,3 +320,16 @@ def test_filter_corpus_composition(spark):
     assert got == [1, 5]          # dup 2 dropped, de 3 dropped, junk 4 dropped
     cols = set(out.columns)
     assert {"q_score_pm", "lang_pred"} <= cols
+
+
+def test_filter_corpus_scans_once(spark, sf_dir):
+    """The language kernel appends ``lang_pred`` to the quality
+    survivors in place, so the plan reads ``documents`` once and has
+    no join."""
+    from rdfa_spark.pipeline.dedup import filter_corpus
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    plan = filter_corpus(docs, languages=("en", "unknown")) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Join" not in plan, plan
+    assert "MapInArrow" in plan, plan

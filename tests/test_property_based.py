@@ -81,22 +81,6 @@ class TestCCProperties:
                      for r in connected_components(df).collect()}
         assert got_local == want
 
-    @settings(max_examples=6, deadline=None,
-              suppress_health_check=[HealthCheck.function_scoped_fixture])
-    @given(edges=edge_lists)
-    def test_label_propagation_matches_star(self, spark, edges):
-        from rdfa_spark.pipeline.cc import (
-            connected_components, label_propagation_components)
-        pairs = [(str(a), str(b)) for a, b in edges if a != b]
-        if not pairs:
-            return
-        df = spark.createDataFrame(pairs, ["src", "dst"])
-        star = {r.node: r.component
-                for r in connected_components(df).collect()}
-        lp = {r.node: r.component
-              for r in label_propagation_components(df).collect()}
-        assert star == lp
-
 
 # ---------------------------------------------------------------------------
 # Tag-soup / walk robustness: arbitrary bytes never raise
