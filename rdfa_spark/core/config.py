@@ -306,10 +306,6 @@ def guess_version_from_root(version_attr: str | None) -> str | None:
     return None
 
 
-def with_options(cfg: Config, **options) -> Config:
-    return replace(cfg, **options)
-
-
 AUTO_CONFIG_META_NAME = \
     "http://search.cpan.org/dist/RDF-RDFa-Parser/#auto_config"
 

@@ -28,7 +28,6 @@ from html.parser import HTMLParser
 from .soup_lexer import feed_events
 
 XML_NS = "http://www.w3.org/XML/1998/namespace"
-XMLNS_NS = "http://www.w3.org/2000/xmlns/"
 XHTML_NS = "http://www.w3.org/1999/xhtml"
 
 

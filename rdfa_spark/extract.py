@@ -318,13 +318,6 @@ def opengraph(triples: DataFrame, prop: str | None = None) -> DataFrame:
     )
 
 
-def with_context_graph(triples: DataFrame, context: str) -> DataFrame:
-    """Wrap statements into a caller-supplied context quad — the
-    TrineX ``parse_url_into_model`` context option
-    (TrineX/Parser/RDFa.pm:127-151, t/10trine.t)."""
-    return triples.withColumn("graph", F.lit(context))
-
-
 def opengraph_collect(triples: DataFrame) -> DataFrame:
     """A3 — group OpenGraph values per (page, property) into an
     ordered list (Parser.pm:282-319), surfaced as a sorted

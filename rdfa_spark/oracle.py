@@ -327,8 +327,6 @@ FROM documents d LEFT JOIN best b USING (doc_id)
 """
 
 
-EN_STOPWORDS_SQL_LIST = None  # built in functions_meta
-
 QUALITY_SQL_TEMPLATE = """
 WITH tok AS (
   SELECT doc_id, text,

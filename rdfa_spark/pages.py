@@ -26,7 +26,6 @@ EPOCH = 1704067200  # 2024-01-01T00:00:00Z
 DC = "http://purl.org/dc/terms/"
 OG = "http://ogp.me/ns#"
 SCHEMA = "http://schema.org/"
-OG_TYPES = ["article", "website", "profile"]  # template 0/1/2
 
 
 def _esc(col: Column) -> Column:

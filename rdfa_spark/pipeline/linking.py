@@ -118,7 +118,6 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     re-tokenizing the corpus.
     """
     import hashlib
-    import re
 
     import numpy as np
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -126,8 +125,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                                    StructField, StructType)
 
     from ..functions.similarity import _typed_batch
+    from ..functions.text import _ws_re
 
-    ws = re.compile(r"\s+")
+    ws = _ws_re()
     md5 = hashlib.md5
     params = minhash_params(num_hashes)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
@@ -147,9 +147,11 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
         for rb in it:
             sigs, shs = [], []
             for text in rb.column(1).to_pylist():
-                # regex split with kept empty edge tokens — exact
-                # mirror of Spark split()/DuckDB string_split_regex;
-                # so every text, even "", has at least one shingle
+                # split on the ASCII whitespace class with kept empty
+                # edge tokens — exact mirror of Spark split() and
+                # DuckDB string_split_regex (U+00A0, U+3000 etc. stay
+                # inside a token); so every text, even "", has at
+                # least one shingle
                 toks = ws.split((text or "").lower())
                 shingles = {" ".join(toks[j:j + n])
                             for j in range(max(len(toks) - n, 0) + 1)}

@@ -10,12 +10,13 @@ multi-executor clusters").
         --py-files dist/rdfa_spark.zip \
         scripts/run_pipeline.py \
         --pages <pages parquet/iceberg path or sf dir> \
-        --out /path/to/kg_out [--batches 64] [--resume]
+        --out /path/to/kg_out [--batches 64] [--buckets 64]
 
-Stages: resumable extraction (subject-bucketed triples + per-url
-lineage + processed-url ledger) -> entity mentions -> LSH blocking ->
+Stages: resumable extraction (one parse per page: subject-bucketed
+triples + batch-partitioned processor-graph errors + per-url lineage +
+processed-url ledger) -> entity mentions -> exact-label blocking ->
 connected-components canonicalization -> entity table materialize.
-Re-running with --resume skips completed batches (idempotent:
+Re-running with the same --out skips completed batches (idempotent:
 extraction is deterministic per url).
 """
 
@@ -36,13 +37,10 @@ def main() -> int:
     ap.add_argument("--out", required=True)
     ap.add_argument("--batches", type=int, default=16)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--resume", action="store_true",
-                    help="(flag is informational: runs always resume)")
     args = ap.parse_args()
 
     spark = SparkSession.builder.getOrCreate()
     # import after the session exists so --py-files zips resolve
-    from rdfa_spark.extract import extract_errors
     from rdfa_spark.pages import load_pages
     from rdfa_spark.pipeline.linking import (canonicalize,
                                              entity_mentions)
@@ -60,10 +58,6 @@ def main() -> int:
 
     triples = run.triples()
     n_triples = triples.count()
-
-    errors = extract_errors(pages)
-    errors.write.mode("overwrite").parquet(
-        os.path.join(args.out, "errors"))
 
     mentions = entity_mentions(triples)
     canon = canonicalize(mentions)

@@ -1,11 +1,8 @@
-"""functions/: text analysis, similarity search, multimodal plumbing."""
+"""functions/: text analysis and similarity search."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from rdfa_spark.functions.multimodal import (ASSET_SCHEMA,
-                                             extract_features,
-                                             frame_sample)
 from rdfa_spark.functions.similarity import (cosine_topk,
                                              embedding_near_dup_pairs,
                                              lsh_cosine_topk)
@@ -308,33 +305,6 @@ def test_text_functions(spark):
     assert out[0].q_alpha_pm > 700
 
 
-def test_multimodal_feature_extraction(spark):
-    rows = [("a1", "image", "fakebytes-1", "image/png"),
-            ("a2", "video", "fakebytes-2", "video/mp4"),
-            ("a3", "audio", "fakebytes-3", "audio/wav")]
-    df = spark.createDataFrame(rows, ASSET_SCHEMA)
-    feats = extract_features(df).cache()
-    got = {r.asset_id: r for r in feats.collect()}
-    assert len(got) == 3
-    assert all(len(r.feature) == 16 for r in got.values())
-    assert got["a1"].n_frames == 1          # images are single-frame
-    assert got["a2"].n_frames >= 1
-    # deterministic pseudo-decode
-    again = {r.asset_id: r for r in extract_features(df).collect()}
-    assert got["a2"].feature == again["a2"].feature
-    # frame-sampling plan explodes video frames only
-    frames = frame_sample(feats, every_n=4)
-    assert frames.filter(F.col("asset_id") == "a1").count() == 0
-    assert frames.filter(F.col("asset_id") == "a2").count() >= 1
-
-
-def test_multimodal_real_decoder_stubbed(spark):
-    rows = [("a1", "image", "x", "image/png")]
-    df = spark.createDataFrame(rows, ASSET_SCHEMA)
-    with pytest.raises(Exception, match="NotImplementedError|real"):
-        extract_features(df, decoder="real").collect()
-
-
 def test_ivf_ann_recall_and_determinism(spark, emb):
     from rdfa_spark.functions.similarity import ivf_cosine_topk
     q = emb.filter(F.col("vec_id") % 100 == 0) \
@@ -356,177 +326,6 @@ def test_ivf_ann_recall_and_determinism(spark, emb):
     for qid, rank, nid, score in r1:
         if (qid, nid) in exact_scores:
             assert abs(exact_scores[(qid, nid)] - score) < 1e-12
-
-
-def _make_png(rows):
-    """Minimal valid RGB PNG (filter 0) from [[(r,g,b), ...], ...]."""
-    import struct
-    import zlib
-
-    h, w = len(rows), len(rows[0])
-
-    def chunk(typ, data):
-        c = struct.pack(">I", len(data)) + typ + data
-        return c + struct.pack(">I", zlib.crc32(typ + data))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes(v for px in row for v in px)
-                   for row in rows)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-
-def _make_wav(n_frames=8000, rate=8000, amp=16384):
-    import io
-    import math
-    import struct
-    import wave
-    buf = io.BytesIO()
-    wf = wave.open(buf, "wb")
-    wf.setnchannels(1)
-    wf.setsampwidth(2)
-    wf.setframerate(rate)
-    # silence for the first half, a 440 Hz tone for the second
-    frames = bytearray()
-    for i in range(n_frames):
-        v = 0 if i < n_frames // 2 else int(
-            amp * math.sin(2 * math.pi * 440 * i / rate))
-        frames += struct.pack("<h", v)
-    wf.writeframes(bytes(frames))
-    wf.close()
-    return buf.getvalue()
-
-
-def test_real_png_decode_grid_feature():
-    from rdfa_spark.functions.codecs import (decode_png, grid_feature,
-                                             real_decode)
-    # 8x8: left half white, right half black
-    rows = [[(255, 255, 255)] * 4 + [(0, 0, 0)] * 4 for _ in range(8)]
-    png = _make_png(rows)
-    w, h, gray = decode_png(png)
-    assert (w, h) == (8, 8)
-    assert gray[0][0] == 1.0 and gray[7][7] == 0.0
-    feat = grid_feature(gray, w, h)
-    assert len(feat) == 16
-    # left two grid columns white (1.0), right two black (0.0)
-    for gy in range(4):
-        assert feat[gy * 4 + 0] == 1.0 and feat[gy * 4 + 1] == 1.0
-        assert feat[gy * 4 + 2] == 0.0 and feat[gy * 4 + 3] == 0.0
-    assert real_decode(png, "image")[:3] == (8, 8, 1)
-
-
-def test_real_png_filters_roundtrip():
-    """Filters 1-4 unfilter correctly: re-encode a gradient with each
-    filter type and compare to filter-0 decode."""
-    import struct
-    import zlib
-    from rdfa_spark.functions.codecs import decode_png
-    rows = [[((x * 37 + y * 11) % 256,) * 3 for x in range(6)]
-            for y in range(5)]
-    base = decode_png(_make_png(rows))[2]
-
-    def encode_filtered(filter_type):
-        w, h, nch = 6, 5, 3
-        flat = [bytes(v for px in row for v in px) for row in rows]
-        out = bytearray()
-        prev = bytes(w * nch)
-        for row in flat:
-            line = bytearray(row)
-            enc = bytearray(line)
-            if filter_type == 1:
-                for i in range(w * nch - 1, nch - 1, -1):
-                    enc[i] = (line[i] - line[i - nch]) & 255
-            elif filter_type == 2:
-                for i in range(w * nch):
-                    enc[i] = (line[i] - prev[i]) & 255
-            elif filter_type == 3:
-                for i in range(w * nch):
-                    a = line[i - nch] if i >= nch else 0
-                    enc[i] = (line[i] - ((a + prev[i]) >> 1)) & 255
-            elif filter_type == 4:
-                for i in range(w * nch):
-                    a = line[i - nch] if i >= nch else 0
-                    b = prev[i]
-                    c = prev[i - nch] if i >= nch else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pr = a if (pa <= pb and pa <= pc) else \
-                        (b if pb <= pc else c)
-                    enc[i] = (line[i] - pr) & 255
-            out += bytes([filter_type]) + bytes(enc)
-            prev = line
-
-        def chunk(typ, data):
-            c = struct.pack(">I", len(data)) + typ + data
-            return c + struct.pack(">I", zlib.crc32(typ + data))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(out)))
-                + chunk(b"IEND", b""))
-
-    import numpy as np
-    for ft in (1, 2, 3, 4):
-        assert np.array_equal(decode_png(encode_filtered(ft))[2],
-                              base), ft
-
-
-def test_real_wav_decode():
-    from rdfa_spark.functions.codecs import decode_wav, real_decode
-    wav = _make_wav()
-    nch, rate, n_frames, rms = decode_wav(wav)
-    assert (nch, rate, n_frames) == (1, 8000, 8000)
-    assert len(rms) == 16
-    # first half silent, second half loud
-    assert all(v < 0.01 for v in rms[:8])
-    assert all(v > 0.2 for v in rms[8:])
-    w, h, nf, feat = real_decode(wav, "audio")
-    assert (w, h, nf) == (8000, 1, 8000) and feat == rms
-
-
-def test_real_jpeg_gif_dimensions():
-    import struct
-    from rdfa_spark.functions.codecs import (gif_dimensions,
-                                             jpeg_dimensions)
-    # minimal JPEG: SOI + APP0 + SOF0(300x200)
-    jpeg = (b"\xff\xd8" + b"\xff\xe0" + struct.pack(">H", 4) + b"JF"
-            + b"\xff\xc0" + struct.pack(">H", 11) + b"\x08"
-            + struct.pack(">HH", 200, 300) + b"\x03\x01\x11\x00")
-    assert jpeg_dimensions(jpeg) == (300, 200)
-    gif = b"GIF89a" + struct.pack("<HH", 320, 240) + b"\x00" * 10
-    assert gif_dimensions(gif) == (320, 240)
-
-
-def test_real_decoder_through_spark(spark):
-    """decoder='real' end-to-end over binary payloads: PNG and WAV
-    decode for real; an MP4-ish payload still raises (honest stub)."""
-    png = _make_png([[(255, 255, 255)] * 4 + [(0, 0, 0)] * 4
-                     for _ in range(8)])
-    wav = _make_wav(n_frames=1600, rate=8000)
-    rows = [("img1", "image", bytearray(png), "image/png"),
-            ("aud1", "audio", bytearray(wav), "audio/wav")]
-    df = spark.createDataFrame(
-        rows, "asset_id string, kind string, payload binary, "
-              "mime string")
-    got = {r.asset_id: r for r in
-           extract_features(df, decoder="real").collect()}
-    assert (got["img1"].width, got["img1"].height) == (8, 8)
-    assert got["img1"].feature[0] == 1.0
-    assert got["aud1"].width == 8000 and got["aud1"].n_frames == 1600
-    # mp4 dims/frames decode for real via the ISO-BMFF box walk
-    from test_codecs_ab import _make_mp4
-    vid = spark.createDataFrame(
-        [("vid1", "video", bytearray(_make_mp4()), "video/mp4")],
-        "asset_id string, kind string, payload binary, mime string")
-    v = extract_features(vid, decoder="real").collect()[0]
-    assert (v.width, v.height, v.n_frames) == (640, 360, 30)
-    # unknown format still raises through the job
-    bad = spark.createDataFrame(
-        [("vid2", "video", bytearray(b"NOTAFORMAT_echo_xx"),
-          "video/x-msvideo")],
-        "asset_id string, kind string, payload binary, mime string")
-    with pytest.raises(Exception, match="NotImplementedError|stdlib"):
-        extract_features(bad, decoder="real").collect()
 
 
 def test_new_operator_plans(spark, sf_dir):
@@ -571,60 +370,6 @@ def test_odf_fuzz_never_crashes_extract(spark):
     # nothing threw
     assert x.count() + errs.filter(F.col("code") == "parse-failed") \
         .count() >= 10
-
-
-def test_resize_images_real_and_fake(spark):
-    """Resize stage: real PNG path downsizes decoded pixels; fake path
-    covers any payload with identical plumbing."""
-    from rdfa_spark.functions.multimodal import resize_images
-    png = _make_png([[(255, 255, 255)] * 8 if y < 4 else
-                     [(0, 0, 0)] * 8 for y in range(8)])
-    rows = [("img1", "image", bytearray(png), "image/png"),
-            ("aud1", "audio", bytearray(b"RIFFxxxxWAVE"), "audio/wav")]
-    df = spark.createDataFrame(
-        rows, "asset_id string, kind string, payload binary, "
-              "mime string")
-    real = {r.asset_id: r for r in
-            resize_images(df, out_w=4, out_h=4,
-                          decoder="real").collect()}
-    assert list(real) == ["img1"]          # audio skipped
-    t = real["img1"].thumb
-    assert len(t) == 16
-    assert all(v == 1.0 for v in t[:8])    # top half white
-    assert all(v == 0.0 for v in t[8:])    # bottom half black
-    fake = resize_images(df, out_w=4, out_h=4, decoder="fake")
-    got = {r.asset_id for r in fake.collect()}
-    assert got == {"img1"}                 # kind=='image' only
-
-
-def test_multimodal_skip_metrics(spark):
-    """Real-decoder paths count what they can't process instead of
-    silently skipping (VERDICT r2 next-round #8)."""
-    from rdfa_spark.functions.multimodal import (extract_features,
-                                                 resize_images)
-    from test_codecs_ab import _make_mp4
-    png = _make_png([[(9, 9, 9)] * 4] * 4)
-    rows = [("img1", "image", bytearray(png), "image/png"),
-            ("gif1", "image", bytearray(b"GIF89a\x02\x00\x02\x00xxx"),
-             "image/gif"),
-            ("vid1", "video", bytearray(_make_mp4()), "video/mp4"),
-            ("avi1", "video", bytearray(b"NOTAFORMAT_avi_xx"),
-             "video/x-msvideo"),
-            ("nul1", "image", None, "image/png")]
-    df = spark.createDataFrame(
-        rows, "asset_id string, kind string, payload binary, "
-              "mime string")
-
-    rs = resize_images(df, out_w=2, out_h=2, decoder="real")
-    assert [r.asset_id for r in rs.collect()] == ["img1"]
-    assert rs.skipped_assets.value == 2      # gif (no pixels) + null
-
-    feats = extract_features(df, decoder="real", on_unsupported="skip")
-    got = {r.asset_id for r in feats.collect()}
-    # gif dims-only decodes; mp4 dims/frames decode via the ISO-BMFF
-    # box walk (no longer a skipped format)
-    assert got == {"img1", "gif1", "vid1"}
-    assert feats.skipped_assets.value == 2   # unknown avi + null payload
 
 
 def test_ann_recall_gates(spark):
@@ -800,97 +545,6 @@ def test_langid_numpy_scalar_ab():
     # NUL in one text flips the whole batch to the fallback path
     nulbatch = ["plain", "x\x00y", "", "more text"]
     assert _langid_numpy(nulbatch) == _langid_scalar(nulbatch)
-
-
-def test_webp_dimensions_all_variants():
-    """Header-only WebP dims for lossy (VP8), lossless (VP8L) and
-    extended (VP8X) containers, built per the public spec."""
-    import struct
-
-    from rdfa_spark.functions.codecs import (real_decode, sniff_format,
-                                             webp_dimensions)
-
-    def riff(chunk_tag, chunk_body):
-        body = chunk_tag + struct.pack("<I", len(chunk_body)) + chunk_body
-        return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WEBP" + body
-
-    # VP8 lossy: 3-byte frame tag, start code, 14-bit dims
-    vp8 = riff(b"VP8 ", b"\x00\x00\x00" + b"\x9d\x01\x2a"
-               + struct.pack("<HH", 320, 240) + b"\x00" * 8)
-    # VP8L lossless: 0x2F sig then 14-bit w-1 / h-1 packed
-    bits = (320 - 1) | ((240 - 1) << 14)
-    vp8l = riff(b"VP8L", b"\x2f" + struct.pack("<I", bits) + b"\x00" * 8)
-    # VP8X extended: 4 flag bytes then 24-bit w-1 / h-1
-    vp8x = riff(b"VP8X", b"\x00\x00\x00\x00"
-                + (320 - 1).to_bytes(3, "little")
-                + (240 - 1).to_bytes(3, "little") + b"\x00" * 8)
-    for payload in (vp8, vp8l, vp8x):
-        assert sniff_format(payload) == "webp"
-        assert webp_dimensions(payload) == (320, 240)
-        w, h, nf, feat = real_decode(payload, "image")
-        assert (w, h, nf, feat) == (320, 240, 1, None)
-    # truncated / corrupt headers raise ValueError, not silence
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        webp_dimensions(riff(b"VP8 ", b"\x00\x00\x00bad"))
-    with _pytest.raises(ValueError):
-        webp_dimensions(riff(b"ANIM", b"\x00" * 10))
-
-
-def test_frame_sample_reports_null_n_frames(spark):
-    """A video with NULL n_frames must not vanish silently: it is
-    excluded from the frame plan and reported via skipped_assets."""
-    from rdfa_spark.functions.multimodal import frame_sample
-
-    df = spark.createDataFrame(
-        [("v1", "video", 17), ("v2", "video", None),
-         ("i1", "image", 1)],
-        "asset_id string, kind string, n_frames int")
-    out = frame_sample(df, every_n=8)
-    rows = {(r.asset_id, r.frame_idx) for r in out.collect()}
-    assert rows == {("v1", 0), ("v1", 8), ("v1", 16)}
-    skipped = [r.asset_id for r in out.skipped_assets.collect()]
-    assert skipped == ["v2"]
-
-
-def test_gif_frame_count_block_walk():
-    """GIF frame counting walks the real block structure: global and
-    local color tables, extensions with sub-blocks, multiple image
-    descriptors; truncation raises rather than under-counting."""
-    import struct
-
-    import pytest as _pytest
-
-    from rdfa_spark.functions.codecs import (gif_dimensions,
-                                             gif_frames, real_decode)
-
-    def gif(n_frames, gct=True, lct_on_first=True, with_gce=True):
-        packed = 0x80 | 0x01 if gct else 0x01   # gct flag, 2^2 colors
-        out = (b"GIF89a" + struct.pack("<HH", 7, 5)
-               + bytes([packed, 0, 0]))
-        if gct:
-            out += b"\x00" * (3 * 4)
-        for i in range(n_frames):
-            if with_gce:                        # graphic control ext
-                out += b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-            lct = lct_on_first and i == 0
-            out += b"\x2c" + struct.pack("<HHHH", 0, 0, 7, 5) \
-                + bytes([0x80 | 0x01 if lct else 0])
-            if lct:
-                out += b"\x00" * (3 * 4)
-            out += b"\x02" + b"\x03" + b"\x44\x01\x05" + b"\x00"
-        return out + b"\x3b"
-
-    for n in (1, 3, 7):
-        payload = gif(n)
-        assert gif_frames(payload) == n
-        assert gif_dimensions(payload) == (7, 5)
-        w, h, nf, feat = real_decode(payload, "image")
-        assert (w, h, nf) == (7, 5, n)
-    assert gif_frames(gif(2, gct=False, lct_on_first=False,
-                          with_gce=False)) == 2
-    with _pytest.raises(ValueError):
-        gif_frames(gif(2)[:-5])      # truncated mid-frame
 
 
 def test_embedding_dim_edge_cases(tmp_path):

@@ -1,12 +1,18 @@
 """Pipeline stage tests: connected components (vs union-find oracle),
-entity linking, dedup operators, resumable materialization."""
+entity linking, dedup operators, resumable materialization and the
+run_pipeline.py entrypoint."""
 
+import hashlib
+import os
 import random
+import subprocess
+import sys
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
-from rdfa_spark.extract import extract_triples
+from rdfa_spark.extract import extract_errors, extract_triples
 from rdfa_spark.pages import load_pages
 from rdfa_spark.pipeline import (
     ResumableExtraction, canonicalize, connected_components,
@@ -121,6 +127,30 @@ def test_minhash_dedup_finds_near_dups(spark):
     assert all(100 not in p for p in got)  # distinct doc not paired
 
 
+def test_minhash_splits_on_ascii_whitespace_like_oracle(spark):
+    """Unicode spaces (U+00A0, U+3000, U+2003) stay inside a token, as
+    in Spark's split() and the DuckDB oracle's ASCII class, so the
+    kernel's signatures equal MINHASH_SIGNATURE_SQL's."""
+    import duckdb
+
+    from rdfa_spark.oracle import MINHASH_SIGNATURE_SQL
+    from rdfa_spark.pipeline.linking import minhash_signatures
+    rows = [(1, "alpha\xa0beta gamma\u3000delta"),
+            (2, "one\u2003two three four five"),
+            (3, "plain\tascii\nwhite  space only"),
+            (4, "\xa0lead and trail\u3000"),
+            (5, "")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: hashlib.md5("|".join(map(str, r.minhash))
+                                 .encode()).hexdigest()
+           for r in minhash_signatures(df, "doc_id", "text").collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = dict(con.execute(MINHASH_SIGNATURE_SQL).fetchall())
+    assert got == want
+
+
 def test_simhash_deterministic_and_near_dup(spark):
     rows = [(1, "alpha beta gamma delta epsilon zeta eta theta"),
             (2, "alpha beta gamma delta epsilon zeta eta iota"),
@@ -159,6 +189,31 @@ def test_resumable_materialization(spark, sf_dir, tmp_path):
     assert lin.agg(F.sum("n_triples")).first()[0] == total
     # subject bucketing present
     assert "subj_bucket" in run.triples().columns
+
+
+def test_run_pipeline_keeps_partitioned_errors(spark, sf_dir, tmp_path):
+    """scripts/run_pipeline.py parses each page once: the errors table
+    is the batch-partitioned one ResumableExtraction wrote, and its
+    rows equal a direct extract_errors pass as a multiset."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "kg")
+    env = dict(os.environ,
+               PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell",
+               PYTHONPATH=os.pathsep.join(
+                   filter(None, [root, os.environ.get("PYTHONPATH")])))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "scripts", "run_pipeline.py"),
+         "--pages", sf_dir, "--out", out, "--batches", "2",
+         "--buckets", "2"],
+        env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "PIPELINE_OK" in proc.stdout
+    stored = spark.read.parquet(os.path.join(out, "errors"))
+    assert "batch" in stored.columns
+    got = Counter(map(tuple, stored.drop("batch").collect()))
+    want = Counter(map(tuple, extract_errors(load_pages(spark, sf_dir))
+                       .select(*stored.drop("batch").columns).collect()))
+    assert want and got == want
 
 
 def test_cc_salted_hot_hub(spark):
