@@ -153,6 +153,38 @@ def _typed_batch(arrow_schema, *columns):
         schema=arrow_schema)
 
 
+def cap_blocks(rows: DataFrame, keys: list[str],
+               max_members: int | Column) -> tuple[DataFrame, DataFrame]:
+    """The block cap of every blocking operator: returns (kept,
+    dropped).  ``kept`` is the rows of each block (rows with equal
+    ``keys``) that has at most ``max_members`` rows; ``dropped`` has
+    one (*keys, n_members) row per larger block.  A per-row Column cap
+    is allowed: a cap of 0 drops (and reports) a block whatever its
+    size.
+
+    A block of K members self-joins into ~K²/2 pairs, so one hot key
+    (mass-duplicated boilerplate, usually) would make the join
+    quadratic; exact dedup handles such clusters in one groupBy.  The
+    count is a window on the block key, so it reuses the shuffle the
+    operator's join or bucket kernel needs on that key instead of
+    adding a groupBy and a semi-join.
+
+    The convention every capped operator follows: ``dropped`` is a
+    lazy DataFrame attached to the operator's result as
+    ``dropped_blocks`` or ``dropped_buckets`` (count it, log it, or
+    route its members elsewhere).  The attribute lives on that
+    DataFrame object only; any further transformation returns a
+    DataFrame without it.  The DuckDB oracle models no cap, so
+    Spark/oracle parity is exact only while ``dropped`` is empty."""
+    counted = rows.withColumn(
+        "_n", F.count("*").over(Window.partitionBy(*keys)))
+    over = F.col("_n") > max_members
+    dropped = (counted.filter(over)
+               .select(*keys, F.col("_n").alias("n_members"))
+               .distinct())
+    return counted.filter(~over).drop("_n"), dropped
+
+
 def _topk_rank(scored, query_id_col, k):
     w = (Window.partitionBy(query_id_col)
          .orderBy(F.col("score").desc(), F.col("neighbor_id").asc()))
@@ -445,7 +477,7 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
                              vec_col: str = "embedding",
                              bands: int = 4,
                              planes_per_band: int = 8,
-                             max_bucket: int | None = 10_000,
+                             max_bucket: int = 10_000,
                              *, dim: int) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-band
     hyperplane-LSH (never all-pairs at scale).  ``dim`` is the fixed
@@ -471,18 +503,9 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
     size.  A pair colliding in several bands carries the same score
     in each, so the final pair dedup keeps identical values.
 
-    ``max_bucket`` (ON by default) drops buckets with more members
-    than the cap (mass-duplicated boilerplate clusters; exact dedup
-    handles those far cheaper than pairwise scoring, which would emit
-    ~size²/2 pairs per bucket).  Dropped buckets are reported via
-    ``result.dropped_buckets`` (band_id, sig, n_members) — never a
-    silent truncation.
-
-    The DuckDB oracle (EMBEDDING_NEAR_DUP_SQL) models NO cap: parity
-    is exact only while every bucket is at or under ``max_bucket``
-    (assert ``dropped_buckets`` empty to prove it for a new corpus).
-    The attribute lives on THIS DataFrame object only; further
-    transformations return a new DataFrame without it.
+    ``max_bucket`` caps bucket membership (``cap_blocks``); each
+    bucket over it is reported in ``result.dropped_buckets``
+    (band_id, sig, n_members).
 
     A null or wrong-length vector raises ``ValueError`` in the Python
     worker at the action; the caller gets it as
@@ -521,20 +544,11 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
                     np.full(n, bnd, dtype=np.int32),
                     ["".join(row) for row in chars])
 
-    # pair_batches needs whole buckets; the cap window below clusters
-    # on the same keys, so it reuses this exchange and adds none
-    banded = it.mapInArrow(sig_batches, banded_schema) \
-        .repartition("band_id", "sig")
-    dropped = None
-    if max_bucket is not None:
-        w = Window.partitionBy("band_id", "sig")
-        banded = banded.withColumn("_bn", F.count("*").over(w))
-        dropped = (banded.filter(F.col("_bn") > max_bucket)
-                   .select("band_id", "sig",
-                           F.col("_bn").alias("n_members"))
-                   .distinct())
-        banded = banded.filter(F.col("_bn") <= max_bucket) \
-                       .drop("_bn")
+    # pair_batches needs whole buckets; the cap window clusters on the
+    # same keys, so it reuses this exchange and adds none
+    banded, dropped = cap_blocks(
+        it.mapInArrow(sig_batches, banded_schema)
+        .repartition("band_id", "sig"), ["band_id", "sig"], max_bucket)
 
     pair_schema = StructType([
         StructField("id_a", id_type, True),

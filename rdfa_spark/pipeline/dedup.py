@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.similarity import cap_blocks
 from .linking import lsh_candidate_pairs, minhash_signatures
 
 
@@ -47,6 +48,8 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     (localCheckpoint — at cluster scale, the persisted signature
     table).  Jaccard is a set computation (array_intersect /
     array_union sizes), so the kernel's shingle order does not matter.
+    ``result.dropped_buckets`` is the LSH candidates' bucket-cap
+    report (``cap_blocks``).
     """
     sig_sh = minhash_signatures(df, id_col, text_col, n, num_hashes,
                                 with_shingle_col=True) \
@@ -59,8 +62,10 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
              .join(sh.toDF("id_b", "sh_b"), "id_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
-    return (pairs.select("id_a", "id_b", (inter / union).alias("jaccard"))
-            .filter(F.col("jaccard") >= jaccard_threshold))
+    out = (pairs.select("id_a", "id_b", (inter / union).alias("jaccard"))
+           .filter(F.col("jaccard") >= jaccard_threshold))
+    out.dropped_buckets = cands.dropped_buckets
+    return out
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str,
@@ -99,25 +104,17 @@ def simhash64(df: DataFrame, id_col: str, text_col: str,
 def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                            max_hamming: int = 3,
                            block_bits: int = 16,
-                           max_block: int | None = 10_000) -> DataFrame:
+                           max_block: int = 10_000) -> DataFrame:
     """SimHash near-dup: block on each 16-bit word of the signature (a
     pair within Hamming distance 3 must agree on at least one of 4
     words — pigeonhole), then verify Hamming distance on candidates
     only.  Join is an equi-join on (word_id, word) — shuffled hash
     join with AQE skew handling.
 
-    ``max_block`` (ON by default) drops word-blocks above the cap
-    (identical-content clusters share every block; exact dedup handles
-    those in one groupBy instead of ~K²/2 pairwise checks per block).
-    Dropped blocks are reported, never silent:
-    ``result.dropped_blocks`` is a DataFrame
-    (word_id, word, n_members) of every block the cap excluded.
-
-    The DuckDB oracle (_dedup_simhash_sql) models NO cap: parity is
-    exact only while every block is at or under ``max_block`` (assert
-    ``dropped_blocks`` empty to prove it for a new corpus).  The
-    attribute lives on THIS DataFrame object only; transformations
-    return a new DataFrame without it."""
+    ``max_block`` caps word-block membership (``cap_blocks``;
+    identical-content clusters share every block).
+    ``result.dropped_blocks`` is (word_id, word, n_members) for every
+    block over the cap."""
     sh = simhash64(df, id_col, text_col).select(id_col, "simhash")
     n_words = 64 // block_bits
     words = F.expr(
@@ -127,18 +124,8 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
     blocked = sh.select(id_col, "simhash",
                         F.explode(words).alias("b")) \
                 .select(id_col, "simhash", "b.word_id", "b.word")
-    dropped = None
-    if max_block is not None:
-        # window count on the join key (single shuffle, reusable by
-        # the self-join's exchange) instead of groupBy+semi-join
-        w = Window.partitionBy("word_id", "word")
-        blocked = blocked.withColumn("_bn", F.count("*").over(w))
-        dropped = (blocked.filter(F.col("_bn") > max_block)
-                   .select("word_id", "word",
-                           F.col("_bn").alias("n_members"))
-                   .distinct())
-        blocked = blocked.filter(F.col("_bn") <= max_block) \
-                         .drop("_bn")
+    blocked, dropped = cap_blocks(blocked, ["word_id", "word"],
+                                  max_block)
     a, b = blocked.alias("a"), blocked.alias("b")
     cand = (a.join(b, ["word_id", "word"])
             .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))

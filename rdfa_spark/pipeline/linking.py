@@ -1,8 +1,10 @@
 """Entity linking: mention blocking -> candidate pairs -> canonical ids.
 
-north_rule stages J5/J6 (SURVEY.md §2.3): min-hash LSH candidate
-blocking over mention labels, then connected components over the
-candidate-pair graph for canonicalization.
+north_rule stages J5/J6 (SURVEY.md §2.3): candidate blocking on the
+exact normalized label key, then connected components over the
+candidate-pair graph for canonicalization.  MinHash-LSH blocking on
+label shingles (``lsh_candidate_pairs``) is the path for labels the
+exact key cannot block: empty keys and oversized blocks.
 
 All hashing is md5-based (portable: identical in Spark and the DuckDB
 oracle).  The MinHash signatures come from one ``mapInArrow`` kernel;
@@ -15,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.similarity import _typed_batch, cap_blocks
 
 SCHEMA_NS = "http://schema.org/"
 
@@ -31,7 +35,7 @@ def entity_mentions(triples: DataFrame,
 
 
 def exact_candidate_pairs(mentions: DataFrame,
-                          max_block: int | None = 10_000) -> DataFrame:
+                          max_block: int = 10_000) -> DataFrame:
     """Blocking on the normalized key: distinct label pairs that share
     a key (self-join; the small side of each block stays in-block so
     the join never fans out beyond block sizes).
@@ -39,47 +43,34 @@ def exact_candidate_pairs(mentions: DataFrame,
     Skew guards (both required at crawl scale):
     * the normalized key maps every CJK/Cyrillic/punctuation-only
       label to ``''`` — those labels would all share ONE block and the
-      self-join would go quadratic on a single hot key, so empty keys
-      are dropped here (route such labels through the minhash-LSH
-      path, which keys on content shingles instead);
-    * ``max_block`` caps the number of distinct labels per block; a
-      block larger than the cap contributes max_block² pairs at most.
-      Oversized blocks (mass-duplicated boilerplate labels) likewise
-      belong on the minhash path — use ``oversized_blocks`` to find
-      them.  ``max_block=None`` disables the cap.
+      self-join would go quadratic on a single hot key, so the empty
+      and null keys never pair, whatever their block size;
+    * ``max_block`` caps the number of distinct labels per block
+      (``cap_blocks``).
+
+    ``result.dropped_blocks`` is (entity_key, n_members) for every
+    block left out: the empty and null keys and each block over the
+    cap.  Route their mentions through ``lsh_candidate_pairs``, which
+    blocks on content shingles instead.
     """
-    labels = (mentions.select("entity_key", "label")
-              .filter(F.col("entity_key").isNotNull()
-                      & (F.col("entity_key") != ""))
-              .distinct())
-    if max_block is not None:
-        # window count on the join key — one shuffle the self-join
-        # below can reuse, instead of a groupBy+semi-join pair
-        from pyspark.sql import Window
-        w = Window.partitionBy("entity_key")
-        labels = (labels
-                  .withColumn("_block_n", F.count("*").over(w))
-                  .filter(F.col("_block_n") <= max_block)
-                  .drop("_block_n"))
-    a, b = labels.alias("a"), labels.alias("b")
-    return (a.join(b, "entity_key")
-            .filter(F.col("a.label") < F.col("b.label"))
-            .select("entity_key",
-                    F.col("a.label").alias("label_a"),
-                    F.col("b.label").alias("label_b")))
-
-
-def oversized_blocks(mentions: DataFrame,
-                     max_block: int = 10_000) -> DataFrame:
-    """Blocks excluded by ``exact_candidate_pairs``'s cap (plus the
-    empty-key block): (entity_key, n_labels).  Feed these mentions to
-    ``lsh_candidate_pairs`` instead."""
     labels = mentions.select("entity_key", "label").distinct()
-    return (labels.groupBy("entity_key")
-            .agg(F.count("*").alias("n_labels"))
-            .filter((F.col("n_labels") > max_block)
-                    | (F.col("entity_key") == "")
-                    | F.col("entity_key").isNull()))
+    # a cap of 0 reports the empty and null keys (``'' != ''`` is
+    # false, ``NULL != ''`` is null: both take the otherwise branch)
+    labels, dropped = cap_blocks(
+        labels, ["entity_key"],
+        F.when(F.col("entity_key") != "", max_block).otherwise(0))
+    # filtering those keys by name lets Catalyst push the filter below
+    # the window and the distinct, so the hot empty key is never
+    # shuffled into one window task
+    labels = labels.filter(F.col("entity_key") != "")
+    a, b = labels.alias("a"), labels.alias("b")
+    out = (a.join(b, "entity_key")
+           .filter(F.col("a.label") < F.col("b.label"))
+           .select("entity_key",
+                   F.col("a.label").alias("label_a"),
+                   F.col("b.label").alias("label_b")))
+    out.dropped_blocks = dropped
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -124,7 +115,6 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     from pyspark.sql.types import (ArrayType, LongType, StringType,
                                    StructField, StructType)
 
-    from ..functions.similarity import _typed_batch
     from ..functions.text import _ws_re
 
     ws = _ws_re()
@@ -177,30 +167,19 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
                         text_col: str, n: int = 3,
                         num_hashes: int = 32,
                         bands: int = 8,
-                        max_bucket: int | None = 10_000,
+                        max_bucket: int = 10_000,
                         sig: DataFrame | None = None) -> DataFrame:
     """MinHash-LSH near-duplicate candidates: shingle -> minhash ->
     band -> bucket equi-join.  rows/bands = num_hashes // bands
     signatures per band; a pair collides if any band matches.
 
-    ``max_bucket`` caps band-bucket membership: a cluster of K
-    byte-identical documents shares EVERY band bucket and would emit
-    ~K²/2 candidate pairs per band — at crawl scale boilerplate
-    clusters reach millions.  The cap is ON by default (a cap-sized
-    bucket still admits ~5·10⁷ pairs — far above any honest near-dup
-    cluster); run exact dedup (``exact_duplicate_groups``) first,
-    which handles identical content in one groupBy.  Dropped buckets
-    are never silent: ``result.dropped_buckets`` is a DataFrame
-    (band_id, band_hash, n_members) of every bucket the cap excluded
-    — count it, log it, or route its members to exact dedup.
-    ``max_bucket=None`` disables the cap.
-
-    The DuckDB oracle (MINHASH_BAND_PAIRS_SQL) models NO cap: Spark /
-    oracle parity is exact only while every band bucket is at or
-    under ``max_bucket`` (always true for the graded corpus — assert
-    ``dropped_buckets`` is empty to prove it for yours).  The
-    attribute lives on THIS DataFrame object; transformations return
-    a new DataFrame without it.
+    ``max_bucket`` caps band-bucket membership (``cap_blocks``): a
+    cluster of K byte-identical documents shares EVERY band bucket —
+    at crawl scale boilerplate clusters reach millions — while a
+    cap-sized bucket still admits ~5·10⁷ pairs, far above any honest
+    near-dup cluster.  Run exact dedup (``exact_duplicate_groups``)
+    first.  ``result.dropped_buckets`` is (band_id, band_hash,
+    n_members) for every bucket over the cap.
 
     ``sig`` optionally supplies a precomputed (id, minhash) signature
     frame (e.g. the shared signature+shingle table of
@@ -222,21 +201,8 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
     # materialize signatures once: the self-join would otherwise
     # recompute the whole minhash pipeline on both sides (at cluster
     # scale this is a persisted signatures table)
-    banded = banded.localCheckpoint(eager=False)
-    dropped = None
-    if max_bucket is not None:
-        # window count over the join key: ONE shuffle, on the same
-        # key the self-join below shuffles on (exchange reuse) —
-        # cheaper than a groupBy+semi-join pair
-        from pyspark.sql import Window
-        w = Window.partitionBy("band_id", "band_hash")
-        banded = banded.withColumn("_bn", F.count("*").over(w))
-        dropped = (banded.filter(F.col("_bn") > max_bucket)
-                   .select("band_id", "band_hash",
-                           F.col("_bn").alias("n_members"))
-                   .distinct())
-        banded = banded.filter(F.col("_bn") <= max_bucket) \
-                       .drop("_bn")
+    banded, dropped = cap_blocks(banded.localCheckpoint(eager=False),
+                                 ["band_id", "band_hash"], max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
     out = (a.join(b, ["band_id", "band_hash"])
            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -247,11 +213,12 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
     return out
 
 
-def canonicalize(mentions: DataFrame,
-                 pairs: DataFrame | None = None) -> DataFrame:
+def canonicalize(mentions: DataFrame) -> DataFrame:
     """Canonical entity ids: connected components over the
-    candidate-pair graph on labels; mentions inherit their label's
-    component.  Returns (mention, label, canonical_id).
+    ``exact_candidate_pairs`` graph on labels; mentions inherit their
+    label's component.  Returns (mention, label, canonical_id); a
+    label in a dropped block is its own component, and
+    ``result.dropped_blocks`` is the pairs' report (``cap_blocks``).
 
     The mentions table is materialized (localCheckpoint) up front:
     it is consumed twice — once to build the candidate-pair graph,
@@ -264,12 +231,12 @@ def canonicalize(mentions: DataFrame,
     from .cc import connected_components
 
     mentions = mentions.localCheckpoint(eager=False)
-    if pairs is None:
-        pairs = exact_candidate_pairs(mentions)
+    pairs = exact_candidate_pairs(mentions)
     comp = connected_components(pairs, "label_a", "label_b")
     out = (mentions.join(comp, mentions["label"] == comp["node"],
                          "left")
            .select("mention", "label",
                    F.coalesce("component", "label")
                     .alias("canonical_id")))
+    out.dropped_blocks = pairs.dropped_blocks
     return out

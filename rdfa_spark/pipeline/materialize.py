@@ -10,14 +10,17 @@ Iceberg catalog; swap the writer when a catalog is configured.
 
 Resume protocol (idempotent because extraction is deterministic
 per url — rdfa_spark/extract.py):
-* a ``_processed_urls`` ledger table records (url, n_triples, batch)
-  per completed batch, plus one NULL-url marker row per batch so
-  completion is recorded even for batches that yield zero triples;
-* ``resume_extract`` anti-joins pages against the ledger so a
-  restarted job re-reads only unprocessed urls;
+* pages split into deterministic url-hash batches;
 * per-batch writes land in ``batch=<k>`` subdirectories, so a batch
   that died mid-write is re-written wholesale (rename-free object
-  stores: the batch dir is the commit unit).
+  stores: the batch dir is the commit unit);
+* after a batch's data has landed, one (url NULL, n_triples 0, batch)
+  marker row is appended to the ``_processed_urls`` ledger — the
+  commit record, present even for a batch with zero triples.  A
+  restarted run skips the batches the ledger names.  Per-url triple
+  counts live in the lineage table.  Older stores also hold per-url
+  ledger rows; ``processed_batches`` reads only ``batch``, so they
+  resume the same way.
 """
 
 from __future__ import annotations
@@ -145,23 +148,16 @@ class ResumableExtraction:
              .partitionBy("batch")
              .option("partitionOverwriteMode", "dynamic")
              .parquet(self.errors_dir))
-            lin = lineage(triples).withColumn("batch", F.lit(b))
-            (lin.write.mode("overwrite")
+            (lineage(triples).withColumn("batch", F.lit(b))
+             .write.mode("overwrite")
              .partitionBy("batch")
              .option("partitionOverwriteMode", "dynamic")
              .parquet(self.lineage_dir))
-            # commit point: ledger rows appear only after data landed.
-            # A NULL-url marker row records batch completion even when
-            # the batch produced zero triples (empty lineage would
-            # otherwise leave the batch permanently "unprocessed" and
-            # resume would re-extract it forever).
-            marker = self.spark.range(1).select(
+            # commit point: the marker appears only after data landed
+            (self.spark.range(1).select(
                 F.lit(None).cast("string").alias("url"),
                 F.lit(0).cast("long").alias("n_triples"),
                 F.lit(b).cast("int").alias("batch"))
-            (lin.select("url", "n_triples", F.lit(b).cast("int")
-                        .alias("batch"))
-             .unionByName(marker)
              .write.mode("append").parquet(self.ledger_dir))
             extracted.unpersist()
         return len(todo)

@@ -270,13 +270,11 @@ def test_embedding_near_dup_bucket_cap(spark):
     assert uncapped.filter(F.col("id_a") < 1000).count() == 100 * 99 // 2
 
 
-@pytest.mark.parametrize("max_bucket", [10_000, None],
-                         ids=["capped", "uncapped"])
+@pytest.mark.parametrize("max_bucket", [10_000], ids=["capped"])
 def test_embedding_near_dup_one_bucket_exchange(spark, emb, max_bucket):
     """The pair kernel scores whole buckets, so exactly one
     hash-partitioning by (band_id, sig) sits between the signature
-    kernel and the pair kernel, on the capped path (whose cap window
-    reuses it) as on the uncapped one."""
+    kernel and the pair kernel (the cap window reuses it)."""
     import re
     plan = embedding_near_dup_pairs(
         emb, bands=2, planes_per_band=4, max_bucket=max_bucket,

@@ -8,17 +8,19 @@ import random
 import subprocess
 import sys
 from collections import Counter
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
 
 from rdfa_spark.extract import extract_errors, extract_triples
+from rdfa_spark.functions.similarity import embedding_near_dup_pairs
 from rdfa_spark.pages import load_pages
 from rdfa_spark.pipeline import (
-    ResumableExtraction, canonicalize, connected_components,
+    ResumableExtraction, canonicalize, connected_components, dedup,
     dedup_exact, entity_mentions, exact_candidate_pairs,
-    exact_duplicate_groups, lineage, minhash_dedup_pairs, simhash64,
-    simhash_near_dup_pairs,
+    exact_duplicate_groups, lineage, linking, lsh_candidate_pairs,
+    minhash_dedup_pairs, simhash64, simhash_near_dup_pairs,
 )
 
 
@@ -88,7 +90,7 @@ def test_entity_linking_canonicalization(spark, triples):
     pairs = exact_candidate_pairs(mentions)
     # 40 entities × 3 label variants -> 3 pairs per entity
     assert pairs.count() == 40 * 3
-    canon = canonicalize(mentions, None)
+    canon = canonicalize(mentions)
     # every mention got a canonical id; 40 canonical entities
     assert canon.filter(F.col("canonical_id").isNull()).count() == 0
     assert canon.select("canonical_id").distinct().count() == 40
@@ -189,6 +191,27 @@ def test_resumable_materialization(spark, sf_dir, tmp_path):
     assert lin.agg(F.sum("n_triples")).first()[0] == total
     # subject bucketing present
     assert "subj_bucket" in run.triples().columns
+    # the ledger holds only the commit marker: one NULL-url row per batch
+    ledger = spark.read.parquet(f"{out}/_processed_urls").collect()
+    assert sorted(r.batch for r in ledger) == [0, 1, 2, 3]
+    assert all(r.url is None and r.n_triples == 0 for r in ledger)
+
+
+def test_resume_reads_per_url_ledger(spark, tmp_path):
+    """A store whose ledger still has per-url rows beside the markers
+    (the older layout) counts those batches done: resume runs 0."""
+    rows = [(f"http://ex.com/{i}", "<html><body><p>plain</p></body></html>")
+            for i in range(8)]
+    pages = spark.createDataFrame(rows, ["url", "html"])
+    out = str(tmp_path / "kg_old")
+    spark.createDataFrame(
+        [(f"http://ex.com/{i}", 3, i % 2) for i in range(8)]
+        + [(None, 0, 0), (None, 0, 1)],
+        "url string, n_triples long, batch int") \
+        .write.parquet(f"{out}/_processed_urls")
+    run = ResumableExtraction(spark, out, n_batches=2)
+    assert run.processed_batches() == {0, 1}
+    assert run.run(pages) == 0
 
 
 def test_run_pipeline_keeps_partitioned_errors(spark, sf_dir, tmp_path):
@@ -240,10 +263,11 @@ def test_exact_candidate_pairs_skew_guards(spark):
     """Empty-key block (CJK/punct labels) is dropped and oversized
     blocks are capped — the within-block self-join stays bounded
     (VERDICT r1 'what's wrong' #3)."""
-    from rdfa_spark.pipeline.linking import oversized_blocks
     rows = (
         # 200 CJK labels -> entity_key '' (would be one quadratic block)
         [(f"m{i}", f"实体{i}", "") for i in range(200)]
+        # a small null-key block: never paired, always reported
+        + [(f"n{i}", f"?{i}", None) for i in range(2)]
         # an oversized ascii block (cap routes it away)
         + [(f"b{i}", f"brand variant {i}", "brand") for i in range(50)]
         # two normal blocks
@@ -251,16 +275,48 @@ def test_exact_candidate_pairs_skew_guards(spark):
            ("x2", "ada lovelace!", "adalovelace"),
            ("y1", "Alan Turing", "alanturing")]
     )
-    m = spark.createDataFrame(rows, ["mention", "label", "entity_key"])
+    m = spark.createDataFrame(rows, "mention string, label string, "
+                                    "entity_key string")
     pairs = exact_candidate_pairs(m, max_block=10)
     got = {(r.label_a, r.label_b) for r in pairs.collect()}
     assert got == {("Ada Lovelace", "ada lovelace!")}
-    over = {r.entity_key: r.n_labels
-            for r in oversized_blocks(m, max_block=10).collect()}
-    assert over == {"": 200, "brand": 50}
-    # cap off: oversized ascii block joins, empty key still excluded
-    pairs_nocap = exact_candidate_pairs(m, max_block=None)
-    assert pairs_nocap.count() == 50 * 49 // 2 + 1
+    over = {r.entity_key: r.n_members
+            for r in pairs.dropped_blocks.collect()}
+    assert over == {"": 200, None: 2, "brand": 50}
+    # cap above every block: the ascii block joins, the empty and
+    # null keys are still excluded and reported
+    pairs_big = exact_candidate_pairs(m, max_block=10_000)
+    assert pairs_big.count() == 50 * 49 // 2 + 1
+    assert {r.entity_key: r.n_members
+            for r in pairs_big.dropped_blocks.collect()} == {"": 200,
+                                                              None: 2}
+
+
+def test_exact_candidate_pairs_plan_shape(spark):
+    """canonicalize's blocking join: per side, one cap Window fed by
+    one Exchange on entity_key, which the join reuses (no Exchange
+    between the Window and the join).  The other Exchange per side is
+    the (entity_key, label) distinct: 4 Exchanges, 2 Windows."""
+    import re
+    m = spark.createDataFrame(
+        [(f"m{i}", f"Label {i % 7}", f"label{i % 7}") for i in range(50)],
+        ["mention", "label", "entity_key"])
+    lines = (exact_candidate_pairs(m)._jdf.queryExecution()
+             .executedPlan().toString().splitlines())
+    plan = "\n".join(lines)
+    assert plan.count("Exchange") == 4 and plan.count("Window [") == 2, plan
+    join = next(i for i, ln in enumerate(lines) if "Join" in ln)
+    child = lines[join].index("+- ") + 3
+    side_b = next(i for i in range(join + 1, len(lines))
+                  if lines[i][child:child + 3] == "+- ")
+    for start in (join + 1, side_b):
+        win = next(i for i in range(start, len(lines))
+                   if "Window [" in lines[i])
+        feed = next(i for i in range(win, len(lines))
+                    if "Exchange" in lines[i])
+        assert not any("Exchange" in ln for ln in lines[start:win]), plan
+        assert re.search(r"Exchange hashpartitioning\(entity_key#\d+, \d+\)",
+                         lines[feed]), plan
 
 
 def test_resumable_empty_batch_recorded(spark, tmp_path):
@@ -297,7 +353,6 @@ def test_lsh_and_simhash_bucket_caps(spark):
     """Mass-duplicate clusters share every band/word bucket; the caps
     drop those buckets so the self-join stays bounded, while distinct
     near-dups still pair."""
-    from rdfa_spark.pipeline.linking import lsh_candidate_pairs
     boiler = "exact same boilerplate text repeated " * 4
     base = ("the quick brown fox jumps over the lazy dog and runs "
             "far away into the deep dark forest tonight").split()
@@ -317,42 +372,109 @@ def test_lsh_and_simhash_bucket_caps(spark):
     assert (100, 101) in got2
 
 
-def test_bucket_caps_report_dropped(spark):
-    """Caps are on by default and never silent: the dropped-bucket /
-    dropped-block DataFrames name exactly what the cap excluded
-    (VERDICT r2 next-round #9)."""
-    from rdfa_spark.pipeline.linking import lsh_candidate_pairs
-    boiler = "exact same boilerplate text repeated " * 4
-    rows = [(i, boiler) for i in range(60)]
-    rows += [(100, "a unique document about foxes and forests")]
-    df = spark.createDataFrame(rows, ["id", "text"])
-
-    capped = lsh_candidate_pairs(df, "id", "text", max_bucket=20)
-    dropped = capped.dropped_buckets.collect()
-    assert len(dropped) == 8                      # one per band
-    assert all(r.n_members == 60 for r in dropped)
-
-    sim = simhash_near_dup_pairs(df, "id", "text", max_block=20)
-    dropped2 = sim.dropped_blocks.collect()
-    assert len(dropped2) == 4                     # one per 16-bit word
-    assert all(r.n_members == 60 for r in dropped2)
-
-    # defaults: cap active (not None), metric DataFrame attached
-    default = lsh_candidate_pairs(df, "id", "text")
-    assert default.dropped_buckets is not None
-    assert default.dropped_buckets.count() == 0   # cap above any bucket
+def _capped_exact(mentions, cap, monkeypatch):
+    return exact_candidate_pairs(mentions, max_block=cap)
 
 
-def test_embedding_near_dup_cap_reports_dropped(spark):
-    from rdfa_spark.functions.similarity import embedding_near_dup_pairs
-    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)]
-    rows += [(100, [0.0, 1.0, 0.0, 0.0])]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    out = embedding_near_dup_pairs(df, max_bucket=10, bands=2,
-                                   planes_per_band=4, dim=4)
-    assert out.count() == 0                       # cluster bucket dropped
-    d = out.dropped_buckets.collect()
-    assert len(d) == 2 and all(r.n_members == 30 for r in d)
+def _capped_canonicalize(mentions, cap, monkeypatch):
+    # canonicalize runs exact_candidate_pairs at its default cap
+    monkeypatch.setattr(linking, "exact_candidate_pairs",
+                        partial(exact_candidate_pairs, max_block=cap))
+    return canonicalize(mentions)
+
+
+def _capped_lsh(docs, cap, monkeypatch):
+    return lsh_candidate_pairs(docs, "id", "text", max_bucket=cap)
+
+
+def _capped_minhash_dedup(docs, cap, monkeypatch):
+    # minhash_dedup_pairs runs lsh_candidate_pairs at its default cap;
+    # threshold 0 keeps every candidate pair
+    monkeypatch.setattr(dedup, "lsh_candidate_pairs",
+                        partial(lsh_candidate_pairs, max_bucket=cap))
+    return minhash_dedup_pairs(docs, "id", "text", jaccard_threshold=0.0)
+
+
+def _capped_simhash(docs, cap, monkeypatch):
+    # max_hamming 64 keeps every candidate pair
+    return simhash_near_dup_pairs(docs, "id", "text", max_hamming=64,
+                                  max_block=cap)
+
+
+def _capped_embedding(vecs, cap, monkeypatch):
+    return embedding_near_dup_pairs(vecs, max_bucket=cap, bands=2,
+                                    planes_per_band=4, dim=4)
+
+
+# result -> (input kind, call(df, cap, monkeypatch), report attribute,
+#            first key column of the cluster's blocks)
+CAP_CASES = {
+    "exact_candidate_pairs": ("labels", _capped_exact, "dropped_blocks",
+                              {"brand"}),
+    "canonicalize": ("labels", _capped_canonicalize, "dropped_blocks",
+                     {"brand"}),
+    "lsh_candidate_pairs": ("docs", _capped_lsh, "dropped_buckets",
+                            set(range(8))),               # one per band
+    "minhash_dedup_pairs": ("docs", _capped_minhash_dedup,
+                            "dropped_buckets", set(range(8))),
+    "simhash_near_dup_pairs": ("docs", _capped_simhash, "dropped_blocks",
+                               set(range(4))),      # one per 16-bit word
+    "embedding_near_dup_pairs": ("vecs", _capped_embedding,
+                                 "dropped_buckets", {0, 1}),
+}
+
+
+def _cap_input(spark, kind):
+    """A 60-member cluster (ids below 100, labels 'brand …') beside
+    one near-duplicate pair outside it."""
+    if kind == "labels":
+        rows = ([(f"b{i}", f"brand {i:02d}", "brand") for i in range(60)]
+                + [("x1", "Ada Lovelace", "adalovelace"),
+                   ("x2", "ada lovelace!", "adalovelace")])
+        return spark.createDataFrame(rows,
+                                     ["mention", "label", "entity_key"])
+    if kind == "docs":
+        boiler = "exact same boilerplate text repeated " * 4
+        base = ("the quick brown fox jumps over the lazy dog and runs "
+                "far away into the deep dark forest tonight").split()
+        rows = [(i, boiler) for i in range(60)]
+        rows += [(100, " ".join(base)),
+                 (101, " ".join(base[:-1] + ["tok"]))]
+        return spark.createDataFrame(rows, ["id", "text"])
+    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(60)]
+    rows += [(100, [0.0, 1.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.01])]
+    return spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+
+def _outside_pairs(out):
+    """The output pairs, as sets of ids or labels, outside the cluster
+    check: canonicalize's pairs are labels that share a canonical id."""
+    if "canonical_id" in out.columns:
+        return [{r.label, r.canonical_id} for r in out.collect()
+                if r.label != r.canonical_id]
+    if "label_a" in out.columns:
+        return [{r.label_a, r.label_b} for r in out.collect()]
+    return [{r.id_a, r.id_b} for r in out.collect()]
+
+
+@pytest.mark.parametrize("result", list(CAP_CASES))
+def test_cap_reports_dropped(spark, monkeypatch, result):
+    """Every capped result is bounded and never silent: its dropped
+    frame names each block of a planted over-cap cluster with its
+    n_members, no output pair touches the cluster, and the pair
+    outside it survives.  At a cap above every block the report is
+    empty (VERDICT r2 next-round #9)."""
+    kind, call, attr, blocks = CAP_CASES[result]
+    df = _cap_input(spark, kind)
+    out = call(df, 20, monkeypatch)
+    dropped = getattr(out, attr).collect()
+    assert len(dropped) == len(blocks)
+    assert {r[0]: r.n_members for r in dropped} == dict.fromkeys(blocks,
+                                                                 60)
+    outside = ({"Ada Lovelace", "ada lovelace!"} if kind == "labels"
+               else {100, 101})
+    assert _outside_pairs(out) == [outside]
+    assert getattr(call(df, 10_000, monkeypatch), attr).count() == 0
 
 
 def test_filter_corpus_composition(spark):
