@@ -14,6 +14,9 @@ Timing methodology mirrors bench.py's query phase exactly (same
 session confs, same worker warmup, same `.count()` action) so numbers
 are comparable with BENCH_r*.json; `--noop` switches the action to
 `write.format("noop")` which computes every column (guide §1.4).
+`time` also records each repeat's Spark job and stage counts (its
+own job group); run it at `SPARK_GRAFT_CPUS=$(nproc)` on a box with
+fewer than 32 cores.
 """
 
 from __future__ import annotations
@@ -63,13 +66,21 @@ def _session():
 
 
 def cmd_time(names: list[str], repeats: int, noop: bool) -> None:
+    """Time each query ``repeats`` times; every repeat runs under its
+    own Spark job group, so its job and stage counts are read back
+    from ``statusTracker()`` as kgbench's traced spans read theirs."""
+    from kgbench.probe import job_counts
+
     spark, queries = _session()
+    sc = spark.sparkContext
     out: dict[str, list[float]] = {}
+    counts: dict[str, list[dict]] = {}
     try:
         for name in names:
-            runs = []
-            for _ in range(repeats):
-                spark.sparkContext.setJobDescription(f"q:{name}")
+            runs, shape = [], []
+            for i in range(repeats):
+                group = f"q:{name}:{i}"
+                sc.setJobGroup(group, f"q:{name}", False)
                 t0 = time.time()
                 df = queries[name](spark, SF_DIR)
                 if noop:
@@ -77,13 +88,16 @@ def cmd_time(names: list[str], repeats: int, noop: bool) -> None:
                 else:
                     df.count()
                 runs.append(round(time.time() - t0, 3))
-                spark.sparkContext.setJobDescription(None)
-            out[name] = runs
-            print(f"# {name}: {runs}", file=sys.stderr)
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setJobDescription(None)
+                c = job_counts(sc, [group])
+                shape.append({"jobs": c["jobs"], "stages": c["stages"]})
+            out[name], counts[name] = runs, shape
+            print(f"# {name}: {runs} {shape}", file=sys.stderr)
     finally:
         spark.stop()
-    print(json.dumps({"sf_dir": SF_DIR, "noop": noop,
-                      "queries": out}))
+    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "noop": noop,
+                      "queries": out, "counts": counts}))
 
 
 PLAN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -59,10 +59,11 @@ TEXT_SCHEMA = StructType([
 
 # Single-pass multi-output layout: one parse per page emits triple
 # rows (kind='t'), processor-graph error rows (kind='e') and one text/
-# lineage row (kind='x') into a sparse union schema.  Null-heavy
-# columns are nearly free in Arrow/parquet (validity bitmaps), and one
-# parse replaces the three independent passes a pipeline wanting
-# triples+errors+text would otherwise pay (the parse dominates).
+# lineage row (kind='x': text, n_triples, n_subjects) into a sparse
+# union schema.  Null-heavy columns are nearly free in Arrow/parquet
+# (validity bitmaps), and one parse replaces the three independent
+# passes a pipeline wanting triples+errors+text would otherwise pay
+# (the parse dominates).
 EXTRACT_ALL_SCHEMA = StructType([
     StructField("url", StringType(), False),
     StructField("kind", StringType(), False),
@@ -80,6 +81,7 @@ EXTRACT_ALL_SCHEMA = StructType([
     StructField("node_path", StringType(), True),
     StructField("text", StringType(), True),
     StructField("n_triples", IntegerType(), True),
+    StructField("n_subjects", IntegerType(), True),
 ])
 
 
@@ -137,7 +139,7 @@ def _chunk_bounds(lengths, max_bytes: int, max_rows: int):
 _ALL_NAMES = EXTRACT_ALL_SCHEMA.fieldNames()
 _ARROW_TYPES = {"string": "string", "boolean": "bool", "bigint": "int64",
                 "int": "int32"}
-_NO_TRIPLE, _NO_ERROR, _NO_TEXT = (None,) * 8, (None,) * 4, (None,) * 2
+_NO_TRIPLE, _NO_ERROR, _NO_TEXT = (None,) * 8, (None,) * 4, (None,) * 3
 
 
 def _page_rows(url: str, html: bytes, config: Config | None,
@@ -170,7 +172,7 @@ def _page_rows(url: str, html: bytes, config: Config | None,
         root = w.doc.root
         rows.append((url, "x") + _NO_TRIPLE + _NO_ERROR
                     + (root.text_content() if root is not None else "",
-                       len(w.triples)))
+                       len(w.triples), len({t.subj for t in w.triples})))
     return True
 
 

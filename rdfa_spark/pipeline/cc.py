@@ -19,11 +19,16 @@ Scale notes:
   sandbox/local) uses ``localCheckpoint`` — executor-memory-resident,
   lost on executor failure; on a real cluster with dynamic allocation
   pass ``reliable=True`` (requires ``sc.setCheckpointDir``) so rounds
-  persist to reliable storage and survive executor loss.
+  persist to reliable storage and survive executor loss;
+* a graph at or under ``local_finish_edges`` costs one bounded
+  collect after the canonical-edge checkpoint (the size check and
+  the local finish's input in one action), and its labeling comes
+  back as a driver-local frame.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -85,7 +90,7 @@ def _fingerprint(e: DataFrame) -> tuple[int, int]:
     return (row.n, row.h)
 
 
-def _local_finish(e: DataFrame) -> DataFrame:
+def _local_finish(spark, rows) -> DataFrame:
     """Finish a small (already size-checked) edge set driver-side:
     union-find, component = min node id — identical output contract
     to the distributed loop.  This is phase 2 of the standard
@@ -94,11 +99,14 @@ def _local_finish(e: DataFrame) -> DataFrame:
     rounds shrink the graph toward one edge per (node, component);
     long before that point the edge set is tiny relative to the
     cluster, and each additional round costs a full scheduling +
-    checkpoint cycle to move ever less data.  The collect here is
-    bounded by ``local_finish_edges`` rows (two short strings each),
-    NOT by the input size."""
-    spark = e.sparkSession
-    rows = e.collect()
+    checkpoint cycle to move ever less data.  ``rows`` holds at most
+    ``local_finish_edges`` (a, b) edges (two short strings each),
+    NOT the input size.
+
+    The labeling goes back as a driver-local frame built from an
+    Arrow table: it plans as a ``LocalTableScan`` with size
+    statistics, so a consumer's join broadcasts it without a hint,
+    from rows the JVM already holds."""
     parent: dict = {}
 
     def find(x):
@@ -109,8 +117,7 @@ def _local_finish(e: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for r in rows:
-        a, b = r.a, r.b
+    for a, b in rows:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -122,16 +129,12 @@ def _local_finish(e: DataFrame) -> DataFrame:
         m = comp_min.get(root)
         if m is None or node < m:
             comp_min[root] = node
-    out = [(node, comp_min[find(node)]) for node in parent]
-    # the labeling is bounded (<= 2 nodes per collected edge, i.e.
-    # <= 2 x local_finish_edges short strings) but parallelize-backed
-    # frames carry no size statistics, so without the hint a caller
-    # joining mentions/nodes against it gets a sort-merge join with a
-    # full shuffle of the big side (observed: 0.8 s vs 0.2 s for the
-    # canonicalize label join at sf0.1).  Broadcast is safe by the
-    # same bound that made the collect safe.
-    return F.broadcast(
-        spark.createDataFrame(out, "node string, component string"))
+    nodes = list(parent)
+    return spark.createDataFrame(
+        pa.table({"node": pa.array(nodes, pa.string()),
+                  "component": pa.array(
+                      [comp_min[find(n)] for n in nodes], pa.string())}),
+        "node string, component string")
 
 
 def connected_components(edges: DataFrame, src: str = "src",
@@ -150,17 +153,21 @@ def connected_components(edges: DataFrame, src: str = "src",
     current (canonicalized, deduped) edge count is at or under the
     threshold, the remaining contraction runs driver-side
     (``_local_finish`` — bounded collect + union-find, identical
-    output).  The fingerprint probe each round already computes the
-    count, so the check is free.  0 disables (pure distributed
-    loop, e.g. for the A/B property tests).
+    output).  On the input graph one bounded collect of at most
+    ``local_finish_edges + 1`` edges is both the size check and the
+    local finish's input; between star rounds the round's fingerprint
+    gives the count.  0 disables (pure distributed loop, e.g. for the
+    A/B property tests).
     """
+    spark = edges.sparkSession
     e = _checkpoint(_canon_edges(edges, src, dst), reliable)
+    if local_finish_edges > 0:
+        rows = e.limit(local_finish_edges + 1).collect()
+        if len(rows) <= local_finish_edges:
+            return _local_finish(spark, rows)
     prev = _fingerprint(e)
-    if 0 < prev[0] <= local_finish_edges:
-        return _local_finish(e)
     if prev[0] == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "node string, component string")
+        return _local_finish(spark, [])
     for _ in range(max_iter):
         # the per-round checkpoint keeps every round's plan
         # constant-size (each star reads its input twice)
@@ -169,7 +176,7 @@ def connected_components(edges: DataFrame, src: str = "src",
         if cur == prev:
             break
         if 0 < cur[0] <= local_finish_edges:
-            return _local_finish(e)
+            return _local_finish(spark, e.collect())
         prev = cur
     # converged: every edge is (node -> component representative)
     members = e.select(F.col("b").alias("node"),

@@ -17,10 +17,15 @@ per url — rdfa_spark/extract.py):
 * after a batch's data has landed, one (url NULL, n_triples 0, batch)
   marker row is appended to the ``_processed_urls`` ledger — the
   commit record, present even for a batch with zero triples.  A
-  restarted run skips the batches the ledger names.  Per-url triple
-  counts live in the lineage table.  Older stores also hold per-url
-  ledger rows; ``processed_batches`` reads only ``batch``, so they
-  resume the same way.
+  restarted run skips the batches the ledger names.  Older stores
+  also hold per-url ledger rows; ``processed_batches`` reads only
+  ``batch``, so they resume the same way.
+
+Lineage: one (url, n_triples, n_subjects, batch) row per parsed page,
+projected from the extraction kernel's per-page ``x`` row (no
+aggregation).  A page that parses but yields no triples gets a row
+of zeros; a page whose parse failed has no lineage row and appears
+only in ``errors`` (code 'parse-failed').
 """
 
 from __future__ import annotations
@@ -70,14 +75,6 @@ def write_triples(triples: DataFrame, path: str,
      .write.mode(mode)
      .partitionBy("subj_bucket")
      .parquet(path))
-
-
-def lineage(triples: DataFrame) -> DataFrame:
-    """Per-url lineage/metrics sidecar (S8): triple counts per source
-    page, computed map-side before the write."""
-    return (triples.groupBy("url")
-            .agg(F.count("*").alias("n_triples"),
-                 F.countDistinct("subj").alias("n_subjects")))
 
 
 class ResumableExtraction:
@@ -130,6 +127,11 @@ class ResumableExtraction:
             # (three dedicated extractors would parse the HTML 3x)
             extracted = extract_all(batch_pages).persist()
             triples, errors, _ = split_extracts(extracted)
+            # the kernel's per-page x row already holds the counts
+            lineage = (extracted.filter(F.col("kind") == "x")
+                       .select("url",
+                               F.col("n_triples").cast("long"),
+                               F.col("n_subjects").cast("long")))
             # same one-writer-task-per-bucket discipline as
             # write_triples (small-file hygiene at scale)
             # same (partition cols, subj) sort rule as write_triples:
@@ -148,13 +150,13 @@ class ResumableExtraction:
              .partitionBy("batch")
              .option("partitionOverwriteMode", "dynamic")
              .parquet(self.errors_dir))
-            (lineage(triples).withColumn("batch", F.lit(b))
+            (lineage.withColumn("batch", F.lit(b))
              .write.mode("overwrite")
              .partitionBy("batch")
              .option("partitionOverwriteMode", "dynamic")
              .parquet(self.lineage_dir))
             # commit point: the marker appears only after data landed
-            (self.spark.range(1).select(
+            (self.spark.range(0, 1, 1, 1).select(
                 F.lit(None).cast("string").alias("url"),
                 F.lit(0).cast("long").alias("n_triples"),
                 F.lit(b).cast("int").alias("batch"))

@@ -13,7 +13,7 @@ multi-executor clusters").
         --out /path/to/kg_out [--batches 64] [--buckets 64]
 
 Stages: resumable extraction (one parse per page: subject-bucketed
-triples + batch-partitioned processor-graph errors + per-url lineage +
+triples + batch-partitioned processor-graph errors + per-page lineage +
 processed-url ledger) -> entity mentions -> exact-label blocking ->
 connected-components canonicalization -> entity table materialize.
 Re-running with the same --out skips completed batches (idempotent:

@@ -1,4 +1,5 @@
-"""bench_extra.py's plan capture never overwrites a plan record."""
+"""bench_extra.py: plan capture never overwrites a plan record, and
+`time` reports per-repeat job and stage counts."""
 
 import pytest
 
@@ -21,3 +22,37 @@ def test_plan_refuses_existing_record(tmp_path, monkeypatch, capsys):
     assert (tmp_path / "language_id_before.txt").read_text() == \
         "committed plan"
     assert not (tmp_path / "filter_corpus_before.txt").exists()
+
+
+class _KeepSession:
+    """The shared test session, with ``stop`` a no-op."""
+
+    def __init__(self, spark):
+        self._spark = spark
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+    def stop(self):
+        pass
+
+
+def test_time_records_job_and_stage_counts(spark, monkeypatch, capsys):
+    """Each repeat of ``time`` reports the Spark jobs and stages of its
+    own job group, and leaves no job group set behind."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    def grouped(s, sf_dir):
+        return s.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+
+    monkeypatch.setattr(bench_extra, "_session", lambda: (
+        _KeepSession(spark), {"grouped": grouped}))
+    bench_extra.cmd_time(["grouped"], 2, False)
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert len(rec["queries"]["grouped"]) == 2
+    shapes = rec["counts"]["grouped"]
+    assert len(shapes) == 2
+    assert all(c["jobs"] >= 1 and c["stages"] >= 1 for c in shapes)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

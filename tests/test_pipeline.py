@@ -19,7 +19,7 @@ from rdfa_spark.pages import load_pages
 from rdfa_spark.pipeline import (
     ResumableExtraction, canonicalize, connected_components, dedup,
     dedup_exact, entity_mentions, exact_candidate_pairs,
-    exact_duplicate_groups, lineage, linking, lsh_candidate_pairs,
+    exact_duplicate_groups, linking, lsh_candidate_pairs,
     minhash_dedup_pairs, simhash64, simhash_near_dup_pairs,
 )
 
@@ -78,6 +78,57 @@ def test_cc_cycle_and_star(spark):
     edges = ([(f"c{i}", f"c{(i + 1) % 7}") for i in range(7)]
              + [("hub", f"leaf{i}") for i in range(20)])
     _check_cc(spark, edges, connected_components)
+
+
+def _chain(n_edges):
+    return [(f"k{i:02d}", f"k{i + 1:02d}") for i in range(n_edges)]
+
+
+# edge sets on both sides of the local finish's size probe
+CC_EDGE_CASES = {
+    "empty": [],
+    "self_loops_only": [("a", "a"), ("b", "b"), ("a", "a")],
+    "at_threshold": _chain(15),
+    "over_threshold": _chain(16),
+}
+
+
+@pytest.mark.parametrize("mode", list(CC_MODES))
+@pytest.mark.parametrize("case", list(CC_EDGE_CASES))
+def test_cc_probe_edge_cases(spark, case, mode):
+    """Empty and self-loop-only graphs give an empty labeling; 15 and
+    16 edges at ``local_finish_edges=15`` take the local finish and
+    the star loop respectively.  Every result has the ``node string,
+    component string`` schema and equals union-find over the
+    non-loop edges (isolated nodes are not returned)."""
+    edges = CC_EDGE_CASES[case]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    out = (connected_components(df, local_finish_edges=0)
+           if mode == "star"
+           else connected_components(df, local_finish_edges=15))
+    assert out.schema.simpleString() == \
+        "struct<node:string,component:string>"
+    got = {r.node: r.component for r in out.collect()}
+    assert got == _union_find([(a, b) for a, b in edges if a != b])
+
+
+def test_canonicalize_joins_driver_local_components(spark):
+    """The local finish hands back a driver-local frame: the component
+    side of canonicalize's join is a LocalTableScan, not a scan of a
+    parallelized RDD."""
+    variants = ("Label", "LABEL", "label!")
+    m = spark.createDataFrame(
+        [(f"m{i}", f"{variants[i % 3]} {i % 7}", f"label{i % 7}")
+         for i in range(50)],
+        ["mention", "label", "entity_key"])
+    out = canonicalize(m)
+    assert out.select("canonical_id").distinct().count() == 7
+    lines = (out._jdf.queryExecution().executedPlan().toString()
+             .splitlines())
+    plan = "\n".join(lines)
+    assert any("LocalTableScan [node#" in ln for ln in lines), plan
+    assert not any("Scan ExistingRDD" in ln and "node#" in ln
+                   for ln in lines), plan
 
 
 @pytest.fixture(scope="module")
@@ -197,12 +248,16 @@ def test_resumable_materialization(spark, sf_dir, tmp_path):
     assert all(r.url is None and r.n_triples == 0 for r in ledger)
 
 
+# pages with no RDFa at all -> zero triples everywhere
+PLAIN_PAGES = [(f"http://ex.com/{i}",
+                "<html><body><p>plain</p></body></html>")
+               for i in range(8)]
+
+
 def test_resume_reads_per_url_ledger(spark, tmp_path):
     """A store whose ledger still has per-url rows beside the markers
     (the older layout) counts those batches done: resume runs 0."""
-    rows = [(f"http://ex.com/{i}", "<html><body><p>plain</p></body></html>")
-            for i in range(8)]
-    pages = spark.createDataFrame(rows, ["url", "html"])
+    pages = spark.createDataFrame(PLAIN_PAGES, ["url", "html"])
     out = str(tmp_path / "kg_old")
     spark.createDataFrame(
         [(f"http://ex.com/{i}", 3, i % 2) for i in range(8)]
@@ -322,16 +377,67 @@ def test_exact_candidate_pairs_plan_shape(spark):
 def test_resumable_empty_batch_recorded(spark, tmp_path):
     """A batch whose pages yield zero triples must still be recorded
     as processed (ADVICE r1: resume must converge)."""
-    # pages with no RDFa at all -> zero triples everywhere
-    rows = [(f"http://ex.com/{i}", "<html><body><p>plain</p></body></html>")
-            for i in range(8)]
-    pages = spark.createDataFrame(rows, ["url", "html"])
+    pages = spark.createDataFrame(PLAIN_PAGES, ["url", "html"])
     out = str(tmp_path / "kg_empty")
     run = ResumableExtraction(spark, out, n_batches=3)
     assert run.run(pages) == 3
     assert run.processed_batches() == {0, 1, 2}
     # converged: nothing left to do
     assert run.run(pages) == 0
+
+
+def test_lineage_row_per_parsed_page(spark, tmp_path):
+    """Every page that parses gets a lineage row, also with zero
+    triples; a page whose parse fails is counted only in errors."""
+    rows = ([(u, h.encode()) for u, h in PLAIN_PAGES]
+            + [("http://ex.com/broken", b"PK\x03\x04 not a zip")])
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    out = str(tmp_path / "kg_lineage")
+    run = ResumableExtraction(spark, out, n_batches=2)
+    assert run.run(pages) == 2
+    lin = spark.read.parquet(f"{out}/lineage")
+    assert dict(lin.dtypes) == {"url": "string", "n_triples": "bigint",
+                                "n_subjects": "bigint", "batch": "int"}
+    assert sorted((r.url, r.n_triples, r.n_subjects)
+                  for r in lin.collect()) == \
+        sorted((u, 0, 0) for u, _ in PLAIN_PAGES)
+    failed = run.errors().filter(F.col("code") == "parse-failed")
+    assert [r.url for r in failed.collect()] == ["http://ex.com/broken"]
+
+
+def test_lineage_counts_match_triples(spark, sf_dir, tmp_path):
+    """The kernel's per-page counts equal the stored triples' per-url
+    count and distinct-subject count."""
+    run = ResumableExtraction(spark, str(tmp_path / "kg_counts"),
+                              n_batches=1, n_buckets=4)
+    assert run.run(load_pages(spark, sf_dir)) == 1
+    want = {(r.url, r.n, r.s) for r in
+            run.triples().groupBy("url").agg(
+                F.count("*").alias("n"),
+                F.countDistinct("subj").alias("s")).collect()}
+    lin = spark.read.parquet(str(tmp_path / "kg_counts" / "lineage"))
+    got = {(r.url, r.n_triples, r.n_subjects)
+           for r in lin.filter(F.col("n_triples") > 0).collect()}
+    assert want and got == want
+
+
+def test_resumable_run_job_count(spark, sf_dir, tmp_path):
+    """Lineage is a projection of the persisted extraction, not an
+    aggregation, and the ledger marker is one partition: one batch of
+    sf0.001 runs at most 7 Spark jobs."""
+    sc = spark.sparkContext
+    pages = load_pages(spark, sf_dir)
+    pages.count()                    # page synthesis outside the count
+    group = f"resumable-run-{tmp_path.name}"
+    run = ResumableExtraction(spark, str(tmp_path / "kg_jobs"),
+                              n_batches=1, n_buckets=4)
+    sc.setJobGroup(group, "ResumableExtraction.run", False)
+    try:
+        assert run.run(pages) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 7, sorted(jobs)
 
 
 def test_cc_reliable_checkpoint(spark, tmp_path):
