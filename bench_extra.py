@@ -15,8 +15,8 @@ session confs, same worker warmup, same `.count()` action) so numbers
 are comparable with BENCH_r*.json; `--noop` switches the action to
 `write.format("noop")` which computes every column (guide §1.4).
 `time` also records each repeat's Spark job and stage counts (its
-own job group); run it at `SPARK_GRAFT_CPUS=$(nproc)` on a box with
-fewer than 32 cores.
+own job group) and the CPU-seconds its Python workers spent; run it
+at `SPARK_GRAFT_CPUS=$(nproc)` on a box with fewer than 32 cores.
 """
 
 from __future__ import annotations
@@ -68,8 +68,10 @@ def _session():
 def cmd_time(names: list[str], repeats: int, noop: bool) -> None:
     """Time each query ``repeats`` times; every repeat runs under its
     own Spark job group, so its job and stage counts are read back
-    from ``statusTracker()`` as kgbench's traced spans read theirs."""
-    from kgbench.probe import job_counts
+    from ``statusTracker()`` as kgbench's traced spans read theirs.
+    ``python_cpu_s`` is the CPU time of the Python processes below
+    this driver (the PySpark daemon and its workers) over the repeat."""
+    from kgbench.probe import job_counts, python_cpu
 
     spark, queries = _session()
     sc = spark.sparkContext
@@ -81,6 +83,7 @@ def cmd_time(names: list[str], repeats: int, noop: bool) -> None:
             for i in range(repeats):
                 group = f"q:{name}:{i}"
                 sc.setJobGroup(group, f"q:{name}", False)
+                py0 = python_cpu(os.getpid())
                 t0 = time.time()
                 df = queries[name](spark, SF_DIR)
                 if noop:
@@ -88,10 +91,12 @@ def cmd_time(names: list[str], repeats: int, noop: bool) -> None:
                 else:
                     df.count()
                 runs.append(round(time.time() - t0, 3))
+                py_cpu = round(python_cpu(os.getpid()) - py0, 2)
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setJobDescription(None)
                 c = job_counts(sc, [group])
-                shape.append({"jobs": c["jobs"], "stages": c["stages"]})
+                shape.append({"jobs": c["jobs"], "stages": c["stages"],
+                              "python_cpu_s": py_cpu})
             out[name], counts[name] = runs, shape
             print(f"# {name}: {runs} {shape}", file=sys.stderr)
     finally:

@@ -10,6 +10,12 @@ Re-expresses the extraction semantics of the reference RDFa parser
                   materialize with lineage + checkpointed resume
 * ``functions/``  text analysis + embedding similarity ops
 * ``streaming/``  incremental extraction via Structured Streaming
+
+Importing the package installs ``_zipcache``'s stat-checked zipimport
+invalidation, so each Python worker that unpickles a kernel stops
+re-reading its zip archives at the start of every task.
 """
+
+from . import _zipcache  # noqa: F401
 
 __version__ = "0.1.0"

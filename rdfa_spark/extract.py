@@ -16,7 +16,14 @@ Scale notes (100 TB design):
   projection;
 * bnode labels are deterministic per url, so re-running a failed
   partition yields identical output — required for resumable,
-  idempotent writes (BASELINE north_rule).
+  idempotent writes (BASELINE north_rule);
+* every Python task pays a fixed set-up cost before its first batch:
+  PySpark calls ``importlib.invalidate_caches()``, which on CPython
+  < 3.13 re-reads a zip archive's directory once per importer (19
+  reads of 5-13 ms each per task, measured on a 4-core VM with the
+  package shipped as a zip); ``_zipcache`` turns that into a stat
+  check per archive, so small tasks no longer pay more for set-up
+  than for their pages.
 """
 
 from __future__ import annotations

@@ -8,14 +8,13 @@ scan -> mapInArrow chain with a file source and checkpointed sink:
 exactly-once via the sink's commit log + deterministic per-url
 output (re-processed files produce identical triples).
 
-A watermark on ``warc_ts`` bounds state for the windowed crawl-rate
-metrics aggregation (the only stateful operator here).
+Every operator here is stateless, so no watermark is needed; the one
+stateful stream operator is the sessionizer in ``streaming.stateful``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..extract import TRIPLE_SCHEMA, _extract
 
@@ -37,17 +36,6 @@ def extract_triples_stream(pages_stream: DataFrame) -> DataFrame:
     return _extract(pages_stream, None, "t", TRIPLE_SCHEMA)
 
 
-def crawl_rate_metrics(pages_stream: DataFrame,
-                       window: str = "1 minute",
-                       watermark: str = "5 minutes") -> DataFrame:
-    """Windowed crawl metrics with late-data watermark on warc_ts."""
-    return (pages_stream
-            .withWatermark("warc_ts", watermark)
-            .groupBy(F.window("warc_ts", window), "lang")
-            .agg(F.count("*").alias("n_pages"),
-                 F.sum(F.length("html")).alias("bytes_in")))
-
-
 def start_extraction(spark: SparkSession, src_dir: str, out_dir: str,
                      checkpoint_dir: str,
                      trigger_once: bool = False):
@@ -62,23 +50,3 @@ def start_extraction(spark: SparkSession, src_dir: str, out_dir: str,
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def dedup_pages_stream(pages_stream: DataFrame,
-                       watermark: str = "10 minutes",
-                       text_col: str = "text") -> DataFrame:
-    """Streaming exact dedup: drop pages whose content fingerprint
-    was already seen within the watermark horizon.
-
-    ``dropDuplicatesWithinWatermark`` keys state on the md5
-    fingerprint and evicts entries once the event-time watermark
-    passes them — state is O(distinct fingerprints per horizon), not
-    O(stream length), which is what makes exact dedup feasible on an
-    unbounded crawl (the batch analogue is
-    ``pipeline.dedup.dedup_exact``; cross-horizon near-dups belong to
-    the batch MinHash path over the materialized corpus)."""
-    fp = pages_stream.withColumn(
-        "_fp", F.md5(F.coalesce(F.col(text_col), F.lit(""))))
-    return (fp.withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(["_fp"])
-            .drop("_fp"))

@@ -1,5 +1,6 @@
 """bench_extra.py: plan capture never overwrites a plan record, and
-`time` reports per-repeat job and stage counts."""
+`time` reports per-repeat job and stage counts and Python-worker
+CPU-seconds."""
 
 import pytest
 
@@ -39,7 +40,8 @@ class _KeepSession:
 
 def test_time_records_job_and_stage_counts(spark, monkeypatch, capsys):
     """Each repeat of ``time`` reports the Spark jobs and stages of its
-    own job group, and leaves no job group set behind."""
+    own job group and its Python workers' CPU-seconds, and leaves no
+    job group set behind."""
     import json
 
     from pyspark.sql import functions as F
@@ -55,4 +57,5 @@ def test_time_records_job_and_stage_counts(spark, monkeypatch, capsys):
     shapes = rec["counts"]["grouped"]
     assert len(shapes) == 2
     assert all(c["jobs"] >= 1 and c["stages"] >= 1 for c in shapes)
+    assert all(c["python_cpu_s"] >= 0 for c in shapes)
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

@@ -63,24 +63,6 @@ def test_streaming_extraction(spark, sf_dir, tmp_path):
     assert spark.read.parquet(out_dir).count() == want.count()
 
 
-def test_crawl_rate_metrics_plan(spark, sf_dir, tmp_path):
-    """Watermarked windowed agg compiles into a streaming plan."""
-    from rdfa_spark.streaming.incremental import (crawl_rate_metrics,
-                                                  read_page_stream)
-    pages_dir = str(tmp_path / "pages_in2")
-    load_pages(spark, sf_dir, partitions=2).write.mode("overwrite") \
-        .parquet(pages_dir)
-    stream = read_page_stream(spark, pages_dir)
-    agg = crawl_rate_metrics(stream)
-    assert agg.isStreaming
-    q = (agg.writeStream.format("memory").queryName("crawl_metrics")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    # watermark semantics: final windows emitted after stream end
-    n = spark.sql("select count(*) from crawl_metrics").first()[0]
-    assert n >= 0
-
-
 def test_turtle_lines_prefix_compression(spark):
     from rdfa_spark.sinks import turtle_lines
     XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -191,34 +173,3 @@ def test_stateful_sessionization_matches_batch(spark, tmp_path):
             (1, 2, 2, base + 5000, base + 5060),
             (2, 1, 2, base, base + 1700)}
     assert got == want
-
-
-def test_streaming_dedup_pages(spark, tmp_path):
-    """Streaming exact dedup drops same-fingerprint pages within the
-    watermark horizon; first occurrence survives (batch parity with
-    pipeline.dedup.dedup_exact on the same input)."""
-    import datetime as dt
-
-    from rdfa_spark.streaming.incremental import (PAGES_DDL,
-                                                  dedup_pages_stream)
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        ("u1", t0, bytearray(b"<p>a</p>"), "same text", "en"),
-        ("u2", t0 + dt.timedelta(seconds=30), bytearray(b"<p>b</p>"),
-         "same text", "en"),                       # dup of u1
-        ("u3", t0 + dt.timedelta(seconds=60), bytearray(b"<p>c</p>"),
-         "other text", "en"),
-    ]
-    src = str(tmp_path / "pages_src")
-    spark.createDataFrame(rows, PAGES_DDL).coalesce(1) \
-        .write.mode("overwrite").parquet(src)
-    stream = (spark.readStream.schema(PAGES_DDL).parquet(src))
-    deduped = dedup_pages_stream(stream, watermark="10 minutes")
-    q = (deduped.writeStream.format("memory")
-         .queryName("dedup_mem").outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r.url for r in spark.sql(
-        "SELECT url FROM dedup_mem").collect()}
-    assert "u3" in got
-    assert len(got & {"u1", "u2"}) == 1      # exactly one survivor
