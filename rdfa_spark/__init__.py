@@ -7,7 +7,7 @@ Re-expresses the extraction semantics of the reference RDFa parser
 * ``extract``     Arrow-batched extraction UDF: pages -> triples/errors
 * ``pages``       deterministic page synthesis from the documents table
 * ``pipeline/``   dedup, entity linking, connected components,
-                  materialize with lineage + checkpointed resume
+                  resumable materialize; ``build_kg`` chains them
 * ``functions/``  text analysis + embedding similarity ops
 * ``streaming/``  incremental extraction via Structured Streaming
 

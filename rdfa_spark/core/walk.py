@@ -293,9 +293,6 @@ class Walker:
                 return val
         return None
 
-    def _has(self, el: Element, name: str) -> bool:
-        return self._attr(el, name) is not None
-
     def _bookmarked_string(self, bm: Element) -> str:
         """F3 — text between a bookmark-start element and the
         bookmark-end element carrying the same name attribute, in

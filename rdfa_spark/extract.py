@@ -409,13 +409,3 @@ def graph_counts(triples: DataFrame) -> DataFrame:
                      .alias("graph"))
             .agg(F.count("*").alias("n_triples")))
 
-
-def count_statements(triples: DataFrame, subj=None, pred=None, obj=None,
-                     graph=None) -> int:
-    """A2 — count_statements pattern matching."""
-    df = triples
-    for col, val in (("subj", subj), ("pred", pred), ("obj", obj),
-                     ("graph", graph)):
-        if val is not None:
-            df = df.filter(F.col(col) == val)
-    return df.count()

@@ -32,49 +32,58 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..extract import extract_all, split_extracts
+from ..extract import (ERROR_SCHEMA, TRIPLE_SCHEMA, extract_all,
+                       split_extracts)
 
 N_BUCKETS_DEFAULT = 64
 
+# Read schemas (columns, then partition columns): they skip parquet
+# schema inference (one Spark job per read), and a ledger holding only
+# a crashed append's ``_temporary`` reads as empty under them.
+STORED_TRIPLE_SCHEMA = StructType([*TRIPLE_SCHEMA.fields]).add(
+    "batch", "integer").add("subj_bucket", "integer")
+STORED_ERROR_SCHEMA = StructType([*ERROR_SCHEMA.fields]).add(
+    "batch", "integer")
+LEDGER_SCHEMA = "url string, n_triples long, batch int"
+LINEAGE_SCHEMA = "url string, n_triples long, n_subjects long, batch int"
 
-def with_subject_bucket(triples: DataFrame,
-                        n_buckets: int = N_BUCKETS_DEFAULT) -> DataFrame:
-    return triples.withColumn(
-        "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets))
-        .cast("int"))
+
+def _bucketed(triples: DataFrame, n_buckets: int,
+              *lead: str) -> DataFrame:
+    """One writer task per subject bucket (without the repartition
+    every upstream task writes a file per bucket it holds: tasks x
+    buckets small files, measured 27 s at sf0.1 and a metadata
+    catastrophe at 100 TB), rows sorted by (``lead``, subj_bucket,
+    subj).  Leading with the partition columns satisfies the
+    dynamic-partition writer's required ordering, which otherwise
+    inserts a SECOND sort that discards the subj clustering the
+    parquet min/max pruning of subject-point reads rests on."""
+    bucket = F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
+    return (triples.withColumn("subj_bucket", bucket)
+            .repartition(n_buckets, F.col("subj_bucket"))
+            .sortWithinPartitions(*lead, "subj_bucket", "subj"))
 
 
 def write_triples(triples: DataFrame, path: str,
                   n_buckets: int = N_BUCKETS_DEFAULT,
                   mode: str = "append") -> None:
-    """Subject-bucketed write (S6).  Bucketing by subject makes
-    subject-keyed reads and downstream subject-subject joins
-    partition-prunable / co-located.
+    """Subject-bucketed write (S6): subject-keyed reads and
+    subject-subject joins become partition-prunable / co-located.
+    Size ``n_buckets`` to the corpus: total_triple_bytes /
+    target_file_size (64 fits the test SFs; a 100 TB corpus wants
+    tens of thousands)."""
+    _bucketed(triples, n_buckets).write.parquet(path, mode, "subj_bucket")
 
-    The write repartitions ON the bucket column first: without it,
-    every upstream task writes one file per bucket it happens to
-    hold (tasks x buckets small files — measured 27 s at sf0.1 and
-    a metadata catastrophe at 100 TB); with it, each bucket is one
-    writer task -> one well-sized file.  Rows are sorted by subj
-    within each file so parquet min/max stats prune subject-point
-    reads inside a bucket.  Size ``n_buckets`` to the corpus:
-    buckets ~ total_triple_bytes / target_file_size (64 fits the
-    test SFs; a 100 TB corpus wants tens of thousands)."""
-    # sort by (partition column, subj): the dynamic-partition writer
-    # requires its input ordered by the partition column and inserts
-    # its own sort otherwise — which both pays a SECOND sort and
-    # discards the subj clustering the min/max pruning claim rests
-    # on.  Leading with subj_bucket satisfies the writer's required
-    # ordering, so this one sort survives into the files.
-    (with_subject_bucket(triples, n_buckets)
-     .repartition(n_buckets, F.col("subj_bucket"))
-     .sortWithinPartitions("subj_bucket", "subj")
-     .write.mode(mode)
-     .partitionBy("subj_bucket")
-     .parquet(path))
+
+def _write_batch(df: DataFrame, path: str, *partition_cols: str) -> None:
+    """Replace only the ``batch=<k>`` partitions ``df`` holds."""
+    (df.write.option("partitionOverwriteMode", "dynamic")
+     .parquet(path, "overwrite", ["batch", *partition_cols]))
 
 
 class ResumableExtraction:
@@ -85,8 +94,7 @@ class ResumableExtraction:
     """
 
     def __init__(self, spark: SparkSession, out_dir: str,
-                 n_batches: int = 8,
-                 n_buckets: int = N_BUCKETS_DEFAULT):
+                 n_batches: int = 8, n_buckets: int = N_BUCKETS_DEFAULT):
         self.spark = spark
         self.out_dir = out_dir
         self.n_batches = n_batches
@@ -99,73 +107,60 @@ class ResumableExtraction:
     # -- ledger -------------------------------------------------------
     def processed_batches(self) -> set[int]:
         try:
-            ledger = self.spark.read.parquet(self.ledger_dir)
-        except Exception:
+            ledger = self._read(self.ledger_dir, LEDGER_SCHEMA)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return set()
-        return {r.batch for r in
-                ledger.select("batch").distinct().collect()}
+        return {r.batch for r in ledger.select("batch").distinct().collect()}
 
-    def _batch_col(self):
-        return F.pmod(F.xxhash64("url"), F.lit(self.n_batches)) \
-                .cast("int")
+    def _commit(self, b: int) -> None:
+        """Append batch b's marker, once the batch's data has landed."""
+        (self.spark.range(0, 1, 1, 1).select(
+            F.lit(None).cast("string").alias("url"),
+            F.lit(0).cast("long").alias("n_triples"),
+            F.lit(b).cast("int").alias("batch"))
+         .write.mode("append").parquet(self.ledger_dir))
 
     # -- run ----------------------------------------------------------
-    def run(self, pages: DataFrame,
-            max_batches: int | None = None) -> int:
+    def run(self, pages: DataFrame, max_batches: int | None = None) -> int:
         """Process unfinished batches; returns #batches completed in
         this call.  Safe to call repeatedly (resume)."""
         done = self.processed_batches()
         todo = [b for b in range(self.n_batches) if b not in done]
         if max_batches is not None:
             todo = todo[:max_batches]
-        staged = pages.withColumn("_batch", self._batch_col())
+        staged = pages.withColumn("_batch", F.pmod(
+            F.xxhash64("url"), F.lit(self.n_batches)).cast("int"))
         for b in todo:
-            batch_pages = staged.filter(F.col("_batch") == b) \
-                                .drop("_batch")
             # ONE parse per page: triples + processor-graph errors +
             # lineage all come out of this persisted multi-output pass
             # (three dedicated extractors would parse the HTML 3x)
-            extracted = extract_all(batch_pages).persist()
+            extracted = extract_all(staged.filter(F.col("_batch") == b))
+            extracted.persist()
             triples, errors, _ = split_extracts(extracted)
+            batch = F.lit(b).alias("batch")
             # the kernel's per-page x row already holds the counts
             lineage = (extracted.filter(F.col("kind") == "x")
-                       .select("url",
-                               F.col("n_triples").cast("long"),
-                               F.col("n_subjects").cast("long")))
-            # same one-writer-task-per-bucket discipline as
-            # write_triples (small-file hygiene at scale)
-            # same (partition cols, subj) sort rule as write_triples:
-            # the writer's required ordering is satisfied, no second
-            # sort, subj clustering survives into the files
-            (with_subject_bucket(triples, self.n_buckets)
-             .withColumn("batch", F.lit(b))
-             .repartition(self.n_buckets, F.col("subj_bucket"))
-             .sortWithinPartitions("batch", "subj_bucket", "subj")
-             .write.mode("overwrite")
-             .partitionBy("batch", "subj_bucket")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(self.triples_dir))
-            (errors.withColumn("batch", F.lit(b))
-             .write.mode("overwrite")
-             .partitionBy("batch")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(self.errors_dir))
-            (lineage.withColumn("batch", F.lit(b))
-             .write.mode("overwrite")
-             .partitionBy("batch")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(self.lineage_dir))
-            # commit point: the marker appears only after data landed
-            (self.spark.range(0, 1, 1, 1).select(
-                F.lit(None).cast("string").alias("url"),
-                F.lit(0).cast("long").alias("n_triples"),
-                F.lit(b).cast("int").alias("batch"))
-             .write.mode("append").parquet(self.ledger_dir))
+                       .select("url", F.col("n_triples").cast("long"),
+                               F.col("n_subjects").cast("long"), batch))
+            _write_batch(_bucketed(triples.select("*", batch),
+                                   self.n_buckets, "batch"),
+                         self.triples_dir, "subj_bucket")
+            _write_batch(errors.select("*", batch), self.errors_dir)
+            _write_batch(lineage, self.lineage_dir)
+            self._commit(b)
             extracted.unpersist()
         return len(todo)
 
+    def _read(self, path: str, schema: StructType | str) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(path)
+
     def triples(self) -> DataFrame:
-        return self.spark.read.parquet(self.triples_dir)
+        return self._read(self.triples_dir, STORED_TRIPLE_SCHEMA)
 
     def errors(self) -> DataFrame:
-        return self.spark.read.parquet(self.errors_dir)
+        return self._read(self.errors_dir, STORED_ERROR_SCHEMA)
+
+    def lineage(self) -> DataFrame:
+        return self._read(self.lineage_dir, LINEAGE_SCHEMA)

@@ -3,6 +3,7 @@ entity linking, dedup operators, resumable materialization and the
 run_pipeline.py entrypoint."""
 
 import hashlib
+import json
 import os
 import random
 import subprocess
@@ -17,11 +18,12 @@ from rdfa_spark.extract import extract_errors, extract_triples
 from rdfa_spark.functions.similarity import embedding_near_dup_pairs
 from rdfa_spark.pages import load_pages
 from rdfa_spark.pipeline import (
-    ResumableExtraction, canonicalize, connected_components, dedup,
-    dedup_exact, entity_mentions, exact_candidate_pairs,
+    KGReport, ResumableExtraction, canonicalize, connected_components,
+    dedup, dedup_exact, entity_mentions, exact_candidate_pairs,
     exact_duplicate_groups, linking, lsh_candidate_pairs,
     minhash_dedup_pairs, simhash64, simhash_near_dup_pairs,
 )
+from rdfa_spark.pipeline.materialize import LEDGER_SCHEMA
 
 
 def _union_find(edges):
@@ -269,10 +271,50 @@ def test_resume_reads_per_url_ledger(spark, tmp_path):
     assert run.run(pages) == 0
 
 
+def test_store_reads_use_the_inferred_schemas(spark, tmp_path):
+    """Each fixed read schema equals what parquet inference gives on a
+    fresh store: names, types, nullability and order."""
+    rows = ([(u, h.encode()) for u, h in PLAIN_PAGES]
+            + [("http://ex.com/rdfa", b'<html><body><p property='
+                b'"dc:title">t</p></body></html>'),
+               ("http://ex.com/broken", b"PK\x03\x04 not a zip")])
+    run = ResumableExtraction(
+        spark, str(tmp_path / "kg_schemas"), n_batches=2, n_buckets=2)
+    assert run.run(spark.createDataFrame(rows, "url string, html binary")) \
+        == 2
+    for got, path in [(run.triples(), run.triples_dir),
+                      (run.errors(), run.errors_dir),
+                      (run.lineage(), run.lineage_dir),
+                      (spark.read.schema(LEDGER_SCHEMA)
+                       .parquet(run.ledger_dir), run.ledger_dir)]:
+        assert got.schema == spark.read.parquet(path).schema, path
+        assert got.count() > 0, path
+
+
+def test_ledger_with_only_temporary_reads_empty(spark, tmp_path):
+    """A crash during the first marker append leaves only the writer's
+    _temporary directory: nothing is done yet.  A ledger that cannot
+    be read raises rather than re-running every batch."""
+    run = ResumableExtraction(spark, str(tmp_path / "kg_tmp"),
+                              n_batches=2)
+    assert run.processed_batches() == set()          # no ledger dir
+    staging = os.path.join(run.ledger_dir, "_temporary", "0")
+    os.makedirs(staging)
+    with open(os.path.join(staging, "part-00000.parquet"), "wb") as f:
+        f.write(b"half a file")
+    assert run.processed_batches() == set()
+    with open(os.path.join(run.ledger_dir, "part-00000.parquet"),
+              "wb") as f:
+        f.write(b"not parquet")
+    with pytest.raises(Exception):
+        run.processed_batches()
+
+
 def test_run_pipeline_keeps_partitioned_errors(spark, sf_dir, tmp_path):
     """scripts/run_pipeline.py parses each page once: the errors table
     is the batch-partitioned one ResumableExtraction wrote, and its
-    rows equal a direct extract_errors pass as a multiset."""
+    rows equal a direct extract_errors pass as a multiset.  Its one
+    PIPELINE_OK line is the build's report as JSON."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = str(tmp_path / "kg")
     env = dict(os.environ,
@@ -285,13 +327,18 @@ def test_run_pipeline_keeps_partitioned_errors(spark, sf_dir, tmp_path):
          "--buckets", "2"],
         env=env, capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-4000:]
-    assert "PIPELINE_OK" in proc.stdout
+    [line] = [ln for ln in proc.stdout.splitlines()
+              if ln.startswith("PIPELINE_OK")]
+    report = KGReport(**json.loads(line[len("PIPELINE_OK "):]))
     stored = spark.read.parquet(os.path.join(out, "errors"))
     assert "batch" in stored.columns
     got = Counter(map(tuple, stored.drop("batch").collect()))
     want = Counter(map(tuple, extract_errors(load_pages(spark, sf_dir))
                        .select(*stored.drop("batch").columns).collect()))
     assert want and got == want
+    assert report.batches_run == 2
+    assert report.parse_failures == sum(
+        n for row, n in got.items() if row[2] == "parse-failed")
 
 
 def test_cc_salted_hot_hub(spark):

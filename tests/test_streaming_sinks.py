@@ -1,12 +1,10 @@
-"""Structured Streaming extraction + N-Triples sink tests."""
+"""N-Triples / Turtle sink and stateful-stream tests."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from rdfa_spark.extract import extract_triples
 from rdfa_spark.pages import load_pages
 from rdfa_spark.sinks import ntriples_lines, write_ntriples
-from rdfa_spark.streaming.incremental import start_extraction
 
 
 def test_ntriples_lines(spark, sf_dir):
@@ -36,31 +34,6 @@ def test_write_ntriples_roundtrip_count(spark, sf_dir, tmp_path):
     out = str(tmp_path / "nt")
     write_ntriples(triples, out)
     assert spark.read.text(out).count() == triples.count()
-
-
-@pytest.mark.slow
-def test_streaming_extraction(spark, sf_dir, tmp_path):
-    """File-source streaming run (availableNow) produces the same
-    triples as batch extraction and resumes as a no-op."""
-    pages_dir = str(tmp_path / "pages_in")
-    out_dir = str(tmp_path / "triples_out")
-    ckpt_dir = str(tmp_path / "ckpt")
-    pages = load_pages(spark, sf_dir, partitions=4)
-    pages.write.mode("overwrite").parquet(pages_dir)
-
-    q = start_extraction(spark, pages_dir, out_dir, ckpt_dir,
-                         trigger_once=True)
-    q.awaitTermination(300)
-    got = spark.read.parquet(out_dir)
-    want = extract_triples(pages)
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
-
-    # resume with no new files -> no duplicates
-    q2 = start_extraction(spark, pages_dir, out_dir, ckpt_dir,
-                          trigger_once=True)
-    q2.awaitTermination(300)
-    assert spark.read.parquet(out_dir).count() == want.count()
 
 
 def test_turtle_lines_prefix_compression(spark):
