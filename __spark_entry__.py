@@ -40,8 +40,6 @@ from rdfa_spark.pipeline.linking import (canonicalize,  # noqa: E402
                                          lsh_candidate_pairs,
                                          minhash_signatures)
 
-SCHEMA_NS = "http://schema.org/"
-
 _SHIPPED: set[int] = set()
 
 
@@ -94,21 +92,18 @@ def q_rdfa_triples_stream(spark: SparkSession,
     Streaming job (file source, availableNow, multiple micro-batches),
     checked against the SAME DuckDB oracle as the batch
     ``rdfa_triples`` query — batch/stream parity is the oracle.
-    Extraction is stateless per url, so exactly-once comes from the
-    sink commit log + deterministic per-url output
-    (streaming/incremental.py; reference is batch-only,
-    Parser.pm:489-544).  Each micro-batch is WIDE: a file-source
-    micro-batch's task parallelism equals its file count, so one
-    file per trigger would serialize extraction into single-task
-    batches — here (and in a real incremental deployment)
+    Extraction is stateless per url, so ``extract_triples`` runs on
+    the streaming frame unchanged and exactly-once comes from the
+    sink commit log + deterministic per-url output (reference is
+    batch-only, Parser.pm:489-544).  Each micro-batch is WIDE: a
+    file-source micro-batch's task parallelism equals its file count,
+    so one file per trigger would serialize extraction into
+    single-task batches — here (and in a real incremental deployment)
     ``maxFilesPerTrigger`` is sized to the executor-core count."""
     import os
     import shutil
     import tempfile
     import time as _time
-
-    from rdfa_spark.streaming.incremental import (
-        extract_triples_stream)
 
     pages = load_pages(spark, sf_dir).select("url", "html")
     src = tempfile.mkdtemp(prefix="extract_stream_")
@@ -124,7 +119,7 @@ def q_rdfa_triples_stream(spark: SparkSession,
             f"{int(_time.time() * 1000) % 10**9}")
     stream = (spark.readStream.schema("url string, html binary")
               .option("maxFilesPerTrigger", width).parquet(src))
-    q = (extract_triples_stream(stream)
+    q = (extract_triples(stream)
          .writeStream.format("memory").queryName(name)
          .outputMode("append").trigger(availableNow=True).start())
     try:
@@ -181,12 +176,7 @@ def q_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_entity_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-linking stage 1: mention table with normalized keys."""
-    t = _triples(spark, sf_dir)
-    return (t.filter(F.col("pred") == SCHEMA_NS + "name")
-             .select(F.col("subj").alias("mention"),
-                     F.col("obj").alias("label"),
-                     F.regexp_replace(F.lower("obj"), "[^a-z0-9]", "")
-                      .alias("entity_key")))
+    return entity_mentions(_triples(spark, sf_dir))
 
 
 def q_rdfa_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,13 +209,13 @@ def q_cc_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cc_hot_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 with EXPLICIT skew salting (salt_hot_nodes +
-    connected_components_salted, cc.py): four hot hubs 'h0'..'h3',
-    one per doc_id%4 class, spoke-connected to every doc in the
-    class — hub degree N/4 far exceeds max_degree=64, so each hub is
-    split into 8 salted replicas (rewired by the other endpoint's
-    hash, chained back) before the star rounds; replicas are
-    stripped from the labeling.  Intra-class chain edges mix cold
+    """J6 with EXPLICIT skew salting (connected_components_salted,
+    cc.py): four hot hubs 'h0'..'h3', one per doc_id%4 class,
+    spoke-connected to every doc in the class — hub degree N/4 far
+    exceeds max_degree=64, so each hub is split into 8 salted
+    replicas (rewired by the other endpoint's hash, chained back)
+    before the star rounds; replicas are stripped from the
+    labeling.  Intra-class chain edges mix cold
     edges into the same run.  Components are exactly the residue
     classes (oracle: groupBy-min over doc_id%4)."""
     from rdfa_spark.pipeline.cc import connected_components_salted

@@ -9,7 +9,8 @@ Re-expresses the extraction semantics of the reference RDFa parser
 * ``pipeline/``   dedup, entity linking, connected components,
                   resumable materialize; ``build_kg`` chains them
 * ``functions/``  text analysis + embedding similarity ops
-* ``streaming/``  incremental extraction via Structured Streaming
+* ``streaming/``  stateful sessionization via Structured Streaming
+                  (extractors run as-is on streaming frames)
 
 Importing the package installs ``_zipcache``'s stat-checked zipimport
 invalidation, so each Python worker that unpickles a kernel stops

@@ -149,16 +149,14 @@ _ARROW_TYPES = {"string": "string", "boolean": "bool", "bigint": "int64",
 _NO_TRIPLE, _NO_ERROR, _NO_TEXT = (None,) * 8, (None,) * 4, (None,) * 3
 
 
-def _page_rows(url: str, html: bytes, config: Config | None,
-               kinds: str, rows: list) -> bool:
-    """Parse one page and append its rows of the wanted kinds
-    (triples 't', processor-graph errors 'e', text/lineage 'x') to
-    ``rows``.  A page whose parse raises yields one parse-failed
-    error row when errors are wanted; returns False for it."""
+def _page_rows(url: str, html: bytes, kinds: str, rows: list) -> bool:
+    """Parse one page under its ``detect_config`` host and append its
+    rows of the wanted kinds (triples 't', processor-graph errors 'e',
+    text/lineage 'x') to ``rows``.  A page whose parse raises yields
+    one parse-failed error row when errors are wanted; returns False
+    for it."""
     try:
-        w = parse_rdfa(html, url,
-                       config if config is not None
-                       else detect_config(html))
+        w = parse_rdfa(html, url, detect_config(html))
     except Exception as exc:   # never fail the job on one page
         if "e" in kinds:
             rows.append((url, "e") + _NO_TRIPLE
@@ -183,8 +181,7 @@ def _page_rows(url: str, html: bytes, config: Config | None,
     return True
 
 
-def _walk_pages(batches, config: Config | None, kinds: str,
-                schema: StructType, fail_acc=None):
+def _walk_pages(batches, kinds: str, schema: StructType, fail_acc=None):
     """The extraction kernel behind every extractor: (url, html)
     RecordBatches in, ``schema``-shaped RecordBatches out, one parse
     per page (mapInArrow — no pandas on either side of the
@@ -214,7 +211,7 @@ def _walk_pages(batches, config: Config | None, kinds: str,
             for url, html in zip(urls.slice(lo, hi - lo).to_pylist(),
                                  htmls.slice(lo, hi - lo).to_pylist()):
                 if (html is not None
-                        and not _page_rows(url, html, config, kinds, rows)
+                        and not _page_rows(url, html, kinds, rows)
                         and fail_acc is not None):
                     fail_acc.add(1)
             by_col = list(zip(*rows)) or [()] * len(_ALL_NAMES)
@@ -223,15 +220,13 @@ def _walk_pages(batches, config: Config | None, kinds: str,
                 names=names)
 
 
-def _extract(pages: DataFrame, config: Config | None, kinds: str,
-             schema: StructType, fail_acc=None) -> DataFrame:
+def _extract(pages: DataFrame, kinds: str, schema: StructType,
+             fail_acc=None) -> DataFrame:
     return pages.select("url", "html").mapInArrow(
-        lambda it: _walk_pages(it, config, kinds, schema, fail_acc),
-        schema)
+        lambda it: _walk_pages(it, kinds, schema, fail_acc), schema)
 
 
-def extract_all(pages: DataFrame,
-                config: Config | None = None) -> DataFrame:
+def extract_all(pages: DataFrame) -> DataFrame:
     """Single-pass extraction: triples + processor-graph errors +
     text/lineage from ONE parse per page (the parse dominates the
     stage cost; three dedicated passes would pay it three times).
@@ -240,7 +235,7 @@ def extract_all(pages: DataFrame,
     ``split_extracts``.  Parse failures appear as
     (kind='e', code='parse-failed') rows — never silently dropped.
     """
-    return _extract(pages, config, "tex", EXTRACT_ALL_SCHEMA)
+    return _extract(pages, "tex", EXTRACT_ALL_SCHEMA)
 
 
 def split_extracts(all_df: DataFrame) -> tuple[DataFrame, DataFrame,
@@ -258,10 +253,11 @@ def split_extracts(all_df: DataFrame) -> tuple[DataFrame, DataFrame,
     return triples, errors, texts
 
 
-def extract_triples(pages: DataFrame,
-                    config: Config | None = None) -> DataFrame:
+def extract_triples(pages: DataFrame) -> DataFrame:
     """pages(url, html, ...) -> triples DataFrame.  The walker dedups
     within a document, mirroring the reference's set-store (A4).
+    ``pages`` may be a streaming frame: the kernel is stateless per
+    url, so the plan is the same over a streaming source.
 
     Pages that fail to parse emit no triples but are never silently
     lost: a Spark accumulator counts them, exposed as
@@ -279,24 +275,22 @@ def extract_triples(pages: DataFrame,
     use ``extract_all`` for in-band accounting.
     """
     fail_acc = pages.sparkSession.sparkContext.accumulator(0)
-    out = _extract(pages, config, "t", TRIPLE_SCHEMA, fail_acc)
+    out = _extract(pages, "t", TRIPLE_SCHEMA, fail_acc)
     out.parse_failures = fail_acc
     return out
 
 
-def extract_errors(pages: DataFrame,
-                   config: Config | None = None) -> DataFrame:
+def extract_errors(pages: DataFrame) -> DataFrame:
     """Processor-graph analogue (Parser.pm:469-487) as a DataFrame; a
     page whose parse raises yields one (level='error',
     code='parse-failed') row."""
-    return _extract(pages, config, "e", ERROR_SCHEMA)
+    return _extract(pages, "e", ERROR_SCHEMA)
 
 
-def extract_text_df(pages: DataFrame,
-                    config: Config | None = None) -> DataFrame:
+def extract_text_df(pages: DataFrame) -> DataFrame:
     """F1 text-concatenation rule per url (byte-identical invariant,
     Parser.pm:2541-2559), plus triple counts for metrics."""
-    return _extract(pages, config, "x", TEXT_SCHEMA)
+    return _extract(pages, "x", TEXT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

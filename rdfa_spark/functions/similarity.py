@@ -153,14 +153,20 @@ def _typed_batch(arrow_schema, *columns):
         schema=arrow_schema)
 
 
+# Members per block (or bucket) of every blocking operator.
+BLOCK_CAP = 10_000
+
+
 def cap_blocks(rows: DataFrame, keys: list[str],
-               max_members: int | Column) -> tuple[DataFrame, DataFrame]:
+               pairable: Column | None = None
+               ) -> tuple[DataFrame, DataFrame]:
     """The block cap of every blocking operator: returns (kept,
     dropped).  ``kept`` is the rows of each block (rows with equal
-    ``keys``) that has at most ``max_members`` rows; ``dropped`` has
-    one (*keys, n_members) row per larger block.  A per-row Column cap
-    is allowed: a cap of 0 drops (and reports) a block whatever its
-    size.
+    ``keys``) that has at most ``BLOCK_CAP`` rows; ``dropped`` has one
+    (*keys, n_members) row per larger block.  A block whose rows fail
+    ``pairable`` (false or null) is dropped and reported whatever its
+    size.  The cap is read at call time, so patching
+    ``similarity.BLOCK_CAP`` reaches every operator.
 
     A block of K members self-joins into ~K²/2 pairs, so one hot key
     (mass-duplicated boilerplate, usually) would make the join
@@ -171,14 +177,16 @@ def cap_blocks(rows: DataFrame, keys: list[str],
 
     The convention every capped operator follows: ``dropped`` is a
     lazy DataFrame attached to the operator's result as
-    ``dropped_blocks`` or ``dropped_buckets`` (count it, log it, or
-    route its members elsewhere).  The attribute lives on that
-    DataFrame object only; any further transformation returns a
-    DataFrame without it.  The DuckDB oracle models no cap, so
-    Spark/oracle parity is exact only while ``dropped`` is empty."""
+    ``dropped_blocks`` (count it, log it, or route its members
+    elsewhere).  The attribute lives on that DataFrame object only;
+    any further transformation returns a DataFrame without it.  The
+    DuckDB oracle models no cap, so Spark/oracle parity is exact only
+    while ``dropped`` is empty."""
+    cap = (BLOCK_CAP if pairable is None
+           else F.when(pairable, BLOCK_CAP).otherwise(0))
     counted = rows.withColumn(
         "_n", F.count("*").over(Window.partitionBy(*keys)))
-    over = F.col("_n") > max_members
+    over = F.col("_n") > cap
     dropped = (counted.filter(over)
                .select(*keys, F.col("_n").alias("n_members"))
                .distinct())
@@ -477,7 +485,6 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
                              vec_col: str = "embedding",
                              bands: int = 4,
                              planes_per_band: int = 8,
-                             max_bucket: int = 10_000,
                              *, dim: int) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-band
     hyperplane-LSH (never all-pairs at scale).  ``dim`` is the fixed
@@ -503,9 +510,9 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
     size.  A pair colliding in several bands carries the same score
     in each, so the final pair dedup keeps identical values.
 
-    ``max_bucket`` caps bucket membership (``cap_blocks``); each
-    bucket over it is reported in ``result.dropped_buckets``
-    (band_id, sig, n_members).
+    Bucket membership is capped (``cap_blocks``); each bucket over the
+    cap is reported in ``result.dropped_blocks`` (band_id, sig,
+    n_members).
 
     A null or wrong-length vector raises ``ValueError`` in the Python
     worker at the action; the caller gets it as
@@ -548,7 +555,7 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
     # same keys, so it reuses this exchange and adds none
     banded, dropped = cap_blocks(
         it.mapInArrow(sig_batches, banded_schema)
-        .repartition("band_id", "sig"), ["band_id", "sig"], max_bucket)
+        .repartition("band_id", "sig"), ["band_id", "sig"])
 
     pair_schema = StructType([
         StructField("id_a", id_type, True),
@@ -607,5 +614,5 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
 
     cand = banded.mapInArrow(pair_batches, pair_schema)
     out = cand.dropDuplicates(["id_a", "id_b"])
-    out.dropped_buckets = dropped
+    out.dropped_blocks = dropped
     return out

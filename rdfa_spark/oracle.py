@@ -430,7 +430,8 @@ FROM verified WHERE jaccard >= 0.5
 # SimHash near-dup end-to-end over the dup corpus: 64-bit signatures
 # (same md5 bit votes as SIMHASH_SIGNATURE_SQL), pigeonhole 16-bit
 # word blocking, Hamming verification on candidates only — mirror of
-# pipeline.dedup.simhash_near_dup_pairs(max_hamming, block_bits=16).
+# pipeline.dedup.simhash_near_dup_pairs(max_hamming), whose
+# BLOCK_BITS is the same 16.
 def _dedup_simhash_sql(max_hamming: int = 8) -> str:
     ham = ("len(list_filter(range(0, 64), "
            "i -> substr(sa, CAST(i + 1 AS INTEGER), 1) <> "

@@ -1,6 +1,5 @@
 from .cc import (connected_components,  # noqa: F401
-                 connected_components_salted, salt_hot_nodes,
-                 strip_salt)
+                 connected_components_salted)
 from .dedup import (dedup_exact, exact_duplicate_groups,  # noqa: F401
                     minhash_dedup_pairs, simhash64,
                     simhash_near_dup_pairs)

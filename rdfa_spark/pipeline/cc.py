@@ -11,16 +11,16 @@ Scale notes:
 * node ids are strings (urls / mention IRIs) — no lossy 64-bit
   hashing of node ids, so no collision risk at 10^12 nodes;
 * each round is one shuffle on the node key; AQE skew-join handles
-  hot components, and `salt_hot_keys` pre-splits the giant-component
-  star pattern that AQE can't fix inside an iterative loop
-  (SURVEY.md §4);
+  hot components, and ``connected_components_salted`` pre-splits the
+  giant-component star pattern that AQE can't fix inside an
+  iterative loop (SURVEY.md §4);
 * checkpointing every round cuts the lineage chain so round N's
   plan doesn't replay rounds 1..N-1.  ``reliable=False`` (default,
   sandbox/local) uses ``localCheckpoint`` — executor-memory-resident,
   lost on executor failure; on a real cluster with dynamic allocation
   pass ``reliable=True`` (requires ``sc.setCheckpointDir``) so rounds
   persist to reliable storage and survive executor loss;
-* a graph at or under ``local_finish_edges`` costs one bounded
+* a graph at or under ``LOCAL_FINISH_EDGES`` costs one bounded
   collect after the canonical-edge checkpoint (the size check and
   the local finish's input in one action), and its labeling comes
   back as a driver-local frame.
@@ -31,6 +31,11 @@ from __future__ import annotations
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Star rounds before the loop stops (chains converge in O(log n)).
+MAX_ROUNDS = 30
+# Edge count at or under which the contraction finishes driver-side.
+LOCAL_FINISH_EDGES = 100_000
 
 
 def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -100,7 +105,7 @@ def _local_finish(spark, rows) -> DataFrame:
     long before that point the edge set is tiny relative to the
     cluster, and each additional round costs a full scheduling +
     checkpoint cycle to move ever less data.  ``rows`` holds at most
-    ``local_finish_edges`` (a, b) edges (two short strings each),
+    ``LOCAL_FINISH_EDGES`` (a, b) edges (two short strings each),
     NOT the input size.
 
     The labeling goes back as a driver-local frame built from an
@@ -139,43 +144,37 @@ def _local_finish(spark, rows) -> DataFrame:
 
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst",
-                         max_iter: int = 30,
-                         reliable: bool = False,
-                         local_finish_edges: int = 100_000
-                         ) -> DataFrame:
+                         reliable: bool = False) -> DataFrame:
     """-> (node, component) where component = min node id (string
     order) in the node's connected component.
 
     Isolated nodes (no edges) are not returned; union them in from
     the node table with component = node if needed.
 
-    ``local_finish_edges`` enables the two-phase design: whenever the
-    current (canonicalized, deduped) edge count is at or under the
-    threshold, the remaining contraction runs driver-side
-    (``_local_finish`` — bounded collect + union-find, identical
-    output).  On the input graph one bounded collect of at most
-    ``local_finish_edges + 1`` edges is both the size check and the
-    local finish's input; between star rounds the round's fingerprint
-    gives the count.  0 disables (pure distributed loop, e.g. for the
-    A/B property tests).
+    Two phases: whenever the current (canonicalized, deduped) edge
+    count is at or under ``LOCAL_FINISH_EDGES``, the remaining
+    contraction runs driver-side (``_local_finish`` — bounded
+    collect + union-find, identical output).  On the input graph one
+    bounded collect of at most ``LOCAL_FINISH_EDGES + 1`` edges is
+    both the size check and the local finish's input (an empty graph
+    returns from it); between star rounds the round's fingerprint
+    gives the count.  Both constants are read at call time; tests
+    patch ``LOCAL_FINISH_EDGES`` to 0 to run the star loop alone.
     """
     spark = edges.sparkSession
     e = _checkpoint(_canon_edges(edges, src, dst), reliable)
-    if local_finish_edges > 0:
-        rows = e.limit(local_finish_edges + 1).collect()
-        if len(rows) <= local_finish_edges:
-            return _local_finish(spark, rows)
+    rows = e.limit(LOCAL_FINISH_EDGES + 1).collect()
+    if len(rows) <= LOCAL_FINISH_EDGES:
+        return _local_finish(spark, rows)
     prev = _fingerprint(e)
-    if prev[0] == 0:
-        return _local_finish(spark, [])
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # the per-round checkpoint keeps every round's plan
         # constant-size (each star reads its input twice)
         e = _checkpoint(_small_star(_large_star(e)), reliable)
         cur = _fingerprint(e)
         if cur == prev:
             break
-        if 0 < cur[0] <= local_finish_edges:
+        if 0 < cur[0] <= LOCAL_FINISH_EDGES:
             return _local_finish(spark, e.collect())
         prev = cur
     # converged: every edge is (node -> component representative)
@@ -189,35 +188,18 @@ def connected_components(edges: DataFrame, src: str = "src",
 SALT_MARKER = "￿#salt#"
 
 
-def salt_hot_nodes(edges: DataFrame, max_degree: int = 100_000,
-                   n_salts: int = 16, src: str = "src",
-                   dst: str = "dst") -> DataFrame:
+def _salt_canonical(e: DataFrame, max_degree: int,
+                    n_salts: int) -> DataFrame:
     """Explicit skew salting for the iterative CC loop (north_rule;
-    AQE can't re-plan inside an iteration — SURVEY.md §4).
+    AQE can't re-plan inside an iteration — SURVEY.md §4), over an
+    already-canonicalized edge set (``_canon_edges`` output).
 
     Nodes whose degree exceeds ``max_degree`` are split into
     ``n_salts`` replicas: each incident edge is rewired to the
     replica chosen by the *other* endpoint's hash, and replicas are
     chained back to the original node so connectivity is preserved.
     Replica names sort ABOVE every real node (marker = U+FFFF), so a
-    replica can never become a component representative; drop them
-    from the final labeling with ``strip_salt``.
-    """
-    return _salt_canonical(_canon_edges(edges, src, dst),
-                           max_degree, n_salts)
-
-
-def _salt_canonical(e: DataFrame, max_degree: int,
-                    n_salts: int) -> DataFrame:
-    """``salt_hot_nodes`` body over an already-canonicalized edge set
-    (``_canon_edges`` output).  Split out so callers can checkpoint
-    the canonical edges ONCE and have the degree aggregation, the two
-    hot-node broadcast builds and the rewire pass all read the
-    materialized set — un-checkpointed, each of those independent
-    jobs re-executes the full upstream DAG (for
-    ``connected_components_salted`` that meant ~3 extra passes over
-    the raw-edge lineage: one per broadcast build plus the main
-    pass)."""
+    replica can never become a component representative."""
     degrees = (e.select(F.col("a").alias("node"))
                .union(e.select(F.col("b").alias("node")))
                .groupBy("node").agg(F.count("*").alias("deg")))
@@ -252,18 +234,13 @@ def _salt_canonical(e: DataFrame, max_degree: int,
     return e2.union(chains)
 
 
-def strip_salt(labels: DataFrame) -> DataFrame:
-    """Drop salt-replica rows from a (node, component) labeling."""
-    return labels.filter(~F.col("node").contains(SALT_MARKER))
-
-
 def connected_components_salted(edges: DataFrame, src: str = "src",
                                 dst: str = "dst",
                                 max_degree: int = 100_000,
                                 n_salts: int = 16,
-                                max_iter: int = 30,
                                 reliable: bool = False) -> DataFrame:
-    """CC with explicit hot-key salting applied up front.
+    """CC with explicit hot-key salting (``_salt_canonical``) applied
+    up front; the salt replicas are dropped from the labeling.
 
     The canonical edge set is checkpointed before salting: the
     salting stage launches several independent jobs over it (degree
@@ -273,5 +250,5 @@ def connected_components_salted(edges: DataFrame, src: str = "src",
     then fan out)."""
     e = _checkpoint(_canon_edges(edges, src, dst), reliable)
     salted = _salt_canonical(e, max_degree, n_salts)
-    return strip_salt(
-        connected_components(salted, "a", "b", max_iter, reliable))
+    return (connected_components(salted, "a", "b", reliable)
+            .filter(~F.col("node").contains(SALT_MARKER)))

@@ -48,7 +48,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     (localCheckpoint — at cluster scale, the persisted signature
     table).  Jaccard is a set computation (array_intersect /
     array_union sizes), so the kernel's shingle order does not matter.
-    ``result.dropped_buckets`` is the LSH candidates' bucket-cap
+    ``result.dropped_blocks`` is the LSH candidates' bucket-cap
     report (``cap_blocks``).
     """
     sig_sh = minhash_signatures(df, id_col, text_col, n, num_hashes,
@@ -64,7 +64,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     union = F.size(F.array_union("sh_a", "sh_b"))
     out = (pairs.select("id_a", "id_b", (inter / union).alias("jaccard"))
            .filter(F.col("jaccard") >= jaccard_threshold))
-    out.dropped_buckets = cands.dropped_buckets
+    out.dropped_blocks = cands.dropped_blocks
     return out
 
 
@@ -101,31 +101,32 @@ def simhash64(df: DataFrame, id_col: str, text_col: str,
     return df.withColumn(out, bits)
 
 
+# SimHash blocking word width: 4 words of the 64-bit signature (the
+# DuckDB oracle hard-codes the same 16).
+BLOCK_BITS = 16
+
+
 def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
-                           max_hamming: int = 3,
-                           block_bits: int = 16,
-                           max_block: int = 10_000) -> DataFrame:
+                           max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup: block on each 16-bit word of the signature (a
     pair within Hamming distance 3 must agree on at least one of 4
     words — pigeonhole), then verify Hamming distance on candidates
     only.  Join is an equi-join on (word_id, word) — shuffled hash
     join with AQE skew handling.
 
-    ``max_block`` caps word-block membership (``cap_blocks``;
-    identical-content clusters share every block).
-    ``result.dropped_blocks`` is (word_id, word, n_members) for every
-    block over the cap."""
+    Word-block membership is capped (``cap_blocks``; identical-content
+    clusters share every block).  ``result.dropped_blocks`` is
+    (word_id, word, n_members) for every block over the cap."""
     sh = simhash64(df, id_col, text_col).select(id_col, "simhash")
-    n_words = 64 // block_bits
+    n_words = 64 // BLOCK_BITS
     words = F.expr(
         f"transform(sequence(0, {n_words - 1}), w -> struct("
-        f"w as word_id, substring(simhash, w * {block_bits} + 1, "
-        f"{block_bits}) as word))")
+        f"w as word_id, substring(simhash, w * {BLOCK_BITS} + 1, "
+        f"{BLOCK_BITS}) as word))")
     blocked = sh.select(id_col, "simhash",
                         F.explode(words).alias("b")) \
                 .select(id_col, "simhash", "b.word_id", "b.word")
-    blocked, dropped = cap_blocks(blocked, ["word_id", "word"],
-                                  max_block)
+    blocked, dropped = cap_blocks(blocked, ["word_id", "word"])
     a, b = blocked.alias("a"), blocked.alias("b")
     cand = (a.join(b, ["word_id", "word"])
             .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -146,8 +147,8 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
 def filter_corpus(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text",
                   min_score_pm: int = 500,
-                  languages: tuple[str, ...] | None = None,
-                  dedup: bool = True) -> DataFrame:
+                  languages: tuple[str, ...] | None = None
+                  ) -> DataFrame:
     """Composed training-corpus filter: quality gate -> language
     allowlist -> exact dedup, as one DataFrame pipeline.
 
@@ -168,6 +169,4 @@ def filter_corpus(df: DataFrame, id_col: str = "doc_id",
     if languages is not None:
         kept = (with_language_id(kept, text_col)
                 .filter(F.col("lang_pred").isin(*languages)))
-    if dedup:
-        kept = dedup_exact(kept, id_col, text_col)
-    return kept
+    return dedup_exact(kept, id_col, text_col)

@@ -20,22 +20,21 @@ from pyspark.sql import functions as F
 
 from ..functions.similarity import _typed_batch, cap_blocks
 
-SCHEMA_NS = "http://schema.org/"
+# The predicate whose objects are an entity's surface labels.
+NAME_PRED = "http://schema.org/name"
 
 
-def entity_mentions(triples: DataFrame,
-                    name_pred: str = SCHEMA_NS + "name") -> DataFrame:
+def entity_mentions(triples: DataFrame) -> DataFrame:
     """Mention table from the extracted KG: (mention IRI, surface
     label, normalized blocking key)."""
-    return (triples.filter(F.col("pred") == name_pred)
+    return (triples.filter(F.col("pred") == NAME_PRED)
             .select(F.col("subj").alias("mention"),
                     F.col("obj").alias("label"),
                     F.regexp_replace(F.lower("obj"), "[^a-z0-9]", "")
                      .alias("entity_key")))
 
 
-def exact_candidate_pairs(mentions: DataFrame,
-                          max_block: int = 10_000) -> DataFrame:
+def exact_candidate_pairs(mentions: DataFrame) -> DataFrame:
     """Blocking on the normalized key: distinct label pairs that share
     a key (self-join; the small side of each block stays in-block so
     the join never fans out beyond block sizes).
@@ -45,8 +44,7 @@ def exact_candidate_pairs(mentions: DataFrame,
       label to ``''`` — those labels would all share ONE block and the
       self-join would go quadratic on a single hot key, so the empty
       and null keys never pair, whatever their block size;
-    * ``max_block`` caps the number of distinct labels per block
-      (``cap_blocks``).
+    * ``cap_blocks`` caps the number of distinct labels per block.
 
     ``result.dropped_blocks`` is (entity_key, n_members) for every
     block left out: the empty and null keys and each block over the
@@ -54,11 +52,10 @@ def exact_candidate_pairs(mentions: DataFrame,
     blocks on content shingles instead.
     """
     labels = mentions.select("entity_key", "label").distinct()
-    # a cap of 0 reports the empty and null keys (``'' != ''`` is
-    # false, ``NULL != ''`` is null: both take the otherwise branch)
-    labels, dropped = cap_blocks(
-        labels, ["entity_key"],
-        F.when(F.col("entity_key") != "", max_block).otherwise(0))
+    # the empty and null keys fail ``pairable`` (``'' != ''`` is
+    # false, ``NULL != ''`` is null), so they are always reported
+    labels, dropped = cap_blocks(labels, ["entity_key"],
+                                 F.col("entity_key") != "")
     # filtering those keys by name lets Catalyst push the filter below
     # the window and the distinct, so the hot empty key is never
     # shuffled into one window task
@@ -167,19 +164,18 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
                         text_col: str, n: int = 3,
                         num_hashes: int = 32,
                         bands: int = 8,
-                        max_bucket: int = 10_000,
                         sig: DataFrame | None = None) -> DataFrame:
     """MinHash-LSH near-duplicate candidates: shingle -> minhash ->
     band -> bucket equi-join.  rows/bands = num_hashes // bands
     signatures per band; a pair collides if any band matches.
 
-    ``max_bucket`` caps band-bucket membership (``cap_blocks``): a
-    cluster of K byte-identical documents shares EVERY band bucket —
-    at crawl scale boilerplate clusters reach millions — while a
-    cap-sized bucket still admits ~5·10⁷ pairs, far above any honest
-    near-dup cluster.  Run exact dedup (``exact_duplicate_groups``)
-    first.  ``result.dropped_buckets`` is (band_id, band_hash,
-    n_members) for every bucket over the cap.
+    Band-bucket membership is capped (``cap_blocks``): a cluster of K
+    byte-identical documents shares EVERY band bucket — at crawl
+    scale boilerplate clusters reach millions — while a cap-sized
+    bucket still admits ~5·10⁷ pairs, far above any honest near-dup
+    cluster.  Run exact dedup (``exact_duplicate_groups``) first.
+    ``result.dropped_blocks`` is (band_id, band_hash, n_members) for
+    every bucket over the cap.
 
     ``sig`` optionally supplies a precomputed (id, minhash) signature
     frame (e.g. the shared signature+shingle table of
@@ -202,14 +198,14 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
     # recompute the whole minhash pipeline on both sides (at cluster
     # scale this is a persisted signatures table)
     banded, dropped = cap_blocks(banded.localCheckpoint(eager=False),
-                                 ["band_id", "band_hash"], max_bucket)
+                                 ["band_id", "band_hash"])
     a, b = banded.alias("a"), banded.alias("b")
     out = (a.join(b, ["band_id", "band_hash"])
            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
            .select(F.col(f"a.{id_col}").alias("id_a"),
                    F.col(f"b.{id_col}").alias("id_b"))
            .distinct())
-    out.dropped_buckets = dropped
+    out.dropped_blocks = dropped
     return out
 
 

@@ -123,13 +123,11 @@ class ResumableExtraction:
          .write.mode("append").parquet(self.ledger_dir))
 
     # -- run ----------------------------------------------------------
-    def run(self, pages: DataFrame, max_batches: int | None = None) -> int:
+    def run(self, pages: DataFrame) -> int:
         """Process unfinished batches; returns #batches completed in
         this call.  Safe to call repeatedly (resume)."""
         done = self.processed_batches()
         todo = [b for b in range(self.n_batches) if b not in done]
-        if max_batches is not None:
-            todo = todo[:max_batches]
         staged = pages.withColumn("_batch", F.pmod(
             F.xxhash64("url"), F.lit(self.n_batches)).cast("int"))
         for b in todo:
@@ -138,19 +136,22 @@ class ResumableExtraction:
             # (three dedicated extractors would parse the HTML 3x)
             extracted = extract_all(staged.filter(F.col("_batch") == b))
             extracted.persist()
-            triples, errors, _ = split_extracts(extracted)
-            batch = F.lit(b).alias("batch")
-            # the kernel's per-page x row already holds the counts
-            lineage = (extracted.filter(F.col("kind") == "x")
-                       .select("url", F.col("n_triples").cast("long"),
-                               F.col("n_subjects").cast("long"), batch))
-            _write_batch(_bucketed(triples.select("*", batch),
-                                   self.n_buckets, "batch"),
-                         self.triples_dir, "subj_bucket")
-            _write_batch(errors.select("*", batch), self.errors_dir)
-            _write_batch(lineage, self.lineage_dir)
-            self._commit(b)
-            extracted.unpersist()
+            try:
+                triples, errors, _ = split_extracts(extracted)
+                batch = F.lit(b).alias("batch")
+                # the kernel's per-page x row already holds the counts
+                lineage = (extracted.filter(F.col("kind") == "x")
+                           .select("url", F.col("n_triples").cast("long"),
+                                   F.col("n_subjects").cast("long"),
+                                   batch))
+                _write_batch(_bucketed(triples.select("*", batch),
+                                       self.n_buckets, "batch"),
+                             self.triples_dir, "subj_bucket")
+                _write_batch(errors.select("*", batch), self.errors_dir)
+                _write_batch(lineage, self.lineage_dir)
+                self._commit(b)
+            finally:    # a failed write must not leave the cache behind
+                extracted.unpersist()
         return len(todo)
 
     def _read(self, path: str, schema: StructType | str) -> DataFrame:

@@ -1,5 +1,7 @@
-"""Structured Streaming operators (incremental crawl extraction,
-stateful sessionization).
+"""Structured Streaming operators: stateful sessionization
+(``stateful``).  Incremental crawl extraction needs no module of its
+own: ``extract.extract_triples`` runs unchanged on a streaming pages
+frame.
 
 This __init__ is load-bearing: workers import the package from the
 shipped dist/rdfa_spark.zip (addPyFile), and zipimport does NOT

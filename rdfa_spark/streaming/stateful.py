@@ -85,16 +85,16 @@ def _sessionize(key, pdfs: Iterator[pd.DataFrame],
         yield pd.DataFrame(out)
 
 
-def sessionize_stream(events: DataFrame,
-                      watermark: str = "30 minutes") -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """events(user_id, event_id, ts) stream -> finalized sessions.
 
     The shuffle is one hash partitioning on user_id (the state key);
     state size is O(active users), bounded by the event-time timeout.
+    The watermark delay is the session gap.
     """
     ev = (events
           .withColumn("ts", F.col("ts").cast("timestamp"))
-          .withWatermark("ts", watermark)
+          .withWatermark("ts", f"{GAP_SEC} seconds")
           .select("user_id",
                   F.col("ts").cast("long").alias("sec"), "ts"))
     return (ev.groupBy("user_id")

@@ -250,9 +250,11 @@ def test_embedding_near_dup_pairs_self_consistency(spark, emb, sf_dir):
     assert len(got) == pairs.count()
 
 
-def test_embedding_near_dup_bucket_cap(spark):
-    """max_bucket drops mass-duplicate buckets: a skewed corpus of one
-    repeated vector stays bounded instead of emitting ~N²/2 pairs."""
+def test_embedding_near_dup_bucket_cap(spark, monkeypatch):
+    """The block cap drops mass-duplicate buckets: a skewed corpus of
+    one repeated vector stays bounded instead of emitting ~N²/2
+    pairs."""
+    from rdfa_spark.functions import similarity
     import numpy as np
     rng = np.random.default_rng(7)
     hot = [float(x) for x in rng.normal(size=8)]
@@ -260,24 +262,26 @@ def test_embedding_near_dup_bucket_cap(spark):
             + [(1000 + i, [float(x) for x in rng.normal(size=8)])
                for i in range(20)])
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    monkeypatch.setattr(similarity, "BLOCK_CAP", 50)
     capped = embedding_near_dup_pairs(df, threshold=0.999, bands=2,
-                                      planes_per_band=4, max_bucket=50,
-                                      dim=8)
+                                      planes_per_band=4, dim=8)
     # the 100-member hot bucket exceeds the cap in every band -> gone
     assert capped.filter(F.col("id_a") < 1000).count() == 0
+    monkeypatch.undo()
     uncapped = embedding_near_dup_pairs(df, threshold=0.999, bands=2,
                                         planes_per_band=4, dim=8)
     assert uncapped.filter(F.col("id_a") < 1000).count() == 100 * 99 // 2
 
 
-@pytest.mark.parametrize("max_bucket", [10_000], ids=["capped"])
-def test_embedding_near_dup_one_bucket_exchange(spark, emb, max_bucket):
+# one variant since the cap is always on (``BLOCK_CAP``); the id names it
+@pytest.mark.parametrize("variant", ["capped"])
+def test_embedding_near_dup_one_bucket_exchange(spark, emb, variant):
     """The pair kernel scores whole buckets, so exactly one
     hash-partitioning by (band_id, sig) sits between the signature
     kernel and the pair kernel (the cap window reuses it)."""
     import re
     plan = embedding_near_dup_pairs(
-        emb, bands=2, planes_per_band=4, max_bucket=max_bucket,
+        emb, bands=2, planes_per_band=4,
         dim=64)._jdf.queryExecution().executedPlan().toString()
     ex = [m.start() for m in re.finditer(
         r"Exchange hashpartitioning\(band_id#\d+, sig#\d+,", plan)]

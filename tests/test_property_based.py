@@ -15,6 +15,8 @@ Three classes of evidence the example-based suites can't give:
 
 from __future__ import annotations
 
+from unittest.mock import patch
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -64,18 +66,19 @@ class TestCCProperties:
     @given(edges=edge_lists)
     def test_star_cc_matches_union_find(self, spark, edges):
         """Both phases: the distributed star loop
-        (local_finish_edges=0) and the default two-phase path (which
-        takes the local finish on graphs this small) must equal the
-        exact union-find."""
+        (``LOCAL_FINISH_EDGES = 0``) and the default two-phase path
+        (which takes the local finish on graphs this small) must equal
+        the exact union-find."""
+        from rdfa_spark.pipeline import cc
         from rdfa_spark.pipeline.cc import connected_components
         pairs = [(str(a), str(b)) for a, b in edges if a != b]
         if not pairs:
             return
         want = _union_find(pairs)
         df = spark.createDataFrame(pairs, ["src", "dst"])
-        got_star = {r.node: r.component
-                    for r in connected_components(
-                        df, local_finish_edges=0).collect()}
+        with patch.object(cc, "LOCAL_FINISH_EDGES", 0):
+            got_star = {r.node: r.component
+                        for r in connected_components(df).collect()}
         assert got_star == want
         got_local = {r.node: r.component
                      for r in connected_components(df).collect()}
@@ -161,13 +164,14 @@ def test_cc_local_finish_mid_contraction(spark):
     partially contracted the graph: the local finish must be correct
     on any intermediate (connectivity-equivalent) edge set, not just
     on raw input."""
+    from rdfa_spark.pipeline import cc
     from rdfa_spark.pipeline.cc import connected_components
 
     pairs = [(str(i).zfill(3), str(i + 1).zfill(3))
              for i in range(40) if (i + 1) % 20 != 0]
     want = _union_find(pairs)
     df = spark.createDataFrame(pairs, ["src", "dst"])
-    got = {r.node: r.component
-           for r in connected_components(
-               df, local_finish_edges=15).collect()}
+    with patch.object(cc, "LOCAL_FINISH_EDGES", 15):
+        got = {r.node: r.component
+               for r in connected_components(df).collect()}
     assert got == want

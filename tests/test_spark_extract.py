@@ -185,41 +185,6 @@ def test_errors_text_plan_arrow_no_shuffle(spark, sf_dir, extractor):
     assert "MapInPandas" not in plan and "Exchange" not in plan
 
 
-def test_extract_all_parse_failure_lands_in_errors(spark):
-    """A page whose parse raises must surface as a parse-failed error
-    row, never vanish (VERDICT r1 'what's wrong' #4)."""
-    from rdfa_spark.extract import extract_all, split_extracts
-
-    class _BrokenConfig:  # attribute access inside parse_rdfa raises
-        __getattr__ = None
-
-    rows = [("http://ex.com/x", b"<html><body>hi</body></html>")]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    _, errors, _ = split_extracts(extract_all(df, _BrokenConfig()))
-    got = errors.collect()
-    assert len(got) == 1
-    assert got[0].code == "parse-failed" and got[0].level == "error"
-    assert got[0].url == "http://ex.com/x"
-
-
-def test_extract_triples_parse_failure_counted(spark):
-    """The triples-only fast path can't carry error rows, but failed
-    pages must still be measurable: the parse_failures accumulator
-    counts them (VERDICT r2 'what's wrong' #1 — no silent drops on
-    any path)."""
-    from rdfa_spark.extract import extract_triples
-
-    class _BrokenConfig:  # attribute access inside parse_rdfa raises
-        __getattr__ = None
-
-    rows = [("http://ex.com/x", b"<html><body>hi</body></html>"),
-            ("http://ex.com/y", b"<html><body>yo</body></html>")]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    out = extract_triples(df, _BrokenConfig())
-    assert out.count() == 0               # nothing parseable
-    assert out.parse_failures.value == 2  # ...and nothing silent
-
-
 def test_failure_and_null_rows_per_extractor(spark):
     """One batch holding a page whose parse raises, a null-html row
     and a good page, through all four extractors: the failing page
@@ -295,7 +260,7 @@ def test_arrow_batches_chunked_by_bytes(monkeypatch, kinds, schema_name,
         names=["url", "html"])
 
     def run():
-        outs = list(ex._walk_pages(iter([rb]), None, kinds, schema))
+        outs = list(ex._walk_pages(iter([rb]), kinds, schema))
         assert all(b.schema.names == schema.fieldNames() for b in outs)
         got = sorted(tuple(map(str, r))
                      for b in outs
