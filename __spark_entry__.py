@@ -155,19 +155,19 @@ def q_rdfa_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 model sink as a GRADED query: extract -> subject-bucketed
-    parquet write -> read back, checked against the SAME triples
-    oracle — the persistence layer must be lossless (types, NULLs,
-    unicode) and the oracle proves it end-to-end."""
+    """S6 model sink as a GRADED query: the KG pipeline's own store
+    (``ResumableExtraction``, one batch) written and read back, checked
+    against the SAME triples oracle — the persistence layer must be
+    lossless (types, NULLs, unicode) and the oracle proves it end-to-end."""
     import shutil
     import tempfile
 
-    from rdfa_spark.pipeline.materialize import write_triples
+    from rdfa_spark.pipeline.materialize import ResumableExtraction
 
     out = tempfile.mkdtemp(prefix="model_sink_")
-    shutil.rmtree(out, ignore_errors=True)
-    write_triples(_triples(spark, sf_dir), out, mode="overwrite")
-    back = spark.read.parquet(out).select(
+    run = ResumableExtraction(spark, out, n_batches=1)
+    run.run(load_pages(spark, sf_dir))
+    back = run.triples().select(
         "url", "subj", "pred", "obj", "obj_is_literal",
         "obj_datatype", "obj_lang").localCheckpoint(eager=True)
     shutil.rmtree(out, ignore_errors=True)  # rows live in the

@@ -6,5 +6,5 @@ from .dedup import (dedup_exact, exact_duplicate_groups,  # noqa: F401
 from .linking import (canonicalize, entity_mentions,  # noqa: F401
                       exact_candidate_pairs, lsh_candidate_pairs,
                       minhash_signatures)
-from .materialize import ResumableExtraction, write_triples  # noqa: F401
+from .materialize import ResumableExtraction  # noqa: F401
 from .build import KGReport, build_kg  # noqa: F401

@@ -2,7 +2,9 @@
 per-partition lineage and checkpointed, resumable runs.
 
 north_rule: "materialize subject-partitioned triple/edge tables with
-per-partition lineage and checkpointed resume".  The sandbox has no
+per-partition lineage and checkpointed resume".  ``ResumableExtraction``
+is the store's one writer and reader (the KG build, the pipeline
+script and the graded ``model_roundtrip`` query).  The sandbox has no
 Iceberg catalog jars, so the table layout is plain parquet with an
 explicit ``subj_bucket`` partition column — the same physical layout
 ``writeTo(...).partitionedBy(bucket(N, "subj"))`` produces on an
@@ -14,12 +16,11 @@ per url — rdfa_spark/extract.py):
 * per-batch writes land in ``batch=<k>`` subdirectories, so a batch
   that died mid-write is re-written wholesale (rename-free object
   stores: the batch dir is the commit unit);
-* after a batch's data has landed, one (url NULL, n_triples 0, batch)
-  marker row is appended to the ``_processed_urls`` ledger — the
-  commit record, present even for a batch with zero triples.  A
-  restarted run skips the batches the ledger names.  Older stores
-  also hold per-url ledger rows; ``processed_batches`` reads only
-  ``batch``, so they resume the same way.
+* after a batch's data has landed, one ``(batch)`` row is appended to
+  the ``_processed_urls`` ledger — the commit record, present even for
+  a batch with zero triples.  A restarted run skips the batches the
+  ledger names.  Older ledgers also hold (url, n_triples, batch) rows;
+  ``LEDGER_SCHEMA`` reads only ``batch``, so they resume the same way.
 
 Lineage: one (url, n_triples, n_subjects, batch) row per parsed page,
 projected from the extraction kernel's per-page ``x`` row (no
@@ -40,6 +41,10 @@ from pyspark.sql.types import StructType
 from ..extract import (ERROR_SCHEMA, TRIPLE_SCHEMA, extract_all,
                        split_extracts)
 
+# Subject buckets make subject-keyed reads and subject-subject joins
+# partition-prunable / co-located (S6).  Size them to the corpus:
+# total_triple_bytes / target_file_size (64 fits the test SFs; a
+# 100 TB corpus wants tens of thousands).
 N_BUCKETS_DEFAULT = 64
 
 # Read schemas (columns, then partition columns): they skip parquet
@@ -49,35 +54,23 @@ STORED_TRIPLE_SCHEMA = StructType([*TRIPLE_SCHEMA.fields]).add(
     "batch", "integer").add("subj_bucket", "integer")
 STORED_ERROR_SCHEMA = StructType([*ERROR_SCHEMA.fields]).add(
     "batch", "integer")
-LEDGER_SCHEMA = "url string, n_triples long, batch int"
+LEDGER_SCHEMA = "batch int"
 LINEAGE_SCHEMA = "url string, n_triples long, n_subjects long, batch int"
 
 
-def _bucketed(triples: DataFrame, n_buckets: int,
-              *lead: str) -> DataFrame:
+def _bucketed(triples: DataFrame, n_buckets: int) -> DataFrame:
     """One writer task per subject bucket (without the repartition
     every upstream task writes a file per bucket it holds: tasks x
     buckets small files, measured 27 s at sf0.1 and a metadata
-    catastrophe at 100 TB), rows sorted by (``lead``, subj_bucket,
-    subj).  Leading with the partition columns satisfies the
-    dynamic-partition writer's required ordering, which otherwise
-    inserts a SECOND sort that discards the subj clustering the
-    parquet min/max pruning of subject-point reads rests on."""
+    catastrophe at 100 TB), rows sorted by (batch, subj_bucket, subj).
+    Leading with the partition columns satisfies the dynamic-partition
+    writer's required ordering, which otherwise inserts a SECOND sort
+    that discards the subj clustering the parquet min/max pruning of
+    subject-point reads rests on."""
     bucket = F.pmod(F.xxhash64("subj"), F.lit(n_buckets)).cast("int")
     return (triples.withColumn("subj_bucket", bucket)
             .repartition(n_buckets, F.col("subj_bucket"))
-            .sortWithinPartitions(*lead, "subj_bucket", "subj"))
-
-
-def write_triples(triples: DataFrame, path: str,
-                  n_buckets: int = N_BUCKETS_DEFAULT,
-                  mode: str = "append") -> None:
-    """Subject-bucketed write (S6): subject-keyed reads and
-    subject-subject joins become partition-prunable / co-located.
-    Size ``n_buckets`` to the corpus: total_triple_bytes /
-    target_file_size (64 fits the test SFs; a 100 TB corpus wants
-    tens of thousands)."""
-    _bucketed(triples, n_buckets).write.parquet(path, mode, "subj_bucket")
+            .sortWithinPartitions("batch", "subj_bucket", "subj"))
 
 
 def _write_batch(df: DataFrame, path: str, *partition_cols: str) -> None:
@@ -116,10 +109,8 @@ class ResumableExtraction:
 
     def _commit(self, b: int) -> None:
         """Append batch b's marker, once the batch's data has landed."""
-        (self.spark.range(0, 1, 1, 1).select(
-            F.lit(None).cast("string").alias("url"),
-            F.lit(0).cast("long").alias("n_triples"),
-            F.lit(b).cast("int").alias("batch"))
+        (self.spark.range(0, 1, 1, 1)
+         .select(F.lit(b).cast("int").alias("batch"))
          .write.mode("append").parquet(self.ledger_dir))
 
     # -- run ----------------------------------------------------------
@@ -145,7 +136,7 @@ class ResumableExtraction:
                                    F.col("n_subjects").cast("long"),
                                    batch))
                 _write_batch(_bucketed(triples.select("*", batch),
-                                       self.n_buckets, "batch"),
+                                       self.n_buckets),
                              self.triples_dir, "subj_bucket")
                 _write_batch(errors.select("*", batch), self.errors_dir)
                 _write_batch(lineage, self.lineage_dir)

@@ -14,7 +14,9 @@ from rdfa_spark.functions.text import (with_fingerprint,
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_cosine_topk_deterministic(spark, emb):

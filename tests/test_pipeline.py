@@ -135,7 +135,9 @@ def test_canonicalize_joins_driver_local_components(spark):
 
 @pytest.fixture(scope="module")
 def triples(spark, sf_dir):
-    return extract_triples(load_pages(spark, sf_dir)).cache()
+    df = extract_triples(load_pages(spark, sf_dir)).cache()
+    yield df
+    df.unpersist()
 
 
 def test_entity_linking_canonicalization(spark, triples):
@@ -258,10 +260,10 @@ def test_resumable_materialization(spark, sf_dir, tmp_path, monkeypatch):
     assert lin.agg(F.sum("n_triples")).first()[0] == total
     # subject bucketing present
     assert "subj_bucket" in run.triples().columns
-    # the ledger holds only the commit marker: one NULL-url row per batch
-    ledger = spark.read.parquet(f"{out}/_processed_urls").collect()
-    assert sorted(r.batch for r in ledger) == [0, 1, 2, 3]
-    assert all(r.url is None and r.n_triples == 0 for r in ledger)
+    # the ledger holds only the commit marker: one (batch) row per batch
+    ledger = spark.read.parquet(f"{out}/_processed_urls")
+    assert ledger.columns == ["batch"]
+    assert sorted(r.batch for r in ledger.collect()) == [0, 1, 2, 3]
 
 
 def test_failed_batch_leaves_no_cache(spark, sf_dir, tmp_path,
@@ -306,6 +308,29 @@ def test_resume_reads_per_url_ledger(spark, tmp_path):
     run = ResumableExtraction(spark, out, n_batches=2)
     assert run.processed_batches() == {0, 1}
     assert run.run(pages) == 0
+
+
+def test_resume_appends_to_old_layout_ledger(spark, tmp_path):
+    """An old-layout ledger (per-url rows plus NULL-url markers for
+    batches 0 and 1) resumes the batch it lacks and gains a one-column
+    marker for it; ``LEDGER_SCHEMA`` reads both file shapes."""
+    pages = spark.createDataFrame(PLAIN_PAGES, ["url", "html"])
+    run = ResumableExtraction(spark, str(tmp_path / "kg_mixed"),
+                              n_batches=3)
+    spark.createDataFrame(
+        [(f"http://ex.com/{i}", 3, i % 2) for i in range(8)]
+        + [(None, 0, 0), (None, 0, 1)],
+        "url string, n_triples long, batch int") \
+        .write.parquet(run.ledger_dir)
+    assert run.run(pages) == 1
+    assert run.processed_batches() == {0, 1, 2}
+    assert run.run(pages) == 0
+    files = [os.path.join(run.ledger_dir, f)
+             for f in os.listdir(run.ledger_dir) if f.endswith(".parquet")]
+    assert {tuple(spark.read.parquet(f).columns) for f in files} == {
+        ("url", "n_triples", "batch"), ("batch",)}
+    ledger = spark.read.schema(LEDGER_SCHEMA).parquet(run.ledger_dir)
+    assert Counter(r.batch for r in ledger.collect()) == {0: 5, 1: 5, 2: 1}
 
 
 def test_store_reads_use_the_inferred_schemas(spark, tmp_path):

@@ -18,7 +18,9 @@ DC = "http://purl.org/dc/terms/"
 
 @pytest.fixture(scope="module")
 def triples(spark, sf_dir):
-    return extract_triples(load_pages(spark, sf_dir)).cache()
+    df = extract_triples(load_pages(spark, sf_dir)).cache()
+    yield df
+    df.unpersist()
 
 
 def test_match_pattern_counts(triples):

@@ -14,12 +14,16 @@ DC = "http://purl.org/dc/terms/"
 
 @pytest.fixture(scope="module")
 def pages(spark, sf_dir):
-    return load_pages(spark, sf_dir).cache()
+    df = load_pages(spark, sf_dir).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def triples(pages):
-    return extract_triples(pages).cache()
+    df = extract_triples(pages).cache()
+    yield df
+    df.unpersist()
 
 
 def test_pages_schema(pages):
@@ -93,6 +97,7 @@ def test_errors_deterministic_t1_warnings(spark, pages):
     t = extract_triples(pages)
     both = processor_and_output_graph(t, errs)
     assert both.count() == t.count() + pg.count()
+    errs.unpersist()
 
 
 def test_canonicalize_literals(spark):

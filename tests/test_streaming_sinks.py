@@ -96,6 +96,7 @@ def test_write_turtle_roundtrip(spark, sf_dir, tmp_path):
     expanded = sorted(expand(l) for l in data_lines)
     nt = sorted(r.value for r in ntriples_lines(triples).collect())
     assert expanded == nt
+    triples.unpersist()
 
 
 def test_stateful_sessionization_matches_batch(spark, tmp_path):
