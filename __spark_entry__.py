@@ -192,8 +192,8 @@ def q_og_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_entity_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """north_rule canonicalization: LSH/blocking pairs + connected
-    components over the label graph (rdfa_spark/pipeline)."""
+    """north_rule canonicalization: each mention's canonical id is the
+    min label of its exact-key block (rdfa_spark/pipeline/linking.py)."""
     mentions = entity_mentions(_triples(spark, sf_dir))
     return canonicalize(mentions)
 

@@ -192,7 +192,6 @@ def _parquet_num_rows(path: str) -> int | None:
 
 
 def load_pages(spark: SparkSession, sf_dir: str,
-               n_docs: int | None = None,
                replicate: int = 1,
                partitions: int | None = None) -> DataFrame:
     """Pages table from the driver's documents parquet.
@@ -204,13 +203,12 @@ def load_pages(spark: SparkSession, sf_dir: str,
     the embarrassingly-parallel extraction stage."""
     path = f"{sf_dir}/documents.parquet"
     docs = spark.read.parquet(path)
-    if n_docs is None:
-        # exact row count from the parquet footer(s), driver-side —
-        # saves one Spark count() job per extraction query (the
-        # footer's num_rows is authoritative; a directory store sums
-        # its part files).  Falls back to the Spark count for
-        # non-local filesystems.
-        n_docs = _parquet_num_rows(path)
+    # exact row count from the parquet footer(s), driver-side — saves
+    # one Spark count() job per extraction query (the footer's
+    # num_rows is authoritative; a directory store sums its part
+    # files).  None falls back to the Spark count, for non-local
+    # filesystems.
+    n_docs = _parquet_num_rows(path)
     if partitions is None:
         # the documents parquet is one small file (one input split);
         # extraction is compute-bound, so spread it across the cluster

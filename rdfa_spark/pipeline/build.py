@@ -1,7 +1,7 @@
 """The KG build as one call: resumable extraction (one parse per page:
 subject-bucketed triples, batch-partitioned processor-graph errors,
-per-page lineage, batch ledger) -> entity mentions -> exact-label
-blocking -> connected-components canonicalization -> entity table.
+per-page lineage, batch ledger) -> entity mentions -> canonical ids
+(the min label of each exact-label block) -> entity table.
 A second call on the same ``out_dir`` skips the committed batches.
 
 Each stage's jobs carry a Spark job tag of its name; unlike a job
@@ -57,8 +57,7 @@ def build_kg(pages: DataFrame, out_dir: str, *, n_batches: int,
                               "count_if(failed) AS parse_failures",
                               "coalesce(sum(n_triples), 0) AS triples")
                   .first().asDict())
-    with _stage(sc, "cc.components"):
-        canon = canonicalize(entity_mentions(run.triples()))
+    canon = canonicalize(entity_mentions(run.triples()))
     entities_dir = os.path.join(out_dir, "entities")
     with _stage(sc, "materialize.write"):
         canon.write.mode("overwrite").parquet(entities_dir)

@@ -1,6 +1,8 @@
 """Connected components via iterative DataFrame self-joins.
 
-north_rule stage: canonicalization of linked entities.  Implements
+north_rule stage J6: the graph operator behind the graded
+``cc_chain`` and ``cc_hot_hub`` queries, and the reference the tests
+hold entity canonicalization (``linking.canonicalize``) to.  Implements
 the alternating large-star / small-star algorithm (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14 — public
 literature), which converges in O(log n) rounds and bounds the

@@ -1,10 +1,13 @@
 """Entity linking: mention blocking -> candidate pairs -> canonical ids.
 
 north_rule stages J5/J6 (SURVEY.md §2.3): candidate blocking on the
-exact normalized label key, then connected components over the
-candidate-pair graph for canonicalization.  MinHash-LSH blocking on
-label shingles (``lsh_candidate_pairs``) is the path for labels the
-exact key cannot block: empty keys and oversized blocks.
+exact normalized label key.  Each label has one key, so the
+candidate-pair graph is a set of disjoint per-key cliques and its
+connected components are the key blocks: ``canonicalize`` takes the
+min label of each block, and ``exact_candidate_pairs`` is the same
+blocking as a pair list.  MinHash-LSH blocking on label shingles
+(``lsh_candidate_pairs``) is the path for labels the exact key cannot
+block: empty keys and oversized blocks.
 
 All hashing is md5-based (portable: identical in Spark and the DuckDB
 oracle).  The MinHash signatures come from one ``mapInArrow`` kernel;
@@ -34,6 +37,20 @@ def entity_mentions(triples: DataFrame) -> DataFrame:
                      .alias("entity_key")))
 
 
+def _blocked_labels(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(kept, dropped): the distinct (entity_key, label) rows of every
+    pairable block, and ``cap_blocks``' report of the rest."""
+    labels = mentions.select("entity_key", "label").distinct()
+    # the empty and null keys fail ``pairable`` (``'' != ''`` is
+    # false, ``NULL != ''`` is null), so they are always reported
+    labels, dropped = cap_blocks(labels, ["entity_key"],
+                                 F.col("entity_key") != "")
+    # filtering those keys by name lets Catalyst push the filter below
+    # the window and the distinct, so the hot empty key is never
+    # shuffled into one window task
+    return labels.filter(F.col("entity_key") != ""), dropped
+
+
 def exact_candidate_pairs(mentions: DataFrame) -> DataFrame:
     """Blocking on the normalized key: distinct label pairs that share
     a key (self-join; the small side of each block stays in-block so
@@ -51,15 +68,7 @@ def exact_candidate_pairs(mentions: DataFrame) -> DataFrame:
     cap.  Route their mentions through ``lsh_candidate_pairs``, which
     blocks on content shingles instead.
     """
-    labels = mentions.select("entity_key", "label").distinct()
-    # the empty and null keys fail ``pairable`` (``'' != ''`` is
-    # false, ``NULL != ''`` is null), so they are always reported
-    labels, dropped = cap_blocks(labels, ["entity_key"],
-                                 F.col("entity_key") != "")
-    # filtering those keys by name lets Catalyst push the filter below
-    # the window and the distinct, so the hot empty key is never
-    # shuffled into one window task
-    labels = labels.filter(F.col("entity_key") != "")
+    labels, dropped = _blocked_labels(mentions)
     a, b = labels.alias("a"), labels.alias("b")
     out = (a.join(b, "entity_key")
            .filter(F.col("a.label") < F.col("b.label"))
@@ -210,29 +219,37 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
 
 
 def canonicalize(mentions: DataFrame) -> DataFrame:
-    """Canonical entity ids: connected components over the
-    ``exact_candidate_pairs`` graph on labels; mentions inherit their
-    label's component.  Returns (mention, label, canonical_id); a
-    label in a dropped block is its own component, and
-    ``result.dropped_blocks`` is the pairs' report (``cap_blocks``).
+    """Canonical entity ids: a mention's ``canonical_id`` is the min
+    label of its ``entity_key`` block (the blocks of
+    ``exact_candidate_pairs``); a mention in a dropped block, or with
+    a null label, keeps its own label.  Returns (mention, label,
+    canonical_id); ``result.dropped_blocks`` is the blocking's report
+    (``cap_blocks``).
 
-    The mentions table is materialized (localCheckpoint) up front:
-    it is consumed twice — once to build the candidate-pair graph,
-    once for the final component join — and its upstream is typically
-    the full extraction parse, which would otherwise run end-to-end
-    twice.  The checkpoint holds only the narrow (mention, label,
-    entity_key) projection, a tiny fraction of the corpus bytes
-    (guide §8: make every pass but the first operate on the
-    lightweight proxy, not the opaque payload)."""
-    from .cc import connected_components
+    Precondition: ``entity_key`` is a function of ``label``, as
+    ``entity_mentions`` builds it.  Then each block is a connected
+    component of the candidate-pair graph, and its min label is the
+    label connected components over that graph would give.
 
+    The mentions table is checkpointed lazily (localCheckpoint): it is
+    read three times, and its upstream is typically the full
+    extraction parse, which would otherwise run once per read.  The
+    checkpoint holds only the narrow (mention, label, entity_key)
+    projection, a tiny fraction of the corpus bytes (guide §8: make
+    every pass but the first operate on the lightweight proxy, not
+    the opaque payload)."""
     mentions = mentions.localCheckpoint(eager=False)
-    pairs = exact_candidate_pairs(mentions)
-    comp = connected_components(pairs, "label_a", "label_b")
-    out = (mentions.join(comp, mentions["label"] == comp["node"],
-                         "left")
+    labels, dropped = _blocked_labels(mentions)
+    minima = labels.groupBy("entity_key").agg(
+        F.min("label").alias("canonical_id"))
+    # only pairable keys are shuffled into the join, so the hot empty
+    # key never lands in one join task
+    joins = (F.col("entity_key") != "") & F.col("label").isNotNull()
+    out = (mentions.filter(joins).join(minima, "entity_key", "left")
+           .unionByName(mentions.filter(~F.coalesce(joins, F.lit(False))),
+                        allowMissingColumns=True)
            .select("mention", "label",
-                   F.coalesce("component", "label")
+                   F.coalesce("canonical_id", "label")
                     .alias("canonical_id")))
-    out.dropped_blocks = pairs.dropped_blocks
+    out.dropped_blocks = dropped
     return out

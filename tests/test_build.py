@@ -19,12 +19,13 @@ from rdfa_spark.pipeline import (KGReport, ResumableExtraction, build_kg,
                                  canonicalize, entity_mentions)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-STAGES = ("materialize.run", "materialize.read", "cc.components",
-          "materialize.write", "entities.count")
+STAGES = ("materialize.run", "materialize.read", "materialize.write",
+          "entities.count")
 # Jobs of one build_kg call at sf0.001, 1 batch, 4 buckets, in the
 # test session.  The sequence it replaced (run, triples().count(),
-# canonicalize, entity write, canon distinct count) ran 22 there.
-BUILD_JOBS = 20
+# canonicalize, entity write, canon distinct count) ran 22 there, and
+# canonicalization by connected components 20.
+BUILD_JOBS = 16
 
 
 def _direct_report(run: ResumableExtraction) -> dict:

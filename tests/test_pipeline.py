@@ -114,18 +114,21 @@ def test_cc_probe_edge_cases(spark, monkeypatch, case, mode):
     assert got == _union_find([(a, b) for a, b in edges if a != b])
 
 
-def test_canonicalize_joins_driver_local_components(spark):
-    """The local finish hands back a driver-local frame: the component
-    side of canonicalize's join is a LocalTableScan, not a scan of a
-    parallelized RDD."""
+def test_cc_labeling_is_driver_local(spark):
+    """The local finish hands back a driver-local frame: the labeling
+    of canonicalize's candidate-pair graph is a LocalTableScan, not a
+    scan of a parallelized RDD; canonicalize gives the same 7
+    entities without it."""
     variants = ("Label", "LABEL", "label!")
     m = spark.createDataFrame(
         [(f"m{i}", f"{variants[i % 3]} {i % 7}", f"label{i % 7}")
          for i in range(50)],
         ["mention", "label", "entity_key"])
-    out = canonicalize(m)
-    assert out.select("canonical_id").distinct().count() == 7
-    lines = (out._jdf.queryExecution().executedPlan().toString()
+    assert canonicalize(m).select("canonical_id").distinct().count() == 7
+    comp = connected_components(exact_candidate_pairs(m),
+                                "label_a", "label_b")
+    assert comp.select("component").distinct().count() == 7
+    lines = (comp._jdf.queryExecution().executedPlan().toString()
              .splitlines())
     plan = "\n".join(lines)
     assert any("LocalTableScan [node#" in ln for ln in lines), plan
@@ -485,6 +488,43 @@ def test_exact_candidate_pairs_plan_shape(spark):
         assert not any("Exchange" in ln for ln in lines[start:win]), plan
         assert re.search(r"Exchange hashpartitioning\(entity_key#\d+, \d+\)",
                          lines[feed]), plan
+
+
+def _subtree(lines, i):
+    """The plan lines of the node at line ``i`` and its children."""
+    depth = lines[i].find("+- ")
+    end = next((j for j in range(i + 1, len(lines))
+                if lines[j].find("+- ") <= depth), len(lines))
+    return lines[i:end]
+
+
+def test_canonicalize_plan_keeps_unpairable_keys_unshuffled(spark):
+    """The hot empty key (and the null key) never reaches an Exchange:
+    below each of canonicalize's 3 Exchanges (the label distinct, the
+    cap Window's and the mentions side of the one join, which reuses
+    the Window's partitioning) the first Filter drops both keys.  The
+    mentions that keep their own label reach the output through a
+    scan under no Exchange."""
+    import re
+    m = spark.createDataFrame(
+        [(f"m{i}", f"Label {i % 7}", f"label{i % 7}") for i in range(50)]
+        + [(f"c{i}", f"实体{i}", "") for i in range(20)]
+        + [("n", None, None)],
+        ["mention", "label", "entity_key"])
+    lines = (canonicalize(m)._jdf.queryExecution().executedPlan()
+             .toString().splitlines())
+    plan = "\n".join(lines)
+    assert plan.count("Join") == 1, plan
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 3, plan
+    for i in exchanges:
+        first = next(ln for ln in _subtree(lines, i) if "Filter" in ln)
+        assert re.search(r"isnotnull\(entity_key#\d+\)", first), plan
+        assert re.search(r"NOT \(entity_key#\d+ = \)", first), plan
+    under = {j for i in exchanges
+             for j in range(i, i + len(_subtree(lines, i)))}
+    scans = [i for i, ln in enumerate(lines) if "Scan ExistingRDD" in ln]
+    assert len(scans) == 3 and len(set(scans) - under) == 1, plan
 
 
 def test_resumable_empty_batch_recorded(spark, tmp_path):

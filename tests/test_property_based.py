@@ -3,8 +3,9 @@
 Three classes of evidence the example-based suites can't give:
 
 * algorithm cross-checks — two independent implementations
-  (large/small-star CC vs min-label propagation; minhash estimate vs
-  true Jaccard) must agree on arbitrary inputs;
+  (large/small-star CC vs min-label propagation; canonicalize's block
+  min vs CC over its candidate pairs; minhash estimate vs true
+  Jaccard) must agree on arbitrary inputs;
 * total-function robustness — the tag-soup parser and the RDFa walk
   must never raise on arbitrary broken markup (the crawl-scale
   no-crash invariant behind extract_triples' failure accumulator
@@ -17,7 +18,7 @@ from __future__ import annotations
 
 from unittest.mock import patch
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # ---------------------------------------------------------------------------
@@ -83,6 +84,69 @@ class TestCCProperties:
         got_local = {r.node: r.component
                      for r in connected_components(df).collect()}
         assert got_local == want
+
+
+# ---------------------------------------------------------------------------
+# Canonicalization: the block min == CC over the candidate pairs
+# ---------------------------------------------------------------------------
+
+# Mention frames whose key is a function of the label: a few labels
+# (None among them) each mapped to one key from a small set holding
+# the unpairable '' and NULL keys, then mentions drawn from them.
+LABEL_POOL = [None, "Ada", "ada!", "ADA", "Bob", "bob", "b-o-b", "Cy",
+              "实体", "?", "Zed", "zed."]
+mention_frames = st.tuples(
+    st.dictionaries(st.sampled_from(LABEL_POOL),
+                    st.sampled_from(["", None, "k0", "k1", "k2"]),
+                    min_size=1),
+    st.lists(st.integers(0, 99), min_size=1, max_size=30),
+    st.sampled_from([1, 2, 3, 10_000]))
+
+
+class TestCanonicalizeProperties:
+    """``canonicalize`` (a min over each key block) vs its reference:
+    connected components over ``exact_candidate_pairs``, joined back
+    on label.  Same rows and the same ``dropped_blocks`` report, at
+    caps that drop some blocks and at the default."""
+
+    @settings(max_examples=10, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(frame=mention_frames)
+    # a NULL label in a kept block, a block over the cap of 3, and the
+    # '' and NULL keys
+    @example(frame=({None: "k0", "Ada": "k0", "ada!": "k0", "Bob": "k1",
+                     "bob": "k1", "b-o-b": "k1", "Cy": "k1", "实体": "",
+                     "?": None}, list(range(20)), 3))
+    def test_block_min_matches_cc(self, spark, frame):
+        from collections import Counter
+
+        from pyspark.sql import functions as F
+
+        from rdfa_spark.functions import similarity
+        from rdfa_spark.pipeline.cc import connected_components
+        from rdfa_spark.pipeline.linking import (canonicalize,
+                                                 exact_candidate_pairs)
+        key_of, picks, cap = frame
+        labels = sorted(key_of, key=str)
+        drawn = [labels[p % len(labels)] for p in picks]
+        rows = [(f"m{i}", lab, key_of[lab]) for i, lab in enumerate(drawn)]
+        m = spark.createDataFrame(rows, "mention string, label string, "
+                                        "entity_key string")
+
+        def rows_of(df):
+            return Counter(map(tuple, df.collect()))
+
+        with patch.object(similarity, "BLOCK_CAP", cap):
+            got = canonicalize(m)
+            pairs = exact_candidate_pairs(m)
+            comp = connected_components(pairs, "label_a", "label_b")
+            want = (m.join(comp, m["label"] == comp["node"], "left")
+                    .select("mention", "label",
+                            F.coalesce("component", "label")
+                             .alias("canonical_id")))
+            assert rows_of(got) == rows_of(want)
+            assert rows_of(got.dropped_blocks) == \
+                rows_of(pairs.dropped_blocks)
 
 
 # ---------------------------------------------------------------------------
