@@ -231,26 +231,13 @@ def extract_all(pages: DataFrame) -> DataFrame:
     text/lineage from ONE parse per page (the parse dominates the
     stage cost; three dedicated passes would pay it three times).
 
-    Materialize (persist or write) the result once, then split with
-    ``split_extracts``.  Parse failures appear as
-    (kind='e', code='parse-failed') rows — never silently dropped.
+    Each row's ``kind`` says which output it belongs to: 't' rows
+    carry ``TRIPLE_SCHEMA``'s columns, 'e' rows ``ERROR_SCHEMA``'s and
+    the one 'x' row per parsed page ``TEXT_SCHEMA``'s plus
+    ``n_subjects``.  Parse failures appear as (kind='e',
+    code='parse-failed') rows — never silently dropped.
     """
     return _extract(pages, "tex", EXTRACT_ALL_SCHEMA)
-
-
-def split_extracts(all_df: DataFrame) -> tuple[DataFrame, DataFrame,
-                                               DataFrame]:
-    """(triples, errors, texts) views over an ``extract_all`` result,
-    each with the exact schema of the dedicated extractor.  On a
-    parquet-materialized extract the kind filter is pushed to the
-    scan; on a persisted DataFrame it's a cheap in-memory filter."""
-    triples = (all_df.filter(F.col("kind") == "t")
-               .select(*[f.name for f in TRIPLE_SCHEMA.fields]))
-    errors = (all_df.filter(F.col("kind") == "e")
-              .select(*[f.name for f in ERROR_SCHEMA.fields]))
-    texts = (all_df.filter(F.col("kind") == "x")
-             .select(*[f.name for f in TEXT_SCHEMA.fields]))
-    return triples, errors, texts
 
 
 def extract_triples(pages: DataFrame) -> DataFrame:
@@ -369,37 +356,3 @@ def processor_and_output_graph(triples: DataFrame,
     """U1 — union of the output graph and the reified processor
     graph (Parser.pm:460-467)."""
     return triples.unionByName(processor_graph(errors))
-
-
-def canonicalize_literals(triples: DataFrame) -> DataFrame:
-    """F8 — optional xsd literal canonicalization
-    (TrineX/Parser/RDFa.pm:163-172; off by default, as in the
-    reference): canonical lexical forms for xsd integer/decimal/
-    boolean typed literals, pure column expressions."""
-    XSD = "http://www.w3.org/2001/XMLSchema#"
-    obj, dt = F.col("obj"), F.col("obj_datatype")
-    is_lit = F.col("obj_is_literal")
-    canon = (
-        F.when(is_lit & (dt == XSD + "integer")
-               & obj.rlike(r"^[+-]?\d+$"),
-               F.col("obj").cast("decimal(38,0)").cast("string"))
-         .when(is_lit & (dt == XSD + "boolean")
-               & obj.isin("0", "false", "FALSE", "False"),
-               F.lit("false"))
-         .when(is_lit & (dt == XSD + "boolean")
-               & obj.isin("1", "true", "TRUE", "True"),
-               F.lit("true"))
-         .when(is_lit & (dt == XSD + "decimal")
-               & obj.rlike(r"^[+-]?\d+(\.\d+)?$"),
-               F.col("obj").cast("decimal(38,10)").cast("string"))
-         .otherwise(obj))
-    return triples.withColumn("obj", canon)
-
-
-def graph_counts(triples: DataFrame) -> DataFrame:
-    """A1 — named-graph partition counts (Parser.pm:245-257)."""
-    return (triples
-            .groupBy(F.coalesce("graph", F.lit("(default)"))
-                     .alias("graph"))
-            .agg(F.count("*").alias("n_triples")))
-

@@ -1,7 +1,8 @@
-"""The KG build as one call: resumable extraction (one parse per page:
-subject-bucketed triples, batch-partitioned processor-graph errors,
-per-page lineage, batch ledger) -> entity mentions -> canonical ids
-(the min label of each exact-label block) -> entity table.
+"""The KG build as one call: resumable extraction (one parse and one
+store write per batch: subject-bucketed triples, processor-graph
+errors and per-page lineage as row kinds of one table, then a batch
+ledger marker) -> entity mentions -> canonical ids (the min label of
+each exact-label block) -> entity table.
 A second call on the same ``out_dir`` skips the committed batches.
 
 Each stage's jobs carry a Spark job tag of its name; unlike a job

@@ -5,9 +5,13 @@ exact normalized label key.  Each label has one key, so the
 candidate-pair graph is a set of disjoint per-key cliques and its
 connected components are the key blocks: ``canonicalize`` takes the
 min label of each block, and ``exact_candidate_pairs`` is the same
-blocking as a pair list.  MinHash-LSH blocking on label shingles
-(``lsh_candidate_pairs``) is the path for labels the exact key cannot
-block: empty keys and oversized blocks.
+blocking as a pair list.  Labels the exact key cannot block (the
+empty and NULL keys, blocks over ``similarity.BLOCK_CAP`` labels) are
+paired with nothing: each such mention keeps its own label as its
+canonical id, and both operators report those blocks in
+``dropped_blocks``.  ``lsh_candidate_pairs`` (MinHash-LSH blocking on
+shingles) is a separate operator; no stage routes the dropped labels
+through it.
 
 All hashing is md5-based (portable: identical in Spark and the DuckDB
 oracle).  The MinHash signatures come from one ``mapInArrow`` kernel;

@@ -6,7 +6,7 @@ Parser.pm:208-328) and its test suite's SPARQL ASK queries
 over the triple table: each triple pattern is a filtered scan, shared
 variables become equi-join keys — Catalyst picks the join strategy
 (broadcast for small intermediate sets) and pushes the constant-term
-filters into the parquet scan.
+filters into the parquet scan.  An ASK is ``not bgp(...).isEmpty()``.
 
 Term syntax: strings starting with ``?`` are variables; everything
 else matches the column exactly.  ``None`` = wildcard (unbound,
@@ -64,8 +64,3 @@ def bgp(triples: DataFrame, patterns: list[tuple]) -> DataFrame:
         raise ValueError("empty pattern list")
     drop = [c for c in result.columns if c.startswith("_p")]
     return result.drop(*drop).distinct()
-
-
-def ask(triples: DataFrame, patterns: list[tuple]) -> bool:
-    """SPARQL ASK analogue: does any solution exist?"""
-    return bgp(triples, patterns).limit(1).count() > 0

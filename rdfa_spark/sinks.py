@@ -1,9 +1,10 @@
-"""Serialization sinks: N-Triples / N-Quads lines (S7).
+"""Serialization sinks: N-Triples and Turtle lines (S7).
 
 The reference's example serializers emit Turtle/N-Triples with
 ``\\ \\n \\r \\t \\"`` escaping (examples/rdfa11-to-ntriples.pl:1-13,
 Parser.pm:2215-2287).  Here the formatting is a pure column
-expression — whole-stage codegen, written with ``df.write.text``.
+expression — whole-stage codegen; write the lines with
+``df.write.text``.
 """
 
 from __future__ import annotations
@@ -29,8 +30,8 @@ def _term(col: Column) -> Column:
             .otherwise(F.concat(F.lit("<"), col, F.lit(">")))
 
 
-def ntriples_lines(triples: DataFrame, quads: bool = False) -> DataFrame:
-    """-> single-column DataFrame of N-Triples/N-Quads lines."""
+def ntriples_lines(triples: DataFrame) -> DataFrame:
+    """-> single-column DataFrame of N-Triples lines."""
     obj = F.when(
         F.col("obj_is_literal"),
         F.concat(
@@ -42,18 +43,9 @@ def ntriples_lines(triples: DataFrame, quads: bool = False) -> DataFrame:
                    F.concat(F.lit("@"), F.col("obj_lang")))
              .otherwise(F.lit("")))
     ).otherwise(_term(F.col("obj")))
-    parts = [_term(F.col("subj")), _term(F.col("pred")), obj]
-    if quads:
-        # concat_ws skips NULLs, so a default-graph quad emits no term
-        parts.append(F.when(F.col("graph").isNotNull(),
-                            _term(F.col("graph"))))
-    line = F.concat(F.concat_ws(" ", *parts), F.lit(" ."))
+    line = F.concat(F.concat_ws(" ", _term(F.col("subj")),
+                                _term(F.col("pred")), obj), F.lit(" ."))
     return triples.select(line.alias("value"))
-
-
-def write_ntriples(triples: DataFrame, path: str,
-                   quads: bool = False) -> None:
-    ntriples_lines(triples, quads).write.mode("overwrite").text(path)
 
 
 # ---------------------------------------------------------------------------
@@ -123,19 +115,3 @@ def turtle_lines(triples: DataFrame,
         " ", _term_turtle(F.col("subj"), prefixes),
         _term_turtle(F.col("pred"), prefixes), obj), F.lit(" ."))
     return triples.select(line.alias("value"))
-
-
-def write_turtle(triples: DataFrame, path: str,
-                 prefixes: dict[str, str] | None = None) -> None:
-    """Turtle sink: data part-files via the distributed writer plus a
-    ``00_prefixes.ttl`` header file, so concatenating the directory in
-    name order yields one valid Turtle document.  (The header is a
-    tiny constant — a driver-side local write here; on an object
-    store, one small PUT via the filesystem API.)"""
-    import os
-
-    prefixes = DEFAULT_PREFIXES if prefixes is None else prefixes
-    turtle_lines(triples, prefixes).write.mode("overwrite").text(path)
-    with open(os.path.join(path, "00_prefixes.ttl"), "w",
-              encoding="utf-8") as fh:
-        fh.write(turtle_prefix_header(prefixes))

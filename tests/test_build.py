@@ -23,9 +23,10 @@ STAGES = ("materialize.run", "materialize.read", "materialize.write",
           "entities.count")
 # Jobs of one build_kg call at sf0.001, 1 batch, 4 buckets, in the
 # test session.  The sequence it replaced (run, triples().count(),
-# canonicalize, entity write, canon distinct count) ran 22 there, and
-# canonicalization by connected components 20.
-BUILD_JOBS = 16
+# canonicalize, entity write, canon distinct count) ran 22 there,
+# canonicalization by connected components 20, and a store of three
+# tables written from one persisted extraction 16.
+BUILD_JOBS = 13
 
 
 def _direct_report(run: ResumableExtraction) -> dict:

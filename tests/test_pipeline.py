@@ -11,6 +11,7 @@ import sys
 from collections import Counter
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from rdfa_spark.extract import extract_errors, extract_triples
@@ -20,10 +21,10 @@ from rdfa_spark.pages import load_pages
 from rdfa_spark.pipeline import (
     KGReport, ResumableExtraction, canonicalize, cc, connected_components,
     dedup_exact, entity_mentions, exact_candidate_pairs,
-    exact_duplicate_groups, lsh_candidate_pairs, materialize,
-    minhash_dedup_pairs, simhash64, simhash_near_dup_pairs,
+    exact_duplicate_groups, lsh_candidate_pairs, minhash_dedup_pairs,
+    simhash64, simhash_near_dup_pairs,
 )
-from rdfa_spark.pipeline.materialize import LEDGER_SCHEMA
+from rdfa_spark.pipeline.materialize import LEDGER_SCHEMA, STORE_SCHEMA
 
 
 def _union_find(edges):
@@ -257,33 +258,33 @@ def test_resumable_materialization(spark, sf_dir, tmp_path, monkeypatch):
     # materialized == direct extraction (idempotent, deterministic)
     direct = extract_triples(pages).count()
     assert total == direct
-    # lineage sidecar covers every url
-    lin = spark.read.parquet(f"{out}/lineage")
+    # lineage covers every url
+    lin = run.lineage()
     assert lin.count() == pages.count()
     assert lin.agg(F.sum("n_triples")).first()[0] == total
     # subject bucketing present
     assert "subj_bucket" in run.triples().columns
     # the ledger holds only the commit marker: one (batch) row per batch
-    ledger = spark.read.parquet(f"{out}/_processed_urls")
+    ledger = spark.read.parquet(run.ledger_dir)
     assert ledger.columns == ["batch"]
     assert sorted(r.batch for r in ledger.collect()) == [0, 1, 2, 3]
 
 
 def test_failed_batch_leaves_no_cache(spark, sf_dir, tmp_path,
                                       monkeypatch):
-    """A batch whose errors write raises unpersists its extraction:
+    """A batch whose store write raises leaves nothing cached:
     afterwards the context holds no persisted RDD it did not hold
     before the call, and the batch is not committed."""
     pages = load_pages(spark, sf_dir)
     run = ResumableExtraction(spark, str(tmp_path / "kg"), n_batches=1)
-    write = materialize._write_batch
+    write = DataFrameWriter.parquet
 
-    def failing_errors_write(df, path, *partition_cols):
-        if path == run.errors_dir:
+    def failing_store_write(self, path, *args, **kwargs):
+        if path == run.store_dir:
             raise _Interrupted
-        write(df, path, *partition_cols)
+        write(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(materialize, "_write_batch", failing_errors_write)
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_store_write)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     with pytest.raises(_Interrupted):
@@ -298,47 +299,25 @@ PLAIN_PAGES = [(f"http://ex.com/{i}",
                for i in range(8)]
 
 
-def test_resume_reads_per_url_ledger(spark, tmp_path):
-    """A store whose ledger still has per-url rows beside the markers
-    (the older layout) counts those batches done: resume runs 0."""
-    pages = spark.createDataFrame(PLAIN_PAGES, ["url", "html"])
+def test_old_layout_directory_is_rebuilt(spark, tmp_path):
+    """A directory in the older three-table layout, whose
+    ``_processed_urls`` ledger names every batch, has no store ledger:
+    it is built afresh, never resumed into an empty store."""
+    pages = spark.createDataFrame([(u, h.encode()) for u, h in PLAIN_PAGES],
+                                  "url string, html binary")
     out = str(tmp_path / "kg_old")
-    spark.createDataFrame(
-        [(f"http://ex.com/{i}", 3, i % 2) for i in range(8)]
-        + [(None, 0, 0), (None, 0, 1)],
-        "url string, n_triples long, batch int") \
-        .write.parquet(f"{out}/_processed_urls")
+    spark.createDataFrame([(0,), (1,)], "batch int") \
+        .write.parquet(os.path.join(out, "_processed_urls"))
     run = ResumableExtraction(spark, out, n_batches=2)
-    assert run.processed_batches() == {0, 1}
-    assert run.run(pages) == 0
-
-
-def test_resume_appends_to_old_layout_ledger(spark, tmp_path):
-    """An old-layout ledger (per-url rows plus NULL-url markers for
-    batches 0 and 1) resumes the batch it lacks and gains a one-column
-    marker for it; ``LEDGER_SCHEMA`` reads both file shapes."""
-    pages = spark.createDataFrame(PLAIN_PAGES, ["url", "html"])
-    run = ResumableExtraction(spark, str(tmp_path / "kg_mixed"),
-                              n_batches=3)
-    spark.createDataFrame(
-        [(f"http://ex.com/{i}", 3, i % 2) for i in range(8)]
-        + [(None, 0, 0), (None, 0, 1)],
-        "url string, n_triples long, batch int") \
-        .write.parquet(run.ledger_dir)
-    assert run.run(pages) == 1
-    assert run.processed_batches() == {0, 1, 2}
-    assert run.run(pages) == 0
-    files = [os.path.join(run.ledger_dir, f)
-             for f in os.listdir(run.ledger_dir) if f.endswith(".parquet")]
-    assert {tuple(spark.read.parquet(f).columns) for f in files} == {
-        ("url", "n_triples", "batch"), ("batch",)}
-    ledger = spark.read.schema(LEDGER_SCHEMA).parquet(run.ledger_dir)
-    assert Counter(r.batch for r in ledger.collect()) == {0: 5, 1: 5, 2: 1}
+    assert run.processed_batches() == set()
+    assert run.run(pages) == 2
+    assert run.lineage().count() == len(PLAIN_PAGES)
 
 
 def test_store_reads_use_the_inferred_schemas(spark, tmp_path):
-    """Each fixed read schema equals what parquet inference gives on a
-    fresh store: names, types, nullability and order."""
+    """The store's and the ledger's fixed read schemas equal what
+    parquet inference gives on a fresh store: names, types,
+    nullability and order.  Each kind reader returns rows."""
     rows = ([(u, h.encode()) for u, h in PLAIN_PAGES]
             + [("http://ex.com/rdfa", b'<html><body><p property='
                 b'"dc:title">t</p></body></html>'),
@@ -347,13 +326,12 @@ def test_store_reads_use_the_inferred_schemas(spark, tmp_path):
         spark, str(tmp_path / "kg_schemas"), n_batches=2, n_buckets=2)
     assert run.run(spark.createDataFrame(rows, "url string, html binary")) \
         == 2
-    for got, path in [(run.triples(), run.triples_dir),
-                      (run.errors(), run.errors_dir),
-                      (run.lineage(), run.lineage_dir),
-                      (spark.read.schema(LEDGER_SCHEMA)
-                       .parquet(run.ledger_dir), run.ledger_dir)]:
-        assert got.schema == spark.read.parquet(path).schema, path
-        assert got.count() > 0, path
+    for schema, path in [(STORE_SCHEMA, run.store_dir),
+                         (LEDGER_SCHEMA, run.ledger_dir)]:
+        assert spark.read.schema(schema).parquet(path).schema \
+            == spark.read.parquet(path).schema, path
+    for got in (run.triples(), run.errors(), run.lineage()):
+        assert got.count() > 0, got.columns
 
 
 def test_ledger_with_only_temporary_reads_empty(spark, tmp_path):
@@ -376,8 +354,9 @@ def test_ledger_with_only_temporary_reads_empty(spark, tmp_path):
 
 
 def test_run_pipeline_keeps_partitioned_errors(spark, sf_dir, tmp_path):
-    """scripts/run_pipeline.py parses each page once: the errors table
-    is the batch-partitioned one ResumableExtraction wrote, and its
+    """scripts/run_pipeline.py parses each page once: the errors are
+    the store's batch-partitioned 'e' rows ResumableExtraction wrote,
+    and their
     rows equal a direct extract_errors pass as a multiset.  Its one
     PIPELINE_OK line is the build's report as JSON."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -395,7 +374,7 @@ def test_run_pipeline_keeps_partitioned_errors(spark, sf_dir, tmp_path):
     [line] = [ln for ln in proc.stdout.splitlines()
               if ln.startswith("PIPELINE_OK")]
     report = KGReport(**json.loads(line[len("PIPELINE_OK "):]))
-    stored = spark.read.parquet(os.path.join(out, "errors"))
+    stored = ResumableExtraction(spark, out).errors()
     assert "batch" in stored.columns
     got = Counter(map(tuple, stored.drop("batch").collect()))
     want = Counter(map(tuple, extract_errors(load_pages(spark, sf_dir))
@@ -529,12 +508,15 @@ def test_canonicalize_plan_keeps_unpairable_keys_unshuffled(spark):
 
 def test_resumable_empty_batch_recorded(spark, tmp_path):
     """A batch whose pages yield zero triples must still be recorded
-    as processed (ADVICE r1: resume must converge)."""
+    as processed (ADVICE r1: resume must converge).  The store has no
+    triple rows then, and ``triples()`` reads empty."""
     pages = spark.createDataFrame(PLAIN_PAGES, ["url", "html"])
     out = str(tmp_path / "kg_empty")
     run = ResumableExtraction(spark, out, n_batches=3)
     assert run.run(pages) == 3
     assert run.processed_batches() == {0, 1, 2}
+    assert not os.path.exists(run.triples_dir)
+    assert run.triples().count() == 0
     # converged: nothing left to do
     assert run.run(pages) == 0
 
@@ -548,7 +530,7 @@ def test_lineage_row_per_parsed_page(spark, tmp_path):
     out = str(tmp_path / "kg_lineage")
     run = ResumableExtraction(spark, out, n_batches=2)
     assert run.run(pages) == 2
-    lin = spark.read.parquet(f"{out}/lineage")
+    lin = run.lineage()
     assert dict(lin.dtypes) == {"url": "string", "n_triples": "bigint",
                                 "n_subjects": "bigint", "batch": "int"}
     assert sorted((r.url, r.n_triples, r.n_subjects)
@@ -568,16 +550,17 @@ def test_lineage_counts_match_triples(spark, sf_dir, tmp_path):
             run.triples().groupBy("url").agg(
                 F.count("*").alias("n"),
                 F.countDistinct("subj").alias("s")).collect()}
-    lin = spark.read.parquet(str(tmp_path / "kg_counts" / "lineage"))
+    lin = run.lineage()
     got = {(r.url, r.n_triples, r.n_subjects)
            for r in lin.filter(F.col("n_triples") > 0).collect()}
     assert want and got == want
 
 
 def test_resumable_run_job_count(spark, sf_dir, tmp_path):
-    """Lineage is a projection of the persisted extraction, not an
-    aggregation, and the ledger marker is one partition: one batch of
-    sf0.001 runs at most 7 Spark jobs."""
+    """A batch is one store write of the unpersisted extraction
+    (lineage is its per-page rows, not an aggregation) plus a
+    one-partition ledger marker: one batch of sf0.001 runs at most 4
+    Spark jobs."""
     sc = spark.sparkContext
     pages = load_pages(spark, sf_dir)
     pages.count()                    # page synthesis outside the count
@@ -590,7 +573,7 @@ def test_resumable_run_job_count(spark, sf_dir, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 7, sorted(jobs)
+    assert 0 < len(jobs) <= 4, sorted(jobs)
 
 
 def test_cc_reliable_checkpoint(spark, tmp_path):

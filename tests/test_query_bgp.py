@@ -10,7 +10,7 @@ from rdfa_spark.core import parse_rdfa, tagsoup_config
 from rdfa_spark.core.walk import RDF_TYPE
 from rdfa_spark.extract import extract_triples
 from rdfa_spark.pages import load_pages
-from rdfa_spark.query import ask, bgp, match_pattern
+from rdfa_spark.query import bgp, match_pattern
 
 SCHEMA = "http://schema.org/"
 DC = "http://purl.org/dc/terms/"
@@ -50,13 +50,14 @@ def test_bgp_three_pattern_chain(triples, spark):
 
 
 def test_ask(triples):
-    assert ask(triples, [("?p", RDF_TYPE, SCHEMA + "Person")])
-    assert not ask(triples, [("?p", RDF_TYPE, SCHEMA + "Spaceship")])
+    """A SPARQL ASK is a BGP with or without a solution."""
+    assert not bgp(triples, [("?p", RDF_TYPE, SCHEMA + "Person")]).isEmpty()
+    assert bgp(triples, [("?p", RDF_TYPE, SCHEMA + "Spaceship")]).isEmpty()
 
 
 def test_bgp_constant_only_pattern(triples):
     row = triples.limit(1).first()
-    assert ask(triples, [(row.subj, row.pred, row.obj)])
+    assert not bgp(triples, [(row.subj, row.pred, row.obj)]).isEmpty()
 
 
 # ---------------------------------------------------------------------------

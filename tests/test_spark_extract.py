@@ -5,7 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdfa_spark.extract import (extract_errors, extract_triples,
-                                extract_text_df, graph_counts, opengraph)
+                                extract_text_df, opengraph)
 from rdfa_spark.pages import load_pages
 
 SCHEMA = "http://schema.org/"
@@ -74,11 +74,6 @@ def test_entity_mentions(triples):
     assert any(l.startswith("Entity-") for l in labels)
 
 
-def test_graph_counts_default_graph(triples):
-    gc = graph_counts(triples).collect()
-    assert len(gc) == 1 and gc[0].graph == "(default)"
-
-
 def test_errors_deterministic_t1_warnings(spark, pages):
     """Template 1 pages carry one deliberate undefined-prefix
     @property -> exactly one curie-fellthrough warning each; the
@@ -98,25 +93,6 @@ def test_errors_deterministic_t1_warnings(spark, pages):
     both = processor_and_output_graph(t, errs)
     assert both.count() == t.count() + pg.count()
     errs.unpersist()
-
-
-def test_canonicalize_literals(spark):
-    from rdfa_spark.extract import canonicalize_literals
-    XSD = "http://www.w3.org/2001/XMLSchema#"
-    rows = [("u", "s", "p", "0042", True, XSD + "integer", None, None, 0),
-            ("u", "s", "p", "1", True, XSD + "boolean", None, None, 1),
-            ("u", "s", "p", "03.50", True, XSD + "decimal", None, None, 2),
-            ("u", "s", "p", "keep", True, None, "en", None, 3)]
-    df = spark.createDataFrame(rows, schema=(
-        "url string, subj string, pred string, obj string, "
-        "obj_is_literal boolean, obj_datatype string, "
-        "obj_lang string, graph string, emit_seq long"))
-    got = [r.obj for r in canonicalize_literals(df)
-           .orderBy("emit_seq").collect()]
-    assert got[0] == "42"
-    assert got[1] == "true"
-    assert got[2].rstrip("0").rstrip(".") == "3.5"
-    assert got[3] == "keep"
 
 
 def test_extraction_plan_no_shuffle(spark, sf_dir):
@@ -151,11 +127,15 @@ def test_load_pages_partitioned_store(spark, sf_dir, tmp_path):
 
 
 def test_extract_all_single_pass_parity(spark, pages):
-    """extract_all (one parse) splits into exactly the three dedicated
-    extractors' outputs, and its plan has no shuffle."""
-    from rdfa_spark.extract import extract_all, split_extracts
+    """extract_all (one parse) filtered by kind is exactly the three
+    dedicated extractors' outputs."""
+    from rdfa_spark.extract import (ERROR_SCHEMA, TEXT_SCHEMA,
+                                    TRIPLE_SCHEMA, extract_all)
     allx = extract_all(pages).cache()
-    t, e, x = split_extracts(allx)
+    t, e, x = (allx.filter(F.col("kind") == kind).select(*schema.names)
+               for kind, schema in [("t", TRIPLE_SCHEMA),
+                                    ("e", ERROR_SCHEMA),
+                                    ("x", TEXT_SCHEMA)])
     # triples identical to the dedicated extractor
     t0 = extract_triples(pages)
     assert t.count() == t0.count()

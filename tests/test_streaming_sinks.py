@@ -4,7 +4,7 @@ from pyspark.sql import functions as F
 
 from rdfa_spark.extract import extract_triples
 from rdfa_spark.pages import load_pages
-from rdfa_spark.sinks import ntriples_lines, write_ntriples
+from rdfa_spark.sinks import ntriples_lines
 
 
 def test_ntriples_lines(spark, sf_dir):
@@ -27,13 +27,6 @@ def test_ntriples_escaping(spark):
     [line] = [r.value for r in ntriples_lines(df).collect()]
     assert line == ('<http://s> <http://p> '
                     '"va\\"l\\nue\\t\\\\x"@en .')
-
-
-def test_write_ntriples_roundtrip_count(spark, sf_dir, tmp_path):
-    triples = extract_triples(load_pages(spark, sf_dir, partitions=4))
-    out = str(tmp_path / "nt")
-    write_ntriples(triples, out)
-    assert spark.read.text(out).count() == triples.count()
 
 
 def test_turtle_lines_prefix_compression(spark):
@@ -64,22 +57,17 @@ def test_turtle_lines_prefix_compression(spark):
                       '<http://ex.com/o> .')
 
 
-def test_write_turtle_roundtrip(spark, sf_dir, tmp_path):
-    """Directory concatenation in name order is one valid Turtle doc;
-    expanding pnames with the declared prefixes recovers exactly the
-    N-Triples serialization (round-trippable)."""
-    import glob
+def test_turtle_lines_roundtrip(spark, sf_dir):
+    """The prefix header followed by the Turtle lines is one valid
+    Turtle doc; expanding pnames with the declared prefixes recovers
+    exactly the N-Triples serialization (round-trippable)."""
     import re
     from rdfa_spark.sinks import (DEFAULT_PREFIXES, ntriples_lines,
-                                  write_turtle)
+                                  turtle_lines, turtle_prefix_header)
     triples = extract_triples(load_pages(spark, sf_dir)).limit(200) \
         .cache()
-    out = str(tmp_path / "ttl")
-    write_turtle(triples, out)
-    files = sorted(glob.glob(f"{out}/*"))
-    assert files[0].endswith("00_prefixes.ttl")
-    text = "".join(open(f).read() for f in files
-                   if not f.endswith((".crc", "_SUCCESS")))
+    text = turtle_prefix_header() + "".join(
+        r.value + "\n" for r in turtle_lines(triples).collect())
     # declared prefixes parse
     decls = dict(re.findall(r"@prefix (\w+): <([^>]+)> \.", text))
     assert decls == {k: v for k, v in DEFAULT_PREFIXES.items()}
