@@ -115,14 +115,13 @@ def _check_vectors(vecs, dim):
             f"vectors")
 
 
-def _collect_queries(queries, query_id_col, vec_col):
+def _collect_queries(queries):
     """Driver-side (bounded — the query set is small by design) ->
     (qids list, Q (nq, dim) float64, qnorms (nq,)); ``dim`` is the
     width of the first query vector."""
     import numpy as np
 
-    rows = queries.select(F.col(query_id_col),
-                          _as_double(vec_col)).collect()
+    rows = queries.select("query_id", _as_double("embedding")).collect()
     vecs = [r[1] for r in rows]
     dim = len(vecs[0]) if vecs and vecs[0] is not None else 0
     _check_vectors(vecs, dim)
@@ -130,13 +129,13 @@ def _collect_queries(queries, query_id_col, vec_col):
     return [r[0] for r in rows], Q, _seq_norm_np(Q)
 
 
-def _scored_pairs_schema(items, queries, id_col, query_id_col):
+def _scored_pairs_schema(items, queries):
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     return StructType([
-        StructField(query_id_col,
-                    queries.schema[query_id_col].dataType, True),
-        StructField("neighbor_id", items.schema[id_col].dataType,
+        StructField("query_id", queries.schema["query_id"].dataType,
+                    True),
+        StructField("neighbor_id", items.schema["vec_id"].dataType,
                     True),
         StructField("score", DoubleType(), True),
     ])
@@ -153,20 +152,22 @@ def _typed_batch(arrow_schema, *columns):
         schema=arrow_schema)
 
 
-# Members per block (or bucket) of every blocking operator.
+# Members per block (or bucket) of every pair operator.
 BLOCK_CAP = 10_000
 
 
 def cap_blocks(rows: DataFrame, keys: list[str],
                pairable: Column | None = None
                ) -> tuple[DataFrame, DataFrame]:
-    """The block cap of every blocking operator: returns (kept,
-    dropped).  ``kept`` is the rows of each block (rows with equal
-    ``keys``) that has at most ``BLOCK_CAP`` rows; ``dropped`` has one
-    (*keys, n_members) row per larger block.  A block whose rows fail
-    ``pairable`` (false or null) is dropped and reported whatever its
-    size.  The cap is read at call time, so patching
-    ``similarity.BLOCK_CAP`` reaches every operator.
+    """The block cap of every pair operator (one that self-joins or
+    pair-scores each block): returns (kept, dropped).  ``kept`` is the
+    rows of each block (rows with equal ``keys``) that has at most
+    ``BLOCK_CAP`` rows; ``dropped`` has one (*keys, n_members) row per
+    larger block.  A block whose rows fail ``pairable`` (false or
+    null) is dropped and reported whatever its size.  The cap is read
+    at call time, so patching ``similarity.BLOCK_CAP`` reaches every
+    pair operator.  An operator that compares no pairs
+    (``canonicalize``'s group-min) needs no cap.
 
     A block of K members self-joins into ~K²/2 pairs, so one hot key
     (mass-duplicated boilerplate, usually) would make the join
@@ -193,18 +194,19 @@ def cap_blocks(rows: DataFrame, keys: list[str],
     return counted.filter(~over).drop("_n"), dropped
 
 
-def _topk_rank(scored, query_id_col, k):
-    w = (Window.partitionBy(query_id_col)
+def _topk_rank(scored, k):
+    w = (Window.partitionBy("query_id")
          .orderBy(F.col("score").desc(), F.col("neighbor_id").asc()))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select(query_id_col, "rank", "neighbor_id", "score"))
+            .select("query_id", "rank", "neighbor_id", "score"))
 
 
-def _probed_topk(items, queries, k, id_col, vec_col, query_id_col,
-                 index):
+def _probed_topk(items, queries, k, index):
     """Top-k neighbours per query, scored in one ``mapInArrow`` numpy
-    kernel: the body of all three top-k operators.
+    kernel: the body of all three top-k operators.  Items are
+    (``vec_id``, ``embedding``) rows and queries (``query_id``,
+    ``embedding``) rows, as ``embeddings.parquet`` holds them.
 
     The query set is collected on the driver, and ``index(Q, qn)``
     returns ``(row_keys, probes)``.  ``row_keys(V, ni)`` gives each
@@ -218,19 +220,18 @@ def _probed_topk(items, queries, k, id_col, vec_col, query_id_col,
     result without reading the items."""
     import numpy as np
 
-    out_schema = _scored_pairs_schema(items, queries, id_col,
-                                      query_id_col)
-    qids, Q, qn = _collect_queries(queries, query_id_col, vec_col)
+    out_schema = _scored_pairs_schema(items, queries)
+    qids, Q, qn = _collect_queries(queries)
     if not qids:
         empty = items.sparkSession.createDataFrame([], out_schema)
-        return _topk_rank(empty, query_id_col, k)
+        return _topk_rank(empty, k)
     dim = Q.shape[1]
     qid_arr = np.array(qids)
     row_keys, probes = index(Q, qn)
     probe_idx = {key: np.array(qidx) for key, qidx in probes.items()}
     arrow_schema = to_arrow_schema(out_schema)
-    it = items.select(F.col(id_col).alias("neighbor_id"),
-                      _as_double(vec_col).alias("_ivec"))
+    it = items.select(F.col("vec_id").alias("neighbor_id"),
+                      _as_double("embedding").alias("_ivec"))
 
     def score_batches(batches):
         for rb in batches:
@@ -260,12 +261,11 @@ def _probed_topk(items, queries, k, id_col, vec_col, query_id_col,
                                      for c in zip(*outs)))
 
     scored = it.mapInArrow(score_batches, out_schema)
-    return _topk_rank(scored, query_id_col, k)
+    return _topk_rank(scored, k)
 
 
-def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                query_id_col: str = "query_id") -> DataFrame:
+def cosine_topk(items: DataFrame, queries: DataFrame,
+                k: int = 10) -> DataFrame:
     """Exact top-k neighbours per query: every item is scored against
     every query (one key that all queries probe), one
     (nb × dim)·(dim × nq) sequential-fold product per item batch;
@@ -282,8 +282,7 @@ def cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         return (lambda V, ni: np.zeros(len(V), dtype=np.int64),
                 {0: list(range(len(Q)))})
 
-    return _probed_topk(items, queries, k, id_col, vec_col,
-                        query_id_col, index)
+    return _probed_topk(items, queries, k, index)
 
 
 # ---------------------------------------------------------------------------
@@ -316,8 +315,6 @@ def multiprobe_flips(n_planes: int, multiprobe: int) -> list[tuple]:
 
 
 def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    query_id_col: str = "query_id",
                     n_planes: int = 12,
                     multiprobe: int = 1) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH
@@ -361,8 +358,7 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                 probes.setdefault(key, []).append(j)
         return row_keys, probes
 
-    return _probed_topk(items, queries, k, id_col, vec_col,
-                        query_id_col, index)
+    return _probed_topk(items, queries, k, index)
 
 
 def _fold_cosine(a: list[float], b: list[float]) -> float:
@@ -417,18 +413,20 @@ def farthest_first_centroids(sample: list[tuple], n_centroids: int
     return [(rank + 1, sample[i][1]) for rank, i in enumerate(chosen)]
 
 
+# Items in the IVF centroid-seeding sample (the DuckDB oracle's
+# ``_ivf_topk_sql`` reads the same constant).
+IVF_SAMPLE_SIZE = 256
+
+
 def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    query_id_col: str = "query_id",
-                    n_centroids: int = 16, nprobe: int = 4,
-                    sample_size: int = 256) -> DataFrame:
+                    n_centroids: int = 16, nprobe: int = 4) -> DataFrame:
     """IVF-style approximate top-k: deterministic farthest-first
     centroids over an md5-ordered sample (spread across the space —
     no RNG, no Lloyd float nondeterminism), each item in the cell of
     its most similar centroid, queries probe their nprobe most
     similar cells, exact cosine rerank on the candidates.
 
-    Seeding: take the ``sample_size`` items with smallest
+    Seeding: take the ``IVF_SAMPLE_SIZE`` items with smallest
     md5(id) — a deterministic uniform sample, a top-K not a global
     sort — collect that tiny set to the driver and run
     farthest-first there (O(sample·n_centroids) float ops).  The
@@ -451,10 +449,10 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
 
     def index(Q, qn):
         dim = Q.shape[1]
-        rows = (items.select(F.col(id_col), _as_double(vec_col))
-                .orderBy(F.md5(F.col(id_col).cast("string")).asc(),
-                         F.col(id_col).asc())
-                .limit(sample_size)
+        rows = (items.select("vec_id", _as_double("embedding"))
+                .orderBy(F.md5(F.col("vec_id").cast("string")).asc(),
+                         F.col("vec_id").asc())
+                .limit(IVF_SAMPLE_SIZE)
                 .collect())
         _check_vectors([r[1] for r in rows], dim)
         seeds = farthest_first_centroids(
@@ -476,13 +474,10 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
 
         return row_keys, probes
 
-    return _probed_topk(items, queries, k, id_col, vec_col,
-                        query_id_col, index)
+    return _probed_topk(items, queries, k, index)
 
 
 def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
                              bands: int = 4,
                              planes_per_band: int = 8,
                              *, dim: int) -> DataFrame:
@@ -528,10 +523,10 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
     S = [np.array([_plane_signs_py(bnd * planes_per_band + p, dim)
                    for p in range(planes_per_band)])
          for bnd in range(bands)]
-    it = items.select(F.col(id_col), _as_double(vec_col).alias("_v"))
-    id_type = items.schema[id_col].dataType
+    it = items.select("vec_id", _as_double("embedding").alias("_v"))
+    id_type = items.schema["vec_id"].dataType
     banded_schema = StructType([
-        StructField(id_col, id_type, True),
+        StructField("vec_id", id_type, True),
         StructField("_v", it.schema["_v"].dataType, True),
         StructField("band_id", IntegerType(), False),
         StructField("sig", StringType(), False),

@@ -28,18 +28,16 @@ def tokens_col(text_col: str) -> Column:
     return F.split(F.lower(F.col(text_col)), r"\s+")
 
 
-def with_token_count(df: DataFrame, text_col: str = "text",
-                     out: str = "n_tokens") -> DataFrame:
-    return df.withColumn(out, F.size(tokens_col(text_col)))
+def with_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+    return df.withColumn("n_tokens", F.size(tokens_col(text_col)))
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text",
-                     out: str = "fingerprint") -> DataFrame:
+def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Document fingerprint: md5 of whitespace-normalized lowercase
     text (portable to any engine with md5)."""
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))),
                             r"\s+", " ")
-    return df.withColumn(out, F.md5(norm))
+    return df.withColumn("fingerprint", F.md5(norm))
 
 
 def _stopword_hits(toks: Column, words: list[str]) -> Column:
@@ -117,11 +115,11 @@ TRIGRAM_LANGS = list(TRIGRAM_SEEDS)       # tie-break priority order
 PROFILE_SIZE = 200
 
 
-def trigram_profiles(k: int = PROFILE_SIZE) -> dict[str,
-                                                    dict[str, int]]:
-    """Per-language {trigram: integer weight}: the top-k trigrams of
-    the padded, whitespace-collapsed, lowercased seed, weighted
-    k-rank (rank by count desc, trigram asc — fully deterministic).
+def trigram_profiles() -> dict[str, dict[str, int]]:
+    """Per-language {trigram: integer weight}: the top
+    ``PROFILE_SIZE`` trigrams of the padded, whitespace-collapsed,
+    lowercased seed, weighted PROFILE_SIZE - rank (rank by count desc,
+    trigram asc — fully deterministic).
     Identical tables back the kernel's lookup tables and the DuckDB
     oracle VALUES list."""
     import re
@@ -133,8 +131,9 @@ def trigram_profiles(k: int = PROFILE_SIZE) -> dict[str,
         for i in range(len(norm) - 2):
             t = norm[i:i + 3]
             counts[t] = counts.get(t, 0) + 1
-        top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        out[lang] = {t: k - i for i, (t, _) in enumerate(top)}
+        top = sorted(counts.items(),
+                     key=lambda kv: (-kv[1], kv[0]))[:PROFILE_SIZE]
+        out[lang] = {t: PROFILE_SIZE - i for i, (t, _) in enumerate(top)}
     return out
 
 
@@ -378,8 +377,7 @@ def _langid_scalar(texts: list) -> list[str]:
     return preds
 
 
-def with_language_id(df: DataFrame, text_col: str = "text",
-                     out: str = "lang_pred") -> DataFrame:
+def with_language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Character-trigram language-ID (Cavnar-Trenkle out-of-place
     profiles, integer-scaled): every doc trigram occurrence scores
     its language-profile weight; argmax wins, tie-broken by
@@ -389,8 +387,8 @@ def with_language_id(df: DataFrame, text_col: str = "text",
 
     One ``mapInArrow`` pass runs ``_langid_numpy`` over each batch:
     no shuffle and no per-trigram rows.  Every column of ``df``
-    passes through unchanged and ``out`` is appended (replacing a
-    column of that name).  Whitespace collapse uses the ASCII class
+    passes through unchanged and ``lang_pred`` is appended (replacing
+    a column of that name).  Whitespace collapse uses the ASCII class
     [ \\t\\n\\x0b\\f\\r] — exactly Java regex / RE2 ``\\s`` — so
     the kernel and the DuckDB oracle normalize identically."""
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -398,9 +396,10 @@ def with_language_id(df: DataFrame, text_col: str = "text",
 
     from .similarity import _typed_batch
 
-    df = df.drop(out)
+    df = df.drop("lang_pred")
     out_schema = StructType(df.schema.fields
-                            + [StructField(out, StringType(), True)])
+                            + [StructField("lang_pred", StringType(),
+                                           True)])
     arrow_schema = to_arrow_schema(out_schema)
     ti = df.columns.index(text_col)
 
@@ -422,18 +421,17 @@ def with_language_id(df: DataFrame, text_col: str = "text",
 BPE_TOKEN_RE = r" ?\p{L}+| ?\p{N}+| ?[^\p{L}\p{N} ]+"
 
 
-def with_bpe_token_count(df: DataFrame, text_col: str = "text",
-                         out: str = "n_bpe_tokens") -> DataFrame:
+def with_bpe_token_count(df: DataFrame,
+                         text_col: str = "text") -> DataFrame:
     """Token count under the BPE-ish pre-tokenizer regex — one
     JVM-side regexp_extract_all, no Python."""
     toks = F.regexp_extract_all(
         F.regexp_replace(F.col(text_col), r"\s+", " "),
         F.lit(BPE_TOKEN_RE), 0)
-    return df.withColumn(out, F.size(toks))
+    return df.withColumn("n_bpe_tokens", F.size(toks))
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text",
-                       prefix: str = "q_") -> DataFrame:
+def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality features, integer-scaled (per-mille) so every engine
     computes identical values:
 
@@ -455,13 +453,11 @@ def with_quality_score(df: DataFrame, text_col: str = "text",
     # an explicit floor keeps both engines identical)
     pm = lambda num, den: F.floor(  # noqa: E731
         (num * 1000) / F.greatest(den, F.lit(1))).cast("bigint")
-    out = (df.withColumn(prefix + "n_chars", n_chars)
-             .withColumn(prefix + "n_tokens", n_tokens)
-             .withColumn(prefix + "mean_token_len_pm",
-                         pm(tok_chars, n_tokens))
-             .withColumn(prefix + "stopword_pm", pm(stop_hits, n_tokens))
-             .withColumn(prefix + "alpha_pm", pm(alpha, n_chars)))
-    score = (F.col(prefix + "alpha_pm")
-             + F.col(prefix + "stopword_pm")
-             + F.least(F.col(prefix + "n_tokens"), F.lit(100)) * 10)
-    return out.withColumn(prefix + "score_pm", score.cast("bigint"))
+    out = (df.withColumn("q_n_chars", n_chars)
+             .withColumn("q_n_tokens", n_tokens)
+             .withColumn("q_mean_token_len_pm", pm(tok_chars, n_tokens))
+             .withColumn("q_stopword_pm", pm(stop_hits, n_tokens))
+             .withColumn("q_alpha_pm", pm(alpha, n_chars)))
+    score = (F.col("q_alpha_pm") + F.col("q_stopword_pm")
+             + F.least(F.col("q_n_tokens"), F.lit(100)) * 10)
+    return out.withColumn("q_score_pm", score.cast("bigint"))

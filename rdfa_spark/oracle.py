@@ -651,20 +651,22 @@ FROM ranked WHERE rank <= {k}
 # sample (mirror of similarity.farthest_first_centroids — identical
 # left-to-right float folds, so the selected set is bit-identical),
 # argmax cell assignment, nprobe=4 query probing, exact rerank —
-# mirror of ivf_cosine_topk(n_centroids=16, nprobe=4, k=10,
-# sample_size=256).  The traversal unrolls to one CTE pair per
-# centroid: n_k picks the point whose max-cosine-to-chosen is
-# smallest (ties by sample order), s_k folds the new centroid into
-# the running best array.
+# mirror of ivf_cosine_topk(n_centroids=16, nprobe=4, k=10), over
+# the same IVF_SAMPLE_SIZE-item seeding sample.  The traversal unrolls
+# to one CTE pair per centroid: n_k picks the point whose
+# max-cosine-to-chosen is smallest (ties by sample order), s_k folds
+# the new centroid into the running best array.
 def _ivf_topk_sql(n_centroids: int = 16, nprobe: int = 4,
-                  k: int = 10, sample_size: int = 256) -> str:
+                  k: int = 10) -> str:
+    from .functions.similarity import IVF_SAMPLE_SIZE
+
     parts = [f"""
 WITH samp AS MATERIALIZED (
   SELECT ord, sv FROM (
     SELECT CAST(embedding AS DOUBLE[]) AS sv,
            row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))
                               ASC, vec_id ASC) AS ord
-    FROM embeddings) WHERE ord <= {sample_size}
+    FROM embeddings) WHERE ord <= {IVF_SAMPLE_SIZE}
 ), s1 AS MATERIALIZED (
   SELECT s.ord, s.sv, {_cos('s.sv', 'c.cv')} AS best,
          (s.ord = 1) AS chosen

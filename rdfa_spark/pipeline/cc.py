@@ -236,13 +236,12 @@ def _salt_canonical(e: DataFrame, max_degree: int,
     return e2.union(chains)
 
 
-def connected_components_salted(edges: DataFrame, src: str = "src",
-                                dst: str = "dst",
+def connected_components_salted(edges: DataFrame,
                                 max_degree: int = 100_000,
-                                n_salts: int = 16,
-                                reliable: bool = False) -> DataFrame:
-    """CC with explicit hot-key salting (``_salt_canonical``) applied
-    up front; the salt replicas are dropped from the labeling.
+                                n_salts: int = 16) -> DataFrame:
+    """CC over (``src``, ``dst``) edges with explicit hot-key salting
+    (``_salt_canonical``) applied up front; the salt replicas are
+    dropped from the labeling.
 
     The canonical edge set is checkpointed before salting: the
     salting stage launches several independent jobs over it (degree
@@ -250,7 +249,7 @@ def connected_components_salted(edges: DataFrame, src: str = "src",
     and without the checkpoint every one of those re-executes the
     caller's full edge lineage (guide §2.4/§5 — cut the lineage once,
     then fan out)."""
-    e = _checkpoint(_canon_edges(edges, src, dst), reliable)
+    e = _canon_edges(edges, "src", "dst").localCheckpoint(eager=True)
     salted = _salt_canonical(e, max_degree, n_salts)
-    return (connected_components(salted, "a", "b", reliable)
+    return (connected_components(salted, "a", "b")
             .filter(~F.col("node").contains(SALT_MARKER)))

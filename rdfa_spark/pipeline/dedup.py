@@ -68,12 +68,12 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     return out
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str,
-              out: str = "simhash") -> DataFrame:
-    """64-bit SimHash as a 64-char bit string: per-token md5-derived
-    bit vectors, majority vote per bit.  Pure built-ins (no Python in
-    the hot path); the bit-string representation is engine-portable
-    (the DuckDB oracle can reproduce it with the same md5 math)."""
+def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """64-bit SimHash as a 64-char bit string in ``simhash``:
+    per-token md5-derived bit vectors, majority vote per bit.  Pure
+    built-ins (no Python in the hot path); the bit-string
+    representation is engine-portable (the DuckDB oracle can
+    reproduce it with the same md5 math)."""
     toks = F.array_distinct(
         F.split(F.lower(F.col(text_col)), r"\s+"))
 
@@ -98,7 +98,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str,
     bits = F.array_join(
         F.transform(votes, lambda v: F.when(v > 0, "1").otherwise("0")),
         "")
-    return df.withColumn(out, bits)
+    return df.withColumn("simhash", bits)
 
 
 # SimHash blocking word width: 4 words of the 64-bit signature (the

@@ -5,13 +5,14 @@ exact normalized label key.  Each label has one key, so the
 candidate-pair graph is a set of disjoint per-key cliques and its
 connected components are the key blocks: ``canonicalize`` takes the
 min label of each block, and ``exact_candidate_pairs`` is the same
-blocking as a pair list.  Labels the exact key cannot block (the
-empty and NULL keys, blocks over ``similarity.BLOCK_CAP`` labels) are
-paired with nothing: each such mention keeps its own label as its
-canonical id, and both operators report those blocks in
-``dropped_blocks``.  ``lsh_candidate_pairs`` (MinHash-LSH blocking on
-shingles) is a separate operator; no stage routes the dropped labels
-through it.
+blocking as a pair list.  The empty and NULL keys block nothing: a
+mention under either key (or with a NULL label) keeps its own label
+as its canonical id.  ``canonicalize`` compares no pairs, so it caps
+no block; ``exact_candidate_pairs`` self-joins each block, so it
+also leaves out the blocks over ``similarity.BLOCK_CAP`` labels and
+reports every block it leaves out in ``dropped_blocks``.
+``lsh_candidate_pairs`` (MinHash-LSH blocking on shingles) is a
+separate operator; no stage routes the dropped labels through it.
 
 All hashing is md5-based (portable: identical in Spark and the DuckDB
 oracle).  The MinHash signatures come from one ``mapInArrow`` kernel;
@@ -41,20 +42,6 @@ def entity_mentions(triples: DataFrame) -> DataFrame:
                      .alias("entity_key")))
 
 
-def _blocked_labels(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(kept, dropped): the distinct (entity_key, label) rows of every
-    pairable block, and ``cap_blocks``' report of the rest."""
-    labels = mentions.select("entity_key", "label").distinct()
-    # the empty and null keys fail ``pairable`` (``'' != ''`` is
-    # false, ``NULL != ''`` is null), so they are always reported
-    labels, dropped = cap_blocks(labels, ["entity_key"],
-                                 F.col("entity_key") != "")
-    # filtering those keys by name lets Catalyst push the filter below
-    # the window and the distinct, so the hot empty key is never
-    # shuffled into one window task
-    return labels.filter(F.col("entity_key") != ""), dropped
-
-
 def exact_candidate_pairs(mentions: DataFrame) -> DataFrame:
     """Blocking on the normalized key: distinct label pairs that share
     a key (self-join; the small side of each block stays in-block so
@@ -72,7 +59,15 @@ def exact_candidate_pairs(mentions: DataFrame) -> DataFrame:
     cap.  Route their mentions through ``lsh_candidate_pairs``, which
     blocks on content shingles instead.
     """
-    labels, dropped = _blocked_labels(mentions)
+    labels = mentions.select("entity_key", "label").distinct()
+    # the empty and null keys fail ``pairable`` (``'' != ''`` is
+    # false, ``NULL != ''`` is null), so they are always reported
+    labels, dropped = cap_blocks(labels, ["entity_key"],
+                                 F.col("entity_key") != "")
+    # filtering those keys by name lets Catalyst push the filter below
+    # the window and the distinct, so the hot empty key is never
+    # shuffled into one window task
+    labels = labels.filter(F.col("entity_key") != "")
     a, b = labels.alias("a"), labels.alias("b")
     out = (a.join(b, "entity_key")
            .filter(F.col("a.label") < F.col("b.label"))
@@ -225,10 +220,10 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
 def canonicalize(mentions: DataFrame) -> DataFrame:
     """Canonical entity ids: a mention's ``canonical_id`` is the min
     label of its ``entity_key`` block (the blocks of
-    ``exact_candidate_pairs``); a mention in a dropped block, or with
-    a null label, keeps its own label.  Returns (mention, label,
-    canonical_id); ``result.dropped_blocks`` is the blocking's report
-    (``cap_blocks``).
+    ``exact_candidate_pairs``, at any size); a mention under the empty
+    or NULL key, or with a NULL label, keeps its own label.  Returns
+    (mention, label, canonical_id).  No pair is compared, so no block
+    is capped and nothing is reported.
 
     Precondition: ``entity_key`` is a function of ``label``, as
     ``entity_mentions`` builds it.  Then each block is a connected
@@ -236,24 +231,26 @@ def canonicalize(mentions: DataFrame) -> DataFrame:
     label connected components over that graph would give.
 
     The mentions table is checkpointed lazily (localCheckpoint): it is
-    read three times, and its upstream is typically the full
-    extraction parse, which would otherwise run once per read.  The
-    checkpoint holds only the narrow (mention, label, entity_key)
-    projection, a tiny fraction of the corpus bytes (guide §8: make
-    every pass but the first operate on the lightweight proxy, not
-    the opaque payload)."""
+    read three times, and its upstream is a full extraction parse (the
+    graded ``entity_canonical`` query) or a store read (``build_kg``),
+    which would otherwise run once per read.  The checkpoint holds
+    only the narrow (mention, label, entity_key) projection, a tiny
+    fraction of the corpus bytes (guide §8: make every pass but the
+    first operate on the lightweight proxy, not the opaque payload)."""
     mentions = mentions.localCheckpoint(eager=False)
-    labels, dropped = _blocked_labels(mentions)
-    minima = labels.groupBy("entity_key").agg(
+    # never null, so its negation is exactly the other mentions; only
+    # pairable keys are shuffled, so the hot empty key never lands in
+    # one aggregate or join task
+    pairable = (F.col("entity_key").isNotNull()
+                & (F.col("entity_key") != "") & F.col("label").isNotNull())
+    blocked = mentions.filter(pairable)
+    minima = blocked.groupBy("entity_key").agg(
         F.min("label").alias("canonical_id"))
-    # only pairable keys are shuffled into the join, so the hot empty
-    # key never lands in one join task
-    joins = (F.col("entity_key") != "") & F.col("label").isNotNull()
-    out = (mentions.filter(joins).join(minima, "entity_key", "left")
-           .unionByName(mentions.filter(~F.coalesce(joins, F.lit(False))),
-                        allowMissingColumns=True)
-           .select("mention", "label",
-                   F.coalesce("canonical_id", "label")
-                    .alias("canonical_id")))
-    out.dropped_blocks = dropped
-    return out
+    # every pairable mention's block has a minimum, so an inner join
+    # would be exact too; a left join onto a side unique on its key is
+    # dropped by the optimizer when no caller reads ``canonical_id``
+    # (a row count)
+    return (blocked.join(minima, "entity_key", "left")
+            .select("mention", "label", "canonical_id")
+            .unionByName(mentions.filter(~pairable).select(
+                "mention", "label", F.col("label").alias("canonical_id"))))

@@ -21,12 +21,11 @@ from pyspark.sql import functions as F
 _POS = ("subj", "pred", "obj")
 
 
-def match_pattern(triples: DataFrame, subj=None, pred=None, obj=None,
-                  graph=None) -> DataFrame:
+def match_pattern(triples: DataFrame, subj=None, pred=None,
+                  obj=None) -> DataFrame:
     """Single-pattern match (get_statements / count_statements)."""
     df = triples
-    for col, val in (("subj", subj), ("pred", pred), ("obj", obj),
-                     ("graph", graph)):
+    for col, val in zip(_POS, (subj, pred, obj)):
         if val is not None and not (isinstance(val, str)
                                     and val.startswith("?")):
             df = df.filter(F.col(col) == val)

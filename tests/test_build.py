@@ -24,9 +24,10 @@ STAGES = ("materialize.run", "materialize.read", "materialize.write",
 # Jobs of one build_kg call at sf0.001, 1 batch, 4 buckets, in the
 # test session.  The sequence it replaced (run, triples().count(),
 # canonicalize, entity write, canon distinct count) ran 22 there,
-# canonicalization by connected components 20, and a store of three
-# tables written from one persisted extraction 16.
-BUILD_JOBS = 13
+# canonicalization by connected components 20, a store of three
+# tables written from one persisted extraction 16, and canonicalize
+# with a label distinct and a block-cap window 13.
+BUILD_JOBS = 12
 
 
 def _direct_report(run: ResumableExtraction) -> dict:

@@ -443,7 +443,7 @@ def test_exact_candidate_pairs_skew_guards(spark, monkeypatch):
 
 
 def test_exact_candidate_pairs_plan_shape(spark):
-    """canonicalize's blocking join: per side, one cap Window fed by
+    """The pair self-join: per side, one cap Window fed by
     one Exchange on entity_key, which the join reuses (no Exchange
     between the Window and the join).  The other Exchange per side is
     the (entity_key, label) distinct: 4 Exchanges, 2 Windows."""
@@ -479,11 +479,11 @@ def _subtree(lines, i):
 
 def test_canonicalize_plan_keeps_unpairable_keys_unshuffled(spark):
     """The hot empty key (and the null key) never reaches an Exchange:
-    below each of canonicalize's 3 Exchanges (the label distinct, the
-    cap Window's and the mentions side of the one join, which reuses
-    the Window's partitioning) the first Filter drops both keys.  The
-    mentions that keep their own label reach the output through a
-    scan under no Exchange."""
+    below each of canonicalize's 2 Exchanges (the group-min's and the
+    mentions side of the one join, which reuses the group-min's
+    partitioning) the first Filter drops both keys, and no Window
+    caps a block.  The mentions that keep their own label reach the
+    output through a scan under no Exchange."""
     import re
     m = spark.createDataFrame(
         [(f"m{i}", f"Label {i % 7}", f"label{i % 7}") for i in range(50)]
@@ -493,9 +493,9 @@ def test_canonicalize_plan_keeps_unpairable_keys_unshuffled(spark):
     lines = (canonicalize(m)._jdf.queryExecution().executedPlan()
              .toString().splitlines())
     plan = "\n".join(lines)
-    assert plan.count("Join") == 1, plan
+    assert plan.count("Join") == 1 and "Window [" not in plan, plan
     exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
-    assert len(exchanges) == 3, plan
+    assert len(exchanges) == 2, plan
     for i in exchanges:
         first = next(ln for ln in _subtree(lines, i) if "Filter" in ln)
         assert re.search(r"isnotnull\(entity_key#\d+\)", first), plan
@@ -618,7 +618,6 @@ def test_lsh_and_simhash_bucket_caps(spark, monkeypatch):
 #            blocks)
 CAP_CASES = {
     "exact_candidate_pairs": ("labels", exact_candidate_pairs, {"brand"}),
-    "canonicalize": ("labels", canonicalize, {"brand"}),
     "lsh_candidate_pairs": (
         "docs", lambda df: lsh_candidate_pairs(df, "id", "text"),
         set(range(8))),                                   # one per band
@@ -663,10 +662,7 @@ def _cap_input(spark, kind):
 
 def _outside_pairs(out):
     """The output pairs, as sets of ids or labels, outside the cluster
-    check: canonicalize's pairs are labels that share a canonical id."""
-    if "canonical_id" in out.columns:
-        return [{r.label, r.canonical_id} for r in out.collect()
-                if r.label != r.canonical_id]
+    check."""
     if "label_a" in out.columns:
         return [{r.label_a, r.label_b} for r in out.collect()]
     return [{r.id_a, r.id_b} for r in out.collect()]
@@ -692,6 +688,19 @@ def test_cap_reports_dropped(spark, monkeypatch, result):
     assert _outside_pairs(out) == [outside]
     monkeypatch.setattr(similarity, "BLOCK_CAP", 10_000)
     assert call(df).dropped_blocks.count() == 0
+
+
+def test_canonicalize_ignores_block_cap(spark, monkeypatch):
+    """canonicalize compares no pairs, so no cap reaches it: under a
+    cap of 20, every mention of a 60-label block gets the block's min
+    label, and the result carries no dropped-blocks report."""
+    monkeypatch.setattr(similarity, "BLOCK_CAP", 20)
+    out = canonicalize(_cap_input(spark, "labels"))
+    got = {r.label: r.canonical_id for r in out.collect()}
+    assert got == {**{f"brand {i:02d}": "brand 00" for i in range(60)},
+                   "Ada Lovelace": "Ada Lovelace",
+                   "ada lovelace!": "Ada Lovelace"}
+    assert not hasattr(out, "dropped_blocks")
 
 
 def test_filter_corpus_composition(spark):
