@@ -33,8 +33,8 @@ def _as_double(col: str) -> Column:
     return F.col(col).cast("array<double>")
 
 
-def embedding_dim(path: str, vec_col: str = "embedding") -> int:
-    """Vector dimensionality of a parquet embedding column, read
+def embedding_dim(path: str) -> int:
+    """Vector dimensionality of a parquet ``embedding`` column, read
     driver-side from the file itself (one value from the first row
     group via pyarrow) — NO Spark job.  Parquet list schemas don't
     carry a fixed length, so a 1-value read is the cheapest
@@ -54,12 +54,12 @@ def embedding_dim(path: str, vec_col: str = "embedding") -> int:
     # scan forward for the first non-null vector (a NULL or empty
     # first row would otherwise yield TypeError / a wrong dim)
     for batch in pq.ParquetFile(path).iter_batches(
-            batch_size=64, columns=[vec_col]):
+            batch_size=64, columns=["embedding"]):
         for v in batch.column(0):
             if v.is_valid and len(v) > 0:
                 return len(v)
     raise ValueError(
-        f"embedding_dim: column {vec_col!r} in {path!r} has no "
+        f"embedding_dim: column 'embedding' in {path!r} has no "
         f"non-null, non-empty vectors to sample")
 
 

@@ -7,9 +7,10 @@ A second call on the same ``out_dir`` skips the committed batches.
 
 Each stage's jobs carry a Spark job tag of its name; unlike a job
 group, a tag leaves a caller's group in place.  The report's counts
-come from one aggregate over the lineage and 'parse-failed' error
-rows, one row per page, not from a scan of the triples.  A page with
-null html is in neither table, so it counts nowhere.
+come from one aggregate over the store's rows: its lineage rows and
+'parse-failed' error rows (one per page) and the lineage rows'
+``n_triples``, not a count of the triple rows.  A page with null html
+has no row of either kind, so it counts nowhere.
 """
 
 from __future__ import annotations
@@ -51,13 +52,11 @@ def build_kg(pages: DataFrame, out_dir: str, *, n_batches: int,
     with _stage(sc, "materialize.run"):
         batches_run = run.run(pages)
     with _stage(sc, "materialize.read"):
-        failed = run.errors().where("code = 'parse-failed'")
-        counts = (run.lineage().selectExpr("n_triples", "false AS failed")
-                  .union(failed.selectExpr("0L", "true"))
-                  .selectExpr("count_if(NOT failed) AS pages_parsed",
-                              "count_if(failed) AS parse_failures",
-                              "coalesce(sum(n_triples), 0) AS triples")
-                  .first().asDict())
+        counts = run.rows().selectExpr(
+            "count_if(kind = 'x') AS pages_parsed",
+            "count_if(kind = 'e' AND code = 'parse-failed') "
+            "AS parse_failures",
+            "coalesce(sum(n_triples), 0) AS triples").first().asDict()
     canon = canonicalize(entity_mentions(run.triples()))
     entities_dir = os.path.join(out_dir, "entities")
     with _stage(sc, "materialize.write"):

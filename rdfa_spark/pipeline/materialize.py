@@ -10,12 +10,12 @@ explicit ``subj_bucket`` partition column — the same physical layout
 ``writeTo(...).partitionedBy(bucket(N, "subj"))`` produces on an
 Iceberg catalog; swap the writer when a catalog is configured.
 
-Store layout: ``<out>/store`` is the ``extract_all`` table itself
+Store layout: ``<out>/rows`` is the ``extract_all`` table itself
 (without the page text), ONE parse and ONE write per batch, partitioned
-by ``kind=<t|e|x>/batch=<k>/subj_bucket=<n>``.  ``triples()``,
-``errors()`` and ``lineage()`` each read one kind's subtree and
-project that kind's columns; ``triples_dir`` is the ``kind=t``
-subtree.
+by ``batch=<k>/subj_bucket=<n>``; the row kind (t, e, x) is a column,
+so a batch writes one file per bucket.  ``rows()`` is the store under
+its fixed schema; ``triples()``, ``errors()`` and ``lineage()`` each
+filter it on one kind and project that kind's columns.
 
 Resume protocol (idempotent because extraction is deterministic
 per url — rdfa_spark/extract.py):
@@ -24,9 +24,13 @@ per url — rdfa_spark/extract.py):
   partition overwrite), so a batch that died mid-write is re-written
   wholesale (rename-free object stores: the batch is the commit unit);
 * after a batch's data has landed, one ``(batch)`` row is appended to
-  the ``_committed_batches`` ledger — the commit record, present even
+  the ``_ledger`` directory — the commit record, present even
   for a batch with zero triples.  A restarted run skips the batches
   the ledger names.
+* the store and ledger names differ from every older layout's
+  (``store`` + ``_committed_batches``, partitioned by kind; the
+  three-table ``_processed_urls``), so a directory an older layout
+  wrote is built afresh beside its old files, never resumed into.
 
 Lineage: one (url, n_triples, n_subjects, batch) row per parsed page,
 the extraction kernel's per-page ``x`` row (no aggregation).  A page
@@ -53,14 +57,14 @@ from ..extract import (ERROR_SCHEMA, EXTRACT_ALL_SCHEMA, TRIPLE_SCHEMA,
 # 100 TB corpus wants tens of thousands).
 N_BUCKETS_DEFAULT = 64
 
-PARTITION_COLS = ["kind", "batch", "subj_bucket"]
+PARTITION_COLS = ["batch", "subj_bucket"]
 
 # Read schemas (columns, then partition columns): they skip parquet
 # schema inference (one Spark job per read), and a ledger holding only
 # a crashed append's ``_temporary`` reads as empty under them.
 STORE_SCHEMA = StructType(
-    [f for f in EXTRACT_ALL_SCHEMA.fields if f.name not in ("kind", "text")]
-).add("kind", "string").add("batch", "integer").add("subj_bucket", "integer")
+    [f for f in EXTRACT_ALL_SCHEMA.fields if f.name != "text"]
+).add("batch", "integer").add("subj_bucket", "integer")
 LEDGER_SCHEMA = "batch int"
 
 
@@ -68,18 +72,22 @@ def _bucketed(rows: DataFrame, n_buckets: int) -> DataFrame:
     """One writer task per subject bucket (without the repartition
     every upstream task writes a file per bucket it holds: tasks x
     buckets small files, measured 27 s at sf0.1 and a metadata
-    catastrophe at 100 TB), rows sorted by (kind, batch, subj_bucket,
-    subj).  Leading with the partition columns satisfies the
+    catastrophe at 100 TB), so a batch writes one file per bucket it
+    holds, every kind in it.  Rows are sorted by (batch, subj_bucket,
+    kind, subj).  Leading with the partition columns satisfies the
     dynamic-partition writer's required ordering, which otherwise
     inserts a SECOND sort that discards the subj clustering the
-    parquet min/max pruning of subject-point reads rests on.  Error
-    and lineage rows have no subject: they bucket by url, so they
-    spread over the buckets instead of piling into one."""
+    parquet min/max pruning of subject-point reads rests on; ``kind``
+    next keeps each kind's rows contiguous in the file, so in a file
+    of many row groups a kind filter skips the other kinds' groups by
+    their min/max.  Error and lineage rows
+    have no subject: they bucket by url, so they spread over the
+    buckets instead of piling into one."""
     bucket = F.pmod(F.xxhash64(F.coalesce("subj", "url")),
                     F.lit(n_buckets)).cast("int")
     return (rows.withColumn("subj_bucket", bucket)
             .repartition(n_buckets, F.col("subj_bucket"))
-            .sortWithinPartitions(*PARTITION_COLS, "subj"))
+            .sortWithinPartitions(*PARTITION_COLS, "kind", "subj"))
 
 
 class ResumableExtraction:
@@ -95,9 +103,11 @@ class ResumableExtraction:
         self.out_dir = out_dir
         self.n_batches = n_batches
         self.n_buckets = n_buckets
-        self.store_dir = os.path.join(out_dir, "store")
-        self.triples_dir = os.path.join(self.store_dir, "kind=t")
-        self.ledger_dir = os.path.join(out_dir, "_committed_batches")
+        self.store_dir = os.path.join(out_dir, "rows")
+        # the triples have no directory of their own: this names the
+        # whole store, every kind (kgbench sizes it)
+        self.triples_dir = self.store_dir
+        self.ledger_dir = os.path.join(out_dir, "_ledger")
 
     # -- ledger -------------------------------------------------------
     def processed_batches(self) -> set[int]:
@@ -139,22 +149,12 @@ class ResumableExtraction:
     def _read(self, path: str, schema: StructType | str) -> DataFrame:
         return self.spark.read.schema(schema).parquet(path)
 
+    def rows(self) -> DataFrame:
+        """The whole store, every kind, under its fixed schema."""
+        return self._read(self.store_dir, STORE_SCHEMA)
+
     def _kind(self, kind: str, *cols) -> DataFrame:
-        """The store's rows of one kind, read from the kind's subtree
-        (``basePath`` keeps ``kind`` a partition column): a whole-store
-        read lists every kind's bucket directories, one more listing
-        job per kind at high bucket counts.  A kind no batch produced
-        has no subtree; it reads as the kind filter over the store."""
-        try:
-            rows = (self.spark.read.schema(STORE_SCHEMA)
-                    .option("basePath", self.store_dir)
-                    .parquet(os.path.join(self.store_dir, f"kind={kind}")))
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            rows = (self._read(self.store_dir, STORE_SCHEMA)
-                    .where(F.col("kind") == kind))
-        return rows.select(*cols)
+        return self.rows().where(F.col("kind") == kind).select(*cols)
 
     def triples(self) -> DataFrame:
         return self._kind("t", *TRIPLE_SCHEMA.fieldNames(), "batch",

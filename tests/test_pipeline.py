@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
-from rdfa_spark.extract import extract_errors, extract_triples
+from rdfa_spark.extract import extract_all, extract_errors, extract_triples
 from rdfa_spark.functions import similarity
 from rdfa_spark.functions.similarity import embedding_near_dup_pairs
 from rdfa_spark.pages import load_pages
@@ -299,10 +299,22 @@ PLAIN_PAGES = [(f"http://ex.com/{i}",
                for i in range(8)]
 
 
+# PLAIN_PAGES plus a page with a triple and a page whose parse fails:
+# every row kind (t, e, x)
+KIND_PAGES = ([(u, h.encode()) for u, h in PLAIN_PAGES]
+              + [("http://ex.com/rdfa", b'<html><body><p property='
+                  b'"dc:title">t</p></body></html>'),
+                 ("http://ex.com/broken", b"PK\x03\x04 not a zip")])
+
+
 def test_old_layout_directory_is_rebuilt(spark, tmp_path):
-    """A directory in the older three-table layout, whose
-    ``_processed_urls`` ledger names every batch, has no store ledger:
-    it is built afresh, never resumed into an empty store."""
+    """A directory an older layout wrote is built afresh, never
+    resumed into: the three-table layout, whose ``_processed_urls``
+    ledger names every batch, and the store partitioned by
+    ``kind=<t|e|x>/batch=<k>/subj_bucket=<n>`` under ``store`` with its
+    ``_committed_batches`` ledger, stopped after batch 0 of 2.  A
+    resumed kind-partitioned store would hold ``batch=1`` next to
+    ``kind=t`` and fail every read."""
     pages = spark.createDataFrame([(u, h.encode()) for u, h in PLAIN_PAGES],
                                   "url string, html binary")
     out = str(tmp_path / "kg_old")
@@ -313,25 +325,49 @@ def test_old_layout_directory_is_rebuilt(spark, tmp_path):
     assert run.run(pages) == 2
     assert run.lineage().count() == len(PLAIN_PAGES)
 
+    pages = spark.createDataFrame(KIND_PAGES, "url string, html binary")
+    out = str(tmp_path / "kg_kind_partitioned")
+    batch0 = pages.where(F.pmod(F.xxhash64("url"), F.lit(2)) == 0)
+    (extract_all(batch0).drop("text")
+     .withColumn("batch", F.lit(0))
+     .withColumn("subj_bucket", F.pmod(F.xxhash64(
+         F.coalesce("subj", "url")), F.lit(2)).cast("int"))
+     .write.partitionBy("kind", "batch", "subj_bucket")
+     .parquet(os.path.join(out, "store")))
+    spark.createDataFrame([(0,)], "batch int") \
+        .write.parquet(os.path.join(out, "_committed_batches"))
+    run = ResumableExtraction(spark, out, n_batches=2, n_buckets=2)
+    assert run.processed_batches() == set()
+    assert run.run(pages) == 2
+    parsed = {u for u, _ in KIND_PAGES} - {"http://ex.com/broken"}
+    assert {r.url for r in run.lineage().collect()} == parsed
+    assert {r.url for r in run.triples().collect()} == {"http://ex.com/rdfa"}
+    assert [r.url for r in run.errors()
+            .where(F.col("code") == "parse-failed").collect()] \
+        == ["http://ex.com/broken"]
+
 
 def test_store_reads_use_the_inferred_schemas(spark, tmp_path):
     """The store's and the ledger's fixed read schemas equal what
     parquet inference gives on a fresh store: names, types,
-    nullability and order.  Each kind reader returns rows."""
-    rows = ([(u, h.encode()) for u, h in PLAIN_PAGES]
-            + [("http://ex.com/rdfa", b'<html><body><p property='
-                b'"dc:title">t</p></body></html>'),
-               ("http://ex.com/broken", b"PK\x03\x04 not a zip")])
+    nullability and order.  Each kind reader returns rows, and a
+    batch writes at most one file per bucket, whatever kinds it
+    holds."""
     run = ResumableExtraction(
         spark, str(tmp_path / "kg_schemas"), n_batches=2, n_buckets=2)
-    assert run.run(spark.createDataFrame(rows, "url string, html binary")) \
-        == 2
+    assert run.run(spark.createDataFrame(KIND_PAGES,
+                                         "url string, html binary")) == 2
     for schema, path in [(STORE_SCHEMA, run.store_dir),
                          (LEDGER_SCHEMA, run.ledger_dir)]:
         assert spark.read.schema(schema).parquet(path).schema \
             == spark.read.parquet(path).schema, path
     for got in (run.triples(), run.errors(), run.lineage()):
         assert got.count() > 0, got.columns
+    files = [os.path.join(d, n) for d, _, names in os.walk(run.store_dir)
+             for n in names if n.endswith(".parquet")]
+    for b in range(run.n_batches):
+        in_batch = [f for f in files if f"batch={b}" in f]
+        assert 0 < len(in_batch) <= run.n_buckets, in_batch
 
 
 def test_ledger_with_only_temporary_reads_empty(spark, tmp_path):
@@ -515,7 +551,6 @@ def test_resumable_empty_batch_recorded(spark, tmp_path):
     run = ResumableExtraction(spark, out, n_batches=3)
     assert run.run(pages) == 3
     assert run.processed_batches() == {0, 1, 2}
-    assert not os.path.exists(run.triples_dir)
     assert run.triples().count() == 0
     # converged: nothing left to do
     assert run.run(pages) == 0
