@@ -265,9 +265,7 @@ def q_filter_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB pretraining run actually executes, end-to-end
     DuckDB-mirrored (oracle.filter_corpus_sql)."""
     from rdfa_spark.pipeline.dedup import filter_corpus
-    kept = filter_corpus(_documents(spark, sf_dir), "doc_id", "text",
-                         min_score_pm=500,
-                         languages=("en", "unknown"))
+    kept = filter_corpus(_documents(spark, sf_dir), "doc_id", "text")
     return kept.select("doc_id", "lang_pred",
                        F.col("q_score_pm").cast("bigint")
                         .alias("q_score_pm"))
@@ -296,8 +294,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit word blocking, Hamming verify on candidates only —
     mirrored by oracle._dedup_simhash_sql."""
     from rdfa_spark.pipeline.dedup import simhash_near_dup_pairs
-    pairs = simhash_near_dup_pairs(_dup_corpus(spark, sf_dir), "id",
-                                   "text", max_hamming=3)
+    pairs = simhash_near_dup_pairs(_dup_corpus(spark, sf_dir), "id", "text")
     return pairs.select("id_a", "id_b",
                         F.col("hamming").cast("bigint")
                          .alias("hamming"))
@@ -354,9 +351,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> exact 3-gram Jaccard verification on candidates only (never
     all-pairs); mirrored end-to-end by oracle._dedup_minhash_sql."""
     from rdfa_spark.pipeline.dedup import minhash_dedup_pairs
-    pairs = minhash_dedup_pairs(_dup_corpus(spark, sf_dir), "id",
-                                "text", n=3, num_hashes=32, bands=8,
-                                jaccard_threshold=0.5)
+    pairs = minhash_dedup_pairs(_dup_corpus(spark, sf_dir), "id", "text")
     return pairs.select(
         "id_a", "id_b",
         F.floor(F.col("jaccard") * 1000).cast("bigint")
@@ -364,16 +359,14 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sig = minhash_signatures(_documents(spark, sf_dir), "doc_id",
-                             "text", n=3, num_hashes=32)
+    sig = minhash_signatures(_documents(spark, sf_dir), "doc_id", "text")
     return sig.select(
         "doc_id",
         F.md5(F.concat_ws("|", "minhash")).alias("signature"))
 
 
 def q_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = lsh_candidate_pairs(_documents(spark, sf_dir), "doc_id",
-                                "text", n=3, num_hashes=32, bands=8)
+    pairs = lsh_candidate_pairs(_documents(spark, sf_dir), "doc_id", "text")
     return pairs.select(F.col("id_a"), F.col("id_b"))
 
 
@@ -528,7 +521,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0) \
                  .select(F.col("vec_id").alias("query_id"), "embedding")
-    top = cosine_topk(emb, queries, k=10)
+    top = cosine_topk(emb, queries)
     return top.select("query_id",
                       F.col("rank").cast("bigint").alias("rank"),
                       "neighbor_id",
@@ -549,9 +542,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-band self-join stays near-linear; identical vectors collide
     # in every band regardless of plane count (oracle unchanged)
     dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
-    pairs = embedding_near_dup_pairs(both, threshold=0.999,
-                                     bands=2, planes_per_band=10,
-                                     dim=dim)
+    pairs = embedding_near_dup_pairs(both, planes_per_band=10, dim=dim)
     return pairs.select("id_a", "id_b",
                         F.round("score", 4).alias("score"))
 
@@ -584,15 +575,8 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0) \
                  .select(F.col("vec_id").alias("query_id"), "embedding")
-    # multiprobe=3 reaches recall 0.85 vs exact on this corpus: the
-    # driver's embeddings are isotropic gaussians (top-10 cosine ~0.3
-    # vs median 0), so ANY sublinear method has low recall — the
-    # 0.8-recall operating point necessarily probes ~2/3 of the
-    # buckets here; on clustered real embeddings the same
-    # construction is sublinear (probe count stays fixed while
-    # cluster mass concentrates).
-    top = lsh_cosine_topk(emb, queries, k=10, n_planes=6,
-                          multiprobe=3)
+    # operating point and its recall: similarity.LSH_PLANES
+    top = lsh_cosine_topk(emb, queries)
     return top.select("query_id",
                       F.col("rank").cast("bigint").alias("rank"),
                       "neighbor_id",
@@ -608,11 +592,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0) \
                  .select(F.col("vec_id").alias("query_id"), "embedding")
-    # nprobe=10/16 cells -> recall 0.89 vs exact on the isotropic
-    # test corpus (see q_ann_lsh_topk note on why 0.8 recall costs a
-    # ~2/3 scan on structureless data)
-    top = ivf_cosine_topk(emb, queries, k=10, n_centroids=16,
-                          nprobe=10)
+    # operating point and its recall: similarity.IVF_NPROBE
+    top = ivf_cosine_topk(emb, queries)
     return top.select("query_id",
                       F.col("rank").cast("bigint").alias("rank"),
                       "neighbor_id",
@@ -690,17 +671,17 @@ def oracle_sql() -> dict[str, str]:
         "language_id": oracle.langid_sql(),
         "quality_score": oracle.quality_sql(),
         "dedup_exact": oracle.DEDUP_EXACT_SQL,
-        "dedup_simhash": oracle._dedup_simhash_sql(3),
+        "dedup_simhash": oracle._dedup_simhash_sql(),
         "token_bpe": oracle.TOKEN_BPE_SQL,
         "bgp_article": oracle.BGP_ARTICLE_SQL,
         "nt_lines": oracle.NT_LINES_SQL,
         "ttl_lines": oracle.turtle_lines_sql(),
         "dedup_minhash": oracle._dedup_minhash_sql(),
-        "minhash_signature": oracle.MINHASH_SIGNATURE_SQL,
-        "minhash_band_pairs": oracle.MINHASH_BAND_PAIRS_SQL,
-        "ann_topk": oracle.ANN_TOPK_SQL,
-        "ann_ivf_topk": oracle._ivf_topk_sql(nprobe=10),
-        "ann_lsh_topk": oracle._lsh_topk_sql(multiprobe=3),
+        "minhash_signature": oracle.minhash_signature_sql(),
+        "minhash_band_pairs": oracle.minhash_band_pairs_sql(),
+        "ann_topk": oracle.ann_topk_sql(),
+        "ann_ivf_topk": oracle._ivf_topk_sql(),
+        "ann_lsh_topk": oracle._lsh_topk_sql(),
         "simhash_signature": oracle.SIMHASH_SIGNATURE_SQL,
         "event_sessions": oracle.EVENT_SESSIONS_SQL,
         "event_sessions_stream": oracle.EVENT_SESSIONS_SQL,

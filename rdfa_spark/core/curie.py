@@ -86,10 +86,7 @@ def expand_curie(token: str, attribute: str, prefixes: Mappings,
                  log_error,        # callable(level, code, message)
                  prefix_bare: bool = False,
                  safe_optional: bool = False,
-                 full_uris: bool = False,
-                 allow_unsafe_default_vocab: bool = False,
-                 allow_unsafe_term: bool = False,
-                 allow_relative: bool = False) -> str | None:
+                 full_uris: bool = False) -> str | None:
     # 1. Blank nodes (only tokens starting "_:" or "[_" can match)
     if token.startswith("_:") or token.startswith("[_"):
         bn = None
@@ -117,8 +114,7 @@ def expand_curie(token: str, attribute: str, prefixes: Mappings,
     in_curie_attr = attribute in _CURIE_ATTRS
 
     # 2. default vocab
-    if is_ncname and (is_safe or in_curie_attr
-                      or allow_unsafe_default_vocab):
+    if is_ncname and (is_safe or in_curie_attr):
         if attribute == "role":
             return "http://www.w3.org/1999/xhtml/vocab#" + token
         if prefixes.vocab is not None:
@@ -127,7 +123,7 @@ def expand_curie(token: str, attribute: str, prefixes: Mappings,
             return None
 
     # 3. terms
-    if is_ncname and (is_safe or in_curie_attr or allow_unsafe_term):
+    if is_ncname and (is_safe or in_curie_attr):
         hit = terms.lookup(attribute, token)
         if hit is not None:
             return hit
@@ -165,7 +161,7 @@ def expand_curie(token: str, attribute: str, prefixes: Mappings,
         return token
 
     # 7. relative URIs
-    if not is_safe and (attribute in _URI_ATTRS or allow_relative):
+    if not is_safe and attribute in _URI_ATTRS:
         return resolve_uri(token)
 
     log_error(ERR_WARNING, ERR_CODE_CURIE_FELLTHROUGH,

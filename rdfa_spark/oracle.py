@@ -366,52 +366,82 @@ FROM corpus GROUP BY md5(text) HAVING count(*) > 1
 """
 
 
-# Full near-dup dedup pipeline over the dup corpus: minhash -> banded
-# LSH candidates -> exact 3-gram Jaccard verification (mirror of
-# pipeline.dedup.minhash_dedup_pairs with n=3, num_hashes=32,
-# bands=8, threshold=0.5); jaccard reported as floor(j*1000) so the
-# cross-engine hash compares integers.
-def _dedup_minhash_sql() -> str:
-    from .pipeline.linking import MINHASH_PRIME, minhash_params
-    params = minhash_params(32)
+# MinHash over word shingles, as one CTE chain over ``table``'s
+# ``text`` keyed by ``id_col``: tok -> sh (the distinct SHINGLE_N-word
+# shingles) -> vals (one md5 per shingle) -> mh (NUM_HASHES
+# universal-hash minima) -> banded (LSH_BANDS band hashes) -> cand (the
+# id pairs that share a band bucket).  Byte-identical mirror of
+# rdfa_spark.pipeline.linking's ``minhash_signatures`` kernel and
+# ``lsh_candidate_pairs`` banding, reading the same constants.  The
+# chain is returned without its ``WITH``; DuckDB skips the CTEs a
+# statement never reads.
+def _minhash_ctes(table: str, id_col: str) -> str:
+    from .pipeline.linking import (LSH_BANDS, MINHASH_PRIME, NUM_HASHES,
+                                   SHINGLE_N, minhash_params)
+    params = minhash_params(NUM_HASHES)
     a_list = ", ".join(str(a) for a, _ in params)
     b_list = ", ".join(str(b) for _, b in params)
-    return DUP_CORPUS_CTE + f""",
-tok AS (
-  SELECT id, string_split_regex(lower(text), '[ \\t\\n\\x0b\\f\\r]+') AS toks
-  FROM corpus
+    rows = NUM_HASHES // LSH_BANDS
+    return f"""tok AS (
+  SELECT {id_col}, string_split_regex(lower(text), '[ \\t\\n\\x0b\\f\\r]+') AS toks
+  FROM {table}
 ), sh AS (
-  SELECT id,
+  SELECT {id_col},
          list_distinct(list_transform(
-             range(0, greatest(len(toks) - 3, 0) + 1),
-             j -> array_to_string(list_slice(toks, j + 1, j + 3), ' ')))
+             range(0, greatest(len(toks) - {SHINGLE_N}, 0) + 1),
+             j -> array_to_string(list_slice(toks, j + 1, j + {SHINGLE_N}),
+                                  ' ')))
            AS shingles
   FROM tok
 ), vals AS (
-  SELECT id,
+  SELECT {id_col},
          list_transform(shingles,
              s -> ('0x' || substr(md5(s), 1, 15))::BIGINT
                   % {MINHASH_PRIME}) AS vs
   FROM sh
 ), mh AS (
-  SELECT id,
-         list_transform(range(0, 32), i ->
+  SELECT {id_col},
+         list_transform(range(0, {NUM_HASHES}), i ->
              list_min(list_transform(vs, v ->
                  (([{a_list}])[i + 1] * v + ([{b_list}])[i + 1])
                  % {MINHASH_PRIME})))
            AS minhash
   FROM vals
 ), banded AS (
-  SELECT id, b.b AS band_id,
-         md5(array_to_string(list_slice(minhash, b.b * 4 + 1,
-                                        b.b * 4 + 4), '|'))
+  SELECT {id_col}, b.b AS band_id,
+         md5(array_to_string(list_slice(minhash, b.b * {rows} + 1,
+                                        b.b * {rows} + {rows}), '|'))
            AS band_hash
-  FROM mh, (SELECT unnest(range(0, 8)) AS b) b
+  FROM mh, (SELECT unnest(range(0, {LSH_BANDS})) AS b) b
 ), cand AS (
-  SELECT DISTINCT x.id AS id_a, y.id AS id_b
+  SELECT DISTINCT x.{id_col} AS id_a, y.{id_col} AS id_b
   FROM banded x JOIN banded y USING (band_id, band_hash)
-  WHERE x.id < y.id
-), verified AS (
+  WHERE x.{id_col} < y.{id_col}
+)"""
+
+
+def minhash_signature_sql() -> str:
+    return "\nWITH " + _minhash_ctes("documents", "doc_id") + """
+SELECT doc_id, md5(array_to_string(minhash, '|')) AS signature
+FROM mh
+"""
+
+
+def minhash_band_pairs_sql() -> str:
+    return "\nWITH " + _minhash_ctes("documents", "doc_id") + """
+SELECT id_a, id_b FROM cand
+"""
+
+
+# Full near-dup dedup pipeline over the dup corpus: the MinHash chain's
+# banded LSH candidates -> exact shingle-set Jaccard verification
+# (mirror of pipeline.dedup.minhash_dedup_pairs, keeping the pairs at
+# or above its JACCARD_THRESHOLD); jaccard reported as floor(j*1000)
+# so the cross-engine hash compares integers.
+def _dedup_minhash_sql() -> str:
+    from .pipeline.dedup import JACCARD_THRESHOLD
+    return DUP_CORPUS_CTE + ",\n" + _minhash_ctes("corpus", "id") + f""",
+verified AS (
   SELECT c.id_a, c.id_b,
          CAST(len(list_filter(sa.shingles,
                               s -> list_contains(sb.shingles, s)))
@@ -424,15 +454,17 @@ tok AS (
 )
 SELECT id_a, id_b,
        CAST(floor(jaccard * 1000) AS BIGINT) AS jaccard_pm
-FROM verified WHERE jaccard >= 0.5
+FROM verified WHERE jaccard >= {JACCARD_THRESHOLD}
 """
 
+
 # SimHash near-dup end-to-end over the dup corpus: 64-bit signatures
-# (same md5 bit votes as SIMHASH_SIGNATURE_SQL), pigeonhole 16-bit
-# word blocking, Hamming verification on candidates only — mirror of
-# pipeline.dedup.simhash_near_dup_pairs(max_hamming), whose
-# BLOCK_BITS is the same 16.
-def _dedup_simhash_sql(max_hamming: int = 8) -> str:
+# (same md5 bit votes as SIMHASH_SIGNATURE_SQL), pigeonhole blocking on
+# BLOCK_BITS-bit words, Hamming verification on candidates only, keeping
+# the pairs within MAX_HAMMING — mirror of
+# pipeline.dedup.simhash_near_dup_pairs, reading its constants.
+def _dedup_simhash_sql() -> str:
+    from .pipeline.dedup import BLOCK_BITS, MAX_HAMMING
     ham = ("len(list_filter(range(0, 64), "
            "i -> substr(sa, CAST(i + 1 AS INTEGER), 1) <> "
            "substr(sb, CAST(i + 1 AS INTEGER), 1)))")
@@ -461,8 +493,9 @@ tok AS (
   FROM votes GROUP BY id
 ), blocked AS (
   SELECT id, simhash, w.w AS word_id,
-         substr(simhash, CAST(w.w * 16 + 1 AS INTEGER), 16) AS word
-  FROM sh, (SELECT unnest(range(0, 4)) AS w) w
+         substr(simhash, CAST(w.w * {BLOCK_BITS} + 1 AS INTEGER),
+                {BLOCK_BITS}) AS word
+  FROM sh, (SELECT unnest(range(0, {64 // BLOCK_BITS})) AS w) w
 ), cand AS (
   SELECT DISTINCT x.id AS id_a, y.id AS id_b,
          x.simhash AS sa, y.simhash AS sb
@@ -470,70 +503,14 @@ tok AS (
   WHERE x.id < y.id
 )
 SELECT id_a, id_b, CAST({ham} AS BIGINT) AS hamming
-FROM cand WHERE {ham} <= {max_hamming}
+FROM cand WHERE {ham} <= {MAX_HAMMING}
 """
 
-
-# MinHash signatures: 3-word shingles, universal-hash minima over one
-# md5 per shingle — byte-identical mirror of the Arrow kernel of
-# rdfa_spark.pipeline.linking.minhash_signatures.
-def _minhash_cte() -> str:
-    from .pipeline.linking import MINHASH_PRIME, minhash_params
-    params = minhash_params(32)
-    a_list = ", ".join(str(a) for a, _ in params)
-    b_list = ", ".join(str(b) for _, b in params)
-    return f"""
-WITH tok AS (
-  SELECT doc_id, string_split_regex(lower(text), '[ \\t\\n\\x0b\\f\\r]+') AS toks
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-             range(0, greatest(len(toks) - 3, 0) + 1),
-             j -> array_to_string(list_slice(toks, j + 1, j + 3), ' ')))
-           AS shingles
-  FROM tok
-), vals AS (
-  SELECT doc_id,
-         list_transform(shingles,
-             s -> ('0x' || substr(md5(s), 1, 15))::BIGINT
-                  % {MINHASH_PRIME}) AS vs
-  FROM sh
-), mh AS (
-  SELECT doc_id,
-         list_transform(range(0, 32), i ->
-             list_min(list_transform(vs, v ->
-                 (([{a_list}])[i + 1] * v + ([{b_list}])[i + 1])
-                 % {MINHASH_PRIME})))
-           AS minhash
-  FROM vals
-)
-"""
-
-
-MINHASH_CTE = _minhash_cte()
-
-MINHASH_SIGNATURE_SQL = MINHASH_CTE + """
-SELECT doc_id, md5(array_to_string(minhash, '|')) AS signature
-FROM mh
-"""
-
-MINHASH_BAND_PAIRS_SQL = MINHASH_CTE + """
-, banded AS (
-  SELECT doc_id, b.b AS band_id,
-         md5(array_to_string(list_slice(minhash, b.b * 4 + 1,
-                                        b.b * 4 + 4), '|'))
-           AS band_hash
-  FROM mh, (SELECT unnest(range(0, 8)) AS b) b
-)
-SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-FROM banded x JOIN banded y USING (band_id, band_hash)
-WHERE x.doc_id < y.doc_id
-"""
 
 # Embedding near-dup over a doubled corpus: identical vectors always
 # share an LSH bucket (identical signatures) and cosine(v,v) rounds
-# to 1.0; random 64-dim pairs can't reach the 0.999 threshold.
+# to 1.0; random 64-dim pairs can't reach
+# similarity.NEAR_DUP_THRESHOLD.
 EMBEDDING_NEAR_DUP_SQL = """
 SELECT vec_id AS id_a,
        vec_id + 10000 AS id_b,
@@ -584,19 +561,38 @@ def _cos(a: str, b: str) -> str:
     return f"({dot} / (sqrt({na}) * sqrt({nb})))"
 
 
+def _ranked_topk() -> str:
+    """The tail of every top-k oracle: rank the ``cand`` CTE's
+    (query_id, neighbor_id, score) rows by (score desc, id asc) per
+    query and keep the first ``similarity.TOP_K``."""
+    from .functions.similarity import TOP_K
+    return f"""ranked AS (
+  SELECT query_id, neighbor_id, score,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY score DESC, neighbor_id ASC)
+           AS rank
+  FROM cand
+)
+SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
+       round(score, 4) AS score
+FROM ranked WHERE rank <= {TOP_K}
+"""
+
+
 # Hyperplane-LSH ANN: the same deterministic md5-derived plane signs
 # as similarity._plane_signs_py, embedded as literal arrays; bucket =
-# concat of sign bits; candidates restricted to the query's probe
-# buckets (signature + its 1..multiprobe-bit flips, fixed order);
-# mirror of lsh_cosine_topk(n_planes=6, k=10, multiprobe=1) over
-# 64-dim vectors (the SQL embeds the planes, so it takes dim).
-def _lsh_topk_sql(n_planes: int = 6, dim: int = 64,
-                  k: int = 10, multiprobe: int = 1) -> str:
-    from .functions.similarity import _plane_signs_py, multiprobe_flips
+# concat of the LSH_PLANES sign bits; candidates restricted to the
+# query's probe buckets (signature + its 1..LSH_MULTIPROBE-bit flips,
+# fixed order) — mirror of lsh_cosine_topk, reading its constants,
+# over ``dim``-wide vectors (the SQL embeds the planes, so it takes
+# the width of the data).
+def _lsh_topk_sql(dim: int = 64) -> str:
+    from .functions.similarity import (LSH_MULTIPROBE, LSH_PLANES,
+                                       _plane_signs_py, multiprobe_flips)
 
     def sig(col: str) -> str:
         bits = []
-        for p in range(n_planes):
+        for p in range(LSH_PLANES):
             arr = ", ".join(str(s) for s in _plane_signs_py(p, dim))
             dot = (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
                    f"list_transform(list_zip({col}, [{arr}]), "
@@ -608,7 +604,7 @@ def _lsh_topk_sql(n_planes: int = 6, dim: int = 64,
         if not combo:
             return "sig"
         parts = []
-        for i in range(n_planes):
+        for i in range(LSH_PLANES):
             c = f"substr(sig, {i + 1}, 1)"
             if i in combo:
                 c = f"(CASE WHEN {c} = '1' THEN '0' ELSE '1' END)"
@@ -616,7 +612,7 @@ def _lsh_topk_sql(n_planes: int = 6, dim: int = 64,
         return " || ".join(parts)
 
     probes = ", ".join(probe(c) for c in
-                       multiprobe_flips(n_planes, multiprobe))
+                       multiprobe_flips(LSH_PLANES, LSH_MULTIPROBE))
     return f"""
 WITH it AS (
   SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS iv
@@ -634,32 +630,21 @@ WITH it AS (
   SELECT query_id, neighbor_id, {_cos('iv', 'qv')} AS score
   FROM its JOIN qp USING (sig)
   WHERE neighbor_id <> query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, neighbor_id ASC)
-           AS rank
-  FROM cand
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
-       round(score, 4) AS score
-FROM ranked WHERE rank <= {k}
-"""
+), {_ranked_topk()}"""
 
 
 # IVF ANN: deterministic farthest-first centroids over an md5-ordered
 # sample (mirror of similarity.farthest_first_centroids — identical
 # left-to-right float folds, so the selected set is bit-identical),
-# argmax cell assignment, nprobe=4 query probing, exact rerank —
-# mirror of ivf_cosine_topk(n_centroids=16, nprobe=4, k=10), over
-# the same IVF_SAMPLE_SIZE-item seeding sample.  The traversal unrolls
-# to one CTE pair per centroid: n_k picks the point whose
+# argmax cell assignment, each query probing its IVF_NPROBE nearest
+# cells, exact rerank — mirror of ivf_cosine_topk, reading its
+# IVF_SAMPLE_SIZE, IVF_CENTROIDS and IVF_NPROBE.  The traversal
+# unrolls to one CTE pair per centroid: n_k picks the point whose
 # max-cosine-to-chosen is smallest (ties by sample order), s_k folds
 # the new centroid into the running best array.
-def _ivf_topk_sql(n_centroids: int = 16, nprobe: int = 4,
-                  k: int = 10) -> str:
-    from .functions.similarity import IVF_SAMPLE_SIZE
-
+def _ivf_topk_sql() -> str:
+    from .functions.similarity import (IVF_CENTROIDS, IVF_NPROBE,
+                                       IVF_SAMPLE_SIZE)
     parts = [f"""
 WITH samp AS MATERIALIZED (
   SELECT ord, sv FROM (
@@ -672,7 +657,7 @@ WITH samp AS MATERIALIZED (
          (s.ord = 1) AS chosen
   FROM samp s, (SELECT sv AS cv FROM samp WHERE ord = 1) c
 )"""]
-    for j in range(2, n_centroids + 1):
+    for j in range(2, IVF_CENTROIDS + 1):
         prev = f"s{j - 1}"
         cos_new = _cos("s.sv", "c.cv")
         parts.append(f""",
@@ -689,7 +674,7 @@ n{j} AS MATERIALIZED (
         WHERE ord = (SELECT pick FROM n{j})) c
 )""")
     cent_rows = ["SELECT 1 AS cell, sv AS cv FROM samp WHERE ord = 1"]
-    for j in range(2, n_centroids + 1):
+    for j in range(2, IVF_CENTROIDS + 1):
         cent_rows.append(f"SELECT {j}, sv FROM samp "
                          f"WHERE ord = (SELECT pick FROM n{j})")
     cent = "\n  UNION ALL ".join(cent_rows)
@@ -715,55 +700,29 @@ cent AS MATERIALIZED (
            row_number() OVER (PARTITION BY query_id
                               ORDER BY {_cos('qv', 'cv')} DESC,
                                        cell ASC) AS cr
-    FROM q, cent) WHERE cr <= {nprobe}
+    FROM q, cent) WHERE cr <= {IVF_NPROBE}
 ), cand AS (
   SELECT query_id, neighbor_id, {_cos('iv', 'qv')} AS score
   FROM cells JOIN probes USING (cell)
   WHERE neighbor_id <> query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, neighbor_id ASC)
-           AS rank
-  FROM cand
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
-       round(score, 4) AS score
-FROM ranked WHERE rank <= {k}
-""")
+), {_ranked_topk()}""")
     return "".join(parts)
 
 
-
-ANN_TOPK_SQL = """
+def ann_topk_sql() -> str:
+    """Exact top-k: every item scored against every query — mirror of
+    similarity.cosine_topk."""
+    return f"""
 WITH q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
   FROM embeddings WHERE vec_id % 50 = 0
 ), it AS (
   SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS iv
   FROM embeddings
-), scored AS (
-  SELECT query_id, neighbor_id,
-    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        list_transform(list_zip(iv, qv), x -> x[1] * x[2])),
-        (a, b) -> a + b)
-    / (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          list_transform(iv, v -> v * v)), (a, b) -> a + b))
-       * sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          list_transform(qv, v -> v * v)), (a, b) -> a + b)))
-      AS score
+), cand AS (
+  SELECT query_id, neighbor_id, {_cos('iv', 'qv')} AS score
   FROM it, q WHERE neighbor_id <> query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, neighbor_id ASC)
-           AS rank
-  FROM scored
-)
-SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
-       round(score, 4) AS score
-FROM ranked WHERE rank <= 10
-"""
+), {_ranked_topk()}"""
 
 
 def langid_sql() -> str:
@@ -807,17 +766,18 @@ FROM trip
 """
 
 
-def filter_corpus_sql(min_score_pm: int = 500,
-                      languages: tuple = ("en", "unknown")) -> str:
+def filter_corpus_sql() -> str:
     """End-to-end mirror of pipeline.dedup.filter_corpus: quality
-    gate -> language allowlist -> exact dedup (min doc_id per
-    md5(text) group).  Language-ID runs per-doc independently, so
-    computing it over all documents and joining the quality
+    gate (its MIN_SCORE_PM) -> language allowlist (its LANGUAGES) ->
+    exact dedup (min doc_id per md5(text) group).  Language-ID runs
+    per-doc independently, so computing it over all documents and
+    joining the quality
     survivors is equivalent to running it on survivors only (which
     is what the Spark plan does for cost reasons)."""
     from .functions.text import STOPWORDS
+    from .pipeline.dedup import LANGUAGES, MIN_SCORE_PM
     en_words = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-    langs = ", ".join(f"'{x}'" for x in languages)
+    langs = ", ".join(f"'{x}'" for x in LANGUAGES)
     lang_cte = _langid_cases()
     # reuse the langid statement's CTE chain; splice its final SELECT
     # into a named CTE and continue the pipeline
@@ -843,7 +803,7 @@ def filter_corpus_sql(min_score_pm: int = 500,
 ), kept AS (
   SELECT q.doc_id, q.text, q.q_score_pm, lid.lang_pred
   FROM q JOIN lid USING (doc_id)
-  WHERE q.q_score_pm >= {min_score_pm}
+  WHERE q.q_score_pm >= {MIN_SCORE_PM}
     AND lid.lang_pred IN ({langs})
 ), dedup AS (
   SELECT doc_id, lang_pred, q_score_pm,

@@ -34,13 +34,18 @@ def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             .filter(F.col("_rn") == 1).drop("_rn"))
 
 
-def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
-                        n: int = 3, num_hashes: int = 32,
-                        bands: int = 8,
-                        jaccard_threshold: float = 0.5) -> DataFrame:
+# Shingle-set Jaccard at or above which a MinHash candidate pair is a
+# near-duplicate (the DuckDB oracle reads it too).
+JACCARD_THRESHOLD = 0.5
+
+
+def minhash_dedup_pairs(df: DataFrame, id_col: str,
+                        text_col: str) -> DataFrame:
     """Scale path: LSH blocking, then exact n-gram Jaccard verification
     on the candidate pairs only (never all-pairs).  Returns
-    (id_a, id_b, jaccard) with jaccard >= ``jaccard_threshold``.
+    (id_a, id_b, jaccard) with jaccard >= ``JACCARD_THRESHOLD``, read
+    at call time; the shingles, hashes and bands are ``linking``'s
+    ``SHINGLE_N``, ``NUM_HASHES`` and ``LSH_BANDS``.
 
     One Arrow kernel pass produces both the minhash signatures (for
     the banded LSH join) and the distinct shingle sets (for the
@@ -51,11 +56,10 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     ``result.dropped_blocks`` is the LSH candidates' bucket-cap
     report (``cap_blocks``).
     """
-    sig_sh = minhash_signatures(df, id_col, text_col, n, num_hashes,
+    sig_sh = minhash_signatures(df, id_col, text_col,
                                 with_shingle_col=True) \
         .localCheckpoint(eager=False)
-    cands = lsh_candidate_pairs(df, id_col, text_col, n,
-                                num_hashes, bands,
+    cands = lsh_candidate_pairs(df, id_col, text_col,
                                 sig=sig_sh.select(id_col, "minhash"))
     sh = sig_sh.select(id_col, "shingles")
     pairs = (cands.join(sh.toDF("id_a", "sh_a"), "id_a")
@@ -63,7 +67,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     out = (pairs.select("id_a", "id_b", (inter / union).alias("jaccard"))
-           .filter(F.col("jaccard") >= jaccard_threshold))
+           .filter(F.col("jaccard") >= JACCARD_THRESHOLD))
     out.dropped_blocks = cands.dropped_blocks
     return out
 
@@ -101,18 +105,21 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.withColumn("simhash", bits)
 
 
-# SimHash blocking word width: 4 words of the 64-bit signature (the
-# DuckDB oracle hard-codes the same 16).
+# SimHash blocking word width (4 words of the 64-bit signature), and
+# the Hamming distance at or below which a pair is a near-duplicate;
+# the DuckDB oracle's ``_dedup_simhash_sql`` reads both.
 BLOCK_BITS = 16
+MAX_HAMMING = 3
 
 
-def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
-                           max_hamming: int = 3) -> DataFrame:
+def simhash_near_dup_pairs(df: DataFrame, id_col: str,
+                           text_col: str) -> DataFrame:
     """SimHash near-dup: block on each 16-bit word of the signature (a
     pair within Hamming distance 3 must agree on at least one of 4
-    words — pigeonhole), then verify Hamming distance on candidates
-    only.  Join is an equi-join on (word_id, word) — shuffled hash
-    join with AQE skew handling.
+    words — pigeonhole), then keep the candidates within Hamming
+    distance ``MAX_HAMMING``, read at call time.  Join is an
+    equi-join on (word_id, word) — shuffled hash join with AQE skew
+    handling.
 
     Word-block membership is capped (``cap_blocks``; identical-content
     clusters share every block).  ``result.dropped_blocks`` is
@@ -139,18 +146,24 @@ def simhash_near_dup_pairs(df: DataFrame, id_col: str, text_col: str,
                      "split(sh_b, '(?!^)'), (x, y) -> x <> y), "
                      "d -> d))")
     out = (cand.select("id_a", "id_b", hamming.alias("hamming"))
-           .filter(F.col("hamming") <= max_hamming))
+           .filter(F.col("hamming") <= MAX_HAMMING))
     out.dropped_blocks = dropped
     return out
 
 
+# The training-corpus filter's operating point (the DuckDB oracle's
+# ``filter_corpus_sql`` reads both): minimum quality score (per mille)
+# and the language allowlist.
+MIN_SCORE_PM = 500
+LANGUAGES = ("en", "unknown")
+
+
 def filter_corpus(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  min_score_pm: int = 500,
-                  languages: tuple[str, ...] | None = None
-                  ) -> DataFrame:
-    """Composed training-corpus filter: quality gate -> language
-    allowlist -> exact dedup, as one DataFrame pipeline.
+                  text_col: str = "text") -> DataFrame:
+    """Composed training-corpus filter: quality gate (``q_score_pm``
+    at least ``MIN_SCORE_PM``) -> language allowlist (``LANGUAGES``)
+    -> exact dedup, as one DataFrame pipeline; both constants are read
+    at call time.
 
     The three stages compose into a single plan: the quality columns
     are pure projections (whole-stage codegen), the language filter
@@ -165,8 +178,7 @@ def filter_corpus(df: DataFrame, id_col: str = "doc_id",
     from ..functions.text import with_language_id, with_quality_score
 
     scored = with_quality_score(df, text_col)
-    kept = scored.filter(F.col("q_score_pm") >= min_score_pm)
-    if languages is not None:
-        kept = (with_language_id(kept, text_col)
-                .filter(F.col("lang_pred").isin(*languages)))
+    kept = (with_language_id(
+        scored.filter(F.col("q_score_pm") >= MIN_SCORE_PM), text_col)
+        .filter(F.col("lang_pred").isin(*LANGUAGES)))
     return dedup_exact(kept, id_col, text_col)

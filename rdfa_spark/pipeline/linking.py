@@ -84,6 +84,13 @@ def exact_candidate_pairs(mentions: DataFrame) -> DataFrame:
 
 MINHASH_PRIME = 1_000_000_007
 
+# The MinHash operating point (the DuckDB oracle's MinHash CTEs read
+# all three): words per shingle, hash functions per signature, and LSH
+# bands (NUM_HASHES // LSH_BANDS signature rows per band).
+SHINGLE_N = 3
+NUM_HASHES = 32
+LSH_BANDS = 8
+
 
 def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
     """Fixed universal-hash family h_i(v) = (a_i·v + b_i) mod p.
@@ -95,18 +102,18 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       n: int = 3, num_hashes: int = 32,
                        with_shingle_col: bool = False) -> DataFrame:
     """(id, minhash array<long>) signatures from one ``mapInArrow``
-    numpy kernel: the distinct word n-gram shingles of each document,
-    then num_hashes minima of a universal hash family over a single
-    md5 per shingle:
+    numpy kernel: the distinct word ``SHINGLE_N``-gram shingles of
+    each document, then ``NUM_HASHES`` minima of a universal hash
+    family over a single md5 per shingle (both constants read at call
+    time):
 
         v(s)   = int(md5(s)[:15 hex]) mod p        (one md5 per shingle)
         h_i(s) = (a_i · v(s) + b_i) mod p          (one int64 matrix op)
 
     a_i·v < p² ≈ 1e18 stays inside int64.  Identical math in the
-    DuckDB oracle (rdfa_spark/oracle.py ``_minhash_cte``).
+    DuckDB oracle (rdfa_spark/oracle.py ``_minhash_ctes``).
 
     ``with_shingle_col=True`` additionally emits the distinct shingle
     set as a ``shingles`` array column (element order unspecified), so
@@ -124,7 +131,8 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
 
     ws = _ws_re()
     md5 = hashlib.md5
-    params = minhash_params(num_hashes)
+    n = SHINGLE_N
+    params = minhash_params(NUM_HASHES)
     a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
     b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
     p = MINHASH_PRIME
@@ -169,13 +177,11 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str,
-                        text_col: str, n: int = 3,
-                        num_hashes: int = 32,
-                        bands: int = 8,
+                        text_col: str,
                         sig: DataFrame | None = None) -> DataFrame:
     """MinHash-LSH near-duplicate candidates: shingle -> minhash ->
-    band -> bucket equi-join.  rows/bands = num_hashes // bands
-    signatures per band; a pair collides if any band matches.
+    band -> bucket equi-join.  ``NUM_HASHES // LSH_BANDS`` signature
+    rows per band; a pair collides if any band matches.
 
     Band-bucket membership is capped (``cap_blocks``): a cluster of K
     byte-identical documents shares EVERY band bucket — at crawl
@@ -189,9 +195,10 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str,
     frame (e.g. the shared signature+shingle table of
     ``minhash_dedup_pairs``) so the kernel pass isn't recomputed.
     """
-    rows_per_band = num_hashes // bands
+    bands = LSH_BANDS
+    rows_per_band = NUM_HASHES // bands
     if sig is None:
-        sig = minhash_signatures(df, id_col, text_col, n, num_hashes)
+        sig = minhash_signatures(df, id_col, text_col)
     band_arr = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.struct(

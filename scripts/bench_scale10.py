@@ -195,19 +195,16 @@ def main():
         r["cc_chain"] = t(lambda: connected_components(edges).count())
         r["dedup_minhash"] = t(lambda: minhash_dedup_pairs(
             docs.select(F.col("doc_id").alias("id"), "text"),
-            "id", "text", n=3, num_hashes=32, bands=8,
-            jaccard_threshold=0.5).count())
+            "id", "text").count())
         r["minhash_band_pairs"] = t(lambda: lsh_candidate_pairs(
-            docs, "doc_id", "text", n=3, num_hashes=32,
-            bands=8).count())
+            docs, "doc_id", "text").count())
         # the documented scale knob: planes_per_band grows with
         # log2(N) so expected bucket size (N / 2^planes) stays
         # constant and the per-bucket self-join stays linear
         import math
         planes = 10 + max(0, round(math.log2(scale)))
         r["embedding_near_dup"] = t(lambda: embedding_near_dup_pairs(
-            emb, threshold=0.999, bands=2, planes_per_band=planes,
-            dim=dim).count())
+            emb, planes_per_band=planes, dim=dim).count())
         results[scale] = {
             "n_docs": n_docs, "n_emb": n_emb, "n_pages": n_pages,
             "sec": {k: (v[0] if isinstance(v, tuple) else v)

@@ -20,3 +20,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def pin(monkeypatch):
+    """``pin(module, NAME=value, ...)`` sets module constants for one
+    test.  The operators read their operating points (``TOP_K``,
+    ``LSH_PLANES``, ``MAX_HAMMING``, ...) at call time, on the driver,
+    so setting them here reaches the kernels too."""
+    def set_constants(module, **constants):
+        for name, value in constants.items():
+            monkeypatch.setattr(module, name, value)
+    return set_constants

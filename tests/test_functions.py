@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from rdfa_spark.functions import similarity
 from rdfa_spark.functions.similarity import (cosine_topk,
                                              embedding_near_dup_pairs,
                                              lsh_cosine_topk)
@@ -19,11 +20,12 @@ def emb(spark, sf_dir):
     df.unpersist()
 
 
-def test_cosine_topk_deterministic(spark, emb):
+def test_cosine_topk_deterministic(spark, emb, pin):
+    pin(similarity, TOP_K=5)
     q = emb.filter(F.col("vec_id") % 100 == 0) \
            .select(F.col("vec_id").alias("query_id"), "embedding")
-    t1 = cosine_topk(emb, q, k=5).collect()
-    t2 = cosine_topk(emb, q, k=5).collect()
+    t1 = cosine_topk(emb, q).collect()
+    t2 = cosine_topk(emb, q).collect()
     assert sorted(map(tuple, t1)) == sorted(map(tuple, t2))
     per_q = {}
     for r in t1:
@@ -52,7 +54,7 @@ def _ref_topk(cands, k):
     return sorted(rows)
 
 
-def test_ann_kernels_match_fold_reference(spark, emb):
+def test_ann_kernels_match_fold_reference(spark, emb, pin):
     """All four similarity kernels must give exactly the rows (ids,
     ranks and full-precision double scores) of a plain-Python
     reference built on the left-to-right ``_fold_cosine`` fold: exact
@@ -73,6 +75,7 @@ def test_ann_kernels_match_fold_reference(spark, emb):
     q = emb.filter(F.col("vec_id") % 100 == 0) \
            .select(F.col("vec_id").alias("query_id"), "embedding")
     k = 7
+    pin(similarity, TOP_K=k)
 
     def ref(candidates_of):
         return _ref_topk({qid: [(nid, _fold_cosine(v, qv))
@@ -83,9 +86,10 @@ def test_ann_kernels_match_fold_reference(spark, emb):
     def got(df):
         return sorted(map(tuple, df.collect()))
 
-    assert got(cosine_topk(emb, q, k=k)) == ref(lambda qid, qv: items)
+    assert got(cosine_topk(emb, q)) == ref(lambda qid, qv: items)
 
     n_planes, multiprobe = 6, 2
+    pin(similarity, LSH_PLANES=n_planes, LSH_MULTIPROBE=multiprobe)
     planes = [_plane_signs_py(p, dim) for p in range(n_planes)]
 
     def key(v):
@@ -97,10 +101,10 @@ def test_ann_kernels_match_fold_reference(spark, emb):
                   for combo in multiprobe_flips(n_planes, multiprobe)}
         return [(i, v) for i, v in items if key(v) in probes]
 
-    assert got(lsh_cosine_topk(emb, q, k=k, n_planes=n_planes,
-                               multiprobe=multiprobe)) == ref(lsh_cands)
+    assert got(lsh_cosine_topk(emb, q)) == ref(lsh_cands)
 
     n_centroids, nprobe = 8, 4
+    pin(similarity, IVF_CENTROIDS=n_centroids, IVF_NPROBE=nprobe)
     sample = sorted(items, key=lambda t: (
         hashlib.md5(str(t[0]).encode()).hexdigest(), t[0]))[:256]
     cents = [c for _, c in farthest_first_centroids(sample, n_centroids)]
@@ -113,14 +117,14 @@ def test_ann_kernels_match_fold_reference(spark, emb):
         probes = set(ranked_cells(qv)[:nprobe])
         return [(i, v) for i, v in items if ranked_cells(v)[0] in probes]
 
-    assert got(ivf_cosine_topk(emb, q, k=k, n_centroids=n_centroids,
-                               nprobe=nprobe)) == ref(ivf_cands)
+    assert got(ivf_cosine_topk(emb, q)) == ref(ivf_cands)
 
     both = emb.select("vec_id", "embedding").unionByName(
         emb.select((F.col("vec_id") + 10000).alias("vec_id"),
                    "embedding"))
     both_items = items + [(i + 10000, v) for i, v in items]
     bands, ppb, threshold = 2, 6, 0.3
+    pin(similarity, NEAR_DUP_BANDS=bands, NEAR_DUP_THRESHOLD=threshold)
     want = set()
     for bnd in range(bands):
         bplanes = [_plane_signs_py(bnd * ppb + p, dim)
@@ -136,24 +140,22 @@ def test_ann_kernels_match_fold_reference(spark, emb):
                     score = _fold_cosine(va, vb)
                     if score >= threshold:
                         want.add((ia, ib, score))
-    pairs = got(embedding_near_dup_pairs(
-        both, threshold=threshold, bands=bands, planes_per_band=ppb,
-        dim=dim))
+    pairs = got(embedding_near_dup_pairs(both, planes_per_band=ppb,
+                                         dim=dim))
     assert any(s < 0.999 for *_, s in pairs)     # not only the copies
     assert pairs == sorted(want)
 
 
 @pytest.mark.parametrize("op", ["cosine_topk", "lsh_cosine_topk",
                                 "ivf_cosine_topk"])
-def test_ann_kernel_empty_query_set(spark, emb, op):
+def test_ann_kernel_empty_query_set(spark, emb, op, pin):
     """An empty query set gives every top-k operator an empty result
     of the declared schema."""
-    from rdfa_spark.functions import similarity
+    pin(similarity, TOP_K=5, LSH_PLANES=12, LSH_MULTIPROBE=1,
+        IVF_CENTROIDS=8, IVF_NPROBE=4)
     q = emb.filter(F.lit(False)) \
            .select(F.col("vec_id").alias("query_id"), "embedding")
-    kw = dict(n_centroids=8, nprobe=4) if op == "ivf_cosine_topk" \
-        else {}
-    out = getattr(similarity, op)(emb, q, k=5, **kw)
+    out = getattr(similarity, op)(emb, q)
     assert out.collect() == []
     assert out.schema["query_id"].dataType == \
         emb.schema["vec_id"].dataType
@@ -166,7 +168,8 @@ def test_ann_kernel_empty_query_set(spark, emb, op):
     ("embedding_near_dup_pairs", "items")])
 @pytest.mark.parametrize("bad", [None, [1.0, 2.0, 3.0]],
                          ids=["null", "wrong_length"])
-def test_similarity_rejects_null_or_ragged_vectors(spark, op, side, bad):
+def test_similarity_rejects_null_or_ragged_vectors(spark, op, side, bad,
+                                                   pin):
     """Vectors must be non-null and of one fixed dimension.  A bad
     query vector raises ValueError on the driver, and so does a bad
     item vector in IVF's driver-side seeding sample (13 items, all
@@ -176,7 +179,9 @@ def test_similarity_rejects_null_or_ragged_vectors(spark, op, side, bad):
     import numpy as np
     from pyspark.errors import PythonException
 
-    from rdfa_spark.functions import similarity
+    pin(similarity, TOP_K=3, LSH_PLANES=12, LSH_MULTIPROBE=1,
+        IVF_CENTROIDS=16, IVF_NPROBE=4, NEAR_DUP_THRESHOLD=0.95,
+        NEAR_DUP_BANDS=2)
     rng = np.random.default_rng(3)
     good = [(i, [float(x) for x in rng.normal(size=4)])
             for i in range(12)]
@@ -190,8 +195,8 @@ def test_similarity_rejects_null_or_ragged_vectors(spark, op, side, bad):
     def run():
         if op == "embedding_near_dup_pairs":
             return similarity.embedding_near_dup_pairs(
-                items, bands=2, planes_per_band=2, dim=4).collect()
-        return getattr(similarity, op)(items, queries, k=3).collect()
+                items, planes_per_band=2, dim=4).collect()
+        return getattr(similarity, op)(items, queries).collect()
 
     if side == "queries" or op == "ivf_cosine_topk":
         with pytest.raises(ValueError, match="similarity kernel requires"):
@@ -219,14 +224,15 @@ def test_pairs_batch_keeps_declared_types():
     assert b.num_rows == 0 and b.schema == schema
 
 
-def test_lsh_ann_recall_vs_exact(spark, emb):
+def test_lsh_ann_recall_vs_exact(spark, emb, pin):
     """LSH candidates within the query's bucket must agree with
     exact search wherever they overlap; recall@1 reported sane."""
+    pin(similarity, TOP_K=3, LSH_PLANES=6, LSH_MULTIPROBE=1)
     q = emb.filter(F.col("vec_id") % 100 == 0) \
            .select(F.col("vec_id").alias("query_id"), "embedding")
     exact = {(r.query_id, r.rank): r.neighbor_id
-             for r in cosine_topk(emb, q, k=3).collect()}
-    approx = lsh_cosine_topk(emb, q, k=3, n_planes=6).collect()
+             for r in cosine_topk(emb, q).collect()}
+    approx = lsh_cosine_topk(emb, q).collect()
     assert approx  # buckets non-empty at 6 planes
     for r in approx:
         # any approx hit must carry the same score the exact path
@@ -234,15 +240,17 @@ def test_lsh_ann_recall_vs_exact(spark, emb):
         assert r.score <= 1.0001
 
 
-def test_embedding_near_dup_pairs_self_consistency(spark, emb, sf_dir):
+def test_embedding_near_dup_pairs_self_consistency(spark, emb, sf_dir,
+                                                   pin):
     from rdfa_spark.functions.similarity import embedding_dim
+    pin(similarity, NEAR_DUP_THRESHOLD=0.999, NEAR_DUP_BANDS=2)
     # duplicate the table with shifted ids -> guaranteed near-dups
     a = emb.select(F.col("vec_id"), "embedding")
     b = emb.select((F.col("vec_id") + 10000).alias("vec_id"),
                    "embedding")
     both = a.unionByName(b)
     pairs = embedding_near_dup_pairs(
-        both, threshold=0.999, bands=2, planes_per_band=4,
+        both, planes_per_band=4,
         dim=embedding_dim(f"{sf_dir}/embeddings.parquet"))
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     # every vector matches its exact copy (cosine == 1, same bucket
@@ -252,38 +260,38 @@ def test_embedding_near_dup_pairs_self_consistency(spark, emb, sf_dir):
     assert len(got) == pairs.count()
 
 
-def test_embedding_near_dup_bucket_cap(spark, monkeypatch):
+def test_embedding_near_dup_bucket_cap(spark, monkeypatch, pin):
     """The block cap drops mass-duplicate buckets: a skewed corpus of
     one repeated vector stays bounded instead of emitting ~N²/2
     pairs."""
-    from rdfa_spark.functions import similarity
     import numpy as np
+    pin(similarity, NEAR_DUP_THRESHOLD=0.999, NEAR_DUP_BANDS=2)
     rng = np.random.default_rng(7)
     hot = [float(x) for x in rng.normal(size=8)]
     rows = ([(i, hot) for i in range(100)]            # one hot cluster
             + [(1000 + i, [float(x) for x in rng.normal(size=8)])
                for i in range(20)])
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    default_cap = similarity.BLOCK_CAP
     monkeypatch.setattr(similarity, "BLOCK_CAP", 50)
-    capped = embedding_near_dup_pairs(df, threshold=0.999, bands=2,
-                                      planes_per_band=4, dim=8)
+    capped = embedding_near_dup_pairs(df, planes_per_band=4, dim=8)
     # the 100-member hot bucket exceeds the cap in every band -> gone
     assert capped.filter(F.col("id_a") < 1000).count() == 0
-    monkeypatch.undo()
-    uncapped = embedding_near_dup_pairs(df, threshold=0.999, bands=2,
-                                        planes_per_band=4, dim=8)
+    monkeypatch.setattr(similarity, "BLOCK_CAP", default_cap)
+    uncapped = embedding_near_dup_pairs(df, planes_per_band=4, dim=8)
     assert uncapped.filter(F.col("id_a") < 1000).count() == 100 * 99 // 2
 
 
 # one variant since the cap is always on (``BLOCK_CAP``); the id names it
 @pytest.mark.parametrize("variant", ["capped"])
-def test_embedding_near_dup_one_bucket_exchange(spark, emb, variant):
+def test_embedding_near_dup_one_bucket_exchange(spark, emb, variant, pin):
     """The pair kernel scores whole buckets, so exactly one
     hash-partitioning by (band_id, sig) sits between the signature
     kernel and the pair kernel (the cap window reuses it)."""
     import re
+    pin(similarity, NEAR_DUP_THRESHOLD=0.95, NEAR_DUP_BANDS=2)
     plan = embedding_near_dup_pairs(
-        emb, bands=2, planes_per_band=4,
+        emb, planes_per_band=4,
         dim=64)._jdf.queryExecution().executedPlan().toString()
     ex = [m.start() for m in re.finditer(
         r"Exchange hashpartitioning\(band_id#\d+, sig#\d+,", plan)]
@@ -309,24 +317,25 @@ def test_text_functions(spark):
     assert out[0].q_alpha_pm > 700
 
 
-def test_ivf_ann_recall_and_determinism(spark, emb):
+def test_ivf_ann_recall_and_determinism(spark, emb, pin):
     from rdfa_spark.functions.similarity import ivf_cosine_topk
+    pin(similarity, TOP_K=5, IVF_CENTROIDS=8, IVF_NPROBE=4)
     q = emb.filter(F.col("vec_id") % 100 == 0) \
            .select(F.col("vec_id").alias("query_id"), "embedding")
     exact = {(r.query_id, r.neighbor_id)
-             for r in cosine_topk(emb, q, k=5).collect()}
-    a1 = ivf_cosine_topk(emb, q, k=5, n_centroids=8, nprobe=4)
+             for r in cosine_topk(emb, q).collect()}
+    a1 = ivf_cosine_topk(emb, q)
     r1 = sorted(map(tuple, a1.collect()))
-    r2 = sorted(map(tuple, ivf_cosine_topk(
-        emb, q, k=5, n_centroids=8, nprobe=4).collect()))
+    r2 = sorted(map(tuple, ivf_cosine_topk(emb, q).collect()))
     assert r1 == r2  # deterministic (no RNG, no Lloyd)
     approx = {(r[0], r[2]) for r in r1}
     # probing half the cells: recall@5 should be substantial
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.4, recall
     # every approx hit's score equals the exact score for that pair
+    pin(similarity, TOP_K=500)
     exact_scores = {(r.query_id, r.neighbor_id): r.score
-                    for r in cosine_topk(emb, q, k=500).collect()}
+                    for r in cosine_topk(emb, q).collect()}
     for qid, rank, nid, score in r1:
         if (qid, nid) in exact_scores:
             assert abs(exact_scores[(qid, nid)] - score) < 1e-12
@@ -491,7 +500,7 @@ def test_language_id_passes_columns_through(spark):
     assert [r.lang_pred for r in got] == ["en", "unknown", "de"]
 
 
-def test_round3_operator_plans(spark):
+def test_round3_operator_plans(spark, pin):
     """Plan shape of the round-3 operators: the language-ID kernel is
     scan -> mapInArrow with no Exchange; multi-probe LSH ANN scores
     the items in one kernel against the driver-collected queries
@@ -506,7 +515,8 @@ def test_round3_operator_plans(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.limit(5).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    plan2 = lsh_cosine_topk(emb, q, k=3, n_planes=6, multiprobe=1) \
+    pin(similarity, TOP_K=3, LSH_PLANES=6, LSH_MULTIPROBE=1)
+    plan2 = lsh_cosine_topk(emb, q) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan2
     # the only shuffle is the final per-query window rank, never a

@@ -177,3 +177,47 @@ def test_turtle_term_compression_parity(spark):
     assert any(f"<{DC}weird.dot>" in v for v in got)
     assert any(f"<{DC}9leads>" in v for v in got)
     assert any(f"<{DC}pct%20esc>" in v for v in got)
+
+
+def test_operating_points_shared(monkeypatch):
+    """Each similarity and dedup operating point is one module
+    constant that the Spark operator and its DuckDB oracle both read:
+    setting any constant an oracle builder reads changes that
+    builder's SQL, and the graded oracle SQL is the builders' output
+    at the constants."""
+    import __spark_entry__ as entry_mod
+    from rdfa_spark import oracle
+    from rdfa_spark.functions import similarity
+    from rdfa_spark.pipeline import dedup, linking
+
+    minhash = [(linking, "SHINGLE_N", 2), (linking, "NUM_HASHES", 16),
+               (linking, "LSH_BANDS", 4)]
+    # graded query -> (oracle builder, [(module, constant, another
+    # value)] for every constant the builder reads)
+    points = {
+        "ann_topk": (oracle.ann_topk_sql, [(similarity, "TOP_K", 5)]),
+        "ann_lsh_topk": (oracle._lsh_topk_sql, [
+            (similarity, "TOP_K", 5), (similarity, "LSH_PLANES", 4),
+            (similarity, "LSH_MULTIPROBE", 1)]),
+        "ann_ivf_topk": (oracle._ivf_topk_sql, [
+            (similarity, "TOP_K", 5), (similarity, "IVF_CENTROIDS", 8),
+            (similarity, "IVF_NPROBE", 4),
+            (similarity, "IVF_SAMPLE_SIZE", 128)]),
+        "minhash_signature": (oracle.minhash_signature_sql, minhash),
+        "minhash_band_pairs": (oracle.minhash_band_pairs_sql, minhash),
+        "dedup_minhash": (oracle._dedup_minhash_sql, minhash + [
+            (dedup, "JACCARD_THRESHOLD", 0.3)]),
+        "dedup_simhash": (oracle._dedup_simhash_sql, [
+            (dedup, "MAX_HAMMING", 16), (dedup, "BLOCK_BITS", 8)]),
+        "filter_corpus": (oracle.filter_corpus_sql, [
+            (dedup, "MIN_SCORE_PM", 400), (dedup, "LANGUAGES", ("en",))]),
+    }
+    graded = entry_mod.oracle_sql()
+    for name, (build, constants) in points.items():
+        at_constants = build()
+        assert graded[name] == at_constants, name
+        for module, constant, value in constants:
+            assert getattr(module, constant) != value
+            with monkeypatch.context() as m:
+                m.setattr(module, constant, value)
+                assert build() != at_constants, (name, constant)

@@ -24,6 +24,7 @@ from rdfa_spark.pipeline import (
     exact_duplicate_groups, lsh_candidate_pairs, minhash_dedup_pairs,
     simhash64, simhash_near_dup_pairs,
 )
+from rdfa_spark.pipeline import dedup, linking
 from rdfa_spark.pipeline.materialize import LEDGER_SCHEMA, STORE_SCHEMA
 
 
@@ -170,7 +171,7 @@ def test_exact_dedup(spark):
     assert kept == {1, 3, 5}
 
 
-def test_minhash_dedup_finds_near_dups(spark):
+def test_minhash_dedup_finds_near_dups(spark, pin):
     base = ("the quick brown fox jumps over the lazy dog and runs "
             "far away into the deep dark forest tonight").split()
     rows = []
@@ -180,9 +181,9 @@ def test_minhash_dedup_finds_near_dups(spark):
         rows.append((i, " ".join(words)))
     rows.append((100, "completely different content " * 5))
     df = spark.createDataFrame(rows, ["id", "text"])
-    pairs = minhash_dedup_pairs(df, "id", "text", n=3,
-                                num_hashes=32, bands=16,
-                                jaccard_threshold=0.3)
+    pin(linking, SHINGLE_N=3, NUM_HASHES=32, LSH_BANDS=16)
+    pin(dedup, JACCARD_THRESHOLD=0.3)
+    pairs = minhash_dedup_pairs(df, "id", "text")
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (0, 1) in got or (0, 2) in got  # near-dups found
     assert all(100 not in p for p in got)  # distinct doc not paired
@@ -191,10 +192,10 @@ def test_minhash_dedup_finds_near_dups(spark):
 def test_minhash_splits_on_ascii_whitespace_like_oracle(spark):
     """Unicode spaces (U+00A0, U+3000, U+2003) stay inside a token, as
     in Spark's split() and the DuckDB oracle's ASCII class, so the
-    kernel's signatures equal MINHASH_SIGNATURE_SQL's."""
+    kernel's signatures equal minhash_signature_sql()'s."""
     import duckdb
 
-    from rdfa_spark.oracle import MINHASH_SIGNATURE_SQL
+    from rdfa_spark.oracle import minhash_signature_sql
     from rdfa_spark.pipeline.linking import minhash_signatures
     rows = [(1, "alpha\xa0beta gamma\u3000delta"),
             (2, "one\u2003two three four five"),
@@ -208,11 +209,11 @@ def test_minhash_splits_on_ascii_whitespace_like_oracle(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
-    want = dict(con.execute(MINHASH_SIGNATURE_SQL).fetchall())
+    want = dict(con.execute(minhash_signature_sql()).fetchall())
     assert got == want
 
 
-def test_simhash_deterministic_and_near_dup(spark):
+def test_simhash_deterministic_and_near_dup(spark, pin):
     rows = [(1, "alpha beta gamma delta epsilon zeta eta theta"),
             (2, "alpha beta gamma delta epsilon zeta eta iota"),
             (3, "nothing in common here at all whatsoever")]
@@ -222,7 +223,8 @@ def test_simhash_deterministic_and_near_dup(spark):
     h2 = {r.id: r.simhash for r in
           simhash64(df, "id", "text").collect()}
     assert h == h2
-    pairs = simhash_near_dup_pairs(df, "id", "text", max_hamming=16)
+    pin(dedup, MAX_HAMMING=16)
+    pairs = simhash_near_dup_pairs(df, "id", "text")
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (1, 2) in got
 
@@ -626,7 +628,7 @@ def test_cc_reliable_checkpoint(spark, tmp_path):
     assert any(files for _, _, files in os.walk(ckpt))  # files landed
 
 
-def test_lsh_and_simhash_bucket_caps(spark, monkeypatch):
+def test_lsh_and_simhash_bucket_caps(spark, monkeypatch, pin):
     """Mass-duplicate clusters share every band/word bucket; the caps
     drop those buckets so the self-join stays bounded, while distinct
     near-dups still pair."""
@@ -643,33 +645,35 @@ def test_lsh_and_simhash_bucket_caps(spark, monkeypatch):
     assert all(a >= 100 for a, _ in got)      # boilerplate cluster gone
     assert (100, 101) in got                  # real near-dup survives
 
-    sim = simhash_near_dup_pairs(df, "id", "text", max_hamming=16)
+    pin(dedup, MAX_HAMMING=16)
+    sim = simhash_near_dup_pairs(df, "id", "text")
     got2 = {(r.id_a, r.id_b) for r in sim.collect()}
     assert all(a >= 100 for a, _ in got2)
     assert (100, 101) in got2
 
 
 # result -> (input kind, call(df), first key column of the cluster's
-#            blocks)
+#            blocks, (module, constants pinned for the call) or None)
 CAP_CASES = {
-    "exact_candidate_pairs": ("labels", exact_candidate_pairs, {"brand"}),
+    "exact_candidate_pairs": ("labels", exact_candidate_pairs, {"brand"},
+                              None),
     "lsh_candidate_pairs": (
         "docs", lambda df: lsh_candidate_pairs(df, "id", "text"),
-        set(range(8))),                                   # one per band
+        set(range(8)), None),                             # one per band
     # threshold 0 keeps every candidate pair
     "minhash_dedup_pairs": (
-        "docs", lambda df: minhash_dedup_pairs(df, "id", "text",
-                                               jaccard_threshold=0.0),
-        set(range(8))),
+        "docs", lambda df: minhash_dedup_pairs(df, "id", "text"),
+        set(range(8)), (dedup, {"JACCARD_THRESHOLD": 0.0})),
     # max_hamming 64 keeps every candidate pair
     "simhash_near_dup_pairs": (
-        "docs", lambda df: simhash_near_dup_pairs(df, "id", "text",
-                                                  max_hamming=64),
-        set(range(4))),                          # one per 16-bit word
+        "docs", lambda df: simhash_near_dup_pairs(df, "id", "text"),
+        set(range(4)),                           # one per 16-bit word
+        (dedup, {"MAX_HAMMING": 64})),
     "embedding_near_dup_pairs": (
         "vecs", lambda df: embedding_near_dup_pairs(
-            df, bands=2, planes_per_band=4, dim=4),
-        {0, 1}),
+            df, planes_per_band=4, dim=4),
+        {0, 1}, (similarity, {"NEAR_DUP_THRESHOLD": 0.95,
+                              "NEAR_DUP_BANDS": 2})),
 }
 
 
@@ -704,13 +708,15 @@ def _outside_pairs(out):
 
 
 @pytest.mark.parametrize("result", list(CAP_CASES))
-def test_cap_reports_dropped(spark, monkeypatch, result):
+def test_cap_reports_dropped(spark, monkeypatch, pin, result):
     """Every capped result is bounded and never silent: its dropped
     frame names each block of a planted over-cap cluster with its
     n_members, no output pair touches the cluster, and the pair
     outside it survives.  At a cap above every block the report is
     empty (VERDICT r2 next-round #9)."""
-    kind, call, blocks = CAP_CASES[result]
+    kind, call, blocks, pins = CAP_CASES[result]
+    if pins:
+        pin(pins[0], **pins[1])
     df = _cap_input(spark, kind)
     monkeypatch.setattr(similarity, "BLOCK_CAP", 20)
     out = call(df)
@@ -738,7 +744,7 @@ def test_canonicalize_ignores_block_cap(spark, monkeypatch):
     assert not hasattr(out, "dropped_blocks")
 
 
-def test_filter_corpus_composition(spark):
+def test_filter_corpus_composition(spark, pin):
     """Quality gate -> language allowlist -> exact dedup composed as
     one pipeline; survivors keep their metadata columns."""
     from rdfa_spark.pipeline.dedup import filter_corpus
@@ -753,20 +759,22 @@ def test_filter_corpus_composition(spark):
         (5, good + " and the answer was there for them to see"),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = filter_corpus(df, languages=("en",), min_score_pm=500)
+    pin(dedup, LANGUAGES=("en",), MIN_SCORE_PM=500)
+    out = filter_corpus(df)
     got = sorted(r.doc_id for r in out.collect())
     assert got == [1, 5]          # dup 2 dropped, de 3 dropped, junk 4 dropped
     cols = set(out.columns)
     assert {"q_score_pm", "lang_pred"} <= cols
 
 
-def test_filter_corpus_scans_once(spark, sf_dir):
+def test_filter_corpus_scans_once(spark, sf_dir, pin):
     """The language kernel appends ``lang_pred`` to the quality
     survivors in place, so the plan reads ``documents`` once and has
     no join."""
     from rdfa_spark.pipeline.dedup import filter_corpus
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = filter_corpus(docs, languages=("en", "unknown")) \
+    pin(dedup, LANGUAGES=("en", "unknown"))
+    plan = filter_corpus(docs) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1, plan
     assert "Join" not in plan, plan
